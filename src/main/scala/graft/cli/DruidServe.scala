@@ -391,6 +391,10 @@ object DruidServe {
       s.conf.set("spark.sql.session.timeZone", zoneId)
       s.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
       graft.sql.DruidSqlCompat.register(s)
+      // newSession() starts with no extra optimizer rules, and served
+      // tables arrive as global temp views, so no druid-table
+      // resolution arms the bitmap-hint rule here by itself
+      graft.plans.MvBitmapRewrite.arm(s)
       // callers may have registered their own temp functions / temp
       // views on the parent session and expect the SQL endpoint to see
       // them (the endpoint ran directly on the parent before child

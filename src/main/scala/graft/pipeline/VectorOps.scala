@@ -105,25 +105,16 @@ object VectorOps {
     * integer overlap counts, cosine rounded to 6, rrf rounded to 6,
     * all ties break on candidate id.
     *
-    * `maxDf` is the scale guard: tokens appearing in more than that
-    * many documents are dropped from the inverted index BEFORE the
-    * join — a stopword-class token otherwise pairs every query with
-    * the whole corpus and the join output (not its shuffle) is what
-    * explodes at 100 TB. The df pass is one cheap groupBy; the filter
-    * is replayed by the oracle, so capped runs stay hash-exact.
-    */
-  @deprecated("use hybridTopKFrac — an absolute maxDf invites the " +
-    "blocking driver-side count() pattern this module removed", "r15")
-  def hybridTopK(docs: DataFrame, embeddings: DataFrame, k: Int,
-                 nQueries: Int, maxDf: Long): DataFrame =
-    hybridTopKImpl(docs, embeddings, k, nQueries,
-      (df: DataFrame) => df.filter(col("df") <= maxDf))
-
-  /** [[hybridTopK]] with the df cap as a FRACTION of the corpus,
-    * resolved inside the plan (threshold = count * num div den as a
-    * broadcast 1-row aggregate) instead of a driver-side `docs.count()`
-    * round trip before planning — same rows for the same corpus, one
-    * less blocking driver action in the query path (guide §5).
+    * The df cap is the scale guard: tokens appearing in more than
+    * `count * num div den` documents are dropped from the inverted
+    * index BEFORE the join — a stopword-class token otherwise pairs
+    * every query with the whole corpus and the join output (not its
+    * shuffle) is what explodes at 100 TB. The df pass is one cheap
+    * groupBy; the filter is replayed by the oracle, so capped runs stay
+    * hash-exact. The threshold is resolved inside the plan (a broadcast
+    * 1-row aggregate) instead of a driver-side `docs.count()` round
+    * trip before planning — one less blocking driver action in the
+    * query path (guide §5).
     */
   def hybridTopKFrac(docs: DataFrame, embeddings: DataFrame, k: Int,
                      nQueries: Int, num: Int, den: Int): DataFrame = {

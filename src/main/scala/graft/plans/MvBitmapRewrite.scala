@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -8,36 +9,52 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.druid.DruidScan
+import graft.sources.druid.{DimBound, DruidScan}
 
-/** Plain-SQL multi-value bitmap pushdown: `array_contains(mvdim, 'x')`
-  * (and `arrays_overlap(mvdim, array('a','b'))`) over a druid table
-  * gets bitmap row selection from the MV column's per-value bitmap
-  * section — previously only the native-query path had this
-  * (NativeQuery ships the `graft.mvContains` read option), while
-  * ordinary Spark SQL over the same table decoded every array.
+/** The one place that turns filter predicates over a druid table into
+  * bitmap row-selection hints for its scan. Three hint kinds, each
+  * derived from an AND-reachable conjunct of a Filter directly over a
+  * druid scan, on a bare attribute of that scan:
+  *  - mvContains: `array_contains(mvdim, 'x')` and
+  *    `arrays_overlap(mvdim, array('a', 'b'))` on array&lt;string&gt;
+  *    dims, served by the MV column's per-value bitmaps;
+  *  - nestedEq: `get_json_object(col, '$.path') = 'v'` / `IN (...)` on
+  *    a NestedCommonFormat column, served by its per-field value
+  *    bitmaps;
+  *  - bounds: the comparator shapes Druid's bound filter compiles to
+  *    (`version_cmp(d, v) op 0`, `alphanum_key(d) op key`, strlen's
+  *    `struct(length(d), d) op struct`, and each of those plus the
+  *    lexicographic form inside an MV dim's `exists`), served by one
+  *    comparator pass over the dictionary. A plain dim's lexicographic
+  *    range needs no rule: V1 pushFilters records it.
   *
-  * The rule runs post-pushdown (experimental.extraOptimizations, after
-  * V2ScanRelationPushDown — array_contains has no V1 Filter form so it
-  * always survives as the residual Filter): it collects AND-reachable
-  * contains/overlap conjuncts on array&lt;string&gt; attributes of a
-  * Filter directly over a druid scan relation and re-plans the scan
-  * with the merged clause set. The Filter itself is LEFT IN PLACE as
-  * the residual final word, so the hint is a pure row-selection
-  * superset whose removal cannot change results — identical contract
-  * to the option path (DruidScan.scala's mvContains doc).
+  * Every SQL surface reaches the same shapes — Spark SQL and
+  * DataFrames directly, Druid SQL through the compat layer, native
+  * queries through NativeQuery.compileFilter — so they all get the
+  * same hints. Matching is by attribute identity: a dimension shadowed
+  * by a virtual column or wrapped in an extractionFn is no bare
+  * attribute, and OR/NOT-reachable predicates are never conjuncts.
+  *
+  * Runs after V2ScanRelationPushDown (experimental.extraOptimizations):
+  * none of these predicates has a V1 Filter form, so each survives as
+  * the residual Filter directly over the scan, which the rule copies
+  * through DruidScan.withMvContains/withNestedEq/withBounds. The
+  * Filter itself is LEFT IN PLACE as the residual final word, so a
+  * hint is a pure row-selection superset whose removal cannot change
+  * results.
   *
   * Idempotent under the fixed-point batch: clauses already present on
   * the scan produce the same plan object, and AQE re-optimization
   * passes through unchanged.
   *
   * At 100 TB this is the difference between touching |matching
-  * bitmap| rows and decoding every multi-value array in every
-  * segment for tag-filter queries — the dominant filter shape on
-  * tag/label columns in event pipelines.
+  * bitmap| rows and decoding every multi-value array, nested document
+  * or dimension value in every segment.
   *
-  * Armed automatically on first druid-table resolution
-  * (DruidDataSource.getTable) and by GraftExtensions-built sessions;
+  * Armed on first druid-table resolution (DruidDataSource.getTable),
+  * on the first analysis in a GraftExtensions-built session, and by
+  * the broker's and JDBC endpoint's serving sessions, which reach
+  * druid tables only through global temp views;
   * `MvBitmapRewrite.arm(spark)` is the programmatic hook.
   */
 object MvBitmapRewrite extends Rule[LogicalPlan] {
@@ -54,55 +71,129 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    // post-pushdown shape (extraOptimizations / AQE): the scan exists,
-    // copy it with the merged clause sets
     case f @ Filter(cond, sr: DataSourceV2ScanRelation)
         if sr.scan.isInstanceOf[DruidScan] =>
       val scan = sr.scan.asInstanceOf[DruidScan]
-      val clauses = extract(cond, sr.output)
-      val nested = extractNested(cond, sr.output)
-      if (clauses.isEmpty && nested.isEmpty) f
-      else {
-        val next = scan.withMvContains(clauses).withNestedEq(nested)
-        if (next eq scan) f else f.copy(child = sr.copy(scan = next))
+      val next = scan.withMvContains(extract(cond, sr.output))
+        .withNestedEq(extractNested(cond, sr.output))
+        .withBounds(extractBounds(cond, sr.output))
+      if (next eq scan) f else f.copy(child = sr.copy(scan = next))
+  }
+
+  /** array&lt;string&gt; (multi-value dimension) attributes by id. */
+  private def mvAttrsOf(output: Seq[Attribute]): Map[ExprId, String] =
+    output.collect {
+      case a if a.dataType.isInstanceOf[ArrayType] &&
+          a.dataType.asInstanceOf[ArrayType].elementType == StringType =>
+        a.exprId -> a.name
+    }.toMap
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other     => Seq(other)
+  }
+
+  /** AND-reachable comparator bounds per column, from the shapes
+    * NativeQuery's bound filter compiles to:
+    *  - version: `version_cmp(d, 'v') op 0`;
+    *  - alphanumeric: `alphanum_key(d) op key`, with the raw bound
+    *    recovered by [[graft.sql.Alphanum.valueOf]];
+    *  - strlen: `struct(length(d), d) op struct(n, 's')` where n is the
+    *    length of 's', only beside a `d IS NOT NULL` conjunct;
+    *  - on an array&lt;string&gt; dim, any of those or a lexicographic
+    *    `x op 's'` inside `exists(d, x -> ...)`: the reader's bitmap
+    *    union is exactly "rows where ANY value is in range".
+    * A lower and an upper side on one column and ordering merge into
+    * one bound (what a two-sided bound filter compiles to) — for an MV
+    * dim only within one exists body. Plain string dims qualify only
+    * without a complex type (json columns have no dictionary).
+    */
+  private[graft] def extractBounds(cond: Expression, output: Seq[Attribute])
+      : Map[String, Seq[DimBound]] = {
+    val plainAttrs: Map[ExprId, String] = output.collect {
+      case a if a.dataType == StringType &&
+          !a.metadata.contains("druid.complexType") =>
+        a.exprId -> a.name
+    }.toMap
+    val mvAttrs = mvAttrsOf(output)
+    if (plainAttrs.isEmpty && mvAttrs.isEmpty) return Map.empty
+    // (column, ordering, isLower, value, strict) of one comparison
+    // whose key side is over a column `target` names; `lex` admits the
+    // bare lexicographic form
+    type Side = (String, String, Boolean, String, Boolean)
+    def side(e: Expression, target: Expression => Option[String],
+             lex: Boolean): Option[Side] = {
+      // (key, literal value, isLower, strict)
+      val cmp = e match {
+        case GreaterThan(k, Literal(v, _))        => Some((k, v, true, true))
+        case GreaterThanOrEqual(k, Literal(v, _)) => Some((k, v, true, false))
+        case LessThan(k, Literal(v, _))           => Some((k, v, false, true))
+        case LessThanOrEqual(k, Literal(v, _))    => Some((k, v, false, false))
+        case _ => None
       }
-    // pre-pushdown shape (injectOptimizerRule, operator batch): merge
-    // the clauses into the relation's read options — the ScanBuilder
-    // picks them up, exactly the native-query path
-    case f @ Filter(cond,
-        rel: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation)
-        if rel.table.isInstanceOf[graft.sources.druid.DruidTable] =>
-      val clauses = extract(cond, rel.output)
-      val nested = extractNested(cond, rel.output)
-      if (clauses.isEmpty && nested.isEmpty) f
-      else {
-        import scala.jdk.CollectionConverters._
-        val curMv = graft.sources.druid.MvContains.fromJson(
-          rel.options.get("graft.mvContains"))
-        val curNe = graft.sources.druid.NestedEq.fromJson(
-          rel.options.get("graft.nestedEq"))
-        // clauses AND together: same-column clauses stay separate
-        // (never flattened into one weaker any-of clause); dedup by
-        // exact canonical clause
-        def canonMv(c: (String, Seq[String])) = (c._1, c._2.distinct.sorted)
-        def canonNe(c: (String, String, Seq[String])) =
-          (c._1, c._2, c._3.distinct.sorted)
-        val freshMv = clauses.map(canonMv).distinct
-          .filterNot(curMv.map(canonMv).toSet)
-        val freshNe = nested.map(canonNe).distinct
-          .filterNot(curNe.map(canonNe).toSet)
-        if (freshMv.isEmpty && freshNe.isEmpty) f
-        else {
-          var opts = rel.options.asCaseSensitiveMap().asScala.toMap
-          if (freshMv.nonEmpty) opts += ("graft.mvContains" ->
-            graft.sources.druid.MvContains.toJson(curMv ++ freshMv))
-          if (freshNe.nonEmpty) opts += ("graft.nestedEq" ->
-            graft.sources.druid.NestedEq.toJson(curNe ++ freshNe))
-          f.copy(child = rel.copy(options =
-            new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-              opts.asJava)))
+      cmp.flatMap { case (k, v, lower, strict) =>
+        val bound: Option[(String, String, String)] = (k, v) match {
+          case (graft.sql.VersionCmp(t, b), 0) =>
+            target(t).map(c => (c, "version", b))
+          case (graft.sql.AlphanumKey(t), key: UTF8String) =>
+            for (c <- target(t); b <- graft.sql.Alphanum.valueOf(key.toString))
+              yield (c, "alphanumeric", b)
+          case (CreateNamedStruct(Seq(_, Length(t1), _, t2)), r: InternalRow)
+              if !r.isNullAt(0) && !r.isNullAt(1) &&
+                r.getInt(0) == r.getUTF8String(1).numChars() =>
+            target(t1).filter(target(t2).contains)
+              .map(c => (c, "strlen", r.getUTF8String(1).toString))
+          case (t, s: UTF8String) if lex =>
+            target(t).map(c => (c, "lexicographic", s.toString))
+          case _ => None
         }
+        bound.map { case (c, o, b) => (c, o, lower, b, strict) }
       }
+    }
+    // Sides merge into one bound only where they constrain ONE value:
+    // across the conjuncts of a plain dim, and within one exists body
+    // of an MV dim. `exists(d, x -> x >= 'a') AND exists(d, x -> x < 'b')`
+    // may be met by two different values, so each exists keeps its own
+    // bounds (the reader intersects them, which is then exact).
+    def bounds(cs: Seq[Expression], target: Expression => Option[String],
+               lex: Boolean): Seq[(String, DimBound)] = {
+      // strlen's struct key ranks a null below every value, so only a
+      // sibling IS NOT NULL on the same key (what NativeQuery emits)
+      // makes the predicate as null-free as the bitmap
+      val notNull = cs.collect { case IsNotNull(t) => target(t) }.flatten.toSet
+      cs.flatMap(side(_, target, lex))
+        .filter { case (c, o, _, _, _) => o != "strlen" || notNull(c) }
+        .foldLeft(Vector.empty[(String, DimBound)]) {
+          case (acc, (c, o, lower, v, strict)) =>
+            // one bound per (column, ordering) until a side repeats
+            val i = acc.indexWhere { case (c2, b) =>
+              c2 == c && b.ordering == o &&
+                (if (lower) b.lower.isEmpty else b.upper.isEmpty)
+            }
+            val b0 = if (i >= 0) acc(i)._2 else DimBound(o, None, false, None, false)
+            val b =
+              if (lower) b0.copy(lower = Some(v), lowerStrict = strict)
+              else b0.copy(upper = Some(v), upperStrict = strict)
+            if (i >= 0) acc.updated(i, c -> b) else acc :+ (c -> b)
+        }
+    }
+    val top = conjuncts(cond)
+    val plain = bounds(top, {
+      case a: AttributeReference => plainAttrs.get(a.exprId)
+      case _ => None
+    }, lex = false)
+    val mv = top.flatMap {
+      case ArrayExists(a: AttributeReference,
+          LambdaFunction(body, Seq(x: NamedLambdaVariable), _), _)
+          if mvAttrs.contains(a.exprId) =>
+        bounds(conjuncts(body), {
+          case v: NamedLambdaVariable if v.exprId == x.exprId =>
+            mvAttrs.get(a.exprId)
+          case _ => None
+        }, lex = true)
+      case _ => Nil
+    }
+    (plain ++ mv).groupBy(_._1).map { case (c, bs) => c -> bs.map(_._2).toList }
   }
 
   /** AND-reachable nested-field equality clauses:
@@ -116,17 +207,13 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
   private[graft] def extractNested(cond: Expression, output: Seq[Attribute])
       : Seq[(String, String, Seq[String])] = {
     val nestedAttrs: Map[ExprId, String] = output.collect {
-      case a if a.dataType == org.apache.spark.sql.types.StringType &&
+      case a if a.dataType == StringType &&
           a.metadata.contains("druid.complexType") &&
           a.metadata.getString("druid.complexType") ==
             graft.format.NestedColumn.PartType =>
         a.exprId -> a.name
     }.toMap
     if (nestedAttrs.isEmpty) return Nil
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
     // dot steps plus optional [N] indices (the array-of-objects
     // shredding); eqBitmap declines scalar-array element paths itself
     val simplePath = """^\$(\.[^.\[\]'"*]+(\[(0|[1-9]\d*)\])?)+$""".r
@@ -153,7 +240,7 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
       case _ => None
     }
     def lit(e: Expression): Option[String] = e match {
-      case Literal(s: UTF8String, org.apache.spark.sql.types.StringType)
+      case Literal(s: UTF8String, StringType)
           if s != null => Some(s.toString)
       case _ => None
     }
@@ -170,6 +257,9 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
           if (lits.isEmpty || lits.exists(_.isEmpty)) None
           else Some((f._1, f._2, lits.map(_.get)))
         }
+      // the optimizer turns a long IN list into InSet
+      case InSet(g, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[UTF8String]) =>
+        field(g).map(f => (f._1, f._2, vs.toSeq.map(_.toString)))
       case _ => None
     }
   }
@@ -180,15 +270,7 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     */
   private[graft] def extract(cond: Expression, output: Seq[Attribute])
       : Seq[(String, Seq[String])] = {
-    val mvAttrs: Map[ExprId, String] = output.collect {
-      case a if a.dataType.isInstanceOf[ArrayType] &&
-          a.dataType.asInstanceOf[ArrayType].elementType == StringType =>
-        a.exprId -> a.name
-    }.toMap
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
+    val mvAttrs = mvAttrsOf(output)
     def strLit(e: Expression): Option[String] = e match {
       case Literal(s: UTF8String, StringType) if s != null => Some(s.toString)
       case _ => None

@@ -2286,11 +2286,11 @@ object DruidQueries extends QuerySet {
 
     // -- VERSION bound on a PLAIN dictionary-encoded string dimension:
     //    end-to-end gate for the dictionary-side comparator pushdown.
-    //    NativeQuery re-loads the relation with `graft.bounds`; the
-    //    reader runs the Maven-version comparator once per DICTIONARY
-    //    VALUE and row-selects via bitmap union (Druid's bound-filter
-    //    execution); the compiled predicate stays as the residual
-    //    final word. The oracle replays the numeric-segment
+    //    MvBitmapRewrite reads the compiled version_cmp predicate as a
+    //    scan bound; the reader runs the Maven-version comparator once
+    //    per DICTIONARY VALUE and row-selects via bitmap union (Druid's
+    //    bound-filter execution); the compiled predicate stays as the
+    //    residual final word. The oracle replays the numeric-segment
     //    comparison ("v1.10" >= "v1.7" because 10 > 7), like dr62.
     Q("dr66_native_version_bound_dim",
       (s, dir) => {
@@ -2543,11 +2543,12 @@ object DruidQueries extends QuerySet {
 
     // -- The same nested-field selection on the NATIVE wire: a Druid
     //    `nested-field` virtual column + `in` filter over the
-    //    NestedCommonFormat table pushes the graft.nestedEq clauses
-    //    (pushNestedEq; STRING vcs only — a typed vc's cast can match
-    //    texts the bitmap probe models differently, so it stays
-    //    residual). This is the exact query shape a Druid dashboard
-    //    sends against an "auto" column.
+    //    NestedCommonFormat table compiles to the same
+    //    get_json_object IN (...) as dr74, so MvBitmapRewrite gives it
+    //    the same nestedEq clauses (STRING vcs only — a typed vc's
+    //    try_cast can match texts the bitmap probe models differently,
+    //    so it stays residual). This is the exact query shape a Druid
+    //    dashboard sends against an "auto" column.
     Q("dr75_native_nested_field",
       (s, dir) => {
         graft.query.NativeQuery.run("""{

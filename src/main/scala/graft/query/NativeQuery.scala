@@ -122,10 +122,7 @@ object NativeQuery {
 
   private def runNode(q: JsonNode, resolve: String => DataFrame): DataFrame = {
     val base0 = resolveDataSource(q.path("dataSource"), resolve)
-    val base0b = pushComparatorBounds(base0, q)
-    val base0c = pushMvContains(base0b, q)
-    val base0d = pushNestedEq(base0c, q)
-    val base1 = withVirtualColumns(base0d, q)
+    val base1 = withVirtualColumns(base0, q)
     val base = applyWhere(base1, q)
     q.path("queryType").asText() match {
       case "timeseries"   => timeseries(base, q)
@@ -331,226 +328,6 @@ object NativeQuery {
         col("__time") < lit(Timestamp.from(b))
     }.reduceOption(_ || _)
 
-  /** Dictionary-side comparator-bound pushdown. A bound filter under a
-    * non-lexicographic StringComparator has no V1 Filter form (and
-    * even a lexicographic string range is not served by this source's
-    * pushFilters), so Spark would evaluate the comparator per ROW.
-    * Druid evaluates bounds on dictionary-encoded dimensions per
-    * DICTIONARY VALUE and row-selects via bitmaps. When the datasource
-    * is a bare druid relation and an AND-reachable bound lands on a
-    * plain string dimension (no extractionFn, not shadowed by a
-    * virtual column), re-load the relation with a `graft.bounds`
-    * option: the reader runs the comparator once per dictionary entry
-    * and unions qualifying-id bitmaps. The compiled Catalyst predicate
-    * STAYS on the plan as the residual final word — the option is a
-    * row-selection hint whose removal cannot change results.
-    */
-  private def pushComparatorBounds(df: DataFrame, q: JsonNode): DataFrame = {
-    val f = q.path("filter")
-    if (f.isMissingNode || f.isNull) return df
-    val vcNames: Set[String] = {
-      val vcs = q.path("virtualColumns")
-      if (vcs.isMissingNode || vcs.isNull) Set.empty
-      else vcs.elements().asScala.map(vc =>
-        if (vc.hasNonNull("outputName")) vc.path("outputName").asText()
-        else vc.path("name").asText()).toSet
-    }
-    def andReachableBounds(n: JsonNode): Seq[JsonNode] =
-      n.path("type").asText() match {
-        case "and"   => n.path("fields").elements().asScala.toSeq
-                          .flatMap(andReachableBounds)
-        case "bound" => Seq(n)
-        case _       => Nil
-      }
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    def unwrap(p: LogicalPlan): LogicalPlan = p match {
-      case s: SubqueryAlias => unwrap(s.child)
-      case other            => other
-    }
-    val rel = unwrap(df.queryExecution.analyzed) match {
-      case r: DataSourceV2Relation
-          if r.table.isInstanceOf[graft.sources.druid.DruidTable] => r
-      case _ => return df
-    }
-    val stringCols = rel.schema.fields
-      .filter(f => (f.dataType == StringType ||
-          // MV dims qualify too: the reader unions the per-value
-          // bitmaps of every dictionary value satisfying the bound
-          // (a value's bitmap marks rows CONTAINING it), which is
-          // exactly "rows where ANY value is in range" — the compiled
-          // exists(...) predicate stays the residual final word
-          f.dataType == org.apache.spark.sql.types.ArrayType(StringType, true) ||
-          f.dataType == org.apache.spark.sql.types.ArrayType(StringType, false)) &&
-        !f.metadata.contains("druid.complexType"))
-      .map(_.name).toSet
-    val supported = Set("lexicographic", "strlen", "alphanumeric", "version")
-    val bounds: Seq[(String, graft.sources.druid.DimBound)] =
-      andReachableBounds(f).flatMap { b =>
-        val d = b.path("dimension").asText()
-        // malformed comparator nodes drop out here; compileFilter will
-        // fail loudly on the same node moments later
-        val ordering =
-          (if (!b.hasNonNull("ordering") &&
-               b.path("alphaNumeric").asBoolean(false)) Some("alphanumeric")
-           else try Some(comparatorOf(b.path("ordering")))
-           catch { case _: IllegalArgumentException => None })
-            .map(o => if (o.isEmpty) "lexicographic" else o)
-            .getOrElse("unsupported")
-        val lower =
-          if (b.hasNonNull("lower")) Some(b.path("lower").asText()) else None
-        val upper =
-          if (b.hasNonNull("upper")) Some(b.path("upper").asText()) else None
-        if (b.hasNonNull("extractionFn") || vcNames(d) || !stringCols(d) ||
-            !supported(ordering) || (lower.isEmpty && upper.isEmpty)) None
-        else Some(d -> graft.sources.druid.DimBound(ordering,
-          lower, b.path("lowerStrict").asBoolean(false),
-          upper, b.path("upperStrict").asBoolean(false)))
-      }
-    if (bounds.isEmpty) return df
-    val byCol = bounds.groupBy(_._1).map { case (c, v) => c -> v.map(_._2) }
-    val opts = rel.options.asCaseSensitiveMap().asScala.toMap +
-      ("graft.bounds" -> graft.sources.druid.DimBound.toJson(byCol)) +
-      ("path" -> rel.table.asInstanceOf[graft.sources.druid.DruidTable].rootDir)
-    SparkSession.active.read.format("druid").options(opts).load()
-  }
-
-  /** Selector/in filters on PLAIN multi-value dimensions, shipped as
-    * the `graft.mvContains` read option when the datasource is a bare
-    * druid relation: the reader serves them from the MV column's
-    * per-value bitmap section (a value's bitmap marks rows CONTAINING
-    * it — Druid's own MV selector execution) instead of decoding every
-    * array. The compiled array_contains predicate STAYS on the plan
-    * as the residual final word; like graft.bounds, the option is a
-    * row-selection hint whose removal cannot change results.
-    */
-  private def pushMvContains(df: DataFrame, q: JsonNode): DataFrame = {
-    val f = q.path("filter")
-    if (f.isMissingNode || f.isNull) return df
-    val vcNames: Set[String] = {
-      val vcs = q.path("virtualColumns")
-      if (vcs.isMissingNode || vcs.isNull) Set.empty
-      else vcs.elements().asScala.map(vc =>
-        if (vc.hasNonNull("outputName")) vc.path("outputName").asText()
-        else vc.path("name").asText()).toSet
-    }
-    def andReachable(n: JsonNode): Seq[JsonNode] =
-      n.path("type").asText() match {
-        case "and" => n.path("fields").elements().asScala.toSeq
-          .flatMap(andReachable)
-        case "selector" | "in" => Seq(n)
-        case _ => Nil
-      }
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    def unwrap(p: LogicalPlan): LogicalPlan = p match {
-      case s: SubqueryAlias => unwrap(s.child)
-      case other            => other
-    }
-    val rel = unwrap(df.queryExecution.analyzed) match {
-      case r: DataSourceV2Relation
-          if r.table.isInstanceOf[graft.sources.druid.DruidTable] => r
-      case _ => return df
-    }
-    val mvCols = mvColsOf(df)
-    val clauses: Seq[(String, Seq[String])] = andReachable(f).flatMap { n =>
-      val d = n.path("dimension").asText()
-      if (n.hasNonNull("extractionFn") || vcNames(d) || !mvCols(d)) None
-      else n.path("type").asText() match {
-        case "selector" if n.hasNonNull("value") =>
-          Some(d -> Seq(n.path("value").asText()))
-        case "in" =>
-          val vs = textSeq(n.path("values"))
-          if (vs.nonEmpty) Some(d -> vs) else None
-        case _ => None
-      }
-    }
-    if (clauses.isEmpty) return df
-    val opts = rel.options.asCaseSensitiveMap().asScala.toMap +
-      ("graft.mvContains" -> graft.sources.druid.MvContains.toJson(clauses)) +
-      ("path" -> rel.table.asInstanceOf[graft.sources.druid.DruidTable].rootDir)
-    SparkSession.active.read.format("druid").options(opts).load()
-  }
-
-  /** Selector/in filters on a `nested-field` VIRTUAL COLUMN over a
-    * NestedCommonFormat column, shipped as the `graft.nestedEq` read
-    * option: the reader serves them from the nested column's per-field
-    * value bitmaps instead of reconstructing every row's JSON. STRING
-    * expectedType only — the selector then compares exactly the
-    * rendered text our bitmap probe models; a typed vc's cast can
-    * match texts the probe would miss ('5.0' as LONG matches long 5),
-    * so typed vcs stay residual-only. The compiled predicate is the
-    * residual final word either way.
-    */
-  private def pushNestedEq(df: DataFrame, q: JsonNode): DataFrame = {
-    val f = q.path("filter")
-    if (f.isMissingNode || f.isNull) return df
-    // nested-field STRING vcs: outputName -> (columnName, path)
-    // dot steps plus optional [N] indices (the array-of-objects
-    // shredding); eqBitmap declines scalar-array element paths itself
-    val simplePath = """^\$(\.[^.\[\]'"*]+(\[(0|[1-9]\d*)\])?)+$""".r
-    val nestedVcs: Map[String, (String, String)] = {
-      val vcs = q.path("virtualColumns")
-      if (vcs.isMissingNode || vcs.isNull) Map.empty
-      else vcs.elements().asScala.collect {
-        case vc if vc.path("type").asText() == "nested-field" &&
-            vc.path("expectedType").asText("STRING")
-              .toUpperCase(java.util.Locale.ROOT) == "STRING" &&
-            simplePath.matches(vc.path("path").asText("")) =>
-          val out =
-            if (vc.hasNonNull("outputName")) vc.path("outputName").asText()
-            else vc.path("name").asText()
-          out -> (vc.path("columnName").asText(), vc.path("path").asText())
-      }.toMap
-    }
-    if (nestedVcs.isEmpty) return df
-    val nestedCols: Set[String] = df.schema.fields.collect {
-      case fld if fld.dataType == org.apache.spark.sql.types.StringType &&
-          fld.metadata.contains("druid.complexType") &&
-          fld.metadata.getString("druid.complexType") ==
-            graft.format.NestedColumn.PartType => fld.name
-    }.toSet
-    def andReachable(n: JsonNode): Seq[JsonNode] =
-      n.path("type").asText() match {
-        case "and" => n.path("fields").elements().asScala.toSeq
-          .flatMap(andReachable)
-        case "selector" | "in" => Seq(n)
-        case _ => Nil
-      }
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    def unwrap(p: LogicalPlan): LogicalPlan = p match {
-      case s: SubqueryAlias => unwrap(s.child)
-      case other            => other
-    }
-    val rel = unwrap(df.queryExecution.analyzed) match {
-      case r: DataSourceV2Relation
-          if r.table.isInstanceOf[graft.sources.druid.DruidTable] => r
-      case _ => return df
-    }
-    val clauses: Seq[(String, String, Seq[String])] =
-      andReachable(f).flatMap { n =>
-        val d = n.path("dimension").asText()
-        nestedVcs.get(d).filter { case (c, _) => nestedCols(c) }
-          .filterNot(_ => n.hasNonNull("extractionFn")).flatMap {
-            case (c, p) =>
-              n.path("type").asText() match {
-                case "selector" if n.hasNonNull("value") =>
-                  Some((c, p, Seq(n.path("value").asText())))
-                case "in" =>
-                  val vs = textSeq(n.path("values"))
-                  if (vs.nonEmpty) Some((c, p, vs)) else None
-                case _ => None
-              }
-          }
-      }
-    if (clauses.isEmpty) return df
-    val opts = rel.options.asCaseSensitiveMap().asScala.toMap +
-      ("graft.nestedEq" -> graft.sources.druid.NestedEq.toJson(clauses)) +
-      ("path" -> rel.table.asInstanceOf[graft.sources.druid.DruidTable].rootDir)
-    SparkSession.active.read.format("druid").options(opts).load()
-  }
-
   /** Multi-value (array&lt;string&gt;) dimensions of a datasource. */
   private def mvColsOf(df: DataFrame): Set[String] =
     df.schema.fields.collect {
@@ -616,9 +393,12 @@ object NativeQuery {
         case _                  => c === lit(f.path("matchValue").asText())
       }
     case "in" if isPlainMv(f) =>
-      val d = dim(f)
-      textSeq(f.path("values")).map(v => array_contains(d, lit(v)))
-        .reduceOption(_ || _).getOrElse(lit(false))
+      // arrays_overlap, not an OR of array_contains: the same
+      // tri-state result, and MvBitmapRewrite reads it as ONE any-of
+      // clause (an OR of contains calls stays residual-only)
+      val vs = textSeq(f.path("values"))
+      if (vs.isEmpty) lit(false)
+      else arrays_overlap(dim(f), array(vs.map(lit): _*))
     case "in" =>
       dim(f).isin(textSeq(f.path("values")): _*)
     case "bound" =>
@@ -669,7 +449,11 @@ object NativeQuery {
         val sides = side("lower", "lowerStrict", lower = true).toSeq ++
           side("upper", "upperStrict", lower = false).toSeq
         if (sides.isEmpty) fail("bound filter with neither lower nor upper")
-        sides.reduce(_ && _)
+        // a null value never satisfies a bound; strlen's struct key
+        // alone would rank a null below every value and admit it
+        // under an upper bound
+        if (ordering == "strlen") sides.foldLeft(c.isNotNull)(_ && _)
+        else sides.reduce(_ && _)
       }
       // bound on a plain MV dim: Druid matches the row if ANY array
       // value satisfies the bound

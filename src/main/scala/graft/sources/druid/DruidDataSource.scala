@@ -45,10 +45,10 @@ class DruidDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
-    // arm the plain-SQL MV bitmap rewrite on whatever session resolves
-    // a druid table (idempotent; the rule is a no-op on plans without
-    // an MV-contains filter shape) — extension-built sessions get it
-    // from GraftExtensions instead
+    // arm the bitmap row-selection hint rule on whatever session
+    // resolves a druid table (idempotent; the rule is a no-op on plans
+    // without a hint shape) — extension-built sessions are also armed
+    // by GraftExtensions
     org.apache.spark.sql.SparkSession.getActiveSession
       .foreach(graft.plans.MvBitmapRewrite.arm)
     new DruidTable(DruidTableUtil.localPath(properties.get("path")), schema)

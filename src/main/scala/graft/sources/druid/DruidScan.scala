@@ -56,38 +56,18 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
   // can still skip when NO disjunct could match its metadata
   private var orFilters: Seq[Filter] = Nil
 
-  // comparator bounds (version/alphanumeric/strlen/lexicographic):
-  // from the `graft.bounds` read option (the V1 Filter API can't
-  // express a bound under a non-lexicographic StringComparator, so
-  // NativeQuery re-loads the relation with this option when a bound
-  // filter lands on a plain string dimension) AND from plain V1
-  // string-range filters (WHERE s >= 'x' in ordinary Spark SQL),
-  // which pushFilters records as lexicographic bounds below. Served
-  // by an O(dictionary) comparator pass + bitmap union per segment;
-  // the caller's predicate stays the residual final word.
-  private var boundFilters: Map[String, Seq[DimBound]] =
-    DimBound.fromJson(options.get("graft.bounds"))
+  // lexicographic bounds from plain V1 string-range filters
+  // (WHERE s >= 'x'), which pushFilters records below. Served by a
+  // dictionary-id range + bitmap union per segment; the Filter's
+  // predicate stays the residual final word. Bounds with no V1 Filter
+  // form (other orderings, MV dims), MV-contains and nested-field
+  // clauses reach the built scan instead, through
+  // graft.plans.MvBitmapRewrite and DruidScan.withBounds /
+  // withMvContains / withNestedEq.
+  private var boundFilters: Map[String, Seq[DimBound]] = Map.empty
 
   private def addBound(c: String, b: DimBound): Unit =
     boundFilters += c -> (boundFilters.getOrElse(c, Nil) :+ b)
-
-  // multi-value CONTAINS clauses from the `graft.mvContains` read
-  // option (array_contains has no V1 Filter form): each clause is
-  // (column, values) = rows whose array contains ANY of the values;
-  // clauses AND together. Served by the MV column's per-value bitmap
-  // section; the pusher (NativeQuery) keeps its compiled
-  // array_contains predicate as the residual final word, so this is
-  // a row-selection hint whose removal cannot change results.
-  private val mvContains: Seq[(String, Seq[String])] =
-    MvContains.fromJson(options.get("graft.mvContains"))
-
-  // nested-field equality clauses from the `graft.nestedEq` read
-  // option: (column, "$.path", values) = rows whose NestedCommonFormat
-  // field renders to ANY of the values; clauses AND together. Served
-  // by the nested column's per-field value bitmaps; the pusher keeps
-  // the compiled get_json_object predicate as the residual final word.
-  private val nestedEq: Seq[(String, String, Seq[String])] =
-    NestedEq.fromJson(options.get("graft.nestedEq"))
 
   // COMPLEX-backed string columns (json) carry no dictionary/bitmaps:
   // exclude them so dim-filter pushdown never consults a dictionary
@@ -278,8 +258,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
     import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
     val clean = pushed.isEmpty && dimFilters.isEmpty && zoneFilters.isEmpty &&
       notNullCols.isEmpty && isNullCols.isEmpty && prefixFilters.isEmpty &&
-      patternFilters.isEmpty && boundFilters.isEmpty && mvContains.isEmpty &&
-      nestedEq.isEmpty &&
+      patternFilters.isEmpty && boundFilters.isEmpty &&
       timeMin == Long.MinValue && timeMax == Long.MaxValue
     if (!clean || orders.length != 1 || l <= 0) return false
     val o = orders.head
@@ -316,11 +295,6 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
     if (pushedAggs.nonEmpty) return false
     val kinds = agg.aggregateExpressions().toSeq
       .map(DruidScanBuilder.aggKind(_, fullSchema))
-    // option-shipped comparator bounds / MV-contains clauses restrict
-    // rows invisibly to Spark's filter bookkeeping — a metadata answer
-    // over ALL rows would ignore them
-    if (boundFilters.nonEmpty || mvContains.nonEmpty || nestedEq.nonEmpty)
-      return false
     // kinds.nonEmpty: an outer count() can prune a stacked aggregate's
     // output to ZERO expressions — pushing that would make the scan
     // produce 0 columns where Spark still expects a row shape
@@ -389,8 +363,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
     if (pushedAggs.nonEmpty || groupByDim.isDefined) return false
     val clean = pushed.isEmpty && dimFilters.isEmpty && zoneFilters.isEmpty &&
       notNullCols.isEmpty && isNullCols.isEmpty && prefixFilters.isEmpty &&
-      patternFilters.isEmpty && boundFilters.isEmpty && mvContains.isEmpty &&
-      nestedEq.isEmpty &&
+      patternFilters.isEmpty && boundFilters.isEmpty &&
       limit < 0 && timeMin == Long.MinValue && timeMax == Long.MaxValue
     val groupCols = agg.groupByExpressions().toSeq.map {
       case r: NamedReference if r.fieldNames.length == 1 => Some(r.fieldNames.head)
@@ -411,7 +384,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
       options.getLong("rowsPerSplit", 4L * 1024 * 1024),
       options.getInt("batchSize", 4096), dimFilters, pushedAggs, zoneFilters,
       notNullCols, isNullCols, topNTime, groupByDim, prefixFilters,
-      patternFilters, orFilters, boundFilters, mvContains, nestedEq)
+      patternFilters, orFilters, boundFilters)
 }
 
 object DruidScanBuilder {
@@ -539,59 +512,18 @@ final case class DimPattern(kind: String, pattern: String)
   * DICTIONARY VALUE at the reader (Druid's bound-filter execution:
   * comparator over the dictionary, qualifying-id bitmap union) — never
   * per row. Orderings: lexicographic, strlen, alphanumeric, version.
-  * Shipped through the `graft.bounds` read option because a bound
-  * under a non-lexicographic StringComparator has no V1 Filter form;
-  * the pusher (NativeQuery) keeps its Catalyst predicate as the
-  * residual, so the bitmap only needs to be a superset — it is in
-  * fact exact, which the probe spec pins.
+  * A bound under a non-lexicographic StringComparator (or inside an
+  * MV dim's exists) has no V1 Filter form, so graft.plans
+  * .MvBitmapRewrite derives it from the Filter's Catalyst predicate
+  * and hands it to the built scan through [[DruidScan.withBounds]];
+  * that predicate stays the residual, so the bitmap only needs to be
+  * a superset — it is in fact exact, which the probe spec pins.
   */
 final case class DimBound(ordering: String,
                           lower: Option[String], lowerStrict: Boolean,
                           upper: Option[String], upperStrict: Boolean)
 
 object DimBound {
-  // ObjectMapper is thread-safe for readTree/writeValueAsString; a val
-  // avoids re-allocating one per scan-builder construction
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** `{"col": [{"o": ordering, "l": lower?, "ls": bool, "u": upper?,
-    * "us": bool}, ...], ...}` — jackson both ways, so bound values with
-    * any characters round-trip.
-    */
-  def toJson(bounds: Map[String, Seq[DimBound]]): String = {
-    val m = mapper
-    val root = m.createObjectNode()
-    bounds.foreach { case (col, bs) =>
-      val arr = root.putArray(col)
-      bs.foreach { b =>
-        val o = arr.addObject()
-        o.put("o", b.ordering)
-        b.lower.foreach(o.put("l", _))
-        o.put("ls", b.lowerStrict)
-        b.upper.foreach(o.put("u", _))
-        o.put("us", b.upperStrict)
-      }
-    }
-    m.writeValueAsString(root)
-  }
-
-  def fromJson(s: String): Map[String, Seq[DimBound]] =
-    if (s == null || s.isEmpty) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val root = mapper.readTree(s)
-      root.properties().asScala.map { e =>
-        val bs = e.getValue.elements().asScala.map { o =>
-          DimBound(o.path("o").asText("lexicographic"),
-            if (o.hasNonNull("l")) Some(o.path("l").asText()) else None,
-            o.path("ls").asBoolean(false),
-            if (o.hasNonNull("u")) Some(o.path("u").asText()) else None,
-            o.path("us").asBoolean(false))
-        }.toSeq
-        e.getKey -> bs
-      }.toMap
-    }
-
   /** The bound as a predicate over RAW dictionary bytes (UTF-8), with
     * the bound sides pre-computed once. Byte-level comparisons match
     * Spark's UTF8String binary ordering exactly (Java String.compareTo
@@ -651,62 +583,20 @@ object DimBound {
   }
 }
 
-/** JSON codec for the `graft.mvContains` read option:
-  * `[{"c": col, "vs": [v1, v2]}, ...]` — each clause selects rows
-  * whose multi-value dimension contains ANY of `vs`; clauses AND.
-  */
-/** JSON codec for the `graft.nestedEq` read option:
-  * `[{"c": col, "p": "$.path", "vs": [..]}, ...]`.
-  */
+/** Nested-field equality clauses `(column, "$.path", values)`. */
 object NestedEq {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  def toJson(clauses: Seq[(String, String, Seq[String])]): String = {
-    val root = mapper.createArrayNode()
-    clauses.foreach { case (c, p, vs) =>
-      val o = root.addObject()
-      o.put("c", c)
-      o.put("p", p)
-      val arr = o.putArray("vs")
-      vs.foreach(arr.add)
-    }
-    mapper.writeValueAsString(root)
-  }
-
-  def fromJson(s: String): Seq[(String, String, Seq[String])] =
-    if (s == null || s.isEmpty) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      mapper.readTree(s).elements().asScala.map { o =>
-        (o.path("c").asText(), o.path("p").asText(),
-          o.path("vs").elements().asScala.map(_.asText()).toSeq)
-      }.toSeq
-    }
+  /** Canonical clause: values distinct and sorted (dedup key). */
+  def canon(c: (String, String, Seq[String])): (String, String, Seq[String]) =
+    (c._1, c._2, c._3.distinct.sorted.toList)
 }
 
+/** Multi-value contains clauses `(column, values)`: each selects rows
+  * whose multi-value dimension contains ANY of the values; clauses AND.
+  */
 object MvContains {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  def toJson(clauses: Seq[(String, Seq[String])]): String = {
-    val root = mapper.createArrayNode()
-    clauses.foreach { case (c, vs) =>
-      val o = root.addObject()
-      o.put("c", c)
-      val arr = o.putArray("vs")
-      vs.foreach(arr.add)
-    }
-    mapper.writeValueAsString(root)
-  }
-
-  def fromJson(s: String): Seq[(String, Seq[String])] =
-    if (s == null || s.isEmpty) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      mapper.readTree(s).elements().asScala.map { o =>
-        o.path("c").asText() ->
-          o.path("vs").elements().asScala.map(_.asText()).toSeq
-      }.toSeq
-    }
+  /** Canonical clause: values distinct and sorted (dedup key). */
+  def canon(c: (String, Seq[String])): (String, Seq[String]) =
+    (c._1, c._2.distinct.sorted.toList)
 }
 
 /** Single partition carrying metadata-derived aggregate answers (one
@@ -859,53 +749,53 @@ class DruidScan(root: String, required: StructType,
     else required
   override def toBatch: Batch = this
 
-  /** Current MV-contains clauses (idempotency check for the plain-SQL
-    * bitmap rewrite rule and its specs). */
-  def mvClauses: Seq[(String, Seq[String])] = mvContains
-
   /** Copy of this scan with additional MV-contains row-selection
-    * clauses (graft.plans.MvBitmapRewrite's hook for plain Spark SQL —
-    * the native path ships the same hint via the `graft.mvContains`
-    * read option instead). The hint is a superset row selection; the
-    * caller's predicate must stay on the plan as the residual final
-    * word. Aggregate-pushdown refusal parity with the option path: the
-    * rewrite rule only fires on Filter-over-scan shapes, which never
-    * carry pushed aggregates.
+    * clauses: the hook graft.plans.MvBitmapRewrite uses on a scan that
+    * V2ScanRelationPushDown already built. Like every hint below, a
+    * superset row selection: the caller's predicate must stay on the
+    * plan as the residual final word. The rule only fires on
+    * Filter-over-scan shapes, which never carry a pushed aggregate,
+    * limit or top-N (Spark pushes those only with no residual filter).
     */
   def withMvContains(extra: Seq[(String, Seq[String])]): DruidScan = {
     // clauses AND together — two clauses on one column stay SEPARATE
     // (contains a2 AND contains-any-of b0/b2), never flattened into one
     // weaker any-of clause; dedup is by exact canonical clause
-    def canon(c: (String, Seq[String])) = (c._1, c._2.distinct.sorted)
-    val have = mvContains.map(canon).toSet
-    val fresh = extra.map(canon).distinct.filterNot(have)
-    if (fresh.isEmpty) this
-    else new DruidScan(root, required, timeMinMs0, timeMaxMs0, limit,
-      rowsPerSplit, batchSize, dimFilters0, pushedAggs, zoneFilters,
-      notNullCols, isNullCols, topNTime, groupByDim, prefixFilters,
-      patternFilters, orFilters, boundFilters, mvContains ++ fresh, nestedEq)
+    val fresh = extra.map(MvContains.canon).distinct
+      .filterNot(mvContains.map(MvContains.canon).toSet)
+    if (fresh.isEmpty) this else withHints(mv = mvContains ++ fresh)
   }
-
-  /** Current nested-field clauses (idempotency check + specs). */
-  def nestedEqClauses: Seq[(String, String, Seq[String])] = nestedEq
 
   /** Copy with additional nested-field equality row-selection clauses
-    * (the plain-SQL rewrite's hook; same superset-hint contract as
-    * withMvContains — the caller's get_json_object predicate stays the
-    * residual final word).
+    * (the get_json_object predicate stays the residual final word).
     */
   def withNestedEq(extra: Seq[(String, String, Seq[String])]): DruidScan = {
-    def canon(c: (String, String, Seq[String])) =
-      (c._1, c._2, c._3.distinct.sorted)
-    val have = nestedEq.map(canon).toSet
-    val fresh = extra.map(canon).distinct.filterNot(have)
+    val fresh = extra.map(NestedEq.canon).distinct
+      .filterNot(nestedEq.map(NestedEq.canon).toSet)
+    if (fresh.isEmpty) this else withHints(ne = nestedEq ++ fresh)
+  }
+
+  /** Copy with additional comparator bounds per column (bounds AND;
+    * the compiled comparator predicate stays the residual final word).
+    */
+  def withBounds(extra: Map[String, Seq[DimBound]]): DruidScan = {
+    val fresh = extra.map { case (c, bs) =>
+      c -> bs.distinct.filterNot(boundFilters.getOrElse(c, Nil).contains)
+    }.filter(_._2.nonEmpty)
     if (fresh.isEmpty) this
-    else new DruidScan(root, required, timeMinMs0, timeMaxMs0, limit,
+    else withHints(bounds = fresh.foldLeft(boundFilters) { case (m, (c, bs)) =>
+      m + (c -> (m.getOrElse(c, Nil) ++ bs))
+    })
+  }
+
+  private def withHints(bounds: Map[String, Seq[DimBound]] = boundFilters,
+                        mv: Seq[(String, Seq[String])] = mvContains,
+                        ne: Seq[(String, String, Seq[String])] = nestedEq)
+      : DruidScan =
+    new DruidScan(root, required, timeMinMs0, timeMaxMs0, limit,
       rowsPerSplit, batchSize, dimFilters0, pushedAggs, zoneFilters,
       notNullCols, isNullCols, topNTime, groupByDim, prefixFilters,
-      patternFilters, orFilters, boundFilters, mvContains,
-      nestedEq ++ fresh)
-  }
+      patternFilters, orFilters, bounds, mv, ne)
 
   override def description(): String =
     s"DruidScan(root=$root, columns=${required.fieldNames.mkString(",")}, " +

@@ -24,10 +24,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           usage, ""),
         build))
     }
-    // plain-SQL MV bitmap pushdown for every extension-built session;
-    // programmatic sessions are armed on first druid-table resolution
-    // (DruidDataSource.getTable) instead
-    ext.injectOptimizerRule(_ => graft.plans.MvBitmapRewrite)
+    // bitmap row-selection hints for every extension-built session,
+    // including a newSession() that reaches druid tables only through
+    // global temp views: the rule runs after scan pushdown, which only
+    // experimental.extraOptimizations reaches, so the session is armed
+    // on its first analysis (programmatic sessions are armed on first
+    // druid-table resolution, DruidDataSource.getTable)
+    ext.injectCheckRule(s => _ => graft.plans.MvBitmapRewrite.arm(s))
   }
 }
 

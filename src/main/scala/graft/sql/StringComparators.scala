@@ -185,6 +185,31 @@ object Alphanum {
   }
 
   def key(s: UTF8String): UTF8String = UTF8String.fromString(keyOf(s.toString))
+
+  /** A value whose key is `key`, or None when no value has that key.
+    * The compiled alphanumeric bound carries only the key; this turns
+    * it back into a bound value for the dictionary-side comparator.
+    * Digit runs come back without their leading zeros ("a007" and
+    * "a7" share a key), which is the same bound under this ordering.
+    */
+  def valueOf(key: String): Option[String] = {
+    val sb = new java.lang.StringBuilder(key.length)
+    var i = 0
+    while (i < key.length) {
+      val ch = key.charAt(i)
+      if (ch >= '0' && ch <= '9') {
+        // a digit run: '0', chr(32 + len), len digits ("0" if len is 0)
+        if (ch != '0' || i + 1 >= key.length) return None
+        val end = i + 2 + (key.charAt(i + 1) - 32)
+        if (end < i + 2 || end > key.length) return None
+        if (end == i + 2) sb.append('0') else sb.append(key, i + 2, end)
+        i = end
+      } else { sb.append(ch); i += 1 }
+    }
+    // rejects what no value encodes to (non-digits in a run, a leading
+    // zero, two adjacent runs)
+    Some(sb.toString).filter(keyOf(_) == key)
+  }
 }
 
 /** `version_cmp(col, boundLiteral) -> int`: three-way Maven-version

@@ -172,10 +172,10 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val e = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding"))
-    // maxDf=3 drops 'apple' (df 4): doc 2 then shares NO indexed token
-    // with doc 0 and must not be a candidate
-    val top = VectorOps.hybridTopK(d, e, k = 3, nQueries = 1, maxDf = 3)
-      .collect()
+    // cap 4 * 3 div 4 = 3 drops 'apple' (df 4): doc 2 then shares NO
+    // indexed token with doc 0 and must not be a candidate
+    val top = VectorOps.hybridTopKFrac(d, e, k = 3, nQueries = 1,
+      num = 3, den = 4).collect()
     assert(!top.exists(_.getLong(1) == 2L),
       "df-capped token must not generate candidates")
     // doc 3 shares {banana, cherry} (overlap 2) vs doc 1's {banana}:
@@ -184,9 +184,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(byRnk.map(_.getLong(3)).toSeq == (1L to byRnk.length).toSeq)
     val kwFirst = byRnk.head.getLong(1)
     assert(Set(1L, 3L).contains(kwFirst))
-    // uncapped (maxDf >= N): apple back in the index, doc 2 reachable
-    val all = VectorOps.hybridTopK(d, e, k = 3, nQueries = 1, maxDf = 4)
-      .collect()
+    // uncapped (cap 4 * 1 div 1 = N): apple back in the index, doc 2
+    // reachable
+    val all = VectorOps.hybridTopKFrac(d, e, k = 3, nQueries = 1,
+      num = 1, den = 1).collect()
     assert(all.exists(_.getLong(1) == 2L))
   }
 
