@@ -390,16 +390,15 @@ object DruidServe {
       val s = spark.newSession()
       s.conf.set("spark.sql.session.timeZone", zoneId)
       s.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-      graft.sql.DruidSqlCompat.register(s)
-      // newSession() starts with no extra optimizer rules, and served
-      // tables arrive as global temp views, so no druid-table
-      // resolution arms the bitmap-hint rule here by itself
-      graft.plans.MvBitmapRewrite.arm(s)
+      // newSession() starts with no temp functions and no extra
+      // optimizer rules, and served tables arrive as global temp views,
+      // so no druid-table resolution installs graft here by itself
+      graft.sql.GraftExtensions.install(s)
       // callers may have registered their own temp functions / temp
       // views on the parent session and expect the SQL endpoint to see
       // them (the endpoint ran directly on the parent before child
       // sessions): snapshot both at creation. The isEmpty guard keeps
-      // builtins and the compat layer's own (identical) registrations
+      // builtins and graft's own (identical) registrations
       // authoritative in the child.
       val pr = spark.sessionState.functionRegistry
       val cr = s.sessionState.functionRegistry
@@ -751,7 +750,7 @@ object DruidServe {
     // INFORMATION_SCHEMA registered, EXPLAIN PLAN FOR handled
     def buildSqlDf(session: SparkSession, sql0raw: String,
                    args: Array[Any]): DataFrame = {
-      graft.sql.DruidSqlCompat.register(session)
+      graft.sql.GraftExtensions.install(session)
       // served tables reach the session as bridged global-temp views:
       // registered at child-session creation (newSqlSession) and
       // re-bridged into every live session on ingest commits

@@ -63,10 +63,9 @@ object JdbcEndpoint {
       // serving-session isolation: shared context + catalog, own
       // SQLConf — JDBC-side conf mutation cannot leak into the caller
       val serve = running.map(_._1).getOrElse(spark.newSession())
-      graft.sql.DruidSqlCompat.register(serve)
       // served tables arrive as global temp views, so no druid-table
-      // resolution arms the hint rule in this session
-      graft.plans.MvBitmapRewrite.arm(serve)
+      // resolution installs graft on this session by itself
+      graft.sql.GraftExtensions.install(serve)
       // global temp views are the supported cross-session channel (the
       // full logical plan rides them, so pushdown survives); a plain
       // temp view on the serving session gives JDBC clients the bare

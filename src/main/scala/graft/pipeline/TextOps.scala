@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sql.GraftExtensions
+
 /** Text-pipeline operators for large-scale training-data curation:
   * shingling, MinHash+LSH, SimHash, exact n-gram Jaccard, language-ID,
   * quality scoring, token counting, fingerprinting.
@@ -52,7 +54,7 @@ object TextOps {
     * min-aggregate with only doc-level rows on the wire.
     */
   def grams5Raw(docs: DataFrame): DataFrame = {
-    graft.sql.Grams5.register(docs.sparkSession)
+    GraftExtensions.install(docs.sparkSession)
     docs.filter(length(col("text")) >= 5)
       .select(col("doc_id"), explode(expr("grams5(text)")).as("tg"))
   }
@@ -97,7 +99,7 @@ object TextOps {
     */
   def bandSignaturesDirect(docs: DataFrame, k: Int = 16,
                            bandSize: Int = 4): DataFrame = {
-    graft.sql.MinHashBands.register(docs.sparkSession)
+    GraftExtensions.install(docs.sparkSession)
     docs.filter(length(col("text")) >= 5)
       .select(col("doc_id"),
         posexplode(expr(s"minhash_bands(text, $k, $bandSize)")))
@@ -136,7 +138,7 @@ object TextOps {
         // sides), per-bucket state is cap-bounded even on the
         // degenerate boilerplate bucket, and the join's
         // quadratic-in-bucket output cannot occur by construction.
-        graft.sql.CollectCappedAgg.register(bands.sparkSession)
+        GraftExtensions.install(bands.sparkSession)
         bands.groupBy(col("band"), col("sig"))
           .agg(expr(s"collect_capped(doc_id, $cap)").as("ds"))
           .filter(col("ds").isNotNull && size(col("ds")) >= 2)
@@ -164,7 +166,7 @@ object TextOps {
     * the same single pass over the band table.
     */
   def lshCandidatesDense(bands: DataFrame, cap: Int): DataFrame = {
-    graft.sql.CollectCappedAgg.register(bands.sparkSession)
+    GraftExtensions.install(bands.sparkSession)
     val members = bands.groupBy(col("band"), col("sig"))
       .agg(expr(s"collect_capped(doc_id, $cap)").as("ds"))
       .filter(col("ds").isNotNull && size(col("ds")) >= 2)
@@ -213,8 +215,7 @@ object TextOps {
     * payload stays proportional to the candidate set.
     */
   def exactJaccardDirect(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    graft.sql.Grams5Distinct.register(docs.sparkSession)
-    graft.sql.IntersectCount.register(docs.sparkSession)
+    GraftExtensions.install(docs.sparkSession)
     val arr = docs.filter(length(col("text")) >= 5)
       .select(col("doc_id"), expr("grams5_distinct(text)").as("g"))
     val a = arr.select(col("doc_id").as("d1"), col("g").as("g1"))
@@ -260,7 +261,7 @@ object TextOps {
     * broadcast crossJoin and two aggregates).
     */
   def simhashDirect(docs: DataFrame, nBits: Int = 16): DataFrame = {
-    graft.sql.Simhash5.register(docs.sparkSession)
+    GraftExtensions.install(docs.sparkSession)
     docs.filter(length(col("text")) >= 5)
       .select(col("doc_id"), expr(s"simhash5(text, $nBits)").as("simhash"))
   }
@@ -270,7 +271,7 @@ object TextOps {
     * explode or group-by shuffle.
     */
   def fingerprintDirect(docs: DataFrame): DataFrame = {
-    graft.sql.Fingerprint5.register(docs.sparkSession)
+    GraftExtensions.install(docs.sparkSession)
     docs.filter(length(col("text")) >= 5)
       .select(col("doc_id"), expr("fingerprint5(text)").as("fingerprint"))
   }
@@ -287,7 +288,7 @@ object TextOps {
 
   /** Native one-pass forms of [[wordCountSql]] / [[markerCountSql]] for
     * the SPARK side of a gate (callers must
-    * `graft.sql.TextCounts.register(s)`): value-identical (pinned by
+    * `GraftExtensions.install(s)`): value-identical (pinned by
     * TextCountsSpec) but one byte scan instead of two padded copies and
     * three replace()d copies per document. The replace-arithmetic
     * strings above remain the oracle-side (portable SQL) forms.

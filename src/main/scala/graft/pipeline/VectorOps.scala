@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sql.GraftExtensions
+
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Dot products fold in ARRAY ORDER — natively via [[graft.sql.DotFloat]]
@@ -20,13 +22,6 @@ import org.apache.spark.sql.functions._
 object VectorOps {
 
   import TextOps.{P, aConst, bConst}
-
-  private def registerExprs(df: DataFrame): Unit = {
-    graft.sql.DotFloat.register(df.sparkSession)
-    graft.sql.DotInt8.register(df.sparkSession)
-    graft.sql.HyperplaneProjection.register(df.sparkSession)
-    graft.sql.TopKStructAgg.register(df.sparkSession)
-  }
 
   /** Rank the k smallest (adc, cand_id) per query with the k-bounded
     * heap aggregate instead of a `row_number` window — a window moves a
@@ -76,7 +71,7 @@ object VectorOps {
     * candidate id).
     */
   def bruteTopK(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val cand = embeddings.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val scored = q.crossJoin(cand)
@@ -127,7 +122,7 @@ object VectorOps {
   private def hybridTopKImpl(docs: DataFrame, embeddings: DataFrame, k: Int,
                              nQueries: Int,
                              dfCap: DataFrame => DataFrame): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val toks = docs.select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
     val rare = dfCap(toks.groupBy(col("tok"))
@@ -195,7 +190,7 @@ object VectorOps {
     * candidate if it collides in ANY table.
     */
   def lshBuckets(embeddings: DataFrame, nPlanes: Int, nTables: Int, dim: Int): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     (0 until nTables).foldLeft(embeddings) { (df, t) =>
       df.withColumn(s"b$t", expr(bucketSql(t, nPlanes, dim)))
     }
@@ -258,7 +253,7 @@ object VectorOps {
     * full corpus never shuffles vectors, only (vec_id, best-cell) rows.
     */
   def ivfAssign(embeddings: DataFrame, nCells: Int): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val cent = embeddings.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     embeddings.select(col("vec_id"), col("embedding"))
@@ -285,7 +280,7 @@ object VectorOps {
     * vectors, exactly like the assignment it refines.
     */
   def kmeansRefine(embeddings: DataFrame, nCells: Int): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val a1 = ivfAssign(embeddings, nCells)
     val cent2 = embeddings.join(a1, "vec_id")
       .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -346,7 +341,7 @@ object VectorOps {
     */
   def semanticDedup(embeddings: DataFrame, nCells: Int,
                     tau: Double, maxCell: Option[Int] = None): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val a1 = ivfAssign(embeddings, nCells)
     val withVec = embeddings.select(col("vec_id"), col("embedding"))
       .join(a1, "vec_id")
@@ -469,7 +464,7 @@ object VectorOps {
     * corpus except to re-rank the candidate pool.
     */
   def sq8Quantize(embeddings: DataFrame): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     // PER-DIMENSION ranges (FAISS SQ8 trains per-dim): one outlier
     // dimension no longer crushes quantization resolution for every
     // other dimension the way a single global [lo, hi] did. The stats
@@ -500,7 +495,7 @@ object VectorOps {
               queryFilter: org.apache.spark.sql.Column,
               k: Int, candPool: Int,
               precomputedQ8: Option[DataFrame] = None): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val quantized = precomputedQ8.getOrElse(sq8Quantize(embeddings))
     val cand = quantized.select(col("vec_id").as("cand_id"),
       col("q8").as("cq"))
@@ -635,7 +630,7 @@ object VectorOps {
     * memory-resident, and the quantizer never reruns at query time.
     */
   def pqCodes(embeddings: DataFrame): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     subspaceDists(embeddings, "vec_id", pqCentroids(embeddings))
       .groupBy(col("vec_id"), col("m"))
       .agg(max(struct((-col("d")).as("nd"), (-col("cid")).as("nc"))).as("best"))
@@ -652,7 +647,7 @@ object VectorOps {
     */
   def pqTopK(embeddings: DataFrame, queryFilter: org.apache.spark.sql.Column,
              k: Int, precomputedCodes: Option[DataFrame] = None): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     // index-serve split: pass a PERSISTED code table (pqCodes, built
     // once) and the query-time plan never quantizes the corpus — only
     // the query batch meets the (broadcast) centroids below
@@ -699,7 +694,7 @@ object VectorOps {
                 precomputedAssign: Option[DataFrame] = None,
                 precomputedCodes: Option[DataFrame] = None,
                 precomputedCellCodes: Option[DataFrame] = None): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     // the serving index: (vec_id, cell, m, code). Pass it PRE-JOINED
     // ([[ivfPqCellCodes]], persisted at build time, bucketed by cell on
     // disk at scale) and the query plan contains NO corpus-wide join —
@@ -771,7 +766,7 @@ object VectorOps {
                    queryFilter: org.apache.spark.sql.Column,
                    kCand: Int, k: Int,
                    precomputedCodes: Option[DataFrame] = None): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val cand = pqTopK(embeddings, queryFilter, kCand, precomputedCodes)
       .select(col("query_id"), col("cand_id"))
     val e = embeddings.select(col("vec_id"), col("embedding"))
@@ -887,7 +882,7 @@ object VectorOps {
              precomputedCodes: Option[DataFrame] = None,
              precomputedAssign: Option[DataFrame] = None,
              precomputedStats: Option[DataFrame] = None): DataFrame = {
-    registerExprs(embeddings)
+    GraftExtensions.install(embeddings.sparkSession)
     val codes = precomputedCodes.getOrElse(sqCodes(embeddings))
     val assign = precomputedAssign.getOrElse(ivfAssign(embeddings, nCells))
     val stats = precomputedStats.getOrElse(sqStats(embeddings))

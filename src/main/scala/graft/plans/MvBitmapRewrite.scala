@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -51,24 +50,12 @@ import graft.sources.druid.{DimBound, DruidScan}
   * bitmap| rows and decoding every multi-value array, nested document
   * or dimension value in every segment.
   *
-  * Armed on first druid-table resolution (DruidDataSource.getTable),
-  * on the first analysis in a GraftExtensions-built session, and by
-  * the broker's and JDBC endpoint's serving sessions, which reach
-  * druid tables only through global temp views;
-  * `MvBitmapRewrite.arm(spark)` is the programmatic hook.
+  * Armed by [[graft.sql.GraftExtensions.install]], the one
+  * session-level arming point: every session that resolves a druid
+  * table (DruidDataSource.getTable), analyses a query under the
+  * extension, or serves the broker or JDBC endpoint is installed.
   */
 object MvBitmapRewrite extends Rule[LogicalPlan] {
-
-  private val injected =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotently append this rule to the session's optimizer. */
-  def arm(spark: SparkSession): Unit = injected.synchronized {
-    if (injected.add(spark))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, sr: DataSourceV2ScanRelation)

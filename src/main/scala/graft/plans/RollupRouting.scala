@@ -114,12 +114,6 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       segDirNames: Set[String], versionDir: String)
 
   private val registry = new CopyOnWriteArrayList[Registered]()
-  // keyed by the session OBJECT in a WeakHashMap (the Registration.once
-  // pattern): identity hashes are not unique, so a GC'd session's stale
-  // int key could collide with a live one and silently skip arming the
-  // rule; weak keys also die with the session instead of accumulating
-  private val injected = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
   // registrations that have already logged their staleness warning
   // (identity set: one loud line per stale registration, not per query)
   private val staleLogged = java.util.Collections.newSetFromMap(
@@ -185,11 +179,8 @@ object RollupRouting extends org.apache.spark.internal.Logging {
     registry.add(entry)
   }
 
-  private def arm(spark: SparkSession): Unit = injected.synchronized {
-    if (injected.add(spark))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RollupRewrite
-  }
+  private def arm(spark: SparkSession): Unit =
+    graft.sql.Registration.optimizerRule(spark, RollupRewrite)
 
   /** Druid table roots referenced anywhere in `p` (for fingerprinting). */
   private def druidRoots(p: LogicalPlan): Seq[String] = p.collect {
@@ -251,6 +242,9 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       quantiles: Map[String, (String, Int)] = Map.empty,
       tuples: Map[(String, String), (String, Int)] = Map.empty,
       tdigests: Map[String, (String, Int)] = Map.empty): Unit = {
+    // the build and every later refresh (on this session) aggregate
+    // through graft's sketch functions
+    graft.sql.GraftExtensions.install(spark)
     val g = granularity.toUpperCase(java.util.Locale.ROOT)
     require(coarserOrEqual.contains(g), s"unsupported granularity $g")
     val analyzedBase = baseDf.queryExecution.analyzed
@@ -362,22 +356,18 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       r.counts.toSeq.sortBy(_._1).map { case (m, c) => count(col(m)).as(c) } ++
       r.hlls.toSeq.sortBy(_._1).map { case (m, (c, lgk)) =>
         expr(s"hll_sketch_agg(`$m`, $lgk)").as(c) } ++
-      r.freqs.toSeq.sortBy(_._1).map { case (m, (c, mm)) => {
-        graft.sql.DruidSqlCompat.register(src.sparkSession)
+      r.freqs.toSeq.sortBy(_._1).map { case (m, (c, mm)) =>
         expr(s"ds_freq(`$m`, $mm)").as(c)
-      } } ++
-      r.quantiles.toSeq.sortBy(_._1).map { case (m, (c, k)) => {
-        graft.sql.DruidSqlCompat.register(src.sparkSession)
+      } ++
+      r.quantiles.toSeq.sortBy(_._1).map { case (m, (c, k)) =>
         expr(s"ds_quantiles_sketch(`$m`, $k)").as(c)
-      } } ++
-      r.tuples.toSeq.sortBy(_._2._1).map { case ((km, mm), (c, nom)) => {
-        graft.sql.DruidSqlCompat.register(src.sparkSession)
+      } ++
+      r.tuples.toSeq.sortBy(_._2._1).map { case ((km, mm), (c, nom)) =>
         expr(s"ds_tuple(`$km`, `$mm`, $nom)").as(c)
-      } } ++
-      r.tdigests.toSeq.sortBy(_._1).map { case (m, (c, k)) => {
-        graft.sql.DruidSqlCompat.register(src.sparkSession)
+      } ++
+      r.tdigests.toSeq.sortBy(_._1).map { case (m, (c, k)) =>
         expr(s"tdigest_agg(`$m`, $k)").as(c)
-      } }
+      }
     require(aggs.nonEmpty, "maintained rollup needs at least one measure")
     src.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
   }
@@ -396,27 +386,23 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       r.counts.values.toSeq.sorted.map(c => sum(col(c)).as(c)) ++
       r.hlls.values.toSeq.map(_._1).sorted.map(c =>
         expr(s"hll_union_agg(`$c`, false)").as(c)) ++
-      r.freqs.values.toSeq.sortBy(_._1).map { case (c, mm) => {
-        graft.sql.DruidSqlCompat.register(both.sparkSession)
+      r.freqs.values.toSeq.sortBy(_._1).map { case (c, mm) =>
         // blob-merge at the SAME maxMapSize: a merge into a smaller
         // map would silently widen error bounds (the lgK-guard class)
         expr(s"ds_freq(`$c`, $mm)").as(c)
-      } } ++
-      r.quantiles.values.toSeq.sortBy(_._1).map { case (c, k) => {
-        graft.sql.DruidSqlCompat.register(both.sparkSession)
+      } ++
+      r.quantiles.values.toSeq.sortBy(_._1).map { case (c, k) =>
         // blob-merge at the SAME k (the lgK-guard class)
         expr(s"ds_quantiles_sketch(`$c`, $k)").as(c)
-      } } ++
-      r.tuples.values.toSeq.sortBy(_._1).map { case (c, nom) => {
-        graft.sql.DruidSqlCompat.register(both.sparkSession)
+      } ++
+      r.tuples.values.toSeq.sortBy(_._1).map { case (c, nom) =>
         // blob-merge at the SAME nominalEntries (the lgK-guard class)
         expr(s"ds_tuple_merge(`$c`, $nom)").as(c)
-      } } ++
-      r.tdigests.values.toSeq.sortBy(_._1).map { case (c, k) => {
-        graft.sql.DruidSqlCompat.register(both.sparkSession)
+      } ++
+      r.tdigests.values.toSeq.sortBy(_._1).map { case (c, k) =>
         // blob-merge at the SAME compression (the lgK-guard class)
         expr(s"tdigest_agg(`$c`, $k)").as(c)
-      } }
+      }
     both.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
   }
 

@@ -195,7 +195,6 @@ object DruidQueries extends QuerySet {
     * difference estimates are DuckDB-replayable.
     */
   private def dsThetaSeg(s: SparkSession, dir: String): DataFrame = {
-    graft.sql.DsThetaFunctions.register(s)
     val path = segTable("dstheta", dir,
       Tables.events(s, dir)
         .groupBy(date_trunc("day", col("ts")).as("__time"),
@@ -216,7 +215,6 @@ object DruidQueries extends QuerySet {
     * are exact at any SF.
     */
   private def dsTupleSeg(s: SparkSession, dir: String): DataFrame = {
-    graft.sql.DruidSqlCompat.register(s)
     val path = segTable("dstuple", dir,
       Tables.events(s, dir)
         .withColumn("uk", expr("cast(user_id % 100 as string)"))
@@ -238,7 +236,6 @@ object DruidQueries extends QuerySet {
     * statistic the oracle replays with a window rank.
     */
   private def dsQuantilesSeg(s: SparkSession, dir: String): DataFrame = {
-    graft.sql.DsQuantilesFunctions.register(s)
     val path = segTable("dsquant", dir,
       Tables.events(s, dir)
         .groupBy(date_trunc("day", col("ts")).as("__time"),
@@ -764,7 +761,6 @@ object DruidQueries extends QuerySet {
     //    oracle's window rank over the raw rows.
     Q("dr31_ds_quantiles_interop",
       (s, dir) => {
-        graft.sql.DsQuantilesFunctions.register(s)
         dsQuantilesSeg(s, dir)
           .groupBy(col("event_type"))
           .agg(expr("ds_quantiles_union_agg(value_qs)").as("merged"))
@@ -1409,7 +1405,6 @@ object DruidQueries extends QuerySet {
     //    predicates land in the DSv2 interval pruning unchanged.
     Q("dr39_druid_sql",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         graft.sql.DruidLookups.register("event_kind", Map(
           "click" -> "engagement", "view" -> "engagement",
           "purchase" -> "conversion"))
@@ -1448,7 +1443,6 @@ object DruidQueries extends QuerySet {
     //    ArrayType column.
     Q("dr40_druid_sql_mv",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         docsMvSeg(s, dir).createOrReplaceTempView("graft_dr40_docs")
         s.sql("""
           SELECT source,
@@ -2697,7 +2691,6 @@ object DruidQueries extends QuerySet {
     //    uses.
     Q("dr79_druid_sql_window",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         eventsSeg(s, dir).createOrReplaceTempView("graft_dr79_events")
         s.sql("""
           SELECT event_type, day_ms, n,
@@ -2749,7 +2742,6 @@ object DruidQueries extends QuerySet {
     //    would read it three times).
     Q("dr80_druid_sql_grouping_sets",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         eventsSeg(s, dir).createOrReplaceTempView("graft_dr80_events")
         s.sql("""
           SELECT event_type, user_id % 3 AS ub,

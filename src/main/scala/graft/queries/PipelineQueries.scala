@@ -132,6 +132,14 @@ object PipelineQueries extends QuerySet {
 
   private val ivfOracle: String = ivfOracleWhere("true")
 
+  /** Where a staged index of `kind` over scale dir `dir` lives. The
+    * name starts with the kind: Spark's file index skips a path whose
+    * name starts with `_` or `.` as hidden, and a scale dir's flattened
+    * path starts with `_`.
+    */
+  private def stagedDir(dir: String, kind: String): String =
+    s"/tmp/graft_pipeline/${kind}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+
   private val stagedIvf = scala.collection.mutable.Map[String, String]()
 
   /** Persisted IVF assignment table (cell per vector), built once per
@@ -145,7 +153,7 @@ object PipelineQueries extends QuerySet {
     // monitors in one direction only, so no cycle
     stagedIvf.synchronized {
       stagedIvf.getOrElseUpdate(dir, {
-        val out = s"/tmp/graft_pipeline/${dir.replaceAll("[^A-Za-z0-9]", "_")}_ivf"
+        val out = stagedDir(dir, "ivf")
         VectorOps.ivfAssign(Tables.load(s, dir, "embeddings"), 8)
           .write.mode("overwrite").parquet(out)
         out
@@ -165,7 +173,7 @@ object PipelineQueries extends QuerySet {
   def lshBandsDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     stagedBands.synchronized {
       stagedBands.getOrElseUpdate(dir, {
-        val out = s"/tmp/graft_pipeline/${dir.replaceAll("[^A-Za-z0-9]", "_")}_lshbands"
+        val out = stagedDir(dir, "lshbands")
         TextOps.bandSignaturesDirect(Tables.load(s, dir, "documents"), 16, 4)
           .write.mode("overwrite").parquet(out)
         out
@@ -191,7 +199,7 @@ object PipelineQueries extends QuerySet {
   def sourceOverlapApprox(docs0: org.apache.spark.sql.DataFrame,
                           k: Int = 256): org.apache.spark.sql.DataFrame = {
     require(k >= 16, s"k=$k too small for a usable estimate")
-    graft.sql.Grams5.register(docs0.sparkSession)
+    graft.sql.GraftExtensions.install(docs0.sparkSession)
     val docs = docs0.filter(length(col("text")) >= 5)
     val grams = docs.select(col("source"),
       explode(expr("grams5(text)")).as("tg"))
@@ -228,7 +236,7 @@ object PipelineQueries extends QuerySet {
   def pqIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     stagedPq.synchronized {
       stagedPq.getOrElseUpdate(dir, {
-        val out = s"/tmp/graft_pipeline/${dir.replaceAll("[^A-Za-z0-9]", "_")}_pq"
+        val out = stagedDir(dir, "pq")
         VectorOps.pqCodes(Tables.load(s, dir, "embeddings"))
           .write.mode("overwrite").parquet(out)
         out
@@ -247,14 +255,12 @@ object PipelineQueries extends QuerySet {
                   dir: String): (String, String) =
     stagedSq.synchronized {
       stagedSq.getOrElseUpdate(dir, {
-        val base = s"/tmp/graft_pipeline/${dir.replaceAll("[^A-Za-z0-9]", "_")}_sq"
+        val (codes, stats) = (stagedDir(dir, "sq_codes"), stagedDir(dir, "sq_stats"))
         val emb = Tables.load(s, dir, "embeddings")
-        VectorOps.sqStats(emb).write.mode("overwrite")
-          .parquet(s"${base}_stats")
-        VectorOps.sqCodes(emb,
-            Some(s.read.parquet(s"${base}_stats")))
-          .write.mode("overwrite").parquet(s"${base}_codes")
-        (s"${base}_codes", s"${base}_stats")
+        VectorOps.sqStats(emb).write.mode("overwrite").parquet(stats)
+        VectorOps.sqCodes(emb, Some(s.read.parquet(stats)))
+          .write.mode("overwrite").parquet(codes)
+        (codes, stats)
       })
     }
 
@@ -272,7 +278,7 @@ object PipelineQueries extends QuerySet {
   def ivfPqIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     stagedIvfPq.synchronized {
       stagedIvfPq.getOrElseUpdate(dir, {
-        val out = s"/tmp/graft_pipeline/${dir.replaceAll("[^A-Za-z0-9]", "_")}_ivfpq"
+        val out = stagedDir(dir, "ivfpq")
         s.read.parquet(pqIndexDir(s, dir))
           .join(s.read.parquet(ivfIndexDir(s, dir)), "vec_id")
           .write.mode("overwrite").parquet(out)
@@ -405,7 +411,6 @@ object PipelineQueries extends QuerySet {
     // heuristic; deterministic in any dialect).
     Q("d5_langid",
       (s, dir) => {
-        graft.sql.TextCounts.register(s)
         val en = TextOps.markerCountNativeSql("the")
         val art = TextOps.markerCountNativeSql("a")
         Tables.load(s, dir, "documents")
@@ -429,7 +434,6 @@ object PipelineQueries extends QuerySet {
     // Quality scoring: length/word statistics + keep/drop label.
     Q("d6_quality",
       (s, dir) => {
-        graft.sql.TextCounts.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("doc_id",
             "CAST(length(text) AS BIGINT) AS n_chars",
@@ -455,7 +459,6 @@ object PipelineQueries extends QuerySet {
     // Token counting: whitespace tokens + a bytes-per-token BPE estimate.
     Q("d7_tokens",
       (s, dir) => {
-        graft.sql.TextCounts.register(s)
         Tables.load(s, dir, "documents")
           .selectExpr("source",
             s"CAST(${TextOps.wordCountNativeSql} AS BIGINT) AS ws_tokens",
@@ -508,7 +511,6 @@ object PipelineQueries extends QuerySet {
     // them to fix the key width.
     Q("d10_decontaminate",
       (s, dir) => {
-        graft.sql.WordNgrams.register(s)
         val docs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), expr("word_ngrams(text, 3)").as("tris"))
           .filter(size(col("tris")) > 0)
@@ -575,7 +577,6 @@ object PipelineQueries extends QuerySet {
     // doubles; irrationals can't sit on the floor boundary).
     Q("d12_mix_resample",
       (s, dir) => {
-        graft.sql.TextCounts.register(s)
         val wc = TextOps.wordCountNativeSql
         val docs = Tables.load(s, dir, "documents")
         val bySrc = docs
@@ -620,7 +621,6 @@ object PipelineQueries extends QuerySet {
     // final report never recomputes text expressions.
     Q("d13_curation_pipeline",
       (s, dir) => {
-        graft.sql.TextCounts.register(s)
         val en = TextOps.markerCountNativeSql("the")
         val art = TextOps.markerCountNativeSql("a")
         val wc = TextOps.wordCountNativeSql
@@ -1144,7 +1144,6 @@ object PipelineQueries extends QuerySet {
     // weight) ever shuffles.
     Q("d26_dsir_resample",
       (s, dir) => {
-        graft.sql.Grams5.register(s)
         val docs = Tables.load(s, dir, "documents")
         // ONE compact gram pass: grams5_hist computes each doc's
         // 256-bucket gram histogram as a per-row projection — the
@@ -1156,7 +1155,6 @@ object PipelineQueries extends QuerySet {
         // All downstream arithmetic is over summed counts, so ct/cr
         // and weight = sum(w * cnt) are bit-identical per the
         // Grams5HistSpec equivalence pin.
-        graft.sql.Grams5Hist.register(s)
         val g = graft.pipeline.BarrierCache.checkpoint(
           docs.filter(length(col("text")) >= 5)
             .select(col("doc_id"), col("lang"), col("source"),
@@ -1394,7 +1392,6 @@ object PipelineQueries extends QuerySet {
     // estimated matrix with the same schema.
     Q("d29_source_overlap",
       (s, dir) => {
-        graft.sql.Grams5Distinct.register(s)
         val docs = Tables.load(s, dir, "documents")
           .filter(length(col("text")) >= 5)
         val w = org.apache.spark.sql.expressions.Window.orderBy(col("source"))
@@ -1533,8 +1530,6 @@ object PipelineQueries extends QuerySet {
     // row the Bloom can reject.
     Q("d22_bloom_decontaminate",
       (s, dir) => {
-        graft.sql.WordNgrams.register(s)
-        graft.sql.BloomFns.register(s)
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), expr("word_ngrams(text, 3)").as("tris"))
           .filter(size(col("tris")) > 0)
@@ -1576,7 +1571,6 @@ object PipelineQueries extends QuerySet {
     // accept/reject label compares the exact integer sum.
     Q("d23_quality_classifier",
       (s, dir) => {
-        graft.sql.Grams5Distinct.register(s)
         val docs = Tables.load(s, dir, "documents")
           .filter(length(col("text")) >= 5)
           .select(col("doc_id"), expr("grams5_distinct(text)").as("g"))
@@ -2461,7 +2455,6 @@ object PipelineQueries extends QuerySet {
     // degrades to Misra-Gries bounds instead of failing.
     Q("d30_heavy_hitters",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         Tables.load(s, dir, "documents")
           .select(col("source"), explode(split(col("text"), " ")).as("tok"))
           .groupBy(col("source"))

@@ -954,7 +954,6 @@ object Relational extends QuerySet {
     //    estimate is an exact count — oracle-deterministic at any SF.
     Q("q39_rollup_freq_routing",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         val base = Tables.events(s, dir)
           .withColumn("user_mod", expr("cast(user_id % 100 as string)"))
         val rollup = s.read.parquet(stageRollup(s, dir))
@@ -997,7 +996,6 @@ object Relational extends QuerySet {
     //    json_value's bitmap pushdown on nested columns.
     Q("q40_json_fn_family",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         Tables.events(s, dir).createOrReplaceTempView("events_jfn")
         s.sql("""SELECT event_type,
                    count(*) AS n,
@@ -1067,7 +1065,6 @@ object Relational extends QuerySet {
     //    (RollupRoutingSpec's negative).
     Q("q42_rollup_tuple_routing",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         val base = Tables.events(s, dir)
           .withColumn("user_mod", expr("cast(user_id % 100 as string)"))
           .withColumn("tup_m", expr("array(floor(value))"))
@@ -1107,7 +1104,7 @@ object Relational extends QuerySet {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val out = s"/tmp/graft_rollup/$tag/events_daily"
     if (!rollupDone.contains(tag)) {
-      graft.sql.DruidSqlCompat.register(s) // ds_freq for the freq metric
+      graft.sql.GraftExtensions.install(s) // ds_freq for the freq metric
       Tables.events(s, dir)
         .groupBy(expr("date_trunc('DAY', ts)").as("ts"), col("event_type"))
         .agg(sum(col("value")).as("value_sum"),

@@ -84,10 +84,18 @@ object StreamingQueries extends QuerySet {
     } finally s.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
+  /** Where staged input or output of `kind` over scale dir `dir`
+    * lives. The name starts with the kind: Spark's file index skips a
+    * path whose name starts with `_` or `.` as hidden, and a scale
+    * dir's flattened path starts with `_`.
+    */
+  private def stagedPath(dir: String, kind: String): String =
+    s"/tmp/graft_stream/${kind}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+
   /** Stage events as a streaming drop directory (once per JVM). */
   private def stageDir(s: SparkSession, dir: String): String = synchronized {
     staged.getOrElseUpdate(dir, {
-      val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_events"
+      val out = stagedPath(dir, "events")
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("user_id"),
                 col("value"))
@@ -106,7 +114,7 @@ object StreamingQueries extends QuerySet {
     */
   private def stageOrderedDir(s: SparkSession, dir: String): String = synchronized {
     staged.getOrElseUpdate(s"$dir#ordered", {
-      val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_events_bytime"
+      val out = stagedPath(dir, "events_bytime")
       // 4 range files = 4 micro-batches: enough watermark advances to
       // evict state mid-run (the realism being demonstrated) without
       // paying the stream-stream join's per-batch fixed cost 10x
@@ -128,7 +136,7 @@ object StreamingQueries extends QuerySet {
   /** Stage embeddings as a streaming drop directory (once per JVM). */
   private def stageEmbDir(s: SparkSession, dir: String): String = synchronized {
     staged.getOrElseUpdate(s"$dir#embeddings", {
-      val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_embeddings"
+      val out = stagedPath(dir, "embeddings")
       Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .repartition(4)
@@ -140,7 +148,7 @@ object StreamingQueries extends QuerySet {
   /** Stage documents as a streaming drop directory (once per JVM). */
   private def stageDocsDir(s: SparkSession, dir: String): String = synchronized {
     staged.getOrElseUpdate(s"$dir#documents", {
-      val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_documents"
+      val out = stagedPath(dir, "documents")
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
         .repartition(4)
@@ -187,7 +195,7 @@ object StreamingQueries extends QuerySet {
         val in = stageDir(s, dir)
         val schema = s.read.parquet(in).schema
         val n = nameCounter.incrementAndGet()
-        val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_ingest_$n"
+        val out = stagedPath(dir, s"ingest_$n")
         // the counter restarts with each JVM, so a previous run may have
         // left segments at this exact path — appending onto them would
         // double every count; start from an empty destination
@@ -217,7 +225,7 @@ object StreamingQueries extends QuerySet {
       (s, dir) => {
         val seg = synchronized {
           staged.getOrElseUpdate(s"$dir#tailsrc", {
-            val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_tailsrc"
+            val out = stagedPath(dir, "tailsrc")
             Tables.events(s, dir)
               .select(col("ts").as("__time"), col("event_type"), col("value"))
               .repartition(4)
@@ -421,7 +429,7 @@ object StreamingQueries extends QuerySet {
       (s, dir) => {
         val seg = synchronized {
           staged.getOrElseUpdate(s"$dir#tailsrc", {
-            val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_tailsrc"
+            val out = stagedPath(dir, "tailsrc")
             Tables.events(s, dir)
               .select(col("ts").as("__time"), col("event_type"), col("value"))
               .repartition(4)
@@ -431,7 +439,7 @@ object StreamingQueries extends QuerySet {
           })
         }
         val n = nameCounter.incrementAndGet()
-        val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_relay_$n"
+        val out = stagedPath(dir, s"relay_$n")
         Seq(out, s"${out}_cp").foreach(deleteDir)
         val q = StreamingOps.segmentSink(
           s.readStream.format("druid").load(seg)
@@ -540,7 +548,6 @@ object StreamingQueries extends QuerySet {
     // round-then-rank).
     Q("s12_stream_ann_ingest",
       (s, dir) => {
-        graft.sql.DotFloat.register(s)
         val in = stageEmbDir(s, dir)
         val schema = s.read.parquet(in).schema
         val cents = Tables.load(s, dir, "embeddings")
@@ -557,7 +564,7 @@ object StreamingQueries extends QuerySet {
           struct(cos(arr).as("c"), lit(-cid.toInt).as("nc"))
         }: _*))
         val n = nameCounter.incrementAndGet()
-        val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_annidx_$n"
+        val out = stagedPath(dir, s"annidx_$n")
         Seq(out, s"${out}_cp").foreach(deleteDir)
         val q = StreamingOps.segmentSink(
           StreamingOps.parquetStream(s, in, schema)
@@ -605,11 +612,10 @@ object StreamingQueries extends QuerySet {
     // round trip) is oracle-checkable.
     Q("s10_stream_curation",
       (s, dir) => {
-        graft.sql.TextCounts.register(s)
         val in = stageDocsDir(s, dir)
         val schema = s.read.parquet(in).schema
         val n = nameCounter.incrementAndGet()
-        val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_curated_$n"
+        val out = stagedPath(dir, s"curated_$n")
         Seq(out, s"${out}_cp").foreach(deleteDir)
         val q = StreamingOps.segmentSink(
           StreamingOps.parquetStream(s, in, schema)
@@ -660,7 +666,6 @@ object StreamingQueries extends QuerySet {
     // oracle replays true counts (max_err pinned 0).
     Q("s13_stream_heavy_hitters",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         val in = stageDocsDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s13_out_${nameCounter.incrementAndGet()}"
@@ -708,7 +713,7 @@ object StreamingQueries extends QuerySet {
       (s, dir) => {
         val in = synchronized {
           staged.getOrElseUpdate(s"$dir#nestedsrc", {
-            val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_nestedsrc"
+            val out = stagedPath(dir, "nestedsrc")
             Tables.events(s, dir)
               .select(col("ts"), col("event_type"), col("user_id"),
                       col("value"), col("props"))
@@ -719,7 +724,7 @@ object StreamingQueries extends QuerySet {
         }
         val schema = s.read.parquet(in).schema
         val n = nameCounter.incrementAndGet()
-        val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_nested_$n"
+        val out = stagedPath(dir, s"nested_$n")
         Seq(out, s"${out}_cp").foreach(deleteDir)
         val stream = StreamingOps.parquetStream(s, in, schema,
             maxFilesPerTrigger = Some(1))
@@ -771,10 +776,9 @@ object StreamingQueries extends QuerySet {
     // oracle-exact, identical to q42's batch/routed value.
     Q("s15_stream_tuple_sketch",
       (s, dir) => {
-        graft.sql.DruidSqlCompat.register(s)
         val in = synchronized {
           staged.getOrElseUpdate(s"$dir#nestedsrc", {
-            val out = s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_nestedsrc"
+            val out = stagedPath(dir, "nestedsrc")
             Tables.events(s, dir)
               .select(col("ts"), col("event_type"), col("user_id"),
                       col("value"), col("props"))

@@ -22,7 +22,7 @@ package graft.query
   * Functions map onto Spark built-ins where semantics match, and onto
   * the registered Druid SQL compat layer (`time_*`, `mv_*`, `lookup`,
   * `safe_divide`) elsewhere — callers must have run
-  * `DruidSqlCompat.register` (NativeQuery does).
+  * `GraftExtensions.install` (NativeQuery.run does).
   *
   * Documented deviation: `/` keeps Spark SQL semantics (always
   * floating-point). Druid's expression `/` does integer division when

@@ -116,9 +116,15 @@ object NativeQuery {
 
   private val mapper = new ObjectMapper()
 
-  /** Compile and run `json` against tables resolved by name. */
-  def run(json: String, resolve: String => DataFrame): DataFrame =
+  /** Compile and run `json` against tables resolved by name. The
+    * compiled plan names graft SQL functions (compat time/mv/sketch
+    * functions, the bound-filter comparators), so the active session
+    * gets them first.
+    */
+  def run(json: String, resolve: String => DataFrame): DataFrame = {
+    graft.sql.GraftExtensions.install(SparkSession.active)
     runNode(mapper.readTree(json), resolve)
+  }
 
   private def runNode(q: JsonNode, resolve: String => DataFrame): DataFrame = {
     val base0 = resolveDataSource(q.path("dataSource"), resolve)
@@ -158,10 +164,6 @@ object NativeQuery {
     * never a row-at-a-time evaluator.
     */
   private def druidExpr(s: String): Column = {
-    // translated output references compat functions (time_*, mv_*,
-    // lookup, ...): make this self-sufficient rather than depending on
-    // some earlier query having registered them (once-guarded → cheap)
-    graft.sql.DruidSqlCompat.register(SparkSession.active)
     try expr(DruidExpr.toSparkSql(s))
     catch { case _: IllegalArgumentException => expr(s) }
   }
@@ -428,11 +430,9 @@ object NativeQuery {
             // both sides share one encoding.
             val (lhs, rhs) = ordering match {
               case "version" =>
-                graft.sql.StringComparatorFns.register(SparkSession.active)
                 (call_function("version_cmp", c.cast("string"),
                    lit(v.asText())), lit(0))
               case "alphanumeric" =>
-                graft.sql.StringComparatorFns.register(SparkSession.active)
                 (call_function("alphanum_key", c.cast("string")),
                  lit(graft.sql.Alphanum.keyOf(v.asText())))
               case _ =>
@@ -644,7 +644,6 @@ object NativeQuery {
       case "alphanumeric"       =>
         // same encoding as the HOF alphanumKey (the spec pins both),
         // one static call per row instead of an interpreted HOF chain
-        graft.sql.StringComparatorFns.register(SparkSession.active)
         call_function("alphanum_key", c.cast("string"))
       case "strlen" => struct(length(c.cast("string")), c.cast("string"))
       case "version"            => versionKey(c.cast("string"))
@@ -1195,18 +1194,6 @@ object NativeQuery {
   private case class Agg(name: String, column: Column, countLike: Boolean,
                          finalizer: Option[Column => Column] = None)
 
-  /** Sketch aggregates compile to the same registered Catalyst
-    * aggregates the Druid SQL compat layer uses (SketchBuildAggs /
-    * DsTheta / DsQuantiles / Spark's own DataSketches HLL) — real
-    * DataSketches wire blobs, map-side partial aggregation, binary
-    * merge at shuffle boundaries. Registration is idempotent.
-    */
-  private def sketchFns(): Unit = {
-    val s = SparkSession.active
-    graft.sql.DruidSqlCompat.register(s)
-    graft.sql.DsQuantilesFunctions.register(s)
-  }
-
   /** Druid HLL estimates are doubles unless `round: true`; Spark's
     * `hll_sketch_estimate` is already integral (long), so round just
     * picks the output type.
@@ -1221,6 +1208,13 @@ object NativeQuery {
     else node.elements().asScala.map(compileAgg(_, pred = None)).toSeq
   }
 
+  /** Sketch aggregates (and their post-aggregators) compile to the
+    * same Catalyst functions the Druid SQL compat layer uses
+    * (SketchBuildAggs / DsTheta / DsQuantiles / Spark's own
+    * DataSketches HLL) — real DataSketches wire blobs, map-side partial
+    * aggregation, binary merge at shuffle boundaries — by name, from
+    * the function table `run` installs on the session.
+    */
   private def compileAgg(a: JsonNode, pred: Option[Column]): Agg = {
     val name = a.path("name").asText()
     def field: Column = {
@@ -1271,12 +1265,10 @@ object NativeQuery {
         // build over raw values OR merge over COMPLEX blobs — the
         // registered ThetaSketchAgg dispatches on child type, exactly
         // Druid's overload rule for the thetaSketch aggregator
-        sketchFns()
         Agg(name, call_udf("ds_theta", field, lit(intOpt("size", 16384))),
           countLike = false,
           finalizer = Some(c => call_udf("theta_sketch_estimate", c)))
       case "quantilesDoublesSketch" =>
-        sketchFns()
         Agg(name, call_udf("ds_quantiles_sketch", field, lit(intOpt("k", 128))),
           countLike = false,
           // Druid finalizes a quantiles sketch to its stream length n
@@ -1288,7 +1280,6 @@ object NativeQuery {
         // (the re-aggregation path over a COMPLEX column) — Druid's
         // own overload rule for this aggregator. Finalizes to the
         // distinct-key estimate, like Druid's factory.
-        sketchFns()
         val nom = intOpt("nominalEntries", 16384)
         val metricCols = a.path("metricColumns").elements().asScala.toSeq
         if (metricCols.isEmpty)
@@ -1309,7 +1300,6 @@ object NativeQuery {
         // COMPLEX blobs (child-type dispatch, like thetaSketch). No
         // finalizer — Druid returns the sketch itself; clients read it
         // through the quantile(s)FromTDigestSketch post-aggregators.
-        sketchFns()
         Agg(name,
           call_udf("tdigest_agg", field, lit(intOpt("compression", 100))),
           countLike = false)
@@ -1317,12 +1307,10 @@ object NativeQuery {
         // hyperUnique (Druid's legacy HyperLogLogCollector) maps to the
         // DataSketches HLL build — same semantics, exact in the
         // low-cardinality regime, documented substitute encoding
-        sketchFns()
         val round = a.path("round").asBoolean(false)
         Agg(name, call_udf("ds_hll", field, lit(intOpt("lgK", 12))),
           countLike = false, finalizer = Some(c => hllEstimate(c, round)))
       case "cardinality" =>
-        sketchFns()
         val fields = a.path("fields").elements().asScala.toSeq.map { f =>
           if (f.isTextual) ref(f.asText()) else dimensionSpec(f)._1
         }
@@ -1417,10 +1405,8 @@ object NativeQuery {
         case other      => fail(s"arithmetic fn '$other'")
       }
     case "thetaSketchEstimate" =>
-      sketchFns()
       call_udf("theta_sketch_estimate", compilePost(p.path("field"), fins))
     case "thetaSketchSetOp" =>
-      sketchFns()
       val fields = p.path("fields").elements().asScala
         .map(compilePost(_, fins)).toSeq
       if (fields.size < 2) fail("thetaSketchSetOp with fewer than 2 fields")
@@ -1432,42 +1418,33 @@ object NativeQuery {
       }
       fields.reduce((a, b) => call_udf(fn, a, b))
     case "quantilesDoublesSketchToQuantile" =>
-      sketchFns()
       call_udf("ds_get_quantile", compilePost(p.path("field"), fins),
         lit(p.path("fraction").asDouble()))
     case "quantilesDoublesSketchToQuantiles" =>
-      sketchFns()
       val f = compilePost(p.path("field"), fins)
       val fractions = p.path("fractions").elements().asScala
         .map(_.asDouble()).toSeq
       if (fractions.isEmpty) fail("quantilesDoublesSketchToQuantiles with no fractions")
       array(fractions.map(fr => call_udf("ds_get_quantile", f, lit(fr))): _*)
     case "hllSketchEstimate" =>
-      sketchFns()
       hllEstimate(compilePost(p.path("field"), fins),
         p.path("round").asBoolean(false))
     case "quantileFromTDigestSketch" =>
-      sketchFns()
       call_udf("tdigest_sketch_quantile", compilePost(p.path("field"), fins),
         lit(p.path("fraction").asDouble()))
     case "quantilesFromTDigestSketch" =>
-      sketchFns()
       val f = compilePost(p.path("field"), fins)
       val fractions = p.path("fractions").elements().asScala
         .map(_.asDouble()).toSeq
       if (fractions.isEmpty) fail("quantilesFromTDigestSketch with no fractions")
       array(fractions.map(fr => call_udf("tdigest_sketch_quantile", f, lit(fr))): _*)
     case "arrayOfDoublesSketchToEstimate" =>
-      sketchFns()
       call_udf("ds_tuple_estimate", compilePost(p.path("field"), fins))
     case "arrayOfDoublesSketchToMetricsSumEstimate" =>
-      sketchFns()
       call_udf("ds_tuple_metrics_sum", compilePost(p.path("field"), fins))
     case "arrayOfDoublesSketchToNumEntries" =>
-      sketchFns()
       call_udf("ds_tuple_n", compilePost(p.path("field"), fins))
     case "arrayOfDoublesSketchSetOp" =>
-      sketchFns()
       val fields = p.path("fields").elements().asScala
         .map(compilePost(_, fins)).toSeq
       if (fields.size < 2) fail("arrayOfDoublesSketchSetOp with fewer than 2 fields")

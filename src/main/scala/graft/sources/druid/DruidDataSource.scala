@@ -45,12 +45,11 @@ class DruidDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
-    // arm the bitmap row-selection hint rule on whatever session
-    // resolves a druid table (idempotent; the rule is a no-op on plans
-    // without a hint shape) — extension-built sessions are also armed
-    // by GraftExtensions
+    // install graft's functions and bitmap row-selection hint rule on
+    // whatever session resolves a druid table (once per session; the
+    // rule is a no-op on plans without a hint shape)
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.MvBitmapRewrite.arm)
+      .foreach(graft.sql.GraftExtensions.install)
     new DruidTable(DruidTableUtil.localPath(properties.get("path")), schema)
   }
 }

@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -55,12 +54,4 @@ object BloomFns {
       s"bloom_might(bloom, hash) takes 2 args, got ${exprs.length}")
     BloomFilterMightContain(exprs(0), exprs(1))
   }
-
-  /** Idempotent per-session SQL registration. */
-  def register(spark: SparkSession): Unit = Registration.once(spark, "bloom_fns") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_agg", buildAgg, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_might", buildMight, "scala_udf")
-    }
 }

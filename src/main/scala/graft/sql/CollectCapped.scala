@@ -2,7 +2,6 @@ package graft.sql
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -132,11 +131,4 @@ object CollectCappedAgg {
     require(exprs.length == 2, "collect_capped expects (x, cap)")
     CollectCappedAgg(exprs.head, GramHashes.litInt(exprs(1), "collect_capped cap"))
   }
-
-  /** Idempotent per-session SQL registration. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "collect_capped") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "collect_capped", build, "scala_udf")
-    }
 }

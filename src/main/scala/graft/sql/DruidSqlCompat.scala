@@ -726,14 +726,8 @@ object DruidSqlCompat {
   val functions: Seq[(String, String, Seq[Expression] => Expression)] =
     DruidTime.functions ++ DruidMv.functions ++ functions0
 
-  /** Idempotent per-session registration (programmatic alternative to
-    * the `spark.sql.extensions=graft.sql.GraftExtensions` deployment).
+  /** Forwards to [[GraftExtensions.install]], which registers this
+    * family with the rest of graft's functions.
     */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "druid_sql_compat") {
-      functions.foreach { case (name, _, build) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, build, "scala_udf")
-      }
-    }
+  def register(spark: SparkSession): Unit = GraftExtensions.install(spark)
 }

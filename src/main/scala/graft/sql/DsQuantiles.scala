@@ -1,8 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions
-
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantiles.{DoublesSketch, DoublesUnion}
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
@@ -63,22 +60,4 @@ class DsQuantilesUnionAgg(maxK: Int) extends BlobFoldAgg {
   protected def foldAll(bs: Seq[Array[Byte]]): Array[Byte] =
     DsQuantiles.unionAll(bs, maxK)
   protected def onEmpty: Array[Byte] = DsQuantiles.empty(maxK)
-}
-
-object DsQuantilesFunctions {
-  /** Register ds_quantiles_from_vals / ds_quantiles_union_agg /
-    * ds_quantiles_n / ds_quantiles_quantile. `k` is fixed at
-    * registration (Druid's aggregator takes it the same way).
-    */
-  def register(spark: SparkSession, k: Int = 2048): Unit =
-      Registration.once(spark, s"ds_quantiles_fns/$k") {
-    spark.udf.register("ds_quantiles_from_vals",
-      functions.udf((vs: Seq[Double]) => DsQuantiles.fromValues(vs, k)))
-    spark.udf.register("ds_quantiles_union_agg",
-      functions.udaf(new DsQuantilesUnionAgg(k)))
-    spark.udf.register("ds_quantiles_n",
-      functions.udf((b: Array[Byte]) => if (b == null) 0L else DsQuantiles.n(b)))
-    spark.udf.register("ds_quantiles_quantile",
-      functions.udf((b: Array[Byte], q: Double) => DsQuantiles.quantile(b, q)))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions
 
 import org.apache.datasketches.memory.Memory
@@ -83,21 +83,6 @@ class DsThetaUnionAgg extends BlobFoldAgg {
 }
 
 object DsThetaFunctions {
-  /** Register ds_theta_from_vals / ds_theta_union_agg /
-    * ds_theta_intersect / ds_theta_anotb / ds_theta_estimate.
-    */
-  def register(spark: SparkSession): Unit = Registration.once(spark, "ds_theta_fns") {
-      spark.udf.register("ds_theta_from_vals",
-        functions.udf((vs: Seq[Long]) => DsTheta.fromValues(vs)))
-      spark.udf.register("ds_theta_union_agg", functions.udaf(new DsThetaUnionAgg))
-      spark.udf.register("ds_theta_intersect",
-        functions.udf((a: Array[Byte], b: Array[Byte]) => DsTheta.intersectBytes(a, b)))
-      spark.udf.register("ds_theta_anotb",
-        functions.udf((a: Array[Byte], b: Array[Byte]) => DsTheta.aNotBBytes(a, b)))
-      spark.udf.register("ds_theta_estimate",
-        functions.udf((b: Array[Byte]) => if (b == null) 0L else DsTheta.estimate(b)))
-    }
-
   def thetaFromVals(c: Column): Column =
     functions.udf((vs: Seq[Long]) => DsTheta.fromValues(vs)).apply(c)
   def thetaUnion(c: Column): Column = functions.udaf(new DsThetaUnionAgg).apply(c)

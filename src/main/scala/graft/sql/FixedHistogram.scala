@@ -2,7 +2,7 @@ package graft.sql
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
 
@@ -146,15 +146,4 @@ object HistFunctions {
           Array.tabulate(n)(FixedHistogram.count(b, _)) :+
           FixedHistogram.upperOob(b)
       }).apply(c)
-
-  /** Register SQL names with a fixed config (programmatic sessions). */
-  def register(spark: SparkSession, n: Int, lo: Double, hi: Double): Unit =
-    Registration.once(spark, s"hist_fns/$n/$lo/$hi") {
-      spark.udf.register("hist_build", functions.udaf(new HistBuildAgg(n, lo, hi)))
-      spark.udf.register("hist_merge_agg",
-        functions.udaf(new HistMergeAgg(n, lo, hi)))
-      spark.udf.register("hist_quantile",
-        functions.udf((b: Array[Byte], phi: Double) =>
-          if (b == null) Double.NaN else FixedHistogram.quantile(b, phi)))
-    }
 }

@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,13 +90,6 @@ object Grams5Distinct {
     require(exprs.length == 1, "grams5_distinct expects exactly one argument")
     Grams5Distinct(exprs.head)
   }
-
-  /** Idempotent per-session SQL registration: `grams5_distinct(text)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "grams5_distinct") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "grams5_distinct", build, "scala_udf")
-    }
 }
 
 /** Linear-merge intersection size of two SORTED distinct bigint arrays:
@@ -142,13 +134,6 @@ object IntersectCount {
     require(exprs.length == 2, "intersect_count expects (a, b)")
     IntersectCount(exprs.head, exprs(1))
   }
-
-  /** Idempotent per-session SQL registration: `intersect_count(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "intersect_count") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "intersect_count", build, "scala_udf")
-    }
 }
 
 /** Per-row SimHash over distinct 5-grams in ONE pass:
@@ -201,13 +186,6 @@ object Simhash5 {
     require(exprs.length == 2, "simhash5 expects (text, nBits)")
     Simhash5(exprs.head, GramHashes.litInt(exprs(1), "simhash5 nBits"))
   }
-
-  /** Idempotent per-session SQL registration: `simhash5(text, nBits)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "simhash5") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash5", build, "scala_udf")
-    }
 }
 
 /** Per-row document fingerprint over distinct 5-grams in ONE pass:
@@ -257,11 +235,4 @@ object Fingerprint5 {
     require(exprs.length == 1, "fingerprint5 expects exactly one argument")
     Fingerprint5(exprs.head)
   }
-
-  /** Idempotent per-session SQL registration: `fingerprint5(text)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "fingerprint5") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "fingerprint5", build, "scala_udf")
-    }
 }

@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -35,16 +34,9 @@ case class Grams5(child: Expression) extends UnaryExpression {
 }
 
 object Grams5 {
-  /** SQL builder for `grams5(text)` (register / GraftExtensions). */
+  /** SQL builder for `grams5(text)` (a GraftExtensions.functions row). */
   val build: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, "grams5 expects exactly one argument")
     Grams5(exprs.head)
   }
-
-  /** Idempotent per-session SQL registration: `grams5(text)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "grams5") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "grams5", build, "scala_udf")
-    }
 }

@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -48,11 +47,4 @@ object Grams5Hist {
     require(exprs.length == 2, "grams5_hist expects (text, mod)")
     Grams5Hist(exprs.head, GramHashes.litInt(exprs(1), "grams5_hist mod"))
   }
-
-  /** Idempotent per-session SQL registration: `grams5_hist(text, mod)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "grams5_hist") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "grams5_hist", build, "scala_udf")
-    }
 }

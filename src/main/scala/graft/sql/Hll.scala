@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
 
@@ -92,14 +92,6 @@ class HllMergeAgg extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
 }
 
 object HllFunctions {
-  /** Register hll_build / hll_merge_agg / hll_estimate on a session. */
-  def register(spark: SparkSession): Unit = Registration.once(spark, "hll_fns") {
-      spark.udf.register("hll_build", functions.udaf(new HllBuildAgg))
-      spark.udf.register("hll_merge_agg", functions.udaf(new HllMergeAgg))
-      spark.udf.register("hll_estimate",
-        functions.udf((b: Array[Byte]) => if (b == null) 0L else Hll.estimate(b)))
-    }
-
   def hllBuild(c: Column): Column = functions.udaf(new HllBuildAgg).apply(c)
   def hllMerge(c: Column): Column = functions.udaf(new HllMergeAgg).apply(c)
   def hllEstimate(c: Column): Column =

@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,13 +76,4 @@ object MinHashBands {
       "minhash_bands expects (text, k, bandSize)")
     MinHashBands(exprs.head, lit(exprs(1), "k"), lit(exprs(2), "bandSize"))
   }
-
-  /** Idempotent per-session SQL registration:
-    * `minhash_bands(text, k, bandSize)`.
-    */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "minhash_bands") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_bands", build, "scala_udf")
-    }
 }

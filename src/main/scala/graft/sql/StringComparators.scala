@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -273,16 +272,9 @@ case class AlphanumKey(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-object StringComparatorFns {
-  /** Idempotent per-session registration of the comparator statics. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "string_comparators") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "version_cmp", VersionCmp.build, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "alphanum_key", { exprs =>
-          require(exprs.length == 1, "alphanum_key expects one argument")
-          AlphanumKey(exprs.head)
-        }, "scala_udf")
-    }
+object AlphanumKey {
+  val build: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 1, "alphanum_key expects one argument")
+    AlphanumKey(exprs.head)
+  }
 }

@@ -2,7 +2,6 @@ package graft.sql
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,13 +94,4 @@ object TextCounts {
     }
     MarkerCount(exprs.head, w)
   }
-
-  /** Idempotent per-session SQL registration. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "word_count") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "word_count", buildWordCount, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "marker_count", buildMarkerCount, "scala_udf")
-    }
 }

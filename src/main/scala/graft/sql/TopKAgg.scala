@@ -2,7 +2,6 @@ package graft.sql
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, RowOrdering, UnsafeProjection, UnsafeRow}
@@ -142,11 +141,4 @@ object TopKStructAgg {
     require(exprs.length == 2, "topk_struct expects (struct, k)")
     TopKStructAgg(exprs.head, GramHashes.litInt(exprs(1), "topk_struct k"))
   }
-
-  /** Idempotent per-session SQL registration: `topk_struct(s, k)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "topk_struct") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "topk_struct", build, "scala_udf")
-    }
 }

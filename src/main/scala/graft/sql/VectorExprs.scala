@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -123,13 +122,6 @@ object DotFloat {
     require(exprs.length == 2, "dot_f expects (a, b)")
     DotFloat(exprs.head, exprs(1))
   }
-
-  /** Idempotent per-session SQL registration: `dot_f(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "dot_f") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_f", build, "scala_udf")
-    }
 }
 
 /** Integer dot product over two array<tinyint> columns:
@@ -175,13 +167,6 @@ object DotInt8 {
     require(exprs.length == 2, "dot_i8 expects (a, b)")
     DotInt8(exprs.head, exprs(1))
   }
-
-  /** Idempotent per-session SQL registration: `dot_i8(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "dot_i8") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dot_i8", build, "scala_udf")
-    }
 }
 
 /** Ordered-fold projection of an embedding onto pseudo-random
@@ -223,11 +208,4 @@ object HyperplaneProjection {
     HyperplaneProjection(exprs.head,
       GramHashes.litInt(exprs(1), "hplane_proj j"))
   }
-
-  /** Idempotent per-session SQL registration: `hplane_proj(emb, j)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "hplane_proj") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hplane_proj", build, "scala_udf")
-    }
 }

@@ -1,6 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,7 +82,7 @@ object WordNgrams {
   def ngrams(input: UTF8String, n: Int): GenericArrayData =
     WordNgramsRuntime.ngrams(input, n)
 
-  /** SQL builder for `word_ngrams(text, n)` (register / GraftExtensions). */
+  /** SQL builder for `word_ngrams(text, n)` (a GraftExtensions.functions row). */
   val build: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, "word_ngrams expects (text, n)")
     val n = exprs(1) match {
@@ -93,11 +92,4 @@ object WordNgrams {
     }
     WordNgrams(exprs.head, n)
   }
-
-  /** Idempotent per-session SQL registration: `word_ngrams(text, n)`. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "word_ngrams") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "word_ngrams", build, "scala_udf")
-    }
 }

@@ -71,14 +71,14 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("minhash_bands returns null for strings with no 5-gram") {
-    graft.sql.MinHashBands.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     val r = spark.sql("SELECT minhash_bands('abcd', 16, 4) IS NULL, " +
       "size(minhash_bands('abcde', 8, 4))").head
     assert(r.getBoolean(0) && r.getInt(1) == 2)
   }
 
   test("native word_ngrams matches the composable split/transform form") {
-    graft.sql.WordNgrams.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     val composed = docs.selectExpr("doc_id",
       "array_distinct(transform(sequence(1, size(split(text, ' ')) - 2), " +
         "i -> concat_ws(' ', slice(split(text, ' '), i, 3)))) AS tris")
@@ -124,8 +124,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("native dot_f and hplane_proj are bit-identical to the HOF folds") {
-    graft.sql.DotFloat.register(spark)
-    graft.sql.HyperplaneProjection.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     val pairs = emb.select(col("vec_id"), col("embedding").as("a"))
       .crossJoin(emb.filter(col("vec_id") < 3).select(col("embedding").as("b")))
     val dotDiff = pairs.filter(
@@ -149,7 +148,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(ddDiff == 0, "dot_f(double, double) diverges from the HOF fold")
     // the int8 quantized scorer: exact integer arithmetic, so native
     // must equal the HOF fold on every pair, not just approximately
-    graft.sql.DotInt8.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     val q = mixed
       .withColumn("qa", expr(
         "transform(a, x -> cast(round(x * 50) as tinyint))"))

@@ -112,7 +112,7 @@ class AlphanumKeySpec extends AnyFunSuite {
 
   test("the codegen'd alphanum_key expression computes the same encoding") {
     val spark = graft.SparkTestSession.spark
-    graft.sql.StringComparatorFns.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.{call_function, col}
     val samples = (Iterator.fill(200)(alphanumString.sample).flatten ++

@@ -104,7 +104,7 @@ class VersionKeySpec extends AnyFunSuite {
 
   test("the codegen'd version_cmp expression filters EXACTLY like the mirror") {
     val spark = graft.SparkTestSession.spark
-    graft.sql.StringComparatorFns.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.{call_function, col, lit, signum}
     val samples = (Iterator.fill(120)(versionGen.sample).flatten ++ Iterator(

@@ -63,7 +63,7 @@ class DataSketchesInteropSpec extends AnyFunSuite {
 
   test("COMPLEX quantilesDoublesSketch blobs wrap with datasketches-java") {
     import spark.implicits._
-    graft.sql.DsQuantilesFunctions.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     val out = Files.createTempDirectory("graft-dsq").toString + "/t"
     // 2 groups x 2 time buckets; values are a shuffled arithmetic
     // sequence so every quantile has a known closed form
@@ -144,7 +144,7 @@ class DataSketchesInteropSpec extends AnyFunSuite {
 
   test("COMPLEX thetaSketch blobs heapify and set-operate with datasketches-java") {
     import spark.implicits._
-    graft.sql.DsThetaFunctions.register(spark)
+    graft.sql.GraftExtensions.install(spark)
     val out = Files.createTempDirectory("graft-dstheta").toString + "/t"
     // group a holds ids 0..39, group b holds 20..59: |a|=40, |b|=40,
     // |a∩b|=20, |a\b|=20 — all exact below k

@@ -10,7 +10,7 @@ class BloomFnsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("bloom has no false negatives and rejects most non-members") {
-    BloomFns.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     (0L until 1000L).toDF("k").createOrReplaceTempView("graft_bloom_members")
     (5000L until 15000L).toDF("k").createOrReplaceTempView("graft_bloom_others")

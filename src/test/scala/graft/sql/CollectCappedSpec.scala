@@ -18,7 +18,7 @@ class CollectCappedSpec extends AnyFunSuite {
 
   test("collect_capped equals guarded sort_array(collect_list)") {
     val sp = spark
-    CollectCappedAgg.register(sp)
+    GraftExtensions.install(sp)
     import sp.implicits._
     // groups: size 1, size = cap, size = cap + 1 (dropped), duplicates
     // of the same value within a group, negative ids

@@ -13,8 +13,7 @@ class Grams5HistSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
 
   test("grams5_hist(text, 256) equals exploded grams5 % 256 counts") {
-    Grams5.register(spark)
-    Grams5Hist.register(spark)
+    GraftExtensions.install(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "aaaaaaa", // heavy duplicate grams in one bucket
@@ -42,7 +41,7 @@ class Grams5HistSpec extends AnyFunSuite {
   }
 
   test("grams5_hist rejects non-string input and non-literal mod") {
-    Grams5Hist.register(spark)
+    GraftExtensions.install(spark)
     val e = intercept[Exception](spark.sql("SELECT grams5_hist(1, 256)").head)
     assert(e.getMessage.toLowerCase.contains("string") ||
       e.getMessage.contains("grams5_hist"))

@@ -28,7 +28,7 @@ class HllSpec extends AnyFunSuite {
 
   test("sketches flow through segment COMPLEX columns and merge in SQL") {
     import spark.implicits._
-    HllFunctions.register(spark)
+    GraftExtensions.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft-hll").toString + "/t"
 
     // per-group sketches built in Spark, landed as a COMPLEX column

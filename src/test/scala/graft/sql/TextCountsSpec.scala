@@ -29,7 +29,7 @@ class TextCountsSpec extends AnyFunSuite {
     "word")
 
   test("word_count equals length-replace arithmetic") {
-    TextCounts.register(spark)
+    GraftExtensions.install(spark)
     cases.foreach { t =>
       val lit = t.replace("'", "''")
       val r = spark.sql(
@@ -41,7 +41,7 @@ class TextCountsSpec extends AnyFunSuite {
   }
 
   test("marker_count equals padded-replace arithmetic for 'the' and 'a'") {
-    TextCounts.register(spark)
+    GraftExtensions.install(spark)
     for (t <- cases; w <- Seq("the", "a")) {
       val lit = t.replace("'", "''")
       val r = spark.sql(
@@ -53,7 +53,7 @@ class TextCountsSpec extends AnyFunSuite {
   }
 
   test("marker_count rejects non-literal or multi-word markers") {
-    TextCounts.register(spark)
+    GraftExtensions.install(spark)
     val e = intercept[Exception](
       spark.sql("SELECT marker_count('x', concat('t', 'he'))").head)
     assert(e.getMessage.contains("STRING literal") || e.getCause != null)

@@ -23,7 +23,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("heap aggregate ≡ row_number window (selection and order)") {
-    TopKStructAgg.register(spark)
+    GraftExtensions.install(spark)
     val viaAgg = data.groupBy(col("g"))
       .agg(expr("topk_struct(struct(score, -id AS ni, id), 7)").as("top"))
       .select(col("g"), posexplode(col("top")).as(Seq("p", "t")))
@@ -43,7 +43,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("k larger than the group returns the whole group, ordered") {
-    TopKStructAgg.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val small = Seq((1L, 3.0, 10L), (1L, 1.0, 11L), (1L, 3.0, 9L))
       .toDF("g", "score", "id").repartition(4)
@@ -56,7 +56,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("k=1 is exactly max(struct) — the d31 canonical-keep special case") {
-    TopKStructAgg.register(spark)
+    GraftExtensions.install(spark)
     val viaTop = data.groupBy(col("g"))
       .agg(expr("topk_struct(struct(score, -id AS ni, id), 1)").as("top"))
       .select(col("g"), col("top")(0).getField("score").as("s"),
@@ -77,7 +77,7 @@ class TopKAggSpec extends AnyFunSuite {
     // filters !isnan(adc) before the aggregate; this spec pins the
     // hazard (so nobody "simplifies" the filter away) and the fixed
     // contract (filtered heap ≡ ASC window on the non-NaN rows).
-    TopKStructAgg.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val df = Seq((1L, 2.0, 10L), (1L, Double.NaN, 11L), (1L, 1.0, 12L),
         (1L, 3.0, 13L))
@@ -96,7 +96,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("plans as ObjectHashAggregate with a partial stage, not a Window") {
-    TopKStructAgg.register(spark)
+    GraftExtensions.install(spark)
     val plan = data.groupBy(col("g"))
       .agg(expr("topk_struct(struct(score, -id AS ni), 5)").as("top"))
       .queryExecution.executedPlan.toString
@@ -107,7 +107,7 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("rejects non-struct and non-literal k") {
-    TopKStructAgg.register(spark)
+    GraftExtensions.install(spark)
     val err = intercept[Exception] {
       data.groupBy(col("g")).agg(expr("topk_struct(score, 5)")).collect()
     }
