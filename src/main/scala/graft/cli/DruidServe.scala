@@ -4,10 +4,11 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -86,12 +87,26 @@ import org.apache.spark.sql.types._
   *    zone without racing concurrent UTC requests
   *  - `timeout` (ms) cancels the query's job group at the deadline
   *    and answers Druid's QueryTimeoutException envelope (HTTP 504)
-  *  - cache hints (`useCache`/`populateCache`/`useResultLevelCache`/
-  *    `populateResultLevelCache`) are accepted and ignored — they
-  *    cannot change results
+  *  - `useResultLevelCache`/`populateResultLevelCache` drive the SQL
+  *    result cache (off by default); on native queries
+  *    `useCache`/`populateCache` drive the native result cache (on by
+  *    default). A cached answer is keyed by the table epoch, so it can
+  *    never outlive a commit or a lookup edit. The SQL endpoint accepts
+  *    `useCache`/`populateCache` and ignores them
   *  - any OTHER key is a 400: a silently dropped context key (e.g. a
   *    semantics-changing `useApproximateCountDistinct: false`) would
   *    return different results than the client's cluster
+  *
+  * One request path: every endpoint is a handler registered through
+  * `route`, which checks the method, splits the path into segments,
+  * reads the body and writes the answer. A handler returns a reply or
+  * throws; the route answers every failure through one failure table
+  * (status, Druid `error`/`errorClass`, statement `category`) in one of
+  * the three error shapes — Druid's query envelope, the statements
+  * API's `druidException`, or the coordinator's `{"error": msg}`. The
+  * native and sync SQL endpoints share one query lifecycle
+  * (`runQuery`): query id header, result cache, query control
+  * (deadline and DELETE cancellation) and the request log.
   *
   * SECURITY: the SQL endpoint executes Spark SQL, which is strictly
   * broader than Druid SQL (file-backed tables, catalog mutation), so
@@ -104,16 +119,17 @@ object DruidServe {
   private val mapper = new ObjectMapper()
   private val isoMs = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
     .withZone(ZoneOffset.UTC)
+  private def isoAt(ms: Long): String =
+    isoMs.format(java.time.Instant.ofEpochMilli(ms))
 
-  /** Raised when a result exceeds `maxResultRows`; answered with
-    * Druid's ResourceLimitExceeded error envelope (HTTP 400).
-    */
+  // the three query failures Druid names; `failureOf` maps each to its
+  // status and envelope
+
+  /** Raised when a result exceeds `maxResultRows`. */
   private final class ResourceLimitExceeded(msg: String)
     extends RuntimeException(msg)
 
-  /** Raised when `context.timeout` elapses; answered with Druid's
-    * QueryTimeoutException envelope (HTTP 504, the broker's code).
-    */
+  /** Raised when `context.timeout` elapses. */
   private final class QueryTimedOut(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
 
@@ -127,6 +143,19 @@ object DruidServe {
       }
     }
 
+  /** A fixed-width pool of daemon threads that die when idle, so a
+    * stopped server doesn't pin `n` live threads forever.
+    */
+  private def daemonPool(n: Int, prefix: String)
+      : java.util.concurrent.ThreadPoolExecutor = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(
+      n, n, 30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      daemonFactory(prefix))
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
   /** One shared timer for `context.timeout` deadlines (the work it
     * schedules is a cheap cancelJobGroup call, never a query).
     */
@@ -139,12 +168,88 @@ object DruidServe {
     */
   private val serveSeq = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Raised when a client cancels the query via DELETE; answered with
-    * Druid's QueryInterruptedException envelope (HTTP 500, the
-    * broker's code for an interrupted query).
-    */
+  /** Raised when a client cancels the query via DELETE. */
   private final class QueryCancelled(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
+
+  /** A handler's answer. */
+  private final case class Reply(body: String,
+                                 contentType: String = "application/json",
+                                 status: Int = 200)
+
+  /** The three error bodies the broker answers (see [[errorBody]]). */
+  private sealed trait ErrorShape
+  private case object QueryError extends ErrorShape
+  private case object StatementError extends ErrorShape
+  private case object CoordinatorError extends ErrorShape
+
+  /** A handler's own failure answer: `status`, with the message in
+    * `shape` (whatever shape its route answers other failures in).
+    */
+  private final class HttpError(val status: Int, msg: String,
+                                val shape: ErrorShape = CoordinatorError)
+    extends RuntimeException(msg)
+
+  private def notAllowed(methods: Seq[String]): HttpError =
+    new HttpError(405, s"supported methods: ${methods.mkString(", ")}")
+
+  /** How a failure maps onto Druid's error contract: the HTTP status,
+    * the query envelope's `error` and `errorClass`, and the statements
+    * API's `category`.
+    */
+  private final case class Failure(status: Int, error: String,
+                                   errorClass: String, category: String)
+
+  private def failureOf(e: Throwable): Failure = e match {
+    case _: ResourceLimitExceeded => Failure(400, "Resource limit exceeded",
+      "ResourceLimitExceededException", "CAPACITY_EXCEEDED")
+    case _: QueryTimedOut => Failure(504, "Query timeout",
+      "QueryTimeoutException", "TIMEOUT")
+    case _: QueryCancelled => Failure(500, "Query cancelled",
+      "QueryInterruptedException", "CANCELED")
+    // JVM-fatal: answered as a server error, then rethrown by the route
+    case _: VirtualMachineError => Failure(500, "Unknown exception",
+      e.getClass.getName, "UNCATEGORIZED")
+    case _ => Failure(400, "Query not supported", e.getClass.getName,
+      "UNCATEGORIZED")
+  }
+
+  /** Druid's query envelope (`error`, `errorMessage`, `errorClass`),
+    * the statements API's `druidException`, or the coordinator's
+    * `{"error": msg}`.
+    */
+  private def errorBody(shape: ErrorShape, e: Throwable): String = {
+    val o = mapper.createObjectNode()
+    val msg = String.valueOf(e.getMessage)
+    shape match {
+      case QueryError =>
+        val f = failureOf(e)
+        o.put("error", f.error).put("errorMessage", msg)
+          .put("errorClass", f.errorClass)
+      case StatementError =>
+        o.put("error", "druidException").put("errorMessage", msg)
+      case CoordinatorError => o.put("error", msg)
+    }
+    o.toString
+  }
+
+  /** One request as the route hands it to its handler: the method, the
+    * path under the route's base split into non-empty segments, and
+    * the body.
+    */
+  private final case class Request(ex: HttpExchange, method: String,
+                                   segs: List[String], body: String)
+
+  /** What a query handler hands the shared query lifecycle: the log
+    * kind and text, the session and `context.timeout` it runs under,
+    * the client's cache flags, the cache key and table epoch (consulted
+    * only when a flag is set), and how to render the answer (counting
+    * its rows).
+    */
+  private final case class QueryPlan(kind: String, what: String,
+      session: SparkSession, timeoutMs: Long,
+      useCache: Boolean, populateCache: Boolean,
+      cacheKey: () => (String, String), render: AtomicLong => Reply)
 
   /** qid → (SparkContext, job group) of every request currently
     * executing, for the DELETE cancellation endpoints. Client ids can
@@ -278,14 +383,7 @@ object DruidServe {
       s"statementPageRows must be positive: $statementPageRows")
     require(threads > 0, s"--threads must be positive: $threads")
     val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-    // fixed-width pool, core threads allowed to die when idle so a
-    // stopped test server doesn't pin `threads` live threads forever
-    val pool = new java.util.concurrent.ThreadPoolExecutor(
-      threads, threads, 30L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      daemonFactory("graft-serve"))
-    pool.allowCoreThreadTimeOut(true)
-    server.setExecutor(pool)
+    server.setExecutor(daemonPool(threads, "graft-serve"))
     val serveId = serveSeq.incrementAndGet()
     def logQuery(qid: String, kind: String, what: String, t0: Long,
                  rows: Long, status: String): Unit =
@@ -293,10 +391,6 @@ object DruidServe {
         System.err.println(f"[druid-serve] qid=$qid kind=$kind " +
           f"ms=${(System.nanoTime() - t0) / 1000000L} rows=$rows " +
           f"status=$status $what")
-    // global temp views bridge the served tables into per-timezone
-    // child sessions (temp views are session-local; global temp views
-    // are the public cross-session channel and carry the full logical
-    // plan, so pushdown survives). Registered on first sqlTimeZone use.
     // served-table registry: starts as sqlTables, and SQL ingestion
     // (INSERT/REPLACE via the statements API) adds or refreshes
     // entries at runtime with a fresh discovery-time DataFrame.
@@ -333,7 +427,6 @@ object DruidServe {
                     s"at ${d.getPath}")
               }
             } catch {
-              case e: VirtualMachineError => throw e
               case scala.util.control.NonFatal(e) =>
                 System.err.println(
                   s"[graft-serve] SKIPPING datasource dir ${d.getPath}: " +
@@ -435,50 +528,43 @@ object DruidServe {
           else
             (tzSessions.computeIfAbsent(zone.getId, newSqlSession), fmt)
       }
-    def handled(ex: HttpExchange, methods: Set[String] = Set("POST"),
-                okStatus: Int = 200)
-               (body: String => (String, String)): Unit =
-      try {
-        if (!methods.contains(ex.getRequestMethod))
-          respond(ex, 405, s"""{"error":"supported methods: ${methods.mkString(", ")}"}""")
-        else {
-          val (payload, contentType) =
-            body(new String(ex.getRequestBody.readAllBytes(), UTF_8))
-          respond(ex, okStatus, payload, contentType)
-        }
-      } catch {
-        case e: ResourceLimitExceeded =>
-          val o = mapper.createObjectNode()
-          o.put("error", "Resource limit exceeded")
-          o.put("errorMessage", String.valueOf(e.getMessage))
-          o.put("errorClass", "ResourceLimitExceededException")
-          respond(ex, 400, o.toString)
-        case e: QueryTimedOut =>
-          val o = mapper.createObjectNode()
-          o.put("error", "Query timeout")
-          o.put("errorMessage", String.valueOf(e.getMessage))
-          o.put("errorClass", "QueryTimeoutException")
-          respond(ex, 504, o.toString)
-        case e: QueryCancelled =>
-          val o = mapper.createObjectNode()
-          o.put("error", "Query cancelled")
-          o.put("errorMessage", String.valueOf(e.getMessage))
-          o.put("errorClass", "QueryInterruptedException")
-          respond(ex, 500, o.toString)
-        case e: Throwable =>
-          val o = mapper.createObjectNode()
-          o.put("error", "Query not supported")
-          o.put("errorMessage", String.valueOf(e.getMessage))
-          o.put("errorClass", e.getClass.getName)
-          respond(ex, 400, o.toString)
-      }
-    server.createContext("/status", (ex: HttpExchange) => {
-      val sub = ex.getRequestURI.getPath.stripPrefix("/status")
-        .stripPrefix("/")
-      if (sub == "health") respond(ex, 200, "true") // console healthcheck
-      else respond(ex, 200,
-        """{"service":"graft/broker","version":"graft-1"}""")
-    })
+    /** The broker's one request path, and the only `createContext`
+      * caller. Checks the method (an empty `methods` accepts any),
+      * splits the path under `base` into segments, reads the body and
+      * answers the handler's reply. A failure is answered from the
+      * failure table in the route's `shape`, or as the handler's own
+      * [[HttpError]]; a JVM-fatal error is answered with a 500 and then
+      * rethrown, so it still reaches the thread's uncaught handler.
+      */
+    def route(base: String, methods: Seq[String],
+              shape: ErrorShape = QueryError)
+             (handler: Request => Reply): Unit = {
+      val _ = server.createContext(base, (ex: HttpExchange) => {
+        val (reply, fatal) =
+          try {
+            val method = ex.getRequestMethod
+            if (methods.nonEmpty && !methods.contains(method))
+              throw notAllowed(methods)
+            val segs = ex.getRequestURI.getPath.stripPrefix(base)
+              .split("/").toList.filter(_.nonEmpty)
+            (handler(Request(ex, method, segs,
+              new String(ex.getRequestBody.readAllBytes(), UTF_8))), None)
+          } catch {
+            case e: Throwable =>
+              val (status, s) = e match {
+                case h: HttpError => (h.status, h.shape)
+                case _            => (failureOf(e).status, shape)
+              }
+              (Reply(errorBody(s, e), status = status),
+                Some(e).collect { case v: VirtualMachineError => v })
+          }
+        try respond(ex, reply) finally fatal.foreach(e => throw e)
+      })
+    }
+    route("/status", Nil) { req =>
+      if (req.segs == List("health")) Reply("true") // console healthcheck
+      else Reply("""{"service":"graft/broker","version":"graft-1"}""")
+    }
 
     // ---- broker result cache (Druid's useCache / populateCache) ----
     // Native-query results cache at the broker keyed by (canonical
@@ -497,7 +583,8 @@ object DruidServe {
     // response context.
     val resultCacheMax = 256
     val resultCacheMaxEntryBytes = 2 << 20
-    final case class CachedResult(epoch: String, body: String, rows: Long)
+    final case class CachedResult(epoch: String, body: String, rows: Long,
+                                  contentType: String)
     val resultCache =
       new java.util.LinkedHashMap[String, CachedResult](64, 0.75f, true) {
         override def removeEldestEntry(
@@ -519,11 +606,7 @@ object DruidServe {
         // a served frame that filters/projects/joins over druid tables
         // must move its epoch when any underlying table commits, not
         // just when the frame is a bare relation
-        val roots = df.queryExecution.analyzed.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-              if r.table.isInstanceOf[graft.sources.druid.DruidTable] =>
-            r.table.asInstanceOf[graft.sources.druid.DruidTable].rootDir
-        }.distinct.sorted
+        val roots = druidRoots(df).sorted
         if (roots.isEmpty) s"id-${System.identityHashCode(df)}"
         else roots.map(fp).mkString(",")
       }
@@ -538,13 +621,8 @@ object DruidServe {
       */
     def cacheEpoch(referenced: Set[String] = Set.empty): String = {
       val sb = new StringBuilder
-      val names = {
-        val it = servedTables.keys()
-        val b = Seq.newBuilder[String]
-        while (it.hasMoreElements) b += it.nextElement()
-        val all = b.result().sorted
-        if (referenced.isEmpty) all else all.filter(referenced.contains)
-      }
+      val all = servedTables.keySet().asScala.toSeq.sorted
+      val names = if (referenced.isEmpty) all else all.filter(referenced.contains)
       names.foreach { n =>
         sb.append(n).append('=')
           .append(tableEpochOf(n, servedTables.get(n))).append(';')
@@ -560,8 +638,7 @@ object DruidServe {
       */
     def referencedInSql(sql: String): Set[String] = {
       val lower = sql.toLowerCase(java.util.Locale.ROOT)
-      val names = scala.jdk.CollectionConverters
-        .SetHasAsScala(servedTables.keySet()).asScala
+      val names = servedTables.keySet().asScala
       names.filter { n =>
         val t = n.toLowerCase(java.util.Locale.ROOT)
         var i = lower.indexOf(t)
@@ -582,13 +659,12 @@ object DruidServe {
       * datasources, {type:table,name}, nested query and join
       * datasources). Superset-safe like referencedInSql.
       */
-    def referencedInNative(q: com.fasterxml.jackson.databind.JsonNode)
-        : Set[String] = {
+    def referencedInNative(q: JsonNode): Set[String] = {
       val out = scala.collection.mutable.Set[String]()
-      def texts(n: com.fasterxml.jackson.databind.JsonNode): Unit =
+      def texts(n: JsonNode): Unit =
         if (n.isTextual) out += n.asText()
         else if (n.isContainerNode) n.elements().asScala.foreach(texts)
-      def walk(n: com.fasterxml.jackson.databind.JsonNode): Unit =
+      def walk(n: JsonNode): Unit =
         if (n.isObject) {
           Option(n.get("dataSource")).foreach(texts)
           n.elements().asScala.foreach(walk)
@@ -601,12 +677,11 @@ object DruidServe {
       * differing only in queryId/timeout/cache flags are the same
       * query; semantic context keys stay in the key).
       */
-    def cacheKeyOf(q: com.fasterxml.jackson.databind.JsonNode): String = {
+    def cacheKeyOf(q: JsonNode): String = {
       val dropFromContext =
         Set("queryId", "timeout", "useCache", "populateCache",
           "priority", "lane")
-      def canon(n: com.fasterxml.jackson.databind.JsonNode,
-                inContext: Boolean): String = {
+      def canon(n: JsonNode, inContext: Boolean): String = {
         if (n.isObject) {
           val fields = n.properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
             .filterNot { case (k, _) => inContext && dropFromContext(k) }
@@ -624,93 +699,99 @@ object DruidServe {
       }
       canon(q, inContext = false)
     }
-    // ORDER MATTERS for the JDK server: the longest matching context
-    // prefix wins, so /druid/v2/sql takes SQL and /druid/v2 native JSON
-    server.createContext("/druid/v2", (ex: HttpExchange) => {
-      val sub = ex.getRequestURI.getPath.stripPrefix("/druid/v2")
-        .stripPrefix("/")
-      if (ex.getRequestMethod == "DELETE" && sub.nonEmpty &&
-          !sub.contains("/"))
-        // Druid's query cancellation: DELETE /druid/v2/{queryId}
-        respondCancel(ex, sub)
-      else handled(ex) { body =>
-        val q = mapper.readTree(body)
-        val qid = Option(q.path("context").path("queryId").asText(null))
-          .getOrElse(java.util.UUID.randomUUID().toString)
-        // header set BEFORE the query runs so error responses carry it
-        ex.getResponseHeaders.set("X-Druid-Query-Id", qid)
-        val timeoutMs = q.path("context").path("timeout").asLong(0)
-        val useCache = q.path("context").path("useCache").asBoolean(true)
-        val populateCache =
-          q.path("context").path("populateCache").asBoolean(true)
-        val t0 = System.nanoTime()
-        val rowsOut = new java.util.concurrent.atomic.AtomicLong()
-        def responseContext(count: Long, cached: Boolean): Unit = {
+    /** One query's lifecycle, shared by the native and sync SQL
+      * endpoints. Sets `X-Druid-Query-Id` before `plan` is evaluated, so
+      * every later failure carries it. Answers from the result cache
+      * when the entry's epoch is current (evicting a stale generation),
+      * else runs the plan under [[withQueryControl]] and caches answers
+      * up to `resultCacheMaxEntryBytes`. Sets `X-Graft-Cache` when the
+      * cache was consulted and logs the request once. Returns the
+      * reply, its row count and whether it was a cache hit.
+      */
+    def runQuery(ex: HttpExchange, qid: String)
+                (plan: => QueryPlan): (Reply, Long, Boolean) = {
+      ex.getResponseHeaders.set("X-Druid-Query-Id", qid)
+      val p = plan
+      val t0 = System.nanoTime()
+      val rows = new AtomicLong()
+      val key =
+        if (p.useCache || p.populateCache)
+          scala.util.Try(p.cacheKey()).toOption
+        else None
+      val hit = key.filter(_ => p.useCache).flatMap { case (k, epoch) =>
+        resultCache.synchronized {
+          Option(resultCache.get(k)) match {
+            case Some(c) if c.epoch == epoch => Some(c)
+            case Some(_) => resultCache.remove(k); None // stale gen
+            case None => None
+          }
+        }
+      }
+      hit match {
+        case Some(c) =>
+          logQuery(qid, p.kind, p.what, t0, c.rows, "cache-hit")
+          ex.getResponseHeaders.set("X-Graft-Cache", "HIT")
+          (Reply(c.body, c.contentType), c.rows, true)
+        case None =>
+          val reply =
+            try withQueryControl(p.session, qid, p.timeoutMs)(p.render(rows))
+            catch { case e: Throwable =>
+              logQuery(qid, p.kind, p.what, t0, rows.get(),
+                s"error:${e.getClass.getSimpleName}")
+              throw e
+            }
+          logQuery(qid, p.kind, p.what, t0, rows.get(), "ok")
+          key.foreach { case (k, epoch) =>
+            if (p.populateCache && reply.body.length <= resultCacheMaxEntryBytes)
+              resultCache.synchronized {
+                resultCache.put(k,
+                  CachedResult(epoch, reply.body, rows.get(), reply.contentType))
+              }
+            ex.getResponseHeaders.set("X-Graft-Cache", "MISS")
+          }
+          (reply, rows.get(), false)
+      }
+    }
+    // the JDK server routes a path to the LONGEST matching context, so
+    // /druid/v2/sql takes SQL and /druid/v2 native JSON
+    route("/druid/v2", Seq("POST", "DELETE")) { req =>
+      (req.method, req.segs) match {
+        case ("POST", _) =>
+          val q = mapper.readTree(req.body)
+          val ctx = q.path("context")
+          val qid = Option(ctx.path("queryId").asText(null))
+            .getOrElse(java.util.UUID.randomUUID().toString)
+          val t0 = System.nanoTime()
+          val (reply, count, cached) = runQuery(req.ex, qid) {
+            QueryPlan("native", q.path("queryType").asText("?"), spark,
+              ctx.path("timeout").asLong(0),
+              useCache = ctx.path("useCache").asBoolean(true),
+              populateCache = ctx.path("populateCache").asBoolean(true),
+              () => (cacheKeyOf(q), cacheEpoch(referencedInNative(q))),
+              rows => Reply(envelope(q,
+                graft.query.NativeQuery.run(req.body, resolveServed),
+                maxResultRows, rows)))
+          }
           // Druid's response-context header (observability clients
-          // parse it for timing/row counts): set AFTER the rows
-          // materialized, BEFORE the body is sent. missingSegments is
-          // always empty — a local scan either reads a segment or
-          // fails the query, it never silently skips one.
+          // parse it for timing/row counts), set once the rows
+          // materialized. missingSegments is always empty — a local
+          // scan either reads a segment or fails the query, it never
+          // silently skips one.
           val rc = mapper.createObjectNode()
           rc.put("queryId", qid)
           rc.put("count", count)
           rc.put("timeMs", (System.nanoTime() - t0) / 1000000L)
           if (cached) rc.put("cached", true)
           rc.putArray("missingSegments")
-          ex.getResponseHeaders.set("X-Druid-Response-Context", rc.toString)
-        }
-        val cacheKey =
-          if (useCache || populateCache)
-            try Some((cacheKeyOf(q), cacheEpoch(referencedInNative(q))))
-            catch { case scala.util.control.NonFatal(_) => None }
-          else None
-        val hit: Option[CachedResult] = cacheKey.filter(_ => useCache)
-          .flatMap { case (k, epoch) =>
-            resultCache.synchronized {
-              Option(resultCache.get(k)) match {
-                case Some(c) if c.epoch == epoch => Some(c)
-                case Some(_) => resultCache.remove(k); None // stale gen
-                case None => None
-              }
-            }
-          }
-        hit match {
-          case Some(c) =>
-            logQuery(qid, "native", q.path("queryType").asText("?"), t0,
-              c.rows, "cache-hit")
-            ex.getResponseHeaders.set("X-Graft-Cache", "HIT")
-            responseContext(c.rows, cached = true)
-            (c.body, "application/json")
-          case None => try {
-            val out = withQueryControl(spark, qid, timeoutMs) {
-              envelope(q, graft.query.NativeQuery.run(body, resolveServed),
-                maxResultRows, rowsOut)
-            }
-            logQuery(qid, "native", q.path("queryType").asText("?"), t0,
-              rowsOut.get(), "ok")
-            cacheKey.foreach { case (k, epoch) =>
-              if (populateCache && out.length <= resultCacheMaxEntryBytes)
-                resultCache.synchronized {
-                  resultCache.put(k, CachedResult(epoch, out, rowsOut.get()))
-                }
-            }
-            // header only when the cache was actually consulted —
-            // useCache:false + populateCache:false means the cache was
-            // uninvolved, matching the SQL endpoint's opt-in behavior
-            if (cacheKey.isDefined)
-              ex.getResponseHeaders.set("X-Graft-Cache", "MISS")
-            responseContext(rowsOut.get(), cached = false)
-            (out, "application/json")
-          } catch { case e: Throwable =>
-            logQuery(qid, "native", q.path("queryType").asText("?"), t0,
-              rowsOut.get(), s"error:${e.getClass.getSimpleName}")
-            throw e
-          }
-        }
+          req.ex.getResponseHeaders.set("X-Druid-Response-Context", rc.toString)
+          reply
+        // Druid's query cancellation: DELETE /druid/v2/{queryId}
+        case (_, id :: Nil) => cancelReply(id)
+        case _ => throw notAllowed(Seq("POST"))
       }
-    })
+    }
     // ---- shared by the sync SQL endpoint and the async statements API
-    def validateSqlContext(ctx: com.fasterxml.jackson.databind.JsonNode,
+    def validateSqlContext(ctx: JsonNode,
                            extraSupported: Set[String]): Unit =
       if (ctx.isObject) {
         // honored + result-neutral keys a drop-in client may send
@@ -742,7 +823,7 @@ object DruidServe {
             s"unsupported SQL context key(s) ${bad.mkString(", ")} " +
               s"(supported: ${supported.toSeq.sorted.mkString(", ")})")
       }
-    def sqlQueryIdOf(ctx: com.fasterxml.jackson.databind.JsonNode): String =
+    def sqlQueryIdOf(ctx: JsonNode): String =
       Seq("sqlQueryId", "queryId")
         .flatMap(k => Option(ctx.path(k).asText(null))).headOption
         .getOrElse(java.util.UUID.randomUUID().toString)
@@ -756,7 +837,7 @@ object DruidServe {
       // re-bridged into every live session on ingest commits
       // (registerServedTable) — no per-request DDL
       registerInformationSchema(spark,
-        scala.jdk.CollectionConverters.MapHasAsScala(servedTables).asScala.toMap)
+        servedTables.asScala.toMap)
       // Druid MSQ's TABLE(EXTERN(...)) external-input table function:
       // each call compiles to a spark.read temp view (graft.sql.Extern)
       // so SELECTs and INSERT/REPLACE ingestion accept the wire shape;
@@ -841,14 +922,12 @@ object DruidServe {
         try {
           java.nio.file.Files.createDirectories(f.getParent)
           val o = mapper.createObjectNode()
-          o.put("queryId", st.queryId)
-          o.put("sql", st.sql)
-          o.put("createdAt", st.createdAt)
-          o.put("resultFormat", st.resultFormat)
-          o.put("state", st.state)
-          o.put("durationMs", st.durationMs)
-          o.put("numTotalRows", st.numTotalRows)
-          o.put("dataSource", st.dataSource)
+            .put("queryId", st.queryId).put("sql", st.sql)
+            .put("createdAt", st.createdAt)
+            .put("resultFormat", st.resultFormat).put("state", st.state)
+            .put("durationMs", st.durationMs)
+            .put("numTotalRows", st.numTotalRows)
+            .put("dataSource", st.dataSource)
           st.schemaJson.foreach(s => o.set[ObjectNode]("schema", s))
           val ps = o.putArray("pages")
           st.pages.foreach { case (rows, bytes) =>
@@ -856,13 +935,8 @@ object DruidServe {
             p.put("bytes", bytes)
             p.set[ObjectNode]("rows", rows)
           }
-          val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-          java.nio.file.Files.write(tmp, mapper.writeValueAsBytes(o))
-          java.nio.file.Files.move(tmp, f,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          writeAtomically(f, o)
         } catch {
-          case e: VirtualMachineError => throw e
           case scala.util.control.NonFatal(e) => System.err.println(
             s"[graft-serve] statement journal write failed for " +
               s"${st.queryId}: ${e.getMessage}")
@@ -888,22 +962,18 @@ object DruidServe {
               st.numTotalRows = n.path("numTotalRows").asLong(0L)
               st.dataSource = n.path("dataSource").asText("__query_select")
               if (n.hasNonNull("schema")) n.path("schema") match {
-                case a: com.fasterxml.jackson.databind.node.ArrayNode =>
+                case a: ArrayNode =>
                   st.schemaJson = Some(a)
                 case _ => ()
               }
-              import scala.jdk.CollectionConverters._
               st.pages = n.path("pages").elements().asScala.collect {
-                case p if p.path("rows")
-                    .isInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode] =>
-                  (p.path("rows")
-                    .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode],
+                case p if p.path("rows").isInstanceOf[ArrayNode] =>
+                  (p.path("rows").asInstanceOf[ArrayNode],
                     p.path("bytes").asLong(0L))
               }.toVector
               Some(st)
             }
           } catch {
-            case e: VirtualMachineError => throw e
             case scala.util.control.NonFatal(e) =>
               System.err.println(s"[graft-serve] SKIPPING statement " +
                 s"journal ${f.getName}: ${e.getMessage}")
@@ -919,11 +989,7 @@ object DruidServe {
             "SUCCESS statement(s)")
       }
     val stmtThreads = math.max(2, threads / 2)
-    val statementPool = new java.util.concurrent.ThreadPoolExecutor(
-      stmtThreads, stmtThreads, 30L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      daemonFactory("graft-serve-stmt"))
-    statementPool.allowCoreThreadTimeOut(true)
+    val statementPool = daemonPool(stmtThreads, "graft-serve-stmt")
     // bound the registry: retire the oldest TERMINAL statements past
     // the bound (default 500) so a long-lived broker can't accumulate
     // result pages forever.
@@ -973,12 +1039,7 @@ object DruidServe {
         d.put("error", "druidException")
         d.put("errorCode", e.getClass.getSimpleName)
         d.put("persona", "USER")
-        d.put("category", e match {
-          case _: QueryTimedOut         => "TIMEOUT"
-          case _: QueryCancelled        => "CANCELED"
-          case _: ResourceLimitExceeded => "CAPACITY_EXCEEDED"
-          case _                        => "UNCATEGORIZED"
-        })
+        d.put("category", failureOf(e).category)
         d.put("errorMessage", String.valueOf(e.getMessage))
       }
       o
@@ -995,10 +1056,7 @@ object DruidServe {
     // serve id pins the tables to this broker instance, so several
     // brokers in one JVM never read each other's state (the LAST one
     // that registers owns the sys.* names — opt-in per start()).
-    val serverStartIso = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.now())
+    val serverStartIso = isoMs.format(java.time.Instant.now())
     if (sysSchema) {
       import graft.sources.sys.SysRegistry
       val sysId = s"broker-$serveId"
@@ -1010,38 +1068,15 @@ object DruidServe {
       // same honesty as Druid, where only real datasources appear
       def rootOf(name: String, df: DataFrame): Option[String] =
         if (ingestBacked.contains(name)) ingestRoot.map(r => s"$r/$name")
-        else df.queryExecution.analyzed.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-              if r.table.isInstanceOf[graft.sources.druid.DruidTable] =>
-            r.table.asInstanceOf[graft.sources.druid.DruidTable].rootDir
-        }.distinct match {
+        else druidRoots(df) match {
           case Seq(one) => Some(one)
           case _        => None
         }
-      def dsSnapshot(): Seq[SysRegistry.Datasource] = {
-        val it = servedTables.entrySet().iterator()
-        val b = Seq.newBuilder[SysRegistry.Datasource]
-        while (it.hasNext) {
-          val e = it.next()
-          val (dims, mets) = e.getValue.schema.fields
-            .filterNot(_.name == "__time").partition(f => f.dataType match {
-              case org.apache.spark.sql.types.StringType => true
-              case _: org.apache.spark.sql.types.ArrayType => true
-              case _ => false
-            })
-          b += SysRegistry.Datasource(e.getKey, rootOf(e.getKey, e.getValue),
-            dims.map(_.name).toSeq, mets.map(_.name).toSeq)
-        }
-        b.result().sortBy(_.name)
-      }
-      def diskSize(root: String): Long =
-        try {
-          val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-          try s.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-          finally s.close()
-        } catch { case scala.util.control.NonFatal(_) => 0L }
+      def dsSnapshot(): Seq[SysRegistry.Datasource] =
+        servedTables.asScala.toSeq.map { case (name, df) =>
+          val (dims, mets) = dimensionsAndMetrics(df)
+          SysRegistry.Datasource(name, rootOf(name, df), dims, mets)
+        }.sortBy(_.name)
       SysRegistry.register(sysId, SysRegistry.State(
         datasources = () => dsSnapshot(),
         servers = () => {
@@ -1051,7 +1086,7 @@ object DruidServe {
           // — an ops query, not a hot path; max_size mirrors curr (no
           // quota concept on a shared filesystem).
           val served = dsSnapshot().flatMap(_.root).distinct
-          val bytes = served.map(diskSize).sum
+          val bytes = served.map(dirSize).sum
           Seq(
             SysRegistry.ServerRow(serverName, host, boundPort, -1L,
               "broker", null, 0L, 0L, 1L, serverStartIso),
@@ -1059,25 +1094,20 @@ object DruidServe {
               "historical", "_default_tier", bytes, bytes, 0L,
               serverStartIso))
         },
-        tasks = () => {
-          val it = statements.values().iterator()
-          val b = Seq.newBuilder[SysRegistry.TaskRow]
-          while (it.hasNext) {
-            val st = it.next()
+        tasks = () =>
+          statements.values().asScala.toSeq.map { st =>
             val status = st.state match {
               case "SUCCESS"            => "SUCCESS"
               case "FAILED" | "CANCELED" => "FAILED"
               case _                    => "RUNNING"
             }
-            b += SysRegistry.TaskRow(st.queryId, "query_controller",
+            SysRegistry.TaskRow(st.queryId, "query_controller",
               st.dataSource, st.createdAt, status,
               if (status == "RUNNING") "RUNNING" else "NONE",
               st.durationMs, host, boundPort,
               if (st.state == "CANCELED") "Canceled"
               else st.error.map(e => String.valueOf(e.getMessage)).orNull)
-          }
-          b.result().sortBy(_.createdTime)
-        }))
+          }.sortBy(_.createdTime)))
       spark.sql("CREATE DATABASE IF NOT EXISTS sys")
       Seq("segments", "servers", "tasks").foreach { k =>
         spark.sql(s"DROP TABLE IF EXISTS sys.$k")
@@ -1151,6 +1181,7 @@ object DruidServe {
                      args: Array[Any], timeoutMs: Long,
                      tsFmt: DateTimeFormatter): Unit = {
       val t0 = System.nanoTime()
+      val what = st.sql.linesIterator.mkString(" ").take(120)
       try {
         if (st.cancelRequested.get())
           throw new QueryCancelled(s"query ${st.queryId} was cancelled")
@@ -1184,37 +1215,24 @@ object DruidServe {
         st.durationMs = (System.nanoTime() - t0) / 1000000L
         st.state = "SUCCESS"
         journalStatement(st) // durable SUCCESS envelope (best-effort)
-        logQuery(st.queryId, "sql-statement",
-          st.sql.linesIterator.mkString(" ").take(120), t0, total, "ok")
-      } catch {
-        // VirtualMachineErrors (OOM, StackOverflow) must NOT be
-        // laundered into a FAILED statement envelope while the broker
-        // keeps serving — record the terminal state for pollers, then
-        // rethrow so the error propagates out of the statement pool
-        // (mirrors withQueryControl's contract on the sync path)
-        case e: VirtualMachineError =>
-          st.error = Some(e)
-          st.durationMs = (System.nanoTime() - t0) / 1000000L
-          st.state = "FAILED"
-          throw e
-        case e: Throwable =>
-          st.error = Some(e)
-          st.durationMs = (System.nanoTime() - t0) / 1000000L
-          st.state = e match {
-            case _: QueryCancelled => "CANCELED"
-            case _                 => "FAILED"
-          }
-          logQuery(st.queryId, "sql-statement",
-            st.sql.linesIterator.mkString(" ").take(120), t0, 0L,
-            s"error:${e.getClass.getSimpleName}")
+        logQuery(st.queryId, "sql-statement", what, t0, total, "ok")
+      } catch { case e: Throwable =>
+        st.error = Some(e)
+        st.durationMs = (System.nanoTime() - t0) / 1000000L
+        st.state = e match {
+          case _: QueryCancelled => "CANCELED"
+          case _                 => "FAILED"
+        }
+        // a VirtualMachineError (OOM, StackOverflow) must NOT be
+        // laundered into a FAILED envelope while the broker keeps
+        // serving: its terminal state is recorded for pollers, then it
+        // propagates out of the statement pool (as the route rethrows
+        // it on the sync path)
+        e match { case v: VirtualMachineError => throw v; case _ => () }
+        logQuery(st.queryId, "sql-statement", what, t0, 0L,
+          s"error:${e.getClass.getSimpleName}")
       }
       retireStatements()
-    }
-    def statementError(ex: HttpExchange, code: Int, msg: String): Unit = {
-      val o = mapper.createObjectNode()
-      o.put("error", "druidException")
-      o.put("errorMessage", msg)
-      respond(ex, code, o.toString)
     }
     // Shared submit path for the two async-SQL surfaces: the modern
     // statements API and the legacy /druid/v2/sql/task MSQ endpoint
@@ -1265,71 +1283,58 @@ object DruidServe {
       st
     }
 
-    server.createContext("/druid/v2/sql/statements", (ex: HttpExchange) => {
-      val path = ex.getRequestURI.getPath
-      val sub = path.stripPrefix("/druid/v2/sql/statements").stripPrefix("/")
-      val segs = sub.split("/").toList.filter(_.nonEmpty)
-      (ex.getRequestMethod, segs) match {
-        case ("POST", Nil) => handled(ex) { body =>
-          val st = submitStatement(ex, body, Set("executionMode"))
-          (statementStatusJson(st).toString, "application/json")
-        }
-        case ("GET", id :: Nil) =>
-          val st = statements.get(id)
-          if (st == null) statementError(ex, 404, s"no such query: $id")
-          else respond(ex, 200, statementStatusJson(st).toString)
+    def statementOf(id: String): AsyncStatement =
+      Option(statements.get(id)).getOrElse(
+        throw new HttpError(404, s"no such query: $id", StatementError))
+    route("/druid/v2/sql/statements", Seq("POST", "GET", "DELETE")) { req =>
+      (req.method, req.segs) match {
+        case ("POST", Nil) =>
+          val st = submitStatement(req.ex, req.body, Set("executionMode"))
+          Reply(statementStatusJson(st).toString)
+        case ("GET", id :: Nil) => Reply(statementStatusJson(statementOf(id)).toString)
         case ("GET", id :: "results" :: Nil) =>
-          val st = statements.get(id)
-          if (st == null) statementError(ex, 404, s"no such query: $id")
-          else if (st.state != "SUCCESS")
-            statementError(ex, 400, s"query $id is in state ${st.state}; " +
-              "results are available only after SUCCESS")
-          else {
-            val pageParam = Option(ex.getRequestURI.getQuery).getOrElse("")
-              .split("&").filter(_.nonEmpty).map(_.split("=", 2))
-              .collectFirst { case Array("page", v) => v }
-            val parsed =
-              try pageParam.map(_.toLong)
-              catch { case _: NumberFormatException => Some(-1L) }
-            if (parsed.exists(p => p < 0 || p >= st.pages.size))
-              statementError(ex, 400,
-                s"invalid page ${pageParam.getOrElse("")} " +
-                  s"(query has ${st.pages.size} pages)")
-            else {
-              val chosen = parsed match {
-                case Some(p) => Vector(st.pages(p.toInt)._1)
-                case None    => st.pages.map(_._1)
-              }
-              if (st.resultFormat.endsWith("Lines")) {
-                val sb = new StringBuilder
-                chosen.foreach(page => page.forEach(n =>
-                  { sb.append(n.toString).append('\n'); () }))
-                respond(ex, 200, sb.toString, "text/plain")
-              } else {
-                val out = mapper.createArrayNode()
-                chosen.foreach(page => page.forEach(n => { out.add(n); () }))
-                respond(ex, 200, out.toString)
-              }
-            }
+          val st = statementOf(id)
+          if (st.state != "SUCCESS")
+            throw new HttpError(400, s"query $id is in state ${st.state}; " +
+              "results are available only after SUCCESS", StatementError)
+          val pageParam = Option(req.ex.getRequestURI.getQuery).getOrElse("")
+            .split("&").filter(_.nonEmpty).map(_.split("=", 2))
+            .collectFirst { case Array("page", v) => v }
+          val parsed =
+            try pageParam.map(_.toLong)
+            catch { case _: NumberFormatException => Some(-1L) }
+          if (parsed.exists(p => p < 0 || p >= st.pages.size))
+            throw new HttpError(400, s"invalid page ${pageParam.getOrElse("")} " +
+              s"(query has ${st.pages.size} pages)", StatementError)
+          val chosen = parsed match {
+            case Some(p) => Vector(st.pages(p.toInt)._1)
+            case None    => st.pages.map(_._1)
+          }
+          if (st.resultFormat.endsWith("Lines")) {
+            val sb = new StringBuilder
+            chosen.foreach(page => page.forEach(n =>
+              { sb.append(n.toString).append('\n'); () }))
+            Reply(sb.toString, "text/plain")
+          } else {
+            val out = mapper.createArrayNode()
+            chosen.foreach(page => page.forEach(n => { out.add(n); () }))
+            Reply(out.toString)
           }
         case ("DELETE", id :: Nil) =>
-          val st = statements.get(id)
-          if (st == null) statementError(ex, 404, s"no such query: $id")
-          else if (st.terminal)
-            // Druid's no-op cancel of a finished query: 200 + status
-            respond(ex, 200, statementStatusJson(st).toString)
+          val st = statementOf(id)
+          // Druid's no-op cancel of a finished query: 200 + status
+          if (st.terminal) Reply(statementStatusJson(st).toString)
           else {
             st.cancelRequested.set(true)
             cancelQuery(id)
-            respond(ex, 202, statementStatusJson(st).toString)
+            Reply(statementStatusJson(st).toString, status = 202)
           }
-        case ("DELETE", _) =>
-          statementError(ex, 404, "DELETE expects /druid/v2/sql/statements/{queryId}")
-        case _ =>
-          respond(ex, 405,
-            """{"error":"supported: POST /, GET /{id}, GET /{id}/results, DELETE /{id}"}""")
+        case ("DELETE", _) => throw new HttpError(404,
+          "DELETE expects /druid/v2/sql/statements/{queryId}", StatementError)
+        case _ => throw new HttpError(405,
+          "supported: POST /, GET /{id}, GET /{id}/results, DELETE /{id}")
       }
-    })
+    }
     // Legacy MSQ submit surface: the Druid console POSTs SQL ingestion
     // (and "run as task" queries) to /druid/v2/sql/task
     // (SqlTaskResource) and expects a SqlTaskStatus {taskId, state} —
@@ -1340,194 +1345,114 @@ object DruidServe {
     // console attaches are accepted as operational (they steer real
     // MSQ's task fan-out, which has no analogue here and never changes
     // answers); semantic keys (finalizeAggregations, ...) stay loud.
-    server.createContext("/druid/v2/sql/task", (ex: HttpExchange) => {
-      if (ex.getRequestMethod != "POST")
-        respond(ex, 405, """{"error":"supported: POST /druid/v2/sql/task"}""")
+    route("/druid/v2/sql/task", Seq("POST")) { req =>
+      val st = submitStatement(req.ex, req.body, Set("executionMode",
+        "maxNumTasks", "taskAssignment", "maxParseExceptions",
+        "waitUntilSegmentsLoad", "durableShuffleStorage",
+        "selectDestination"))
+      val o = mapper.createObjectNode()
+      o.put("taskId", st.queryId)
+      // SqlTaskStatus reports RUNNING at accept time (the task is
+      // queued on the statement pool; terminal states are polled)
+      o.put("state", "RUNNING")
       // real Druid's SqlTaskResource replies 202 ACCEPTED at submit —
       // strict clients check the code, not just the body
-      else handled(ex, okStatus = 202) { body =>
-        val st = submitStatement(ex, body, Set("executionMode",
-          "maxNumTasks", "taskAssignment", "maxParseExceptions",
-          "waitUntilSegmentsLoad", "durableShuffleStorage",
-          "selectDestination"))
-        val o = mapper.createObjectNode()
-        o.put("taskId", st.queryId)
-        // SqlTaskStatus reports RUNNING at accept time (the task is
-        // queued on the statement pool; terminal states are polled)
-        o.put("state", "RUNNING")
-        (o.toString, "application/json")
-      }
-    })
+      Reply(o.toString, status = 202)
+    }
 
-    server.createContext("/druid/v2/sql", (ex: HttpExchange) => {
-      val sub = ex.getRequestURI.getPath.stripPrefix("/druid/v2/sql")
-        .stripPrefix("/")
-      if (ex.getRequestMethod == "DELETE" && sub.nonEmpty &&
-          !sub.contains("/"))
+    route("/druid/v2/sql", Seq("POST", "DELETE")) { req =>
+      (req.method, req.segs) match {
+        case ("POST", _) =>
+          val node = mapper.readTree(req.body)
+          val sql0 = node.path("query").asText()
+          if (sql0.isEmpty)
+            throw new IllegalArgumentException("SQL endpoint needs {\"query\": ...}")
+          val up = sql0.stripLeading().toUpperCase(java.util.Locale.ROOT)
+          if (up.startsWith("INSERT") || up.startsWith("REPLACE"))
+            // Druid's broker behavior: the sync endpoint rejects
+            // ingestion; it belongs to the statements API
+            throw new IllegalArgumentException(
+              "INSERT/REPLACE statements must be submitted to " +
+                "/druid/v2/sql/statements (the SQL-ingestion surface)")
+          val args = parameterValues(node.path("parameters"))
+          val ctx = node.path("context")
+          runQuery(req.ex, sqlQueryIdOf(ctx)) {
+            validateSqlContext(ctx, extraSupported = Set.empty)
+            val tz = Option(ctx.path("sqlTimeZone").asText(null))
+            val (session, tsFmt) = sessionFor(tz)
+            val resultFormat = node.path("resultFormat").asText("object")
+            val header = node.path("header").asBoolean(false)
+            val typesHeader = node.path("typesHeader").asBoolean(false)
+            val sqlTypesHeader = node.path("sqlTypesHeader").asBoolean(false)
+            // Druid's RESULT-LEVEL cache for SQL: off by default
+            // (matching druid.broker.cache.useResultLevelCache=false),
+            // honored when the client opts in. Same epoch discipline as
+            // the native cache — a hit never crosses a table generation
+            // or a lookup edit. Callers opting in own the determinism of
+            // their SQL (now()/rand() queries should not set the flag),
+            // exactly the Druid contract.
+            val useRlc = ctx.path("useResultLevelCache").asBoolean(false)
+            QueryPlan("sql", sql0.linesIterator.mkString(" ").take(120),
+              session, ctx.path("timeout").asLong(0),
+              useCache = useRlc,
+              populateCache =
+                ctx.path("populateResultLevelCache").asBoolean(useRlc),
+              // each parameter is length-prefixed and null-tagged
+              // individually: args ["a|b"] vs ["a","b"] and null vs the
+              // string "null" must key differently; the fields join
+              // length-prefixed too, so distinct field vectors never
+              // collide on one key string
+              () => (Seq("sql", sql0,
+                  args.map { a =>
+                    if (a == null) "N" else {
+                      val s = String.valueOf(a: Any)
+                      s"S${s.length}:$s"
+                    }
+                  }.mkString("[", "", "]"), resultFormat, header.toString,
+                  typesHeader.toString, sqlTypesHeader.toString,
+                  tz.getOrElse("UTC"))
+                  .map(x => x.length.toString + ":" + x).mkString(";"),
+                cacheEpoch(referencedInSql(sql0))),
+              rows => sqlResponse(buildSqlDf(session, sql0, args),
+                resultFormat, header, typesHeader, sqlTypesHeader,
+                maxResultRows, tsFmt, rows))
+          }._1
         // Druid's SQL cancellation: DELETE /druid/v2/sql/{sqlQueryId}.
         // Multi-segment paths (e.g. an Avatica sub-path) are NOT a
-        // cancel of the literal tail — they fall through to the 405.
-        respondCancel(ex, sub)
-      else handled(ex) { body =>
-        val node = mapper.readTree(body)
-        val sql0 = node.path("query").asText()
-        if (sql0.isEmpty)
-          throw new IllegalArgumentException("SQL endpoint needs {\"query\": ...}")
-        val up = sql0.stripLeading().toUpperCase(java.util.Locale.ROOT)
-        if (up.startsWith("INSERT") || up.startsWith("REPLACE"))
-          // Druid's broker behavior: the sync endpoint rejects
-          // ingestion; it belongs to the statements API
-          throw new IllegalArgumentException(
-            "INSERT/REPLACE statements must be submitted to " +
-              "/druid/v2/sql/statements (the SQL-ingestion surface)")
-        val args = parameterValues(node.path("parameters"))
-        val ctx = node.path("context")
-        val qid = sqlQueryIdOf(ctx)
-        ex.getResponseHeaders.set("X-Druid-Query-Id", qid)
-        validateSqlContext(ctx, extraSupported = Set.empty)
-        val (session, fmt) =
-          sessionFor(Option(ctx.path("sqlTimeZone").asText(null)))
-        val timeoutMs = ctx.path("timeout").asLong(0)
-        // Druid's RESULT-LEVEL cache for SQL: off by default (matching
-        // druid.broker.cache.useResultLevelCache=false), honored when
-        // the client opts in. Same epoch discipline as the native
-        // cache — a hit never crosses a table generation or a lookup
-        // edit. Callers opting in own the determinism of their SQL
-        // (now()/rand() queries should not set the flag), exactly the
-        // Druid contract.
-        val useRlc = ctx.path("useResultLevelCache").asBoolean(false)
-        val popRlc = ctx.path("populateResultLevelCache").asBoolean(useRlc)
-        val rlcKey =
-          if (useRlc || popRlc)
-            // each parameter is length-prefixed and null-tagged
-            // individually: args ["a|b"] vs ["a","b"] and null vs the
-            // string "null" must key differently
-            try Some((Seq("sql", sql0,
-                args.map { a =>
-                  if (a == null) "N" else {
-                    val s = String.valueOf(a: Any)
-                    s"S${s.length}:$s"
-                  }
-                }.mkString("[", "", "]"),
-                node.path("resultFormat").asText("object"),
-                node.path("header").asBoolean(false).toString,
-                node.path("typesHeader").asBoolean(false).toString,
-                node.path("sqlTypesHeader").asBoolean(false).toString,
-                Option(ctx.path("sqlTimeZone").asText(null)).getOrElse("UTC"))
-                // length-prefixed join: distinct field vectors can never
-                // collide on the same key string
-                .map(x => x.length.toString + ":" + x).mkString(";"),
-              cacheEpoch(referencedInSql(sql0))))
-            catch { case scala.util.control.NonFatal(_) => None }
-          else None
-        val t0 = System.nanoTime()
-        val rowsOut = new java.util.concurrent.atomic.AtomicLong()
-        val rlcHit: Option[(CachedResult, String)] =
-          rlcKey.filter(_ => useRlc).flatMap { case (k, epoch) =>
-            resultCache.synchronized {
-              Option(resultCache.get(k)) match {
-                case Some(c) if c.epoch == epoch =>
-                  // content type was stored alongside via a marker line
-                  val i = c.body.indexOf('\n')
-                  Some((c.copy(body = c.body.substring(i + 1)),
-                    c.body.substring(0, i)))
-                case Some(_) => resultCache.remove(k); None
-                case None => None
-              }
-            }
-          }
-        rlcHit match {
-          case Some((c, contentType)) =>
-            logQuery(qid, "sql",
-              sql0.linesIterator.mkString(" ").take(120), t0,
-              c.rows, "cache-hit")
-            ex.getResponseHeaders.set("X-Graft-Cache", "HIT")
-            (c.body, contentType)
-          case None => try {
-            val out = withQueryControl(session, qid, timeoutMs) {
-              val df = buildSqlDf(session, sql0, args)
-              sqlResponse(df,
-                node.path("resultFormat").asText("object"),
-                node.path("header").asBoolean(false),
-                node.path("typesHeader").asBoolean(false),
-                node.path("sqlTypesHeader").asBoolean(false), maxResultRows,
-                fmt, rowsOut)
-            }
-            logQuery(qid, "sql", sql0.linesIterator.mkString(" ").take(120), t0,
-              rowsOut.get(), "ok")
-            rlcKey.foreach { case (k, epoch) =>
-              if (popRlc && out._1.length <= resultCacheMaxEntryBytes)
-                resultCache.synchronized {
-                  resultCache.put(k, CachedResult(epoch,
-                    out._2 + "\n" + out._1, rowsOut.get()))
-                }
-            }
-            if (useRlc || popRlc)
-              ex.getResponseHeaders.set("X-Graft-Cache", "MISS")
-            out
-          } catch { case e: Throwable =>
-            logQuery(qid, "sql", sql0.linesIterator.mkString(" ").take(120), t0,
-              rowsOut.get(), s"error:${e.getClass.getSimpleName}")
-            throw e
-          }
-        }
+        // cancel of the literal tail — they answer 405.
+        case (_, id :: Nil) => cancelReply(id)
+        case _ => throw notAllowed(Seq("POST"))
       }
-    })
+    }
     // broker schema-discovery endpoints (pydruid et al. call these on
     // connect): the table list, and per-table dimensions/metrics split
     // the way a broker reports them (strings/arrays = dimensions,
     // numerics = metrics) — answered from the cached schemas, no scan
-    server.createContext("/druid/v2/datasources", (ex: HttpExchange) =>
-      handled(ex, methods = Set("GET")) { _ =>
-        val rest = ex.getRequestURI.getPath
-          .stripPrefix("/druid/v2/datasources").stripPrefix("/")
-        if (rest.isEmpty) {
-          val a = mapper.createArrayNode()
-          scala.jdk.CollectionConverters
-            .SetHasAsScala(servedTables.keySet()).asScala
-            .toSeq.sorted.foreach(a.add)
-          (a.toString, "application/json")
-        } else {
-          val parts = rest.split("/").toList
-          val name = parts.head
-          val df = resolveServed(name)
-          val (dimNames, metNames) = df.schema.fields
-            .filterNot(_.name == "__time").partition(_.dataType match {
-              case StringType | ArrayType(_, _) => true
-              case _                            => false
-            })
-          parts.tail match {
+    route("/druid/v2/datasources", Seq("GET")) { req =>
+      req.segs match {
+        case Nil =>
+          Reply(jsonArray(servedTables.keySet().asScala.toSeq.sorted))
+        case name :: sub =>
+          val (dimNames, metNames) = dimensionsAndMetrics(resolveServed(name))
+          sub match {
             case Nil =>
               val o = mapper.createObjectNode()
               val dims = o.putArray("dimensions")
-              dimNames.foreach(f => dims.add(f.name))
+              dimNames.foreach(dims.add)
               val mets = o.putArray("metrics")
-              metNames.foreach(f => mets.add(f.name))
-              (o.toString, "application/json")
-            case "dimensions" :: Nil =>
-              val a = mapper.createArrayNode()
-              dimNames.foreach(f => a.add(f.name))
-              (a.toString, "application/json")
-            case "metrics" :: Nil =>
-              val a = mapper.createArrayNode()
-              metNames.foreach(f => a.add(f.name))
-              (a.toString, "application/json")
+              metNames.foreach(mets.add)
+              Reply(o.toString)
+            case "dimensions" :: Nil => Reply(jsonArray(dimNames))
+            case "metrics" :: Nil    => Reply(jsonArray(metNames))
             case other =>
               throw new IllegalArgumentException(
                 s"datasources sub-path '${other.mkString("/")}' (use dimensions|metrics)")
           }
-        }
-      })
+      }
+    }
     // ---- coordinator datasource metadata (console/pydruid call these
     // on connect): names plus per-datasource segment stats for the
     // segment-backed tables under the ingest root
-    def dirSize(d: String): Long = {
-      val f = new java.io.File(d)
-      if (!f.exists()) 0L
-      else if (f.isFile) f.length()
-      else Option(f.listFiles()).getOrElse(Array.empty)
-        .map(c => dirSize(c.getPath)).sum
-    }
     /** Remove a served table from every surface: registry, global view,
       * the main session's temp view, and every live tz session's
       * bridge. Used when a coordinator drop empties a datasource.
@@ -1555,19 +1480,15 @@ object DruidServe {
       * segment-backed tables under the ingest root; a read-only broker
       * refuses.
       */
-    def coordinatorDelete(ex: HttpExchange, segs: List[String]): Unit = {
-      def err(code: Int, msg: String): Unit = {
-        val o = mapper.createObjectNode()
-        o.put("error", msg)
-        respond(ex, code, o.toString)
-      }
-      (ingestRoot, segs) match {
-        case (None, _) =>
-          err(400, "this broker is read-only: coordinator drops are disabled")
+    def coordinatorDelete(req: Request): Reply =
+      (ingestRoot, req.segs) match {
+        case (None, _) => throw new IllegalArgumentException(
+          "this broker is read-only: coordinator drops are disabled")
         case (Some(root), name :: rest) if servedTables.containsKey(name) =>
           val dir = s"$root/$name"
           if (!new java.io.File(dir).isDirectory)
-            err(400, s"datasource $name is not segment-backed")
+            throw new IllegalArgumentException(
+              s"datasource $name is not segment-backed")
           else {
             val bounds = rest match {
               case Nil => Some((Long.MinValue, Long.MaxValue))
@@ -1582,11 +1503,11 @@ object DruidServe {
               case _ => None
             }
             bounds match {
-              case None => err(400,
+              case None => throw new IllegalArgumentException(
                 "expected /{ds} or /{ds}/intervals/{isoLo}_{isoHi}")
               case Some((lo, hi)) =>
                 val st = graft.write.Retention.dropContained(dir, lo, hi)
-                val kill = Option(ex.getRequestURI.getQuery).exists(
+                val kill = Option(req.ex.getRequestURI.getQuery).exists(
                   _.split("&").contains("kill=true"))
                 val purged =
                   if (kill) graft.sources.druid.SegmentCatalog
@@ -1600,13 +1521,12 @@ object DruidServe {
                 o.put("rowsDropped", st.rowsDropped)
                 o.put("segmentsKept", st.segmentsKept)
                 if (kill) o.put("segmentsKilled", purged)
-                respond(ex, 200, o.toString)
+                Reply(o.toString)
             }
           }
-        case (_, name :: _) => err(404, s"no such datasource: $name")
-        case (_, Nil) => err(404, "DELETE needs a datasource")
+        case (_, name :: _) => throw new HttpError(404, s"no such datasource: $name")
+        case (_, Nil) => throw new HttpError(404, "DELETE needs a datasource")
       }
-    }
     /** Segment directory behind a served datasource: the druid DSv2
       * relation's root when the served DataFrame is a bare segment
       * scan, else the ingest-root convention. None for views with no
@@ -1640,94 +1560,74 @@ object DruidServe {
     // planner prunes with (SegmentCatalog.metaFor + interval
     // intersection), so the listing IS the planner's pruning; the one
     // location is this broker.
-    server.createContext("/druid/v2/candidates", (ex: HttpExchange) =>
-      handled(ex, methods = Set("GET")) { _ =>
-        val params = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-          .split("&").filter(_.contains("=")).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            k -> java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
-        val name = params.getOrElse("datasource",
-          throw new IllegalArgumentException(
-            "candidates requires ?datasource=<name>"))
-        if (!servedTables.containsKey(name))
-          throw new IllegalArgumentException(s"no such datasource: $name")
-        // Joda-tolerant ISO-8601: Druid clients send any of
-        // 2024-01-02T00:00:00.000Z, ...+01:00 (non-UTC offset),
-        // zoneless local datetimes, and bare dates (2024-01-02).
-        // Instant.parse alone 400s on the last three valid forms.
-        def isoMsOf(s: String): Long =
-          try java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
-          catch { case _: java.time.format.DateTimeParseException =>
-            try java.time.LocalDateTime.parse(s)
-              .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-            catch { case _: java.time.format.DateTimeParseException =>
-              try java.time.LocalDate.parse(s).atStartOfDay
-                .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-              catch { case _: java.time.format.DateTimeParseException =>
-                throw new IllegalArgumentException(
-                  s"interval timestamp '$s' (ISO-8601 instant, " +
-                    "offset/local datetime, or date)")
-              }
-            }
+    route("/druid/v2/candidates", Seq("GET")) { req =>
+      val params = Option(req.ex.getRequestURI.getRawQuery).getOrElse("")
+        .split("&").filter(_.contains("=")).map { kv =>
+          val Array(k, v) = kv.split("=", 2)
+          k -> java.net.URLDecoder.decode(v, "UTF-8")
+        }.toMap
+      val name = params.getOrElse("datasource",
+        throw new IllegalArgumentException(
+          "candidates requires ?datasource=<name>"))
+      if (!servedTables.containsKey(name))
+        throw new IllegalArgumentException(s"no such datasource: $name")
+      // Joda-tolerant ISO-8601: Druid clients send any of
+      // 2024-01-02T00:00:00.000Z, ...+01:00 (non-UTC offset),
+      // zoneless local datetimes, and bare dates (2024-01-02).
+      // Instant.parse alone 400s on the last three valid forms.
+      def isoMsOf(s: String): Long = Iterator[String => Long](
+          java.time.OffsetDateTime.parse(_).toInstant.toEpochMilli,
+          java.time.LocalDateTime.parse(_).toInstant(ZoneOffset.UTC).toEpochMilli,
+          java.time.LocalDate.parse(_).atStartOfDay.toInstant(ZoneOffset.UTC)
+            .toEpochMilli)
+        .flatMap(parse =>
+          try Some(parse(s))
+          catch { case _: java.time.format.DateTimeParseException => None })
+        .nextOption().getOrElse(throw new IllegalArgumentException(
+          s"interval timestamp '$s' (ISO-8601 instant, " +
+            "offset/local datetime, or date)"))
+      val intervals: Seq[(Long, Long)] = params.get("intervals").toSeq
+        .flatMap(_.split(",")).filter(_.nonEmpty).map { s =>
+          s.split("/") match {
+            case Array(a, b) => (isoMsOf(a), isoMsOf(b))
+            case _ => throw new IllegalArgumentException(
+              s"interval '$s' (expected ISO start/end)")
           }
-        val intervals: Seq[(Long, Long)] = params.get("intervals").toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty).map { s =>
-            s.split("/") match {
-              case Array(a, b) => (isoMsOf(a), isoMsOf(b))
-              case _ => throw new IllegalArgumentException(
-                s"interval '$s' (expected ISO start/end)")
-            }
-          }
-        val a = mapper.createArrayNode()
-        segmentRootOf(name).toSeq
-          .flatMap(d => graft.sources.druid.SegmentCatalog.metaFor(d))
-          .filter(m => intervals.isEmpty ||
-            intervals.exists { case (lo, hi) => m.endMs > lo && m.startMs < hi })
-          .sortBy(m => (m.startMs, m.dir))
-          .zipWithIndex.foreach { case (m, i) =>
-            val o = a.addObject()
-            o.put("interval",
-              isoMs.format(java.time.Instant.ofEpochMilli(m.startMs)) + "/" +
-              isoMs.format(java.time.Instant.ofEpochMilli(m.endMs)))
-            o.put("version", new java.io.File(m.dir).getName)
-            o.put("partitionNumber", i)
-            o.put("size", m.rows.toLong)
-            val loc = o.putArray("locations").addObject()
-            val hostPort = s"localhost:${server.getAddress.getPort}"
-            loc.put("name", hostPort)
-            loc.put("host", hostPort)
-            loc.put("type", "historical")
-            loc.put("priority", 0)
-          }
-        (a.toString, "application/json")
-      })
+        }
+      val a = mapper.createArrayNode()
+      segmentRootOf(name).toSeq
+        .flatMap(d => graft.sources.druid.SegmentCatalog.metaFor(d))
+        .filter(m => intervals.isEmpty ||
+          intervals.exists { case (lo, hi) => m.endMs > lo && m.startMs < hi })
+        .sortBy(m => (m.startMs, m.dir))
+        .zipWithIndex.foreach { case (m, i) =>
+          val o = a.addObject()
+          o.put("interval", s"${isoAt(m.startMs)}/${isoAt(m.endMs)}")
+          o.put("version", new java.io.File(m.dir).getName)
+          o.put("partitionNumber", i)
+          o.put("size", m.rows.toLong)
+          val loc = o.putArray("locations").addObject()
+          val hostPort = s"localhost:${server.getAddress.getPort}"
+          loc.put("name", hostPort)
+          loc.put("host", hostPort)
+          loc.put("type", "historical")
+          loc.put("priority", 0)
+        }
+      Reply(a.toString)
+    }
 
-    def coordinatorHandler(base: String,
-                           allowDelete: Boolean): com.sun.net.httpserver.HttpHandler =
-      (ex: HttpExchange) =>
-        if (ex.getRequestMethod == "DELETE" && allowDelete)
-          coordinatorDelete(ex, ex.getRequestURI.getPath.stripPrefix(base)
-            .stripPrefix("/").split("/").toList.filter(_.nonEmpty))
-        else if (ex.getRequestMethod != "GET")
-          respond(ex, 405, """{"error":"supported methods: GET"}""")
-        else {
-          val rest = ex.getRequestURI.getPath.stripPrefix(base)
-            .stripPrefix("/")
-          if (rest.isEmpty) {
-            val a = mapper.createArrayNode()
-            servedTables.keySet().asScala.toSeq.sorted.foreach(a.add)
-            respond(ex, 200, a.toString)
-          } else {
-            val parts = rest.split("/").toList
-            val name = parts.head
+    def coordinatorRoute(base: String, methods: Seq[String]): Unit =
+      route(base, methods, CoordinatorError) { req =>
+        (req.method, req.segs) match {
+          case ("DELETE", _) => coordinatorDelete(req)
+          case (_, Nil) =>
+            Reply(jsonArray(servedTables.keySet().asScala.toSeq.sorted))
+          case (_, name :: _) if !servedTables.containsKey(name) =>
+            throw new HttpError(404, s"no such datasource: $name")
+          case (_, name :: sub) =>
             lazy val backed = ingestRoot.map(r => s"$r/$name")
               .filter(d => new java.io.File(d).isDirectory)
-            if (!servedTables.containsKey(name)) {
-              val o = mapper.createObjectNode()
-              o.put("error", s"no such datasource: $name")
-              respond(ex, 404, o.toString)
-            } else parts.tail match {
+            sub match {
               case Nil =>
                 val o = mapper.createObjectNode()
                 o.put("name", name)
@@ -1740,10 +1640,8 @@ object DruidServe {
                     seg.put("size", dirSize(d))
                     seg.put("rows", metas.map(_.rows.toLong).sum)
                     if (metas.nonEmpty) {
-                      seg.put("minTime", isoMs.format(
-                        java.time.Instant.ofEpochMilli(metas.map(_.startMs).min)))
-                      seg.put("maxTime", isoMs.format(
-                        java.time.Instant.ofEpochMilli(metas.map(_.endMs).max)))
+                      seg.put("minTime", isoAt(metas.map(_.startMs).min))
+                      seg.put("maxTime", isoAt(metas.map(_.endMs).max))
                     }
                   case None =>
                     // a served view with no segment directory (e.g. an
@@ -1752,33 +1650,22 @@ object DruidServe {
                     seg.put("size", 0L)
                     seg.put("rows", 0L)
                 }
-                respond(ex, 200, o.toString)
+                Reply(o.toString)
               case "intervals" :: Nil =>
                 // Druid's interval listing: distinct served intervals,
                 // descending, "lo/hi" ISO strings
-                val a = mapper.createArrayNode()
-                backed.toSeq
+                Reply(jsonArray(backed.toSeq
                   .flatMap(d => graft.sources.druid.SegmentCatalog.metaFor(d))
                   .map(m => (m.startMs, m.endMs)).distinct
                   .sortBy(-_._1)
-                  .foreach { case (lo, hi) =>
-                    a.add(isoMs.format(java.time.Instant.ofEpochMilli(lo)) +
-                      "/" + isoMs.format(java.time.Instant.ofEpochMilli(hi)))
-                  }
-                respond(ex, 200, a.toString)
-              case other =>
-                val o = mapper.createObjectNode()
-                o.put("error", s"unsupported sub-path '${other.mkString("/")}'")
-                respond(ex, 404, o.toString)
+                  .map { case (lo, hi) => s"${isoAt(lo)}/${isoAt(hi)}" }))
+              case other => throw new HttpError(404,
+                s"unsupported sub-path '${other.mkString("/")}'")
             }
-          }
         }
-    server.createContext("/druid/coordinator/v1/datasources",
-      coordinatorHandler("/druid/coordinator/v1/datasources",
-        allowDelete = true))
-    server.createContext("/druid/coordinator/v1/metadata/datasources",
-      coordinatorHandler("/druid/coordinator/v1/metadata/datasources",
-        allowDelete = false))
+      }
+    coordinatorRoute("/druid/coordinator/v1/datasources", Seq("GET", "DELETE"))
+    coordinatorRoute("/druid/coordinator/v1/metadata/datasources", Seq("GET"))
 
     // ---- coordinator retention rules (/druid/coordinator/v1/rules) ----
     // Druid's first-matching-rule-wins retention, applied through the
@@ -1791,37 +1678,32 @@ object DruidServe {
     // Rules persist under ingestRoot/.rules.json (atomic write,
     // reloaded at startup) and apply immediately on POST plus on every
     // auto-compact tick — this process IS the coordinator.
-    val retentionRules = new java.util.concurrent.ConcurrentHashMap[
-      String, com.fasterxml.jackson.databind.node.ArrayNode]()
+    val retentionRules =
+      new java.util.concurrent.ConcurrentHashMap[String, ArrayNode]()
     val rulesFile = ingestRoot.map(r => java.nio.file.Paths.get(r, ".rules.json"))
     rulesFile.filter(java.nio.file.Files.isRegularFile(_)).foreach { f =>
       try {
         val n = mapper.readTree(java.nio.file.Files.readAllBytes(f))
         n.properties().forEach { e =>
           e.getValue match {
-            case a: com.fasterxml.jackson.databind.node.ArrayNode =>
-              retentionRules.put(e.getKey, a)
-            case _ => ()
+            case a: ArrayNode => retentionRules.put(e.getKey, a)
+            case _            => ()
           }
         }
       } catch {
-        case e: VirtualMachineError => throw e
         case scala.util.control.NonFatal(e) => System.err.println(
           s"[druid-serve] SKIPPING rules file ${f.getFileName}: ${e.getMessage}")
       }
     }
+    def rulesJson(): ObjectNode = {
+      val o = mapper.createObjectNode()
+      retentionRules.entrySet().asScala.toSeq.sortBy(_.getKey)
+        .foreach(e => o.set[ObjectNode](e.getKey, e.getValue))
+      o
+    }
     def persistRules(): Unit = rulesFile.foreach { f =>
-      try {
-        val o = mapper.createObjectNode()
-        retentionRules.entrySet().asScala.toSeq.sortBy(_.getKey)
-          .foreach(e => o.set[ObjectNode](e.getKey, e.getValue))
-        val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-        java.nio.file.Files.write(tmp, mapper.writeValueAsBytes(o))
-        java.nio.file.Files.move(tmp, f,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } catch {
-        case e: VirtualMachineError => throw e
+      try writeAtomically(f, rulesJson())
+      catch {
         case scala.util.control.NonFatal(e) => System.err.println(
           s"[druid-serve] rules persist failed: ${e.getMessage}")
       }
@@ -1853,7 +1735,7 @@ object DruidServe {
     val knownRuleTypes = Set("loadForever", "loadByPeriod", "loadByInterval",
       "dropForever", "dropBeforeByPeriod", "dropByInterval")
     /** Throws IAE on anything a later apply pass could choke on. */
-    def validateRules(a: com.fasterxml.jackson.databind.JsonNode): Unit = {
+    def validateRules(a: JsonNode): Unit = {
       require(a.isArray, "rules payload must be a JSON array")
       a.elements().asScala.foreach { r =>
         val t = r.path("type").asText("")
@@ -1870,8 +1752,7 @@ object DruidServe {
     /** First matching rule wins: Some(keep?) or None (no rule matched
       * -> kept, Druid's no-rule default on a single-tier setup).
       */
-    def ruleDecision(rules: com.fasterxml.jackson.databind.node.ArrayNode,
-                     m: graft.sources.druid.SegMeta,
+    def ruleDecision(rules: ArrayNode, m: graft.sources.druid.SegMeta,
                      nowMs: Long): Boolean = {
       val it = rules.elements()
       while (it.hasNext) {
@@ -1928,48 +1809,29 @@ object DruidServe {
           new java.io.File(s"$r/$n").isDirectory)).foreach { n =>
           try applyRulesTo(n)
           catch {
-            case e: VirtualMachineError => throw e
             case scala.util.control.NonFatal(e) => System.err.println(
               s"[druid-serve] retention rules $n failed: ${e.getMessage}")
           }
         }
-    server.createContext("/druid/coordinator/v1/rules", (ex: HttpExchange) => {
-      val rest = ex.getRequestURI.getPath
-        .stripPrefix("/druid/coordinator/v1/rules").stripPrefix("/")
-      try ex.getRequestMethod match {
-        case "GET" if rest.isEmpty =>
-          val o = mapper.createObjectNode()
-          retentionRules.entrySet().asScala.toSeq.sortBy(_.getKey)
-            .foreach(e => o.set[ObjectNode](e.getKey, e.getValue))
-          respond(ex, 200, o.toString)
-        case "GET" =>
-          val a = Option(retentionRules.get(rest))
-            .getOrElse(mapper.createArrayNode())
-          respond(ex, 200, a.toString)
-        case "POST" if rest.nonEmpty =>
-          if (ingestRoot.isEmpty)
-            respond(ex, 400,
-              """{"error":"this broker is read-only: retention rules are disabled"}""")
-          else {
-            val body = mapper.readTree(
-              new String(ex.getRequestBody.readAllBytes(), UTF_8))
-            validateRules(body)
-            retentionRules.put(rest,
-              body.asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode])
-            persistRules()
-            if (rest == "_default") applyAllRules() else applyRulesTo(rest)
-            respond(ex, 200, "{}")
-          }
-        case _ =>
-          respond(ex, 405, """{"error":"supported methods: GET, POST"}""")
-      } catch {
-        case e: VirtualMachineError => throw e
-        case e: Throwable =>
-          val o = mapper.createObjectNode()
-          o.put("error", String.valueOf(e.getMessage))
-          respond(ex, 400, o.toString)
+    route("/druid/coordinator/v1/rules", Seq("GET", "POST"),
+        CoordinatorError) { req =>
+      (req.method, req.segs.mkString("/")) match {
+        case ("GET", "") => Reply(rulesJson().toString)
+        case ("GET", name) =>
+          Reply(Option(retentionRules.get(name))
+            .getOrElse(mapper.createArrayNode()).toString)
+        case (_, "") => throw notAllowed(Seq("GET", "POST"))
+        case (_, name) =>
+          if (ingestRoot.isEmpty) throw new IllegalArgumentException(
+            "this broker is read-only: retention rules are disabled")
+          val rules = mapper.readTree(req.body)
+          validateRules(rules)
+          retentionRules.put(name, rules.asInstanceOf[ArrayNode])
+          persistRules()
+          if (name == "_default") applyAllRules() else applyRulesTo(name)
+          Reply("{}")
       }
-    })
+    }
     // ---- auto-compaction (a coordinator duty): periodically merge the
     // undersized segments of every segment-backed table under the
     // ingest root. The catalog's pending-swap marker + atomic manifest
@@ -2011,85 +1873,73 @@ object DruidServe {
         }, period, period, java.util.concurrent.TimeUnit.SECONDS)
       }
     }
-    server.createContext("/druid/v1/lookups/introspect", (ex: HttpExchange) =>
-      handled(ex, methods = Set("GET")) { _ =>
-        val rest = ex.getRequestURI.getPath
-          .stripPrefix("/druid/v1/lookups/introspect").stripPrefix("/")
-        rest.split("/").toList match {
-          case name :: tail if name.nonEmpty =>
-            val m = graft.sql.DruidLookups.get(name).getOrElse(
-              throw new NoSuchElementException(s"lookup '$name' is not registered"))
-            val json = tail match {
-              case Nil =>
-                val o = mapper.createObjectNode()
-                m.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
-                o.toString
-              case "keys" :: Nil =>
-                val a = mapper.createArrayNode()
-                m.keys.toSeq.sorted.foreach(a.add)
-                a.toString
-              case "values" :: Nil =>
-                val a = mapper.createArrayNode()
-                m.toSeq.sortBy(_._1).foreach { case (_, v) => a.add(v) }
-                a.toString
-              case other =>
-                throw new IllegalArgumentException(
-                  s"introspect sub-path '${other.mkString("/")}' (use keys|values)")
-            }
-            (json, "application/json")
-          case _ =>
-            throw new IllegalArgumentException(
-              "introspect needs /druid/v1/lookups/introspect/{name}")
-        }
-      })
-    server.createContext("/druid/coordinator/v1/lookups/config", (ex: HttpExchange) =>
-      handled(ex, methods = Set("GET", "POST", "DELETE")) { body =>
-        val rest = ex.getRequestURI.getPath
-          .stripPrefix("/druid/coordinator/v1/lookups/config").stripPrefix("/")
-        (ex.getRequestMethod, rest.split("/").filter(_.nonEmpty).toList) match {
-          case ("GET", Nil) =>
-            // tier -> [names]; this broker models a single tier
-            val o = mapper.createObjectNode()
-            val a = o.putArray("__default")
-            graft.sql.DruidLookups.names.sorted.foreach(a.add)
-            (o.toString, "application/json")
-          case ("GET", _ :: name :: Nil) =>
-            val m = graft.sql.DruidLookups.get(name).getOrElse(
-              throw new NoSuchElementException(s"lookup '$name' is not registered"))
-            val spec = mapper.createObjectNode()
-            val fac = spec.putObject("lookupExtractorFactory")
-            fac.put("type", "map")
-            val mo = fac.putObject("map")
-            m.toSeq.sortBy(_._1).foreach { case (k, v) => mo.put(k, v) }
-            (spec.toString, "application/json")
-          case ("POST", _ :: name :: Nil) =>
-            val spec = mapper.readTree(body)
-            val fac = spec.path("lookupExtractorFactory")
-            if (fac.path("type").asText() != "map")
+    route("/druid/v1/lookups/introspect", Seq("GET")) { req =>
+      req.segs match {
+        case name :: tail =>
+          val m = graft.sql.DruidLookups.get(name).getOrElse(
+            throw new NoSuchElementException(s"lookup '$name' is not registered"))
+          val json = tail match {
+            case Nil =>
+              val o = mapper.createObjectNode()
+              m.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
+              o.toString
+            case "keys" :: Nil   => jsonArray(m.keys.toSeq.sorted)
+            case "values" :: Nil => jsonArray(m.toSeq.sortBy(_._1).map(_._2))
+            case other =>
               throw new IllegalArgumentException(
-                s"lookupExtractorFactory type '${fac.path("type").asText()}' (only 'map')")
-            val entries = fac.path("map")
-            if (!entries.isObject)
-              throw new IllegalArgumentException("lookupExtractorFactory.map must be an object")
-            val m = entries.fields().asScala.map { e =>
-              if (!e.getValue.isTextual)
-                throw new IllegalArgumentException(
-                  s"lookup value for key '${e.getKey}' must be a string, " +
-                    s"got ${e.getValue.getNodeType}")
-              e.getKey -> e.getValue.asText()
-            }.toMap
-            graft.sql.DruidLookups.register(name, m)
-            ("""{"status":"accepted"}""", "application/json")
-          case ("DELETE", _ :: name :: Nil) =>
-            if (graft.sql.DruidLookups.get(name).isEmpty)
-              throw new NoSuchElementException(s"lookup '$name' is not registered")
-            graft.sql.DruidLookups.unregister(name)
-            ("""{"status":"deleted"}""", "application/json")
-          case (m, p) =>
+                s"introspect sub-path '${other.mkString("/")}' (use keys|values)")
+          }
+          Reply(json)
+        case Nil =>
+          throw new IllegalArgumentException(
+            "introspect needs /druid/v1/lookups/introspect/{name}")
+      }
+    }
+    route("/druid/coordinator/v1/lookups/config", Seq("GET", "POST", "DELETE")) { req =>
+      (req.method, req.segs) match {
+        case ("GET", Nil) =>
+          // tier -> [names]; this broker models a single tier
+          val o = mapper.createObjectNode()
+          val a = o.putArray("__default")
+          graft.sql.DruidLookups.names.sorted.foreach(a.add)
+          Reply(o.toString)
+        case ("GET", _ :: name :: Nil) =>
+          val m = graft.sql.DruidLookups.get(name).getOrElse(
+            throw new NoSuchElementException(s"lookup '$name' is not registered"))
+          val spec = mapper.createObjectNode()
+          val fac = spec.putObject("lookupExtractorFactory")
+          fac.put("type", "map")
+          val mo = fac.putObject("map")
+          m.toSeq.sortBy(_._1).foreach { case (k, v) => mo.put(k, v) }
+          Reply(spec.toString)
+        case ("POST", _ :: name :: Nil) =>
+          val spec = mapper.readTree(req.body)
+          val fac = spec.path("lookupExtractorFactory")
+          if (fac.path("type").asText() != "map")
             throw new IllegalArgumentException(
-              s"$m on lookups/config/${p.mkString("/")} (use {tier}/{name})")
-        }
-      })
+              s"lookupExtractorFactory type '${fac.path("type").asText()}' (only 'map')")
+          val entries = fac.path("map")
+          if (!entries.isObject)
+            throw new IllegalArgumentException("lookupExtractorFactory.map must be an object")
+          val m = entries.fields().asScala.map { e =>
+            if (!e.getValue.isTextual)
+              throw new IllegalArgumentException(
+                s"lookup value for key '${e.getKey}' must be a string, " +
+                  s"got ${e.getValue.getNodeType}")
+            e.getKey -> e.getValue.asText()
+          }.toMap
+          graft.sql.DruidLookups.register(name, m)
+          Reply("""{"status":"accepted"}""")
+        case ("DELETE", _ :: name :: Nil) =>
+          if (graft.sql.DruidLookups.get(name).isEmpty)
+            throw new NoSuchElementException(s"lookup '$name' is not registered")
+          graft.sql.DruidLookups.unregister(name)
+          Reply("""{"status":"deleted"}""")
+        case (m, p) =>
+          throw new IllegalArgumentException(
+            s"$m on lookups/config/${p.mkString("/")} (use {tier}/{name})")
+      }
+    }
     server.start()
     server
   }
@@ -2181,20 +2031,64 @@ object DruidServe {
     * finished); we do the same, and the cancelled request itself
     * answers the QueryInterruptedException envelope.
     */
-  private def respondCancel(ex: HttpExchange, qid: String): Unit = {
+  private def cancelReply(qid: String): Reply = {
     cancelQuery(qid)
     // the id comes off the URL — serialize through jackson, never
     // string-splice untrusted text into a JSON literal
-    val o = mapper.createObjectNode()
-    o.put("cancelled", qid)
-    respond(ex, 202, o.toString)
+    Reply(mapper.createObjectNode().put("cancelled", qid).toString,
+      status = 202)
   }
 
-  private def respond(ex: HttpExchange, code: Int, body: String,
-                      contentType: String = "application/json"): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", contentType)
-    ex.sendResponseHeaders(code, bytes.length)
+  /** Root directory of every segment-backed relation in `df`'s plan. */
+  private def druidRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          if r.table.isInstanceOf[graft.sources.druid.DruidTable] =>
+        r.table.asInstanceOf[graft.sources.druid.DruidTable].rootDir
+    }.distinct
+
+  /** A served frame's columns as a broker reports them: strings and
+    * arrays are dimensions, the rest (bar `__time`) metrics.
+    */
+  private def dimensionsAndMetrics(df: DataFrame): (Seq[String], Seq[String]) = {
+    val (dims, mets) = df.schema.fields.toSeq.filterNot(_.name == "__time")
+      .partition(_.dataType match {
+        case StringType | ArrayType(_, _) => true
+        case _                            => false
+      })
+    (dims.map(_.name), mets.map(_.name))
+  }
+
+  /** Write `o` to `f` through a sibling temp file and an atomic move,
+    * so a reader never sees a partial file.
+    */
+  private def writeAtomically(f: java.nio.file.Path, o: JsonNode): Unit = {
+    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
+    java.nio.file.Files.write(tmp, mapper.writeValueAsBytes(o))
+    java.nio.file.Files.move(tmp, f,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def jsonArray(xs: Iterable[String]): String = {
+    val a = mapper.createArrayNode()
+    xs.foreach(a.add)
+    a.toString
+  }
+
+  /** Bytes under `d` (0 when it does not exist). */
+  private def dirSize(d: String): Long = {
+    val f = new java.io.File(d)
+    if (!f.exists()) 0L
+    else if (f.isFile) f.length()
+    else Option(f.listFiles()).getOrElse(Array.empty)
+      .map(c => dirSize(c.getPath)).sum
+  }
+
+  private def respond(ex: HttpExchange, r: Reply): Unit = {
+    val bytes = r.body.getBytes(UTF_8)
+    ex.getResponseHeaders.set("Content-Type", r.contentType)
+    ex.sendResponseHeaders(r.status, bytes.length)
     try ex.getResponseBody.write(bytes) finally ex.close()
   }
 
@@ -2205,8 +2099,7 @@ object DruidServe {
     * or SELECT * from materializing a table on the driver.
     */
   private def cappedRows(df: DataFrame, cap: Int,
-                         counted: java.util.concurrent.atomic.AtomicLong)
-      : Iterator[Row] = {
+                         counted: AtomicLong): Iterator[Row] = {
     var n = 0
     df.toLocalIterator.asScala.map { r =>
       checkControl() // cancel/deadline between partition jobs
@@ -2219,10 +2112,8 @@ object DruidServe {
     }
   }
 
-  private def envelope(q: com.fasterxml.jackson.databind.JsonNode,
-                       df: DataFrame, maxResultRows: Int,
-                       counted: java.util.concurrent.atomic.AtomicLong)
-      : String = {
+  private def envelope(q: JsonNode, df: DataFrame, maxResultRows: Int,
+                       counted: AtomicLong): String = {
     val queryType = q.path("queryType").asText()
     val schema = df.schema
     val timeIdx = schema.fieldNames.indexOf("__time")
@@ -2356,11 +2247,10 @@ object DruidServe {
     * type: an unparseable value fails loudly (400) like Druid, never
     * silently binds a zero.
     */
-  private def parameterValues(
-      params: com.fasterxml.jackson.databind.JsonNode): Array[Any] = {
+  private def parameterValues(params: JsonNode): Array[Any] = {
     if (params.isMissingNode || params.isNull || !params.elements().hasNext)
       return Array.empty
-    def bad(what: String, v: com.fasterxml.jackson.databind.JsonNode) =
+    def bad(what: String, v: JsonNode) =
       throw new IllegalArgumentException(s"parameter value $v is not a $what")
     params.elements().asScala.map { p =>
       val v = p.path("value")
@@ -2616,9 +2506,9 @@ object DruidServe {
                                      val ingest: Option[IngestSpec] = None) {
     @volatile var state: String = "ACCEPTED"
     @volatile var durationMs: Long = -1L
-    @volatile var schemaJson: Option[com.fasterxml.jackson.databind.node.ArrayNode] = None
+    @volatile var schemaJson: Option[ArrayNode] = None
     /** (page row nodes, serialized byte size) per page. */
-    @volatile var pages: Vector[(com.fasterxml.jackson.databind.node.ArrayNode, Long)] = Vector.empty
+    @volatile var pages: Vector[(ArrayNode, Long)] = Vector.empty
     @volatile var numTotalRows: Long = 0L
     @volatile var dataSource: String = "__query_select"
     @volatile var error: Option[Throwable] = None
@@ -2634,12 +2524,12 @@ object DruidServe {
     */
   private def pagedRows(df: DataFrame, arrayRows: Boolean, pageRows: Int,
                         maxResultRows: Int, tsFmt: DateTimeFormatter)
-      : (Vector[(com.fasterxml.jackson.databind.node.ArrayNode, Long)], Long) = {
+      : (Vector[(ArrayNode, Long)], Long) = {
     val schema = df.schema
     val names = schema.fieldNames
-    val counted = new java.util.concurrent.atomic.AtomicLong()
+    val counted = new AtomicLong()
     val rows = cappedRows(df, maxResultRows, counted)
-    val pages = Vector.newBuilder[(com.fasterxml.jackson.databind.node.ArrayNode, Long)]
+    val pages = Vector.newBuilder[(ArrayNode, Long)]
     var cur = mapper.createArrayNode()
     var total = 0L
     def flush(): Unit = if (cur.size() > 0) {
@@ -2659,15 +2549,13 @@ object DruidServe {
   }
 
   /** The SQL endpoint's response in one of Druid's resultFormat
-    * variants; returns (payload, contentType). `tsFmt` renders
-    * timestamps in the request's sqlTimeZone (UTC by default).
+    * variants. `tsFmt` renders timestamps in the request's
+    * sqlTimeZone (UTC by default).
     */
   private def sqlResponse(df: DataFrame, fmt: String, header: Boolean,
                           typesHeader: Boolean, sqlTypesHeader: Boolean,
-                          maxResultRows: Int,
-                          tsFmt: DateTimeFormatter,
-                          counted: java.util.concurrent.atomic.AtomicLong)
-      : (String, String) = {
+                          maxResultRows: Int, tsFmt: DateTimeFormatter,
+                          counted: AtomicLong): Reply = {
     val schema = df.schema
     val names = schema.fieldNames
     def rowObject(r: Row): ObjectNode = {
@@ -2704,7 +2592,7 @@ object DruidServe {
             names.foreach(n => a.add(one.get(n)))
           } else out.add(rowObject(r))
         }
-        (out.toString, "application/json")
+        Reply(out.toString)
       case "objectLines" | "arrayLines" =>
         val sb = new StringBuilder
         if (header) {
@@ -2725,7 +2613,7 @@ object DruidServe {
           }
         }
         rows.foreach { r =>
-          val node: com.fasterxml.jackson.databind.JsonNode =
+          val node: JsonNode =
             if (fmt == "arrayLines") {
               val one = rowObject(r)
               val a = mapper.createArrayNode()
@@ -2735,9 +2623,9 @@ object DruidServe {
           sb.append(node.toString).append('\n')
         }
         sb.append('\n') // Druid terminates line formats with a blank line
-        (sb.toString, "text/plain")
+        Reply(sb.toString, "text/plain")
       case "csv" =>
-        def cell(n: com.fasterxml.jackson.databind.JsonNode): String = {
+        def cell(n: JsonNode): String = {
           val s =
             if (n == null || n.isNull) ""
             else if (n.isTextual) n.asText()
@@ -2758,7 +2646,7 @@ object DruidServe {
           sb.append(names.map(n => cell(one.get(n))).mkString(",")).append('\n')
         }
         sb.append('\n')
-        (sb.toString, "text/csv")
+        Reply(sb.toString, "text/csv")
       case other =>
         throw new IllegalArgumentException(
           s"resultFormat '$other' (supported: object, array, objectLines, arrayLines, csv)")
@@ -2771,7 +2659,7 @@ object DruidServe {
     * base64, narrow numerics as numbers).
     */
   private def jsonValueOf(dt: DataType, v: Any,
-                          tsFmt: DateTimeFormatter): com.fasterxml.jackson.databind.JsonNode = {
+                          tsFmt: DateTimeFormatter): JsonNode = {
     val nf = mapper.getNodeFactory
     if (v == null) return nf.nullNode()
     dt match {

@@ -358,14 +358,14 @@ object NativeQuery {
   /** One Druid filter node → one Catalyst predicate. Kept total over
     * the documented surface; everything else fails loudly.
     */
-  def compileFilter(f: JsonNode): Column = compileFilter(f, Set.empty)
+  private def compileFilter(f: JsonNode): Column = compileFilter(f, Set.empty)
 
   /** `mvCols` = multi-value (array&lt;string&gt;) dimensions of the
     * queried datasource: Druid's selector/in semantics on an MV dim
     * are CONTAINS (a row matches when ANY of its values matches), so
     * those two filters compile to array_contains instead of equality.
     */
-  def compileFilter(f: JsonNode, mvCols: Set[String]): Column = {
+  private def compileFilter(f: JsonNode, mvCols: Set[String]): Column = {
     // dimension filters may carry an extractionFn (older dashboards
     // send these constantly): the filter compares the TRANSFORMED value
     def dim(f: JsonNode): Column = {

@@ -83,8 +83,6 @@ class DsThetaUnionAgg extends BlobFoldAgg {
 }
 
 object DsThetaFunctions {
-  def thetaFromVals(c: Column): Column =
-    functions.udf((vs: Seq[Long]) => DsTheta.fromValues(vs)).apply(c)
   def thetaUnion(c: Column): Column = functions.udaf(new DsThetaUnionAgg).apply(c)
   def thetaEstimate(c: Column): Column =
     functions.udf((b: Array[Byte]) => if (b == null) 0L else DsTheta.estimate(b)).apply(c)

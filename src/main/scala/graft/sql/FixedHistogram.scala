@@ -130,9 +130,6 @@ object HistFunctions {
     functions.udaf(new HistBuildAgg(n, lo, hi)).apply(c)
   def histMerge(c: Column, n: Int, lo: Double, hi: Double): Column =
     functions.udaf(new HistMergeAgg(n, lo, hi)).apply(c)
-  def histQuantile(c: Column, phi: Double): Column =
-    functions.udf((b: Array[Byte]) =>
-      if (b == null) Double.NaN else FixedHistogram.quantile(b, phi)).apply(c)
 
   /** All bucket counts incl. oob: [lowerOob, c0..c(n-1), upperOob] —
     * index i-1 is bucket i's count, so `posexplode` gives (bucket+1).

@@ -71,10 +71,10 @@ class BrokerEnvelopeSpec extends AnyFunSuite {
   }
 
   private def request(port: Int, method: String, path: String,
-                      body: String = ""): HttpRequest = {
+                      body: String = "", timeoutS: Long = 30): HttpRequest = {
     val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
       .header("Content-Type", "application/json")
-      .timeout(Duration.ofSeconds(30))
+      .timeout(Duration.ofSeconds(timeoutS))
     (method match {
       case "GET"    => b.GET()
       case "DELETE" => b.DELETE()
@@ -280,6 +280,43 @@ class BrokerEnvelopeSpec extends AnyFunSuite {
       val page = send(port, "GET",
         "/druid/v2/sql/statements/env-stmt-slow/results?page=7")
       assert(page.status == 400 && page.fieldNames == statementShape, page.body)
+    }
+  }
+
+  test("a VirtualMachineError on the sync SQL path answers 500, then propagates") {
+    val seen = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((_, e) =>
+      if (e.isInstanceOf[VirtualMachineError] &&
+          String.valueOf(e.getMessage).contains("synthetic")) seen.set(e))
+    // a function whose BUILDER throws: analysis runs on the request's
+    // pool thread. Registered before the broker starts, so its SQL
+    // session copies it from the parent session.
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_test_sync_vme",
+      _ => throw new OutOfMemoryError("synthetic sync VME"), "scala_udf")
+    try withBroker { port =>
+      val r = client.send(request(port, "POST", "/druid/v2/sql",
+          """{"query": "SELECT graft_test_sync_vme() AS x FROM events",
+              "context": {"sqlQueryId": "env-vme"}}""", timeoutS = 10),
+        HttpResponse.BodyHandlers.ofString())
+      val a = Answer(r.statusCode(), r.body(), r.headers())
+      assert(a.status == 500, a.body)
+      assert(a.fieldNames == queryShape, a.body)
+      assert(mapper.readTree(a.body).path("errorClass").asText() ==
+        "java.lang.OutOfMemoryError", a.body)
+      assert(a.header("X-Druid-Query-Id").contains("env-vme"))
+      // the error is answered, not swallowed: it still leaves the
+      // request thread for the uncaught handler
+      val deadline = System.nanoTime() + 10000000000L
+      while (seen.get() == null && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.get() != null, "VMError was swallowed by the request path")
+      assert(send(port, "GET", "/status").status == 200)
+    } finally {
+      Thread.setDefaultUncaughtExceptionHandler(prev)
+      spark.sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_test_sync_vme"))
     }
   }
 }
