@@ -111,8 +111,8 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Settings.SfDir.get
+    val cpus = Settings.Cpus.get.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -144,7 +144,7 @@ object Bench {
       }
     // local-iteration filter (unset in driver runs → all queries,
     // all staging, 3 passes)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = Settings.Only.get
     // needed(prefixes) = some selected query needs this staged input;
     // with no filter, everything stages (the driver's invocation)
     def needed(prefixes: String*): Boolean =
@@ -210,7 +210,7 @@ object Bench {
                 planHashes(name) = planHash(df)
                 // diagnostic: dump the canonical TEXT too, so a hash that
                 // moves between runs can be diffed to its exact token
-                sys.env.get("SPARK_GRAFT_PLAN_TEXT_DIR").foreach { d =>
+                Settings.PlanTextDir.get.foreach { d =>
                   java.nio.file.Files.createDirectories(
                     java.nio.file.Paths.get(d))
                   java.nio.file.Files.writeString(
@@ -236,8 +236,7 @@ object Bench {
     // pass count: 3 (min-of-3, the driver's steady-state policy) unless
     // a local probe asks for fewer (SPARK_GRAFT_PASSES=1 for scale
     // spot-checks where wall-clock dominates and min-of-N is overkill)
-    val nPasses = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt)
+    val nPasses = Settings.Passes.get
     val allPasses = (1 to nPasses).map { i =>
       calibs += calibrate(spark)
       val p = pass(capturePlans = i == nPasses)
@@ -275,7 +274,7 @@ object Bench {
     val plansJson = planHashes.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val plansDigest = sha16(plansJson)
-    val planFile = sys.env.getOrElse("SPARK_GRAFT_PLAN_FILE", "BENCH_PLANS.json")
+    val planFile = Settings.PlanFile.get
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(planFile),
       s"""{"sf":${jstr(sfDir)},"calib":$calibJson,"calib_warm":$calib0,"plans_digest":${jstr(plansDigest)},"plans":$plansJson}""" + "\n")
     catch { case e: Throwable =>
@@ -286,7 +285,7 @@ object Bench {
     // emptied the round-over-round PERF comparison (n_common: 0). The
     // committed file makes the per-query map recoverable regardless of
     // how the stdout tail gets cut.
-    val benchFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_FULL.json")
+    val benchFile = Settings.BenchFile.get
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(benchFile), fullJson + "\n")
     catch { case e: Throwable =>

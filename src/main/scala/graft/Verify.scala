@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Settings.Cpus.get.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -23,8 +23,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY=q1,dr39 runs a subset.
     // Unset (the driver's invocation) runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Settings.Only.get
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter(kv => names.contains(kv._1)))
     // Failures must be LOUD: a swallowed exception makes the broken

@@ -14,6 +14,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Settings
+
 /** `druid-tool serve` — a minimal HTTP endpoint speaking Druid's
   * native-query WIRE PROTOCOL (`POST /druid/v2`, the broker endpoint
   * every Druid client library and dashboard targets; the reference is
@@ -1947,43 +1949,16 @@ object DruidServe {
   /** `druid-tool`-style entry: serve every segment table under `root`
     * (dataSource name = subdirectory name).
     */
-  def main(args: Array[String]): Unit = args.toList match {
+  def main(args: Array[String]): Unit = Settings.exitOnBadSetting(run(args))
+
+  /** [[main]] without the exit: a bad or unknown flag throws
+    * [[Settings.BadSetting]] naming it, before anything starts.
+    */
+  def run(args: Array[String]): Unit = args.toList match {
     case root :: rest =>
-      var port = 8082
-      var host = "127.0.0.1"
-      var maxRows = 100000
-      var threads = 8
-      var logQueries = false
-      var stmtPageRows = 100000
-      var noIngest = false
-      var autoCompact: Option[Long] = None
-      var compactRows = 5000000L
-      var jdbcPort: Option[Int] = None
-      def parse(opts: List[String]): Unit = opts match {
-        case "--port" :: p :: t     => port = p.toInt; parse(t)
-        case "--host" :: h :: t     => host = h; parse(t)
-        case "--max-rows" :: n :: t => maxRows = n.toInt; parse(t)
-        case "--threads" :: n :: t  => threads = n.toInt; parse(t)
-        case "--log-queries" :: t   => logQueries = true; parse(t)
-        case "--statement-page-rows" :: n :: t =>
-          stmtPageRows = n.toInt; parse(t)
-        case "--no-ingest" :: t => noIngest = true; parse(t)
-        case "--auto-compact" :: n :: t =>
-          autoCompact = Some(n.toLong); parse(t)
-        case "--compact-target-rows" :: n :: t =>
-          compactRows = n.toLong; parse(t)
-        case "--jdbc-port" :: n :: t => jdbcPort = Some(n.toInt); parse(t)
-        case Nil                    =>
-        case other => sys.error(s"unknown args: $other")
-      }
-      parse(rest)
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-        .appName("druid-serve")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val flags = Settings.flags("serve", rest)
+      val host = flags(Settings.ServeHost)
+      val spark = DruidTool.session("druid-serve")
       spark.sparkContext.setLogLevel("WARN")
       val tables = Option(new java.io.File(root).listFiles())
         .getOrElse(Array.empty).filter(_.isDirectory)
@@ -1996,11 +1971,14 @@ object DruidServe {
       val server = start(spark,
         name => tables.getOrElse(name, throw new IllegalArgumentException(
           s"unknown dataSource '$name' (tables: ${tables.keys.toSeq.sorted.mkString(", ")})")),
-        port, sqlTables = tables, host = host, maxResultRows = maxRows,
-        threads = threads, logQueries = logQueries,
-        statementPageRows = stmtPageRows,
-        ingestRoot = if (noIngest) None else Some(root),
-        autoCompactSeconds = autoCompact, compactTargetRows = compactRows,
+        flags(Settings.ServePort), sqlTables = tables, host = host,
+        maxResultRows = flags(Settings.ServeMaxRows),
+        threads = flags(Settings.ServeThreads),
+        logQueries = flags(Settings.ServeLogQueries),
+        statementPageRows = flags(Settings.ServeStatementPageRows),
+        ingestRoot = if (flags(Settings.ServeNoIngest)) None else Some(root),
+        autoCompactSeconds = flags(Settings.ServeAutoCompact),
+        compactTargetRows = flags(Settings.ServeCompactTargetRows),
         sysSchema = true)
       if (host != "127.0.0.1" && host != "localhost")
         System.err.println(
@@ -2009,20 +1987,19 @@ object DruidServe {
             "expose beyond loopback on a trusted network")
       println(s"druid-serve listening on $host:${server.getAddress.getPort} " +
         s"(POST /druid/v2 native, /druid/v2/sql, /druid/v2/sql/statements), tables under $root")
-      jdbcPort.foreach { jp =>
+      flags(Settings.ServeJdbcPort).foreach { jp =>
         val bound = JdbcEndpoint.start(spark, tables, port = jp, host = host)
         println(s"thrift JDBC endpoint on $host:$bound " +
           s"(jdbc:hive2://$host:$bound/)")
       }
       Thread.currentThread().join()
     case Nil =>
-      System.err.println(
+      throw new Settings.BadSetting(
         "usage: druid-serve <tablesRoot> [--port N] [--host H] " +
           "[--max-rows N] [--threads N] [--log-queries] " +
           "[--statement-page-rows N] [--no-ingest] " +
           "[--auto-compact SECONDS] [--compact-target-rows N] " +
           "[--jdbc-port N]")
-      sys.exit(2)
   }
 
   /** DELETE /druid/v2[/sql]/{id}: cancel a running query. Druid

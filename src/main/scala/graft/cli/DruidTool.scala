@@ -6,6 +6,7 @@ import java.time.ZoneOffset
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Settings
 import graft.format.DruidSegment
 
 /** CLI mirroring the reference's four subcommands
@@ -24,26 +25,33 @@ object DruidTool {
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
       .withZone(ZoneOffset.UTC).format(Instant.ofEpochMilli(ms))
 
+  /** The CLIs' local session (`getOrCreate`: a live one is reused). */
+  private[cli] def session(app: String): SparkSession = SparkSession.builder()
+    .master(Settings.SparkMaster.get).appName(app)
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
   /** Run `f` with a SparkSession; stops it only if this call created it
     * (embedding callers — tests, notebooks — keep their session alive).
     */
   private def withSpark[T](f: SparkSession => T): T = {
     val existing = SparkSession.getDefaultSession.filterNot(_.sparkContext.isStopped)
     val s = existing.getOrElse {
-      val created = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-        .appName("druid-tool")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val created = session("druid-tool")
       created.sparkContext.setLogLevel("ERROR")
       created
     }
     try f(s) finally if (existing.isEmpty) s.stop()
   }
 
-  def main(args: Array[String]): Unit = args.toList match {
+  def main(args: Array[String]): Unit = Settings.exitOnBadSetting(run(args))
+
+  /** [[main]] without the exit: a bad usage or flag throws
+    * [[Settings.BadSetting]] naming it, before any work starts.
+    */
+  def run(args: Array[String]): Unit = args.toList match {
     case "info" :: dir :: Nil => info(dir)
     case "files" :: dir :: Nil => files(dir)
     case "dump" :: dir :: rest => dump(dir, rest)
@@ -51,17 +59,15 @@ object DruidTool {
     case "compact" :: dir :: rest => compact(dir, rest)
     case "search" :: dir :: needle :: rest => search(dir, needle, rest)
     case "validate" :: dir :: Nil => validate(dir)
-    case "retain" :: dir :: "--keep-after" :: cutoff :: Nil =>
-      val ms = cutoff.toLongOption.getOrElse(
-        java.time.Instant.parse(cutoff).toEpochMilli)
+    case "retain" :: dir :: rest =>
+      val ms = Settings.flags("retain", rest)(Settings.RetainKeepAfter)
+        .getOrElse(throw new Settings.BadSetting("retain needs --keep-after"))
       val st = graft.write.Retention.dropOlderThan(dir, ms)
       println(s"dropped ${st.segmentsDropped} segments " +
         s"(${st.rowsDropped} rows), kept ${st.segmentsKept}")
-    case "serve" :: rest => DruidServe.main(rest.toArray)
-    case _ =>
-      System.err.println(
-        "usage: druid-tool (info|files|dump|query|compact|search|validate|retain|serve) <segmentDir> [args]")
-      sys.exit(2)
+    case "serve" :: rest => DruidServe.run(rest.toArray)
+    case _ => throw new Settings.BadSetting(
+      "usage: druid-tool (info|files|dump|query|compact|search|validate|retain|serve) <segmentDir> [args]")
   }
 
   /** Deep integrity check: a single segment dir, or every segment of a
@@ -149,28 +155,19 @@ object DruidTool {
     * (src/main.rs:142-184) with pushdown instead of post-slice.
     */
   def dump(dir: String, rest: List[String]): Unit = {
-    var columns: Option[Seq[String]] = None
-    var limit = 20
-    var format = "table"
-    var args = rest
-    while (args.nonEmpty) args = args match {
-      case "--columns" :: v :: tl => columns = Some(v.split(",").toSeq); tl
-      case "--limit" :: v :: tl => limit = v.toInt; tl
-      case "--format" :: v :: tl => format = v; tl
-      case other :: _ => System.err.println(s"unknown arg $other"); sys.exit(2)
-      case Nil => Nil
-    }
+    val flags = Settings.flags("dump", rest)
+    val limit = flags(Settings.DumpLimit)
     withSpark { spark =>
       var df = spark.read.format("druid").load(dir)
-      columns.foreach(cs => df = df.select(cs.map(org.apache.spark.sql.functions.col): _*))
+      flags(Settings.DumpColumns).foreach(cs =>
+        df = df.select(cs.map(org.apache.spark.sql.functions.col): _*))
       df = df.limit(limit)
-      format match {
+      flags(Settings.DumpFormat) match {
         case "table" => df.show(limit, truncate = false)
         case "json" => df.toJSON.collect().foreach(println)
-        case "csv" =>
+        case _ => // csv
           println(df.columns.mkString(","))
           df.collect().foreach(r => println(r.toSeq.mkString(",")))
-        case other => System.err.println(s"unknown format $other"); sys.exit(2)
       }
     }
   }
@@ -189,27 +186,15 @@ object DruidTool {
     * reference is read-only).
     */
   def compact(dir: String, rest: List[String]): Unit = {
-    var targetRows = 5000000L
-    var opts = Map.empty[String, String]
-    var clusterBy: Option[String] = None
-    var incremental = false
-    var minFill = 0.5
-    var args = rest
-    while (args.nonEmpty) args = args match {
-      case "--target-rows" :: v :: tl => targetRows = v.toLong; tl
-      case "--cluster-by" :: c :: tl => clusterBy = Some(c); tl
-      case "--incremental" :: tl => incremental = true; tl
-      case "--min-fill" :: v :: tl => minFill = v.toDouble; tl
-      case "--option" :: kv :: tl if kv.contains("=") =>
-        val Array(k, v) = kv.split("=", 2); opts += (k -> v); tl
-      case other :: _ => System.err.println(s"unknown arg $other"); sys.exit(2)
-      case Nil => Nil
-    }
+    val flags = Settings.flags("compact", rest)
+    val targetRows = flags(Settings.CompactTargetRows)
+    val opts = flags.all(Settings.CompactOption).toMap
+    val clusterBy = flags(Settings.CompactClusterBy)
     withSpark { spark =>
       val st =
-        if (incremental)
+        if (flags(Settings.CompactIncremental))
           graft.write.Compaction.compactIncremental(spark, dir, targetRows,
-            opts, clusterBy, minFill)
+            opts, clusterBy, flags(Settings.CompactMinFill))
         else
           graft.write.Compaction.compact(spark, dir, targetRows, opts,
             clusterBy)
@@ -223,26 +208,17 @@ object DruidTool {
     * default to every string column in the table schema.
     */
   def search(dir: String, needle: String, rest: List[String]): Unit = {
-    var columns: Option[Seq[String]] = None
-    var ignoreCase = false
-    var prefix = false
-    var args = rest
-    while (args.nonEmpty) args = args match {
-      case "--columns" :: v :: tl => columns = Some(v.split(",").toSeq); tl
-      case "--ignore-case" :: tl => ignoreCase = true; tl
-      case "--prefix" :: tl => prefix = true; tl
-      case other :: _ => System.err.println(s"unknown arg $other"); sys.exit(2)
-      case Nil => Nil
-    }
+    val flags = Settings.flags("search", rest)
     withSpark { spark =>
-      val cols = columns.getOrElse {
+      val cols = flags(Settings.SearchColumns).getOrElse {
         graft.sources.druid.DruidTableUtil.schemaFor(dir).fields
           .filter(_.dataType == org.apache.spark.sql.types.StringType)
           .map(_.name).toSeq
       }
       graft.sources.druid.DruidSearch
-        .search(spark, dir, cols, needle, caseSensitive = !ignoreCase,
-          prefix = prefix)
+        .search(spark, dir, cols, needle,
+          caseSensitive = !flags(Settings.SearchIgnoreCase),
+          prefix = flags(Settings.SearchPrefix))
         .orderBy("dim", "value")
         .show(1000, truncate = false)
     }

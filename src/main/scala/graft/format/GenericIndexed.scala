@@ -87,12 +87,6 @@ final class GenericIndexed(buf: ByteBuffer, val base: Int) extends StringDict {
     }
   }
 
-  /** Element i as a raw slice [start,len) ignoring any prefix — the
-    * caller interprets (compressed blocks are consumed this way without
-    * copying the compressed bytes).
-    */
-  def rawRange(i: Int): (Int, Int) = elementRange(i)
-
   /** Length-prefixed element as UTF-8 string; null for len == -1. */
   def stringAt(i: Int): String = {
     val b = bytesAt(i)

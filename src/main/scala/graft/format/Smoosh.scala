@@ -28,7 +28,6 @@ final class SmooshReader private (
     val numChunks: Int,
     val maxChunkSize: Long) {
 
-  def fileNames: Iterable[String] = entries.keys
   def has(name: String): Boolean = entries.contains(name)
   def entry(name: String): Option[SmooshEntry] = entries.get(name)
 

@@ -35,7 +35,7 @@ object BarrierCache {
     * few warm gates).
     */
   def bound: Int =
-    sys.props.get("graft.barrier.cache.bound").map(_.toInt).getOrElse(8)
+    graft.Settings.BarrierCacheBound.get
 
   private val entries =
     new java.util.LinkedHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]()
@@ -72,11 +72,7 @@ object BarrierCache {
   /** Registered barrier count (observability + specs). */
   def liveCount: Int = synchronized(entries.size())
 
-  /** Max checkpoint RDDs kept registered before the oldest is
-    * unpersisted eagerly (rather than waiting on GC + ContextCleaner).
-    */
-  def checkpointBound: Int =
-    sys.props.get("graft.barrier.checkpoint.bound").map(_.toInt).getOrElse(16)
+  private val CheckpointBound = 16
 
   private val ckpts =
     new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]()
@@ -84,7 +80,7 @@ object BarrierCache {
   /** `df.localCheckpoint()` with EAGER reclamation: the checkpoint's
     * backing RDD is registered so its MEMORY_AND_DISK blocks are
     * unpersisted deterministically — either when more than
-    * [[checkpointBound]] checkpoints are live (oldest first; a bench
+    * 16 checkpoints are live (oldest first; a bench
     * pass re-invoking a gate builds a fresh checkpoint each time, so
     * the previous pass's blocks are garbage the moment the new one
     * lands) or at [[releaseCheckpoints]]. Without this, reclamation
@@ -96,7 +92,7 @@ object BarrierCache {
     out.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => synchronized {
         ckpts.addLast(lr.rdd)
-        while (ckpts.size() > checkpointBound) {
+        while (ckpts.size() > CheckpointBound) {
           try { ckpts.pollFirst().unpersist(false); () }
           catch { case _: Exception => () }
         }
@@ -115,7 +111,4 @@ object BarrierCache {
       catch { case _: Exception => () }
     }
   }
-
-  /** Registered checkpoint count (observability + specs). */
-  def liveCheckpoints: Int = synchronized(ckpts.size())
 }

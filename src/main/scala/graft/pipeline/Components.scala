@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Algorithm, two tiers gated on the MATERIALIZED edge count:
   *
-  *  - DRIVER-SIDE UNION-FIND below `localEdgeLimit` (default 32M edges
-  *    = 512 MB of packed longs plus ~40 B/node of find maps — well
-  *    inside any driver sized for 100 TB work): the edge list of a
+  *  - DRIVER-SIDE UNION-FIND below `localEdgeLimit` (default
+  *    [[LocalEdgeLimit]], 4M edges): the edge list of a
   *    near-dup graph is pairs, not documents, and is collected ONCE as
   *    primitive long arrays; path compression + union-by-min-id means
   *    the root of every set IS the component minimum, so there is no
@@ -42,36 +41,18 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Edge-count cutoff below which components solve driver-side:
-    * 32M edges = 512 MB packed longs on the driver (plus ~40 B per
-    * distinct node for the union-find maps), the documented budget.
-    * The EFFECTIVE gate is additionally clamped by the live heap (see
-    * [[effectiveLocalLimit]]) — this constant is the ceiling, not a
-    * promise that any driver can hold it.
+  /** Edge-count cutoff below which components solve driver-side: 4M
+    * edges ≈ 256 MB at the ~64 B/edge all-in cost (packed long[] at
+    * 16 B/edge + union-find LongMaps with boxed values + the labeled
+    * tuple array when nodes ~ edges) — a quarter of a DEFAULT 1g driver
+    * heap, so the local path can never OOM an unconfigured driver.
+    * PINNED, not derived from the live heap: a heap-derived clamp makes
+    * the local-vs-distributed branch — and any plan fingerprint of a
+    * graph gate — flip with the driver's -Xmx, the same
+    * machine-dependence class the bench canonicalizes out of Range
+    * splits.
     */
-  val DefaultLocalEdgeLimit = 32000000L
-
-  /** Default effective driver-side gate: 4M edges ≈ 256 MB at the
-    * ~64 B/edge all-in cost (packed long[] at 16 B/edge + union-find
-    * LongMaps with boxed values + the labeled tuple array when
-    * nodes ~ edges) — a quarter of a DEFAULT 1g driver heap, so the
-    * local path can never OOM an unconfigured driver. PINNED, not
-    * derived from the live heap: a heap-derived clamp makes the
-    * local-vs-distributed branch — and any plan fingerprint of a graph
-    * gate — flip with the driver's -Xmx, the same machine-dependence
-    * class the bench canonicalizes out of Range splits.
-    */
-  private val DefaultEffectiveLocalLimit = 4000000L
-
-  /** Clamp the requested driver-side gate by the pinned budget. Drivers
-    * provisioned beyond 1g raise `graft.components.local.edge.limit`
-    * (up to callers' requested ceiling) explicitly — an operator
-    * decision recorded in config, never inferred from JVM flags.
-    */
-  private def effectiveLocalLimit(requested: Long): Long =
-    math.min(requested,
-      sys.props.get("graft.components.local.edge.limit").map(_.toLong)
-        .getOrElse(DefaultEffectiveLocalLimit))
+  val LocalEdgeLimit = 4000000L
 
   /** Driver-side union-find over edge endpoints packed pairwise into a
     * primitive long array (edge i = `packed(2*i)`–`packed(2*i+1)`):
@@ -116,18 +97,12 @@ object Components {
     */
   def connectedComponents(edges: DataFrame, src: String = "d1",
                           dst: String = "d2", maxIter: Int = 50,
-                          localEdgeLimit: Long = DefaultLocalEdgeLimit)
+                          localEdgeLimit: Long = LocalEdgeLimit)
       : DataFrame = {
     // materialize the edge list ONCE: the gate count, the collect, and
     // every contraction round read it, and without the checkpoint each
     // would re-run the whole upstream pipeline that produced the edges
     // (e.g. the LSH self-join)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (debug) {
-      println(f"[cc] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
     // gate + local path on the UNDIRECTED list: union-find needs each
     // edge once, and gating on a symmetrized list would silently HALVE
     // the effective cutoff (the round-10 sf10 probe caught d18 paying
@@ -136,12 +111,8 @@ object Components {
     val dedir = edges
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .localCheckpoint()
-    lap("edges-materialized")
     val edgeCount = dedir.count()
-    val limit = effectiveLocalLimit(localEdgeLimit)
-    if (debug) println(s"[cc] edgeCount=$edgeCount (limit $limit, " +
-      s"requested $localEdgeLimit, heap ${Runtime.getRuntime.maxMemory()})")
-    if (edgeCount <= limit) {
+    if (edgeCount <= localEdgeLimit) {
       // driver-side union-find (see object scaladoc). The collect
       // ships one primitive long[] per partition (Rows are
       // deserialized streaming inside each task and never reach the
@@ -152,8 +123,6 @@ object Components {
         Iterator.single(buf.result())
       }.collect().flatten
       val labeled = localSolve(packed)
-      lap(s"local-solve(${packed.length / 2} edges)")
-      if (debug) println("[cc] solved driver-side (union-find)")
       val spark = edges.sparkSession
       import spark.implicits._
       // ship the labeling back as a PARALLELIZED dataset, never a
@@ -197,7 +166,7 @@ object Components {
   def incrementalComponents(prevLabels: DataFrame, newEdges: DataFrame,
                             src: String = "d1", dst: String = "d2",
                             maxIter: Int = 50,
-                            localEdgeLimit: Long = DefaultLocalEdgeLimit)
+                            localEdgeLimit: Long = LocalEdgeLimit)
       : DataFrame = {
     val labels = prevLabels
       .select(col("doc_id").cast("long").as("doc_id"),
@@ -240,38 +209,8 @@ object Components {
     relabeled.union(newLabeled)
   }
 
-  /** Connected components by alternating large-star/small-star edge
-    * contraction (Kiveris et al.) — the shape-independent alternative
-    * to hash-min propagation. Each round rewires edges toward local
-    * minima:
-    *
-    *  - large-star: every node u computes m = min(N(u) ∪ {u}) over the
-    *    symmetrized edge list and reconnects each STRICTLY LARGER
-    *    neighbor to m;
-    *  - small-star: edges orient high→low, every node reconnects its
-    *    non-larger neighbors (and itself) to its minimum neighbor.
-    *
-    * Both steps preserve connectivity and only ever decrease edge
-    * endpoints; the alternation converges — in O(log^2 n) rounds on any
-    * graph, independent of diameter — to a forest of stars whose
-    * centers are the component minima. Per round the work is two
-    * id-only equi-joins + min aggregates (exactly the hash-min shuffle
-    * cost), and the convergence check is an exact `except` on the
-    * 16-byte edge set, not a probabilistic hash compare.
-    *
-    * Same contract as [[connectedComponents]]: returns (doc_id,
-    * component = min reachable node id), one row per distinct node of
-    * `edges`.
-    */
-  def connectedComponentsStar(edges: DataFrame, src: String = "d1",
-                              dst: String = "d2",
-                              maxIter: Int = 50): DataFrame =
-    starImpl(edges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .localCheckpoint(), maxIter)
-
   /** Contraction over an already-materialized (u, v) long edge list. */
-  private def starImpl(e0: DataFrame, maxIter: Int): DataFrame = {
+  private[pipeline] def starImpl(e0: DataFrame, maxIter: Int): DataFrame = {
     val parts = math.max(1, (e0.count() / 2000000L).toInt)
     // node set pinned from the INPUT (contraction rewires edges, so the
     // final star edges alone don't enumerate every original node)

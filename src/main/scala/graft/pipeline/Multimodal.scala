@@ -175,9 +175,6 @@ object Multimodal {
       }
   }
 
-  final case class AHash(doc_id: Long, source: String,
-                         b0: Int, b1: Int, b2: Int, b3: Int)
-
   /** Average-hash (aHash) perceptual fingerprint over the stub image
     * modality: the first 64 decoded "pixels" (char codes — the same
     * deterministic fake every m-gate rides; a real decoder swap

@@ -59,40 +59,9 @@ object TextOps {
       .select(col("doc_id"), explode(expr("grams5(text)")).as("tg"))
   }
 
-  /** MinHash signatures: (doc_id, j, h) for j in [0, k). Computed as ONE
-    * wide aggregate of k min columns (map-side combined, no k-fold row
-    * blowup) and re-shaped with stack() after — the shuffle carries one
-    * k-column row per document instead of k*grams rows.
-    */
-  def minhash(grams: DataFrame, k: Int): DataFrame = {
-    val mins = (0 until k).map(j =>
-      min(expr(s"(${aConst(j)} * tg + ${bConst(j)}) % $P")).as(s"h$j"))
-    val wide = grams.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val stackArgs = (0 until k).map(j => s"$j, h$j").mkString(", ")
-    wide.selectExpr("doc_id", s"stack($k, $stackArgs) AS (j, h)")
-  }
-
-  /** LSH band signatures: fold each band of `bandSize` minhashes into
-    * one BIGINT (12-bit folds so 4 terms stay far under 2^63). Banding
-    * turns near-dup search into an equi-join: docs sharing any
-    * (band, sig) are candidates.
-    */
-  def bandSignatures(mh: DataFrame, bandSize: Int = 4): DataFrame = {
-    // 12-bit folds: bandSize <= 5 keeps sum(4095 * 4096^k) under 2^63
-    require(bandSize >= 1 && bandSize <= 5, s"bandSize $bandSize not in [1,5]")
-    val arms = (0 until bandSize)
-      .map(k => s"WHEN $k THEN CAST(${4096L.pow(k)} AS BIGINT)").mkString(" ")
-    mh.groupBy(col("doc_id"), expr(s"j div $bandSize").as("band"))
-      .agg(sum(expr(s"(h % 4096) * (CASE j % $bandSize $arms END)")).as("sig"))
-  }
-
-  private implicit class LongPow(private val base: Long) {
-    def pow(e: Int): Long = (0 until e).foldLeft(1L)((a, _) => a * base)
-  }
-
   /** Band signatures computed per-row in one pass with the native
-    * [[graft.sql.MinHashBands]] expression — same values as
-    * `bandSignatures(minhash(grams5Raw(docs), k), bandSize)` with ZERO
+    * [[graft.sql.MinHashBands]] expression — same values as the
+    * composed minhash + band fold (PipelineReference in the specs) with ZERO
     * shuffles: no gram explode, no wide min aggregate, no band
     * re-aggregation. The only stateful operator left in LSH candidate
     * generation is the band equi-join itself.
@@ -240,23 +209,9 @@ object TextOps {
       .withColumn("jaccard", round(col("ic") / (col("sz1") + col("sz2") - col("ic")), 4))
   }
 
-  /** SimHash signatures (nBits <= 16): per bit j, sign-sum of the j-th
-    * hash's parity over the doc's grams.
-    */
-  def simhash(grams: DataFrame, nBits: Int = 16): DataFrame = {
-    val spark = grams.sparkSession
-    import spark.implicits._
-    val params = (0 until nBits).map(j => (j, aConst(j), bConst(j))).toDF("j", "a", "b")
-    grams.crossJoin(broadcast(params))
-      .groupBy(col("doc_id"), col("j"))
-      .agg(sum(expr(s"CASE WHEN ((a * tg + b) % $P) % 2 = 1 THEN 1 ELSE -1 END")).as("s"))
-      .groupBy(col("doc_id"))
-      .agg(sum(expr("CASE WHEN s > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END"))
-        .as("simhash"))
-  }
-
   /** SimHash computed per-row by the native [[graft.sql.Simhash5]]
-    * expression — same values as `simhash(grams5(docs), nBits)` with
+    * expression — same values as the composed SimHash over
+    * `grams5(docs)` (PipelineReference in the specs) with
     * zero shuffles (the composable form explodes grams through a
     * broadcast crossJoin and two aggregates).
     */

@@ -55,13 +55,6 @@ object VectorOps {
     */
   def dotSql(a: String, b: String): String = s"dot_f($a, $b)"
 
-  /** Same fold via higher-order functions — the equivalence-spec
-    * reference for [[dotSql]].
-    */
-  def dotHofSql(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-      s"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-
   /** L2 norm of an array<float> column (ordered fold). */
   def normSql(a: String): String =
     s"sqrt(${dotSql(a, a)})"
@@ -170,12 +163,6 @@ object VectorOps {
     * fold; `dim` retained for the HOF reference form).
     */
   def projectionSql(j: Int, dim: Int): String = s"hplane_proj(embedding, $j)"
-
-  /** HOF reference form of [[projectionSql]] for the equivalence spec. */
-  def projectionHofSql(j: Int, dim: Int): String =
-    s"aggregate(zip_with(embedding, sequence(0, ${dim - 1}), " +
-      s"(x, i) -> CAST(x AS DOUBLE) * ${planeSignSql(j, "i")}), " +
-      "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
   /** Bucket id for LSH table `t` from `nPlanes` hyperplane sign bits
     * (plane family offset by t*nPlanes so tables are independent).
@@ -696,8 +683,8 @@ object VectorOps {
                 precomputedCellCodes: Option[DataFrame] = None): DataFrame = {
     GraftExtensions.install(embeddings.sparkSession)
     // the serving index: (vec_id, cell, m, code). Pass it PRE-JOINED
-    // ([[ivfPqCellCodes]], persisted at build time, bucketed by cell on
-    // disk at scale) and the query plan contains NO corpus-wide join —
+    // (PipelineQueries.ivfPqIndexDir, persisted at build time, bucketed
+    // by cell on disk at scale) and the query plan contains NO corpus-wide join —
     // only the cell-pruned probe join and the broadcast ADC lookup.
     val cellCodes = precomputedCellCodes.getOrElse {
       val assign = precomputedAssign.getOrElse(ivfAssign(embeddings, nCells))
@@ -742,16 +729,6 @@ object VectorOps {
           round(total, 6).as("adc"))
         .filter(col("query_id") =!= col("cand_id")), k)
   }
-
-  /** The IVF+PQ serving index: per-vector PQ codes pre-joined with the
-    * IVF cell assignment — (vec_id, cell, m, code), built once next to
-    * the two component indexes. At 100 TB this table is what lives
-    * bucketed by cell on disk: a probe's equi-join on cell reads
-    * nProbe/nCells of it and nothing else, with no join between index
-    * tables at query time.
-    */
-  def ivfPqCellCodes(embeddings: DataFrame, nCells: Int): DataFrame =
-    pqCodes(embeddings).join(ivfAssign(embeddings, nCells), "vec_id")
 
   /** Two-stage retrieval, the production embedding-search shape: PQ/ADC
     * shortlists `kCand` candidates from compressed codes (memory-scan

@@ -29,17 +29,6 @@ object StreamingQueries extends QuerySet {
     rm(new java.io.File(path))
   }
 
-  /** Run `body` (which must START its streaming query before
-    * returning) with the state-store shuffle sized to the stream, not
-    * the session: a stateful operator pins one state store per shuffle
-    * partition PER MICRO-BATCH, and these queries' state is a few
-    * thousand rows — 4 partitions cuts the per-batch fixed cost 8x.
-    * The partition count is captured at query START, so the session
-    * conf can be restored as soon as `body` returns; at real scale this
-    * is `spark.sql.streaming.statePartitions` (or a right-sized
-    * session), the point being that state partitioning should track
-    * key cardinality, not batch-query parallelism.
-    */
   /** Run a stream with `spark.sql.shuffle.partitions = n` and hold the
     * override until the stream TERMINATES. The stream's first-batch
     * analysis reads the session conf asynchronously after `start()`
@@ -47,31 +36,10 @@ object StreamingQueries extends QuerySet {
     * used n or the session default was a coin flip per run — a real
     * nondeterminism in task counts and timing (the bench drift on
     * streaming queries) even though results never depended on it.
-    * Callers' own awaitTermination after this returns is a no-op.
+    * Callers' own awaitTermination after this returns is a no-op. The
+    * widths track each stream's key count (a few thousand rows of
+    * state), not batch parallelism; results never depend on them.
     */
-  /** State-store shuffle width override for scale tuning: the local
-    * defaults below are sized to these corpora's key cardinalities
-    * (guide §2: state partitioning should track key count, not batch
-    * parallelism); a cluster run sets `SPARK_GRAFT_STATE_PARTITIONS`
-    * (or per-stream `SPARK_GRAFT_STATE_PARTITIONS_<name>`) instead of
-    * editing code. Results never depend on the width — only state-store
-    * instance count and per-batch fixed cost do.
-    */
-  private def stateParts(name: String, default: Int): Int = {
-    val perStream = s"SPARK_GRAFT_STATE_PARTITIONS_$name"
-    sys.env.get(perStream).map((perStream, _))
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-        .map(("SPARK_GRAFT_STATE_PARTITIONS", _)))
-      .map { case (envVar, raw) =>
-        val n = try raw.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$envVar must be a positive integer, got '$raw'")
-        }
-        require(n > 0, s"$envVar must be a positive integer, got '$raw'")
-        n
-      }.getOrElse(default)
-  }
-
   private def withStatePartitions(s: SparkSession, n: Int)(
       body: => org.apache.spark.sql.streaming.StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -167,7 +135,7 @@ object StreamingQueries extends QuerySet {
         val in = stageDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s1_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s1", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.windowedAgg(
               StreamingOps.parquetStream(s, in, schema), "1 day", "1 hour")
             .writeStream.outputMode("complete")
@@ -241,7 +209,7 @@ object StreamingQueries extends QuerySet {
         // per micro-batch whose load/commit contention dominated the
         // whole query (streamprof measured the commit-time sum at
         // ~110 s across instances for a 7 s batch)
-        val q = withStatePartitions(s, stateParts("s7", 4)) {
+        val q = withStatePartitions(s, 4) {
           s.readStream.format("druid").load(seg)
             .groupBy(col("event_type"))
             .agg(count(lit(1)).as("n"),
@@ -267,7 +235,7 @@ object StreamingQueries extends QuerySet {
         val in = stageDocsDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s4_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s4", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.parquetStream(s, in, schema)
             .withColumn("h", xxhash64(lower(col("text"))))
             .dropDuplicates("source", "h")
@@ -294,7 +262,7 @@ object StreamingQueries extends QuerySet {
         val in = stageDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s5_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s5", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.parquetStream(s, in, schema)
             .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
             .agg(count(lit(1)).as("n_events"))
@@ -343,7 +311,7 @@ object StreamingQueries extends QuerySet {
         val in = stageOrderedDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s11_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s11", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.sessionWindowAppend(
               StreamingOps.parquetStream(s, in, schema,
                 maxFilesPerTrigger = Some(1)),
@@ -394,7 +362,7 @@ object StreamingQueries extends QuerySet {
         val in = stageOrderedDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s6_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s6", 2)) {
+        val q = withStatePartitions(s, 2) {
           StreamingOps.clickPurchaseJoin(s, in, schema,
               lateness = "25 hours", maxFilesPerTrigger = Some(1))
             .writeStream.outputMode("append")
@@ -472,7 +440,7 @@ object StreamingQueries extends QuerySet {
         val ds = StreamingOps.parquetStream(s, in, schema)
           .select(col("user_id"), col("event_type"), col("value"))
           .as[StreamingOps.UserEvent]
-        val q = withStatePartitions(s, stateParts("s2", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.runningUserTotals(ds)
             .writeStream.outputMode("update")
             .format("memory").queryName(table)
@@ -512,7 +480,7 @@ object StreamingQueries extends QuerySet {
         val in = stageOrderedDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s9_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s9", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.parquetStream(s, in, schema,
               maxFilesPerTrigger = Some(1))
             .withColumn("day", date_trunc("day", col("ts")))
@@ -669,7 +637,7 @@ object StreamingQueries extends QuerySet {
         val in = stageDocsDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s13_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s13", 4)) {
+        val q = withStatePartitions(s, 4) {
           // one file per micro-batch: the sketch state MUST merge
           // across batches, not get built in a single pass
           StreamingOps.parquetStream(s, in, schema,
@@ -789,7 +757,7 @@ object StreamingQueries extends QuerySet {
         }
         val schema = s.read.parquet(in).schema
         val table = s"s15_out_${nameCounter.incrementAndGet()}"
-        val q = withStatePartitions(s, stateParts("s15", 4)) {
+        val q = withStatePartitions(s, 4) {
           StreamingOps.parquetStream(s, in, schema,
               maxFilesPerTrigger = Some(1))
             .select(col("event_type"),

@@ -114,11 +114,6 @@ object DruidExpr {
     private def peek2: Char =
       if (pos + 1 < src.length) src.charAt(pos + 1) else '\u0000'
 
-    private def eat(s: String): Boolean = {
-      skipWs()
-      if (src.startsWith(s, pos)) { pos += s.length; true } else false
-    }
-
     // ---- precedence climb -----------------------------------------------
 
     private def orExpr(): String = {

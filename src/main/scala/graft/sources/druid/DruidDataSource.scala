@@ -34,11 +34,9 @@ class DruidDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "druid"
   override def supportsExternalMetadata(): Boolean = true
 
-  private def path(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    if (p == null) throw new IllegalArgumentException("druid source requires a path")
-    DruidTableUtil.localPath(p)
-  }
+  private def path(options: CaseInsensitiveStringMap): String =
+    DruidTableUtil.localPath(graft.Settings.sparkPath(options).getOrElse(
+      throw new IllegalArgumentException("druid source requires a path")))
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     DruidTableUtil.schemaFor(path(options))
@@ -185,9 +183,7 @@ object DruidTableUtil {
     * the writer's deterministic type mapping (DruidWrite buffers +
     * descriptor logicalType), applied without opening anything.
     */
-  def readSchemaOf(writeSchema: StructType,
-                   complexTypes: Map[String, String] = Map.empty,
-                   nestedJson: Boolean = false): StructType =
+  def readSchemaOf(writeSchema: StructType, spec: WriteSpec): StructType =
     StructType(writeSchema.fields.map { f =>
       if (f.name == "__time") StructField("__time", TimestampType, nullable = false)
       else {
@@ -203,10 +199,10 @@ object DruidTableUtil {
         // mirror segmentSchema: tagged binary/json columns surface
         // their complex typeName in the cached schema's metadata too
         val jsonTag =
-          if (nestedJson) graft.format.NestedColumn.PartType else "json"
+          if (spec.nestedJson) graft.format.NestedColumn.PartType else "json"
         val tag = f.dataType match {
-          case BinaryType => complexTypes.get(f.name)
-          case StringType => complexTypes.get(f.name).filter(_ == "json")
+          case BinaryType => spec.complexTypes.get(f.name)
+          case StringType => spec.complexTypes.get(f.name).filter(_ == "json")
             .map(_ => jsonTag)
             .orElse(Option(f.metadata).filter(_.contains("druid.complexType"))
               .map(_.getString("druid.complexType")))
@@ -301,67 +297,11 @@ class DruidTable(root: String, schema0: StructType) extends Table
       TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    graft.Settings.refuseUnknown(graft.Settings.ReadOption, options)
     new DruidScanBuilder(root, schema(), options)
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new DruidWriteBuilder(root, info.schema(),
-      info.options().getBoolean("bitmapIndexes", true),
-      // string dictionary encoding: "generic" (default) or "frontCoded"
-      // (prefix-compressed buckets, like Druid's stringEncodingStrategy)
-      Option(info.options().get("stringEncoding")) match {
-        case None | Some("generic") => false
-        case Some("frontCoded") => true
-        case Some(other) => throw new IllegalArgumentException(
-          s"stringEncoding '$other' not in generic/frontCoded")
-      },
-      Option(info.options().get("segmentGranularity")),
-      // rollup=true pre-aggregates at ingest: rows sharing (__time
-      // floored to queryGranularity, all dims) collapse per task,
-      // numeric metrics summed — Druid's ingest-time rollup
-      rollupGran =
-        if (info.options().getBoolean("rollup", false))
-          Some(Option(info.options().get("queryGranularity")).getOrElse("none"))
-        else None,
-      codec = Option(info.options().get("compression"))
-        .map(WriteCodec.parse).getOrElse(graft.format.Compression.LZ4),
-      // numeric columns that GROUP rather than SUM under rollup
-      // (Druid's dimensionsSpec equivalent), comma-separated
-      rollupDims = Option(info.options().get("rollupDimensions"))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set.empty),
-      // binary columns tagged with a Druid complex typeName
-      // ("col:HLLSketch,other:thetaSketch") — recorded in each column's
-      // descriptor so readers can identify sketch blobs
-      complexTypes = Option(info.options().get("complexTypes"))
-        .map(_.split(",").map(_.trim).filter(_.contains(":")).map { kv =>
-          val Array(k, v) = kv.split(":", 2); k -> v
-        }.toMap).getOrElse(Map.empty),
-      // bitmap section encoding: "roaring" (default) or "concise"
-      // (legacy type-0x00 sections — exists so the Concise read path
-      // has self-contained round-trip coverage offline)
-      conciseBitmaps = Option(info.options().get("bitmapEncoding")) match {
-        case None | Some("roaring") => false
-        case Some("concise") => true
-        case Some(other) => throw new IllegalArgumentException(
-          s"bitmapEncoding '$other' not in roaring/concise")
-      },
-      // Druid single_dim range partitioning: segments within each time
-      // chunk hold disjoint contiguous ranges of this dimension, so
-      // dim-targeted filters prune whole segments via the existing
-      // min/max envelopes. `shards` fixes the shard count (0: Spark /
-      // AQE sizes the range exchange)
-      shardBy = Option(info.options().get("shardBy")).map(_.trim)
-        .filter(_.nonEmpty),
-      shards = Option(info.options().get("shards")).map(_.toInt).getOrElse(0),
-      // COMPLEX<json> storage: "blob" (default — UTF-8 JSON text in a
-      // GenericIndexed) or "nested" (Druid's NestedCommonFormat V5:
-      // field dictionaries + per-field sub-columns, the modern "auto"
-      // layout; format/NestedColumn.scala)
-      nestedJson = Option(info.options().get("jsonEncoding")) match {
-        case None | Some("blob") => false
-        case Some("nested") => true
-        case Some(other) => throw new IllegalArgumentException(
-          s"jsonEncoding '$other' not in blob/nested")
-      })
+    new DruidWriteBuilder(root, info.schema(), WriteSpec.from(info.options()))
 }

@@ -381,8 +381,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
 
   override def build(): Scan =
     new DruidScan(root, required, timeMin, timeMax, limit,
-      options.getLong("rowsPerSplit", 4L * 1024 * 1024),
-      options.getInt("batchSize", 4096), dimFilters, pushedAggs, zoneFilters,
+      graft.Settings.RowsPerSplit.in(options), dimFilters, pushedAggs, zoneFilters,
       notNullCols, isNullCols, topNTime, groupByDim, prefixFilters,
       patternFilters, orFilters, boundFilters)
 }
@@ -615,7 +614,7 @@ final case class GroupByDimPartition(dir: String, dim: String,
 
 class DruidScan(root: String, required: StructType,
                 timeMinMs0: Long, timeMaxMs0: Long, limit: Int,
-                rowsPerSplit: Long, batchSize: Int,
+                rowsPerSplit: Long,
                 dimFilters0: Map[String, Seq[String]] = Map.empty,
                 pushedAggs: Seq[String] = Nil,
                 zoneFilters: Map[String, (Double, Double)] = Map.empty,
@@ -793,7 +792,7 @@ class DruidScan(root: String, required: StructType,
                         ne: Seq[(String, String, Seq[String])] = nestedEq)
       : DruidScan =
     new DruidScan(root, required, timeMinMs0, timeMaxMs0, limit,
-      rowsPerSplit, batchSize, dimFilters0, pushedAggs, zoneFilters,
+      rowsPerSplit, dimFilters0, pushedAggs, zoneFilters,
       notNullCols, isNullCols, topNTime, groupByDim, prefixFilters,
       patternFilters, orFilters, bounds, mv, ne)
 
@@ -1027,7 +1026,7 @@ class DruidScan(root: String, required: StructType,
       val key = alignment.map(g => DruidScan.bucketKey(g, m.startMs)).getOrElse(0)
       (0 until capped by per).map { start =>
         DruidInputPartition(m.dir, start, math.min(capped, start + per), limit,
-          batchSize, dimFilters, notNullCols, isNullCols, prefixFilters,
+          DruidScan.BatchSize, dimFilters, notNullCols, isNullCols, prefixFilters,
           patternFilters, key, orFilters, boundFilters, mvContains,
           nestedEq, lease)
       }
@@ -1183,6 +1182,9 @@ class DruidScan(root: String, required: StructType,
 }
 
 object DruidScan {
+  /** Rows per columnar batch a split's reader fills. */
+  val BatchSize = 4096
+
   /** Smallest string greater than every string starting with `p`: bump
     * the last non-max char and drop the tail. None when every char is
     * Char.MaxValue (no finite successor — only the lower bound prunes).

@@ -31,19 +31,9 @@ import graft.write.SegmentWriter._
   * builds per-segment in memory) — memory per task is ~the primitive
   * data size, not boxed objects; size partitions accordingly.
   */
-class DruidWriteBuilder(root: String, schema: StructType,
-                        bitmapIndexes: Boolean = true,
-                        frontCodedStrings: Boolean = false,
-                        granularity: Option[String] = None,
-                        rollupGran: Option[String] = None,
-                        codec: Byte = graft.format.Compression.LZ4,
-                        rollupDims: Set[String] = Set.empty,
-                        complexTypes: Map[String, String] = Map.empty,
-                        conciseBitmaps: Boolean = false,
-                        shardBy: Option[String] = None,
-                        shards: Int = 0,
-                        nestedJson: Boolean = false)
+class DruidWriteBuilder(root: String, schema: StructType, spec: WriteSpec)
     extends WriteBuilder with SupportsOverwrite {
+  spec.check(schema)
   private var doTruncate = false
   private var replaceRange: Option[(Long, Long)] = None
   override def truncate(): WriteBuilder = { doTruncate = true; this }
@@ -66,37 +56,6 @@ class DruidWriteBuilder(root: String, schema: StructType,
       this
     }
   }
-
-  rollupGran.foreach { g =>
-    require(g == "none" || SegmentGranularity.supported.contains(g),
-      s"queryGranularity '$g' not in none/${SegmentGranularity.supported.mkString("/")}")
-    require(schema.fields.exists(_.name == "__time"),
-      "rollup requires a __time column")
-    rollupDims.foreach { d =>
-      require(d != "__time" && schema.fields.exists(_.name == d),
-        s"rollupDimensions: no such column '$d'")
-    }
-    schema.fields.filter(_.name != "__time").foreach { f =>
-      require(f.dataType != BinaryType &&
-        f.dataType != TimestampType && f.dataType != TimestampNTZType,
-        s"rollup: column '${f.name}' (${f.dataType.simpleString}) is neither " +
-          "a dimension (string/array<string>) nor a summable metric")
-    }
-  }
-
-  shardBy.foreach { d =>
-    require(d != "__time",
-      "shardBy: use segmentGranularity for time partitioning; shardBy " +
-        "range-shards WITHIN each time chunk (Druid single_dim)")
-    val f = schema.fields.find(_.name == d).getOrElse(
-      throw new IllegalArgumentException(s"shardBy: no such column '$d'"))
-    require(f.dataType == StringType || f.dataType == LongType ||
-      f.dataType == IntegerType || f.dataType == DoubleType ||
-      f.dataType == FloatType,
-      s"shardBy: column '$d' (${f.dataType.simpleString}) is not a " +
-        "scalar dimension (string or numeric)")
-  }
-  require(shards >= 0, s"shards: $shards (want >= 0; 0 = let Spark pick)")
 
   /** Druid's `single_dim` range partitioning, the Spark-native way:
     * instead of hand-sharding rows, the Write DECLARES an ordered
@@ -121,7 +80,7 @@ class DruidWriteBuilder(root: String, schema: StructType,
       org.apache.spark.sql.connector.distributions.Distributions.ordered(
         Array(cx.Expressions.sort(cx.Expressions.column(dim),
           cx.SortDirection.ASCENDING)))
-    override def requiredNumPartitions(): Int = shards
+    override def requiredNumPartitions(): Int = spec.shards
     override def requiredOrdering(): Array[cx.SortOrder] = {
       val keys = Seq(dim) ++
         (if (schema.fields.exists(_.name == "__time")) Seq("__time") else Nil)
@@ -135,20 +94,15 @@ class DruidWriteBuilder(root: String, schema: StructType,
   }
 
   private def plainBatch(): BatchWrite =
-    new DruidBatchWrite(root, schema, doTruncate, bitmapIndexes,
-      frontCodedStrings, granularity,
-      rollupGran, codec, rollupDims, replaceRange, complexTypes,
-      conciseBitmaps, nestedJson)
+    new DruidBatchWrite(root, schema, doTruncate, spec, replaceRange)
   private def plainStreaming()
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
     require(!doTruncate,
       "druid streaming sink supports append output mode only")
-    new DruidStreamingWrite(root, schema, bitmapIndexes, frontCodedStrings,
-      granularity, rollupGran, codec, rollupDims, complexTypes,
-      conciseBitmaps, nestedJson)
+    new DruidStreamingWrite(root, schema, spec)
   }
 
-  override def build(): Write = shardBy match {
+  override def build(): Write = spec.shardBy match {
     case Some(dim) => new ShardedWrite(dim)
     case None => new Write {
       override def toBatch: BatchWrite = plainBatch()
@@ -168,16 +122,7 @@ class DruidWriteBuilder(root: String, schema: StructType,
   * recovery after a failure between sink-commit and checkpoint-commit
   * never duplicates rows.
   */
-class DruidStreamingWrite(root: String, schema: StructType,
-                          bitmapIndexes: Boolean,
-                          frontCodedStrings: Boolean = false,
-                          granularity: Option[String] = None,
-                          rollupGran: Option[String] = None,
-                          codec: Byte = graft.format.Compression.LZ4,
-                          rollupDims: Set[String] = Set.empty,
-                          complexTypes: Map[String, String] = Map.empty,
-                          conciseBitmaps: Boolean = false,
-                          nestedJson: Boolean = false)
+class DruidStreamingWrite(root: String, schema: StructType, spec: WriteSpec)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
@@ -189,15 +134,13 @@ class DruidStreamingWrite(root: String, schema: StructType,
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     Files.createDirectories(Paths.get(root, ".epochs"))
-    val (r, sch, bm, fc, g, rg, cd, rd, ct, cb, nj) =
-      (root, schema, bitmapIndexes, frontCodedStrings, granularity, rollupGran,
-        codec, rollupDims, complexTypes, conciseBitmaps, nestedJson)
+    // locals, so the factory serializes these and not this write
+    val (r, sch, ws) = (root, schema, spec)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
                                 epochId: Long): DataWriter[InternalRow] =
         new DruidDataWriter(Paths.get(r, s".staging-stream-ep$epochId").toString,
-          s"ep$epochId", sch, partitionId, taskId, bm, fc, g, rg, cd, rd, ct,
-          conciseBitmaps = cb, nestedJson = nj)
+          s"ep$epochId", sch, partitionId, taskId, ws)
     }
   }
 
@@ -223,9 +166,8 @@ class DruidStreamingWrite(root: String, schema: StructType,
       finally l.close()
     }
     stale.foreach(DruidBatchWrite.deleteRecursively)
-    DruidBatchWrite.commitJob(root, schema, truncate = false,
-      stagingDir = stagingFor(epochId), messages = messages,
-      complexTypes = complexTypes, nestedJson = nestedJson)
+    DruidBatchWrite.commitJob(root, schema, spec, truncate = false,
+      stagingDir = stagingFor(epochId), messages = messages)
     Files.createDirectories(markerFor(epochId).getParent)
     Files.createFile(markerFor(epochId))
   }
@@ -267,39 +209,12 @@ object SegmentGranularity {
   }
 }
 
-/** `compression` write option: block codec for the numeric/time
-  * containers (strings keep their own id-container default, matching
-  * Druid where dictionary ids are compressed independently).
-  */
-object WriteCodec {
-  def parse(name: String): Byte = name.toLowerCase match {
-    case "lz4" => graft.format.Compression.LZ4
-    case "zstd" => graft.format.Compression.ZSTD
-    case "lzf" => graft.format.Compression.LZF
-    case "uncompressed" => graft.format.Compression.UNCOMPRESSED
-    case "none" => graft.format.Compression.NONE
-    case other => throw new IllegalArgumentException(
-      s"compression '$other' not in lz4/zstd/lzf/uncompressed/none")
-  }
-}
-
 final case class DruidCommitMessage(segments: Seq[SegMeta]) extends WriterCommitMessage
 
 class DruidBatchWrite(root: String, schema: StructType, truncate: Boolean,
-                      bitmapIndexes: Boolean,
-                      frontCodedStrings: Boolean = false,
-                      granularity: Option[String] = None,
-                      rollupGran: Option[String] = None,
-                      codec: Byte = graft.format.Compression.LZ4,
-                      rollupDims: Set[String] = Set.empty,
-                      replaceRange: Option[(Long, Long)] = None,
-                      complexTypes: Map[String, String] = Map.empty,
-                      conciseBitmaps: Boolean = false,
-                      nestedJson: Boolean = false)
+                      spec: WriteSpec,
+                      replaceRange: Option[(Long, Long)] = None)
     extends BatchWrite {
-
-  granularity.foreach(g => require(SegmentGranularity.supported.contains(g),
-    s"segmentGranularity '$g' not in ${SegmentGranularity.supported.mkString("/")}"))
 
   // job-unique token: staging dir name + segment-name suffix, so repeat
   // writes to the same destination never collide on partition/task ids
@@ -308,14 +223,12 @@ class DruidBatchWrite(root: String, schema: StructType, truncate: Boolean,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     Files.createDirectories(stagingDir)
-    new DruidDataWriterFactory(stagingDir.toString, jobId, schema, bitmapIndexes,
-      frontCodedStrings, granularity, rollupGran, codec, rollupDims,
-      complexTypes, conciseBitmaps, nestedJson)
+    new DruidDataWriterFactory(stagingDir.toString, jobId, schema, spec)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    DruidBatchWrite.commitJob(root, schema, truncate, stagingDir, messages,
-      replaceRange, complexTypes, nestedJson)
+    DruidBatchWrite.commitJob(root, schema, spec, truncate, stagingDir,
+      messages, replaceRange)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     // nothing committed ever left staging: drop it, destination intact
@@ -328,11 +241,10 @@ object DruidBatchWrite {
     * (batch overwrite only) truncate-last deletion of prior segments,
     * and a manifest refresh.
     */
-  def commitJob(root: String, schema: StructType, truncate: Boolean,
-                stagingDir: Path, messages: Array[WriterCommitMessage],
-                replaceRange: Option[(Long, Long)] = None,
-                complexTypes: Map[String, String] = Map.empty,
-                nestedJson: Boolean = false): Unit = {
+  def commitJob(root: String, schema: StructType, spec: WriteSpec,
+                truncate: Boolean, stagingDir: Path,
+                messages: Array[WriterCommitMessage],
+                replaceRange: Option[(Long, Long)] = None): Unit = {
     val rootPath = Paths.get(root)
     // reap expired trash from earlier swaps — maintenance rides commits,
     // so deferred deletion needs no scheduler of its own
@@ -371,8 +283,7 @@ object DruidBatchWrite {
     // fast here, leaving the destination untouched. Schema evolution
     // (new/missing columns) unions cleanly; only a same-name type
     // clash throws.
-    val newSchema = DruidTableUtil.readSchemaOf(schema, complexTypes,
-      nestedJson)
+    val newSchema = DruidTableUtil.readSchemaOf(schema, spec)
     val tableSchema: Option[org.apache.spark.sql.types.StructType] =
       try {
         if (truncate || previous.isEmpty) Some(newSchema)
@@ -458,20 +369,10 @@ object DruidBatchWrite {
 }
 
 class DruidDataWriterFactory(stagingRoot: String, jobId: String,
-                             schema: StructType, bitmapIndexes: Boolean,
-                             frontCodedStrings: Boolean = false,
-                             granularity: Option[String] = None,
-                             rollupGran: Option[String] = None,
-                             codec: Byte = graft.format.Compression.LZ4,
-                             rollupDims: Set[String] = Set.empty,
-                             complexTypes: Map[String, String] = Map.empty,
-                             conciseBitmaps: Boolean = false,
-                             nestedJson: Boolean = false)
+                             schema: StructType, spec: WriteSpec)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DruidDataWriter(stagingRoot, jobId, schema, partitionId, taskId,
-      bitmapIndexes, frontCodedStrings, granularity, rollupGran, codec,
-      rollupDims, complexTypes, conciseBitmaps, nestedJson)
+    new DruidDataWriter(stagingRoot, jobId, schema, partitionId, taskId, spec)
 }
 
 /** Per-task writer buffering rows in TYPED columnar builders: numeric
@@ -480,16 +381,7 @@ class DruidDataWriterFactory(stagingRoot: String, jobId: String,
   * size and a multi-million-row partition encodes within a bounded heap.
   */
 class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
-                      partitionId: Int, taskId: Long,
-                      bitmapIndexes: Boolean = true,
-                      frontCodedStrings: Boolean = false,
-                      granularity: Option[String] = None,
-                      rollupGran: Option[String] = None,
-                      codec: Byte = graft.format.Compression.LZ4,
-                      rollupDims: Set[String] = Set.empty,
-                      complexTypes: Map[String, String] = Map.empty,
-                      conciseBitmaps: Boolean = false,
-                      nestedJson: Boolean = false)
+                      partitionId: Int, taskId: Long, spec: WriteSpec)
     extends DataWriter[InternalRow] {
 
   // ---- typed builders ----
@@ -694,9 +586,9 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
       case TimestampNTZType => new TimestampBuf(ntz = true)
       case DoubleType => new DoubleBuf
       case FloatType => new FloatBuf
-      case StringType if complexTypes.get(f.name).contains("json") ||
+      case StringType if spec.complexTypes.get(f.name).contains("json") ||
           fieldComplexType(f).contains("json") =>
-        if (nestedJson) new NestedJsonTextBuf else new JsonTextBuf
+        if (spec.nestedJson) new NestedJsonTextBuf else new JsonTextBuf
       // a column read back from a nested-written segment carries the
       // nestedCommonFormat tag in its metadata: rewrite it nested, so
       // compaction/CTAS round-trips preserve the encoding
@@ -704,11 +596,11 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
           .contains(graft.format.NestedColumn.PartType) =>
         new NestedJsonTextBuf
       case StringType => new StringBuf
-      case BinaryType => new BinaryBuf(complexTypes.getOrElse(f.name,
+      case BinaryType => new BinaryBuf(spec.complexTypes.getOrElse(f.name,
         fieldComplexType(f).getOrElse("binary")))
       case ArrayType(StringType, _) => new MultiStringBuf
       case dt @ (_: StructType | _: MapType | _: ArrayType) =>
-        new JsonStructBuf(dt, nested = nestedJson)
+        new JsonStructBuf(dt, nested = spec.nestedJson)
       case other => throw new IllegalArgumentException(
         s"druid writer: unsupported type $other for '${f.name}'")
     }
@@ -879,8 +771,8 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
     val rawCols: IndexedSeq[(String, ColumnValues)] = fields.indices
       .filter(_ != timeIdx)
       .map(i => fields(i).name -> bufs(i).values(null)).toIndexedSeq
-    val (time, matCols) = rollupGran match {
-      case Some(g) => rollupRows(rawTime, rawCols, g, rollupDims)
+    val (time, matCols) = spec.rollupGran match {
+      case Some(g) => rollupRows(rawTime, rawCols, g, spec.rollupDims)
       case None => (rawTime, rawCols)
     }
     val nRows = time.length
@@ -984,12 +876,12 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
       val dir = Paths.get(stagingRoot,
         f"segment-$partitionId%05d-$taskId-$jobId$suffix")
       val t = pick(time, sel)
-      SegmentWriter.write(dir, t, columns, compression = codec,
-        stringBitmaps = bitmapIndexes,
-        frontCodedStrings = frontCodedStrings,
-        rollup = rollupGran.isDefined,
-        queryGranularity = rollupGran.getOrElse("none"),
-        conciseBitmaps = conciseBitmaps)
+      SegmentWriter.write(dir, t, columns, compression = spec.codec,
+        stringBitmaps = spec.bitmapIndexes,
+        frontCodedStrings = spec.frontCodedStrings,
+        rollup = spec.rollupGran.isDefined,
+        queryGranularity = spec.rollupGran.getOrElse("none"),
+        conciseBitmaps = spec.conciseBitmaps)
       // mirror SegmentWriter's interval convention (empty -> [0, 1))
       val start = if (t.isEmpty) 0L else t.min
       val end = if (t.isEmpty) 1L else t.max + 1
@@ -998,7 +890,7 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
         zones = widened, strZones = strZonesOf(columns),
         nullCounts = Some(nullCountsOf(columns)),
         exactLongZones = xl, exactDoubleZones = xd, longSums = ls,
-        timeSorted = true, granularity = granularity)
+        timeSorted = true, granularity = spec.granularity)
     }
 
     // rows land __time-ascending inside every segment, like Druid's own
@@ -1029,7 +921,7 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
       }
     }
 
-    val segs = granularity.filter(_ => timeIdx >= 0 && nRows > 0) match {
+    val segs = spec.granularity.filter(_ => timeIdx >= 0 && nRows > 0) match {
       case None => Seq(writeSegment("", order))
       case Some(g) =>
         // one segment per UTC time bucket: intervals align with the

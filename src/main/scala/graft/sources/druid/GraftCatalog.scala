@@ -26,7 +26,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   override def initialize(name: String,
                           options: CaseInsensitiveStringMap): Unit = {
     catName = name
-    root = Option(options.get("root")).getOrElse(
+    root = graft.Settings.CatalogRoot.in(options).getOrElse(
       throw new IllegalArgumentException(
         s"catalog $name needs spark.sql.catalog.$name.root"))
   }

@@ -48,7 +48,7 @@ object ReadLease {
     * NOT the whole query — renewal extends it while the read runs.
     */
   def ttlMs: Long =
-    sys.props.get("graft.lease.ttl.ms").map(_.toLong).getOrElse(5L * 60 * 1000)
+    graft.Settings.LeaseTtlMs.get
 
   /** Serializable handle shipped to partition readers for renewal.
     * `created` is the protection anchor and never changes on renewal.

@@ -102,7 +102,7 @@ object SegmentCatalog {
     * the old delete-on-swap behavior.
     */
   def trashGraceMs: Long =
-    sys.props.get("graft.trash.grace.ms").map(_.toLong).getOrElse(15L * 60 * 1000)
+    graft.Settings.TrashGraceMs.get
 
   /** Logically delete a segment dir: one atomic marker file inside it.
     * New listings exclude it from this point on; the dir itself (and

@@ -152,12 +152,9 @@ class SysDataSource extends TableProvider with DataSourceRegister {
   // we accept it (it is always the kind-derived one)
   override def supportsExternalMetadata(): Boolean = true
 
-  private def kindOf(options: CaseInsensitiveStringMap): String = {
-    val k = options.get("kind")
-    if (k == null) throw new IllegalArgumentException(
-      "graft-sys requires OPTIONS (kind 'segments|servers|tasks', serveid '...')")
-    k
-  }
+  private def kindOf(options: CaseInsensitiveStringMap): String =
+    graft.Settings.SysKind.in(options).getOrElse(throw new IllegalArgumentException(
+      "graft-sys requires OPTIONS (kind 'segments|servers|tasks', serveid '...')"))
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     SysSchemas.of(kindOf(options))
@@ -165,7 +162,7 @@ class SysDataSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new SysTable(kindOf(opts), opts.get("serveid"))
+    new SysTable(kindOf(opts), graft.Settings.SysServeId.in(opts).orNull)
   }
 }
 

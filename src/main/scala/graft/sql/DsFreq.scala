@@ -40,13 +40,4 @@ object DsFreq {
     */
   def maxError(b: Array[Byte]): Long =
     if (b == null) 0L else heap(b).getMaximumError
-
-  /** Merge two serialized sketches (for folding pre-built blobs). */
-  def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    if (a == null) return b
-    if (b == null) return a
-    val sk = heap(a)
-    sk.merge(heap(b))
-    sk.toByteArray(serde)
-  }
 }

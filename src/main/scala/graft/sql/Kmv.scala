@@ -147,9 +147,6 @@ object KmvFunctions {
     functions.udaf(new KmvBuildAgg(k)).apply(c)
   def kmvMerge(c: Column, k: Int): Column =
     functions.udaf(new KmvMergeAgg(k)).apply(c)
-  def kmvEstimate(c: Column): Column =
-    functions.udf((b: Array[Byte]) =>
-      if (b == null) 0L else Kmv.estimate(b)).apply(c)
   /** The retained hash set as array<bigint> (for exact unpack gates). */
   def kmvHashes(c: Column): Column =
     functions.udf((b: Array[Byte]) =>
@@ -157,7 +154,7 @@ object KmvFunctions {
   /** Theta-sketch intersection estimate of two sketches (deterministic:
     * retained sets and theta are order-independent, so the estimate is
     * reproducible in SQL — unlike random-seeded sketch libraries).
-    * A null sketch intersects to 0, like kmvEstimate's null handling.
+    * A null sketch intersects to 0.
     */
   def kmvIntersect(a: Column, b: Column): Column =
     functions.udf((x: Array[Byte], y: Array[Byte]) =>

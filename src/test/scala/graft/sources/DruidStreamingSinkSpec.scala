@@ -4,9 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.druid.{DruidCommitMessage, DruidStreamingWrite, SegMeta}
+import graft.sources.druid.{DruidCommitMessage, DruidStreamingWrite, SegMeta, WriteSpec}
 import graft.write.SegmentWriter
 
 /** Native streaming SINK (`writeStream.format("druid")`): epochs land
@@ -57,7 +58,7 @@ class DruidStreamingSinkSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(root))
     val schema = StructType(Seq(StructField("__time", LongType)))
     val sink = new DruidStreamingWrite(root, schema,
-      bitmapIndexes = true, granularity = None)
+      WriteSpec.from(CaseInsensitiveStringMap.empty()))
 
     def stage(tag: String): DruidCommitMessage = {
       // mirror the real writers' naming: the epoch token is a
