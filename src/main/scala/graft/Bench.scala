@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import SparkEntry.json
 object Bench {
   /** Canonicalized physical-plan text: expression ids, plan ids, file
     * locations, runtime statistics and UUIDs stripped, so the SAME logical
@@ -89,12 +90,9 @@ object Bench {
       // partial token at the cut so the cut POSITION can't change the hash
       .replaceAll("\\S*\\.\\.\\.", "…")
   }
-  def planHash(df: DataFrame): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(canonicalPlan(df).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-  }
-  private def sha16(s: String): String = {
+  def planHash(df: DataFrame): String = hash16(canonicalPlan(df))
+  /** The first 16 hex digits of `s`'s SHA-256. */
+  private def hash16(s: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
   }
@@ -112,77 +110,29 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = Settings.SfDir.get
-    val cpus = Settings.Cpus.get.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // untruncated explain metadata: the plan fingerprint must hash the
-      // WHOLE filter list, not a string cut at a length that moves with
-      // expression-id digit counts (the instability found when this landed)
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(verify = false)
+    val selected = SparkEntry.selected
     // warm codegen/JIT, the parquet reader, and the exchange path so the
     // first measured query isn't charged for session initialization
     try {
       spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 100)").collect()
       spark.read.parquet(s"$sfDir/region.parquet")
         .groupBy("r_name").count().collect()
-    } catch { case _: Throwable => () } // warm-up is best-effort
+    } catch { case e: Throwable => System.err.println(s"[bench] warm-up failed: $e") }
     // run every query once at the smallest SF to compile its whole-stage
     // codegen / Janino classes outside the timer: rep1-vs-rep2 profiling
     // shows 3-10x first-run JIT cost on the native-expression pipelines,
     // which would otherwise be charged to whichever query runs first
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      selected.foreach { case (name, fn) =>
+        try SparkEntry.timedWrite(fn(spark, warmDir))
+        catch { case e: Throwable => System.err.println(s"[bench] warm-up $name failed: $e") }
       }
-    // local-iteration filter (unset in driver runs → all queries,
-    // all staging, 3 passes)
-    val only = Settings.Only.get
-    // needed(prefixes) = some selected query needs this staged input;
-    // with no filter, everything stages (the driver's invocation)
-    def needed(prefixes: String*): Boolean =
-      only.forall(sel => prefixes.exists(p => sel.exists(_.startsWith(p))))
-    // one-time segment staging (writer) happens OUTSIDE the timed loop:
-    // dr* timings measure scans, not the writer; staging is its own metric.
-    // The seven staging blocks write DISJOINT output dirs and share no
-    // inputs except the source parquet, so they run CONCURRENTLY from a
-    // small pool (guide §2.6 — overlap independent jobs so one block's
-    // task tail back-fills with the next block's work): serial staging
-    // measured 13.1 s at sf0.1/local[32], overlapped 5.6 s. Each block
-    // keeps its own try/catch so one failed staging never blocks the
-    // rest (the old per-block behavior, preserved).
+    // one-time staging (writer) happens OUTSIDE the timed loop: dr*
+    // timings measure scans, not the writer; staging is its own metric
     val s0 = System.nanoTime()
-    val stagingJobs: Seq[(Boolean, () => Any)] = Seq(
-      (needed("dr"),
-        () => graft.queries.DruidQueries.stage(spark, sfDir)),
-      (needed("q30"),
-        () => graft.queries.Relational.stageBucketed(spark, sfDir)),
-      (needed("e3", "e4", "e9", "s12"),
-        () => graft.queries.PipelineQueries.ivfIndexDir(spark, sfDir)),
-      (needed("e5", "e6"),
-        () => graft.queries.PipelineQueries.pqIndexDir(spark, sfDir)),
-      (needed("e8"),
-        () => graft.queries.PipelineQueries.sqIndexDirs(spark, sfDir)),
-      (needed("d21", "d2_", "d18"),
-        () => graft.queries.PipelineQueries.lshBandsDir(spark, sfDir)),
-      // e7's combined index JOINS the ivf and pq halves: its thread
-      // just blocks on their per-map monitors until both are built
-      (needed("e7"),
-        () => graft.queries.PipelineQueries.ivfPqIndexDir(spark, sfDir)))
-    val stagingPool = java.util.concurrent.Executors.newFixedThreadPool(7)
-    try stagingJobs.collect { case (true, job) =>
-      stagingPool.submit(new java.lang.Runnable {
-        def run(): Unit = try { job(); () } catch { case _: Throwable => () }
-      })
-    }.foreach(_.get())
-    finally stagingPool.shutdown()
+    SparkEntry.stage(spark, sfDir, selected.map(_._1).toSet)
     val staging = (System.nanoTime() - s0) / 1e9
     // three timed passes, report the per-query MIN: steady-state
     // latency. A single pass wobbles 20-30% run-to-run from JIT/GC/
@@ -194,16 +144,14 @@ object Bench {
     // a query that THROWS must never report its fail-fast latency as a
     // timing (a crash would read as a 100x win); record it as an error
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // per-query canonical plan fingerprint, captured from the FINAL pass's
-    // executed (post-AQE) plan — the adjudication evidence for bench drift
+    // per-query canonical plan fingerprint, captured on the FINAL pass —
+    // the adjudication evidence for bench drift
     val planHashes = scala.collection.mutable.LinkedHashMap[String, String]()
     def pass(capturePlans: Boolean = false): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
+      selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
         try { val df = fn(spark, sfDir)
-              df.count()
+              SparkEntry.timedWrite(df)
               val dt = (System.nanoTime() - t0) / 1e9
               // hash computation is untimed string work AFTER the clock stops
               if (capturePlans) {
@@ -257,11 +205,9 @@ object Bench {
       k -> (if (errors.contains(k) || all.isEmpty) -1.0 else all.min)
     }
     val ok = results.filter(_._2 >= 0)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v) => s"${json(k)}:$v" }
       .mkString("{", ",", "}")
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    val errJson = errors.map { case (k, v) => s"${json(k)}:${json(v)}" }
       .mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.map(_._2).sum else 0.0
     val total1 = pass1.filterNot(_._2.isNaN).map(_._2).sum
@@ -272,14 +218,14 @@ object Bench {
     val calibJson = calibs.map(c => math.round(c * 10000) / 10000.0)
       .mkString("[", ",", "]")
     val plansJson = planHashes.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val plansDigest = sha16(plansJson)
+      .map { case (k, v) => s"${json(k)}:${json(v)}" }.mkString("{", ",", "}")
+    val plansDigest = hash16(plansJson)
     val planFile = Settings.PlanFile.get
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(planFile),
-      s"""{"sf":${jstr(sfDir)},"calib":$calibJson,"calib_warm":$calib0,"plans_digest":${jstr(plansDigest)},"plans":$plansJson}""" + "\n")
+      s"""{"sf":${json(sfDir)},"calib":$calibJson,"calib_warm":$calib0,"plans_digest":${json(plansDigest)},"plans":$plansJson}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] plan-file write failed: $e") }
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","runs":$nPasses,"policy":"min_of_$nPasses","first_pass_total":$total1,"staging":$staging,"n_failed":${errors.size},"errors":$errJson,"queries":$qs,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","runs":$nPasses,"policy":"min_of_$nPasses","first_pass_total":$total1,"staging":$staging,"n_failed":${errors.size},"errors":$errJson,"queries":$qs,"sf":${json(sfDir)}}"""
     // Standing full-bench artifact: the driver's tail keeps only the
     // last ~2KB of stdout, which truncated round 13's full JSON and
     // emptied the round-over-round PERF comparison (n_common: 0). The
@@ -297,9 +243,9 @@ object Bench {
     // line always fits the tail and stays parseable: total, counts,
     // and the 10 slowest queries.
     val slow = ok.sortBy(-_._2).take(10)
-      .map { case (k, v) => s"\"$k\":${math.round(v * 1000) / 1000.0}" }
+      .map { case (k, v) => s"${json(k)}:${math.round(v * 1000) / 1000.0}" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_failed":${errors.size},"calib":$calibJson,"plans_digest":${jstr(plansDigest)},"planfile":${jstr(planFile)},"benchfile":${jstr(benchFile)},"slowest10":$slow,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_failed":${errors.size},"calib":$calibJson,"plans_digest":${json(plansDigest)},"planfile":${json(planFile)},"benchfile":${json(benchFile)},"slowest10":$slow,"sf":${json(sfDir)}}""")
     spark.stop()
     // loud on stderr but exit 0: the JSON line above IS the artifact,
     // and it already tags every failure (-1 + errors map)

@@ -1,31 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import SparkEntry.json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = Settings.Cpus.get.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // AQE can re-coalesce the final sort's partitions, so
-      // orderBy(...).coalesce(1) would lose the global row order the
-      // oracle compare depends on. Correctness dump prefers determinism.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(verify = true)
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q1,dr39 runs a subset.
-    // Unset (the driver's invocation) runs everything.
-    val only = Settings.Only.get
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter(kv => names.contains(kv._1)))
+    val selected = SparkEntry.selected
+    SparkEntry.stage(spark, sfDir, selected.map(_._1).toSet)
     // Failures must be LOUD: a swallowed exception makes the broken
     // query silently vanish from the driver's correctness file (the
     // round-3 failure mode). Record every failure as a _FAILED marker
@@ -33,8 +17,7 @@ object Verify {
     // and exit nonzero.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try SparkEntry.oracleWrite(fn(spark, sfDir), s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getName}: ${e.getMessage}"
         failures(name) = msg
@@ -42,23 +25,11 @@ object Verify {
         Files.writeString(Paths.get(s"$outDir/$name._FAILED"), msg)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracleJson = SparkEntry.oracleSql
+      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
     spark.stop()
     if (failures.nonEmpty) {

@@ -12,15 +12,6 @@ import graft.Tables
   */
 object DruidQueries extends QuerySet {
 
-  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val tableLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Write `df` (must carry a `__time` timestamp column) as a druid
-    * segment table once per JVM, returning its directory. Locked PER
-    * TABLE (not globally), so `stage` can write distinct tables
-    * concurrently while a given table still writes exactly once.
-    */
   /** Force-kill the PRIOR bench run's tombstoned generation in a
     * bench-PRIVATE staging root, right after this run's overwrite
     * commits. A fresh JVM re-overwrites every fixed /tmp staging path;
@@ -38,21 +29,18 @@ object DruidQueries extends QuerySet {
     catch { case _: Throwable => 0 }
   }
 
+  /** Write `df` (must carry a `__time` timestamp column) as a druid
+    * segment table once per JVM, returning its directory.
+    */
   private def segTable(name: String, dir: String, df: => DataFrame,
                        options: Map[String, String] = Map.empty): String = {
     val out = s"/tmp/graft_segments/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$name"
-    if (!written.contains(out)) {
-      val lock = tableLocks.computeIfAbsent(out, _ => new Object)
-      lock.synchronized {
-        if (!written.contains(out)) {
-          val w = df.write.format("druid").mode("overwrite")
-          options.foldLeft(w) { case (a, (k, v)) => a.option(k, v) }.save(out)
-          reclaimStagedTrash(out)
-          written.add(out)
-        }
-      }
+    Staging.once(out) {
+      val w = df.write.format("druid").mode("overwrite")
+      options.foldLeft(w) { case (a, (k, v)) => a.option(k, v) }.save(out)
+      reclaimStagedTrash(out)
+      out
     }
-    out
   }
 
   private def eventsSegPath(s: SparkSession, dir: String): String =
@@ -372,23 +360,20 @@ object DruidQueries extends QuerySet {
     * appends WITH it — old segments must read the new column as null.
     */
   private def evoSeg(s: SparkSession, dir: String): DataFrame = {
-    val path = synchronized {
-      val out = s"/tmp/graft_segments/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_evo"
-      if (!written.contains(out)) {
-        val ev = Tables.events(s, dir)
-        val cut = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-        ev.filter(col("ts") < cut)
-          .select(col("ts").as("__time"), col("event_type"), col("value"))
-          .repartition(2)
-          .write.format("druid").mode("overwrite").save(out)
-        ev.filter(col("ts") >= cut)
-          .select(col("ts").as("__time"), col("event_type"), col("value"),
-                  col("props"))
-          .repartition(2)
-          .write.format("druid").mode("append").save(out)
-        reclaimStagedTrash(out)
-        written.add(out)
-      }
+    val out = s"/tmp/graft_segments/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_evo"
+    val path = Staging.once(out) {
+      val ev = Tables.events(s, dir)
+      val cut = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+      ev.filter(col("ts") < cut)
+        .select(col("ts").as("__time"), col("event_type"), col("value"))
+        .repartition(2)
+        .write.format("druid").mode("overwrite").save(out)
+      ev.filter(col("ts") >= cut)
+        .select(col("ts").as("__time"), col("event_type"), col("value"),
+                col("props"))
+        .repartition(2)
+        .write.format("druid").mode("append").save(out)
+      reclaimStagedTrash(out)
       out
     }
     s.read.format("druid").load(path)
@@ -412,46 +397,6 @@ object DruidQueries extends QuerySet {
     s.read.format("druid").load(path)
   }
 
-  /** Force all one-time segment-staging writes. Bench calls this before
-    * its timed loop so dr* timings measure scans, not the writer.
-    */
-  def stage(s: SparkSession, dir: String): Unit = {
-    // each staged table is independent (own output dir, own catalog
-    // keys), so write them CONCURRENTLY — Spark's scheduler interleaves
-    // the jobs and the per-table segTable locks keep exactly-once.
-    // Serial staging left most of local[32] idle (the per-table writes
-    // are small); 8-wide cut builder-local staging roughly in half.
-    val jobs: Seq[() => Any] = Seq(
-      () => eventsSeg(s, dir), () => lineitemSeg(s, dir),
-      () => docsMvSeg(s, dir), () => hllSeg(s, dir),
-      () => histSeg(s, dir), () => kmvSeg(s, dir),
-      () => lineitemClusteredSeg(s, dir), () => custClusteredSeg(s, dir),
-      () => eventsDailySeg(s, dir), () => spjCatalog(s, dir),
-      () => eventsRollupSeg(s, dir), () => ordersZstdSeg(s, dir),
-      () => evoSeg(s, dir), () => delSeg(s, dir),
-      () => dsHllSeg(s, dir), () => dsThetaSeg(s, dir),
-      () => custFrontCodedSeg(s, dir), () => docsMvFcSeg(s, dir),
-      () => dsQuantilesSeg(s, dir), () => eventsJsonSeg(s, dir))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futures = jobs.map(j =>
-        pool.submit(new java.util.concurrent.Callable[Any] {
-          def call(): Any = j()
-        }))
-      try futures.foreach(_.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          // stop the in-flight staging BEFORE propagating — otherwise
-          // the background writes keep running into the caller's timed
-          // loop; propagate the ORIGINAL failure, not the wrapper
-          futures.foreach(_.cancel(true))
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          throw Option(e.getCause).getOrElse(e)
-      }
-    } finally pool.shutdown()
-  }
-
   /** A day-granular events table under its own catalog, staged once per
     * JVM, with the UTC day 2024-01-03 dropped via SQL `DELETE FROM` —
     * the metadata-only whole-segment delete path (SupportsDelete; the
@@ -459,30 +404,29 @@ object DruidQueries extends QuerySet {
     * Re-running the DELETE is a no-op: the contained segments are gone
     * and every survivor sits fully outside the range.
     */
-  private def delSeg(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = s"/tmp/graft_del/$tag"
-      val cat = s"graftdel_$tag"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.druid.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      if (!written.contains(root)) {
-        Tables.events(s, dir)
-          .select(col("ts").as("__time"), col("event_type"),
-                  col("user_id"), col("value"))
-          .repartition(4).write.format("druid")
-          .option("segmentGranularity", "day").mode("overwrite")
-          .save(s"$root/events_del")
-        s.sql(s"DELETE FROM $cat.events_del WHERE " +
-          "__time >= TIMESTAMP '2024-01-03 00:00:00' AND " +
-          "__time < TIMESTAMP '2024-01-04 00:00:00'")
-        // prior run's overwrite trash + this run's DELETE-dropped day
-        reclaimStagedTrash(s"$root/events_del")
-        written.add(root)
-      }
-      s.read.format("druid").load(s"$root/events_del")
+  private def delSeg(s: SparkSession, dir: String): DataFrame = {
+    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = s"/tmp/graft_del/$tag"
+    val cat = s"graftdel_$tag"
+    s.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.druid.GraftCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    Staging.once(root) {
+      Tables.events(s, dir)
+        .select(col("ts").as("__time"), col("event_type"),
+                col("user_id"), col("value"))
+        .repartition(4).write.format("druid")
+        .option("segmentGranularity", "day").mode("overwrite")
+        .save(s"$root/events_del")
+      s.sql(s"DELETE FROM $cat.events_del WHERE " +
+        "__time >= TIMESTAMP '2024-01-03 00:00:00' AND " +
+        "__time < TIMESTAMP '2024-01-04 00:00:00'")
+      // prior run's overwrite trash + this run's DELETE-dropped day
+      reclaimStagedTrash(s"$root/events_del")
+      root
     }
+    s.read.format("druid").load(s"$root/events_del")
+  }
 
   /** Two day-granular tables under one GraftCatalog root (events and
     * per-ts counts) plus hour-granular twins over the first two days,
@@ -490,41 +434,62 @@ object DruidQueries extends QuerySet {
     * `s.table("<cat>.events")` resolves — the storage-partitioned-join
     * setup (dr19 day-keyed, dr25 hour-keyed).
     */
-  private def spjCatalog(s: SparkSession, dir: String): String =
-    synchronized {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = s"/tmp/graft_spj/$tag"
-      val cat = s"graftq_$tag"
-      if (!written.contains(root)) {
-        val ev = Tables.events(s, dir)
-          .select(col("ts").as("__time"), col("event_type"), col("value"))
-        ev.repartition(4).write.format("druid")
-          .option("segmentGranularity", "day").mode("overwrite")
-          .save(s"$root/events")
-        ev.groupBy(col("__time")).agg(count(lit(1)).as("n_at_ts"))
-          .repartition(4).write.format("druid")
-          .option("segmentGranularity", "day").mode("overwrite")
-          .save(s"$root/ts_counts")
-        // hour-granularity twins (first two days, 48 segments each):
-        // the scan reports hours(__time) KeyGroupedPartitioning here
-        val ev2 = ev.filter(col("__time") < lit("2024-01-03").cast("timestamp"))
-        ev2.repartition(4).write.format("druid")
-          .option("segmentGranularity", "hour").mode("overwrite")
-          .save(s"$root/events_h")
-        ev2.groupBy(col("__time")).agg(count(lit(1)).as("n_at_ts"))
-          .repartition(4).write.format("druid")
-          .option("segmentGranularity", "hour").mode("overwrite")
-          .save(s"$root/ts_counts_h")
-        Seq("events", "ts_counts", "events_h", "ts_counts_h")
-          .foreach(t => reclaimStagedTrash(s"$root/$t"))
-        written.add(root)
-      }
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.druid.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      cat
+  private def spjCatalog(s: SparkSession, dir: String): String = {
+    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = s"/tmp/graft_spj/$tag"
+    val cat = s"graftq_$tag"
+    Staging.once(root) {
+      val ev = Tables.events(s, dir)
+        .select(col("ts").as("__time"), col("event_type"), col("value"))
+      ev.repartition(4).write.format("druid")
+        .option("segmentGranularity", "day").mode("overwrite")
+        .save(s"$root/events")
+      ev.groupBy(col("__time")).agg(count(lit(1)).as("n_at_ts"))
+        .repartition(4).write.format("druid")
+        .option("segmentGranularity", "day").mode("overwrite")
+        .save(s"$root/ts_counts")
+      // hour-granularity twins (first two days, 48 segments each):
+      // the scan reports hours(__time) KeyGroupedPartitioning here
+      val ev2 = ev.filter(col("__time") < lit("2024-01-03").cast("timestamp"))
+      ev2.repartition(4).write.format("druid")
+        .option("segmentGranularity", "hour").mode("overwrite")
+        .save(s"$root/events_h")
+      ev2.groupBy(col("__time")).agg(count(lit(1)).as("n_at_ts"))
+        .repartition(4).write.format("druid")
+        .option("segmentGranularity", "hour").mode("overwrite")
+        .save(s"$root/ts_counts_h")
+      Seq("events", "ts_counts", "events_h", "ts_counts_h")
+        .foreach(t => reclaimStagedTrash(s"$root/$t"))
+      root
     }
+    s.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.druid.GraftCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    cat
+  }
+
+  /** Every segment table and catalog the dr queries read. */
+  def staging: Seq[StageJob] = Seq(
+    StageJob("events", eventsSeg), StageJob("events_ver", eventsVerSeg),
+    StageJob("lineitem", lineitemSeg), StageJob("docs_mv", docsMvSeg),
+    StageJob("events_json", eventsJsonSeg),
+    StageJob("events_nested", eventsNestedSeg),
+    StageJob("events_nested_arr", eventsNestedArrSeg),
+    StageJob("hll", hllSeg), StageJob("dshll", dsHllSeg),
+    StageJob("dstheta", dsThetaSeg), StageJob("dstuple", dsTupleSeg),
+    StageJob("dsquant", dsQuantilesSeg), StageJob("hist", histSeg),
+    StageJob("kmv", kmvSeg),
+    StageJob("lineitem_clustered", lineitemClusteredSeg),
+    StageJob("customer_clustered", custClusteredSeg),
+    StageJob("events_daily", eventsDailySeg),
+    StageJob("orders_zstd", ordersZstdSeg),
+    StageJob("customer_fc", custFrontCodedSeg),
+    StageJob("docs_mv_fc", docsMvFcSeg), StageJob("evo", evoSeg),
+    StageJob("events_rollup", eventsRollupSeg),
+    StageJob("events_shard", eventsShardedSeg),
+    StageJob("events_concise", eventsConciseSeg),
+    StageJob("del", delSeg), StageJob("spj", spjCatalog))
 
   def all: Seq[Q] = Seq(
 

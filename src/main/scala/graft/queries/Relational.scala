@@ -1094,16 +1094,14 @@ object Relational extends QuerySet {
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
   )
 
-  private val rollupDone = scala.collection.mutable.Set[String]()
-
   /** Daily events rollup (event_type dim; sum/min/max of value plus
     * count) written once per JVM and scale dir — the materialized
     * half of q36's rollup routing. Lives under /tmp.
     */
-  def stageRollup(s: SparkSession, dir: String): String = synchronized {
+  def stageRollup(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val out = s"/tmp/graft_rollup/$tag/events_daily"
-    if (!rollupDone.contains(tag)) {
+    Staging.once(out) {
       graft.sql.GraftExtensions.install(s) // ds_freq for the freq metric
       Tables.events(s, dir)
         .groupBy(expr("date_trunc('DAY', ts)").as("ts"), col("event_type"))
@@ -1142,39 +1140,38 @@ object Relational extends QuerySet {
              // spec-gated with rank-error tolerance, no exact regime)
              expr("tdigest_agg(value, 100)").as("value_td"))
         .write.mode("overwrite").parquet(out)
-      rollupDone += tag
+      out
     }
-    out
   }
-
-  private val bucketedDone = scala.collection.mutable.Set[String]()
 
   /** Write lineitem + orders as parquet tables bucketed by orderkey
     * (8 buckets, one file per bucket via a matching repartition) once
     * per JVM and scale dir; returns the two table names. External-table
     * paths live under /tmp so nothing touches the repo or testdata.
     */
-  def stageBucketed(s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+  def stageBucketed(s: SparkSession, dir: String): (String, String) = {
+    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    Staging.once(s"/tmp/graft_bucketed/$tag") {
       val (lt, ot) = (s"li_bkt_$tag", s"ord_bkt_$tag")
-      if (!bucketedDone.contains(tag)) {
-        Tables.load(s, dir, "lineitem")
-          .select("l_orderkey", "l_extendedprice", "l_discount")
-          .repartition(8, col("l_orderkey"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"/tmp/graft_bucketed/$tag/lineitem")
-          .saveAsTable(lt)
-        Tables.load(s, dir, "orders")
-          .select("o_orderkey", "o_orderpriority")
-          .repartition(8, col("o_orderkey"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"/tmp/graft_bucketed/$tag/orders")
-          .saveAsTable(ot)
-        bucketedDone += tag
-      }
+      Tables.load(s, dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+        .repartition(8, col("l_orderkey"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"/tmp/graft_bucketed/$tag/lineitem")
+        .saveAsTable(lt)
+      Tables.load(s, dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .repartition(8, col("o_orderkey"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"/tmp/graft_bucketed/$tag/orders")
+        .saveAsTable(ot)
       (lt, ot)
     }
+  }
+
+  /** The bucketed tables (q30) and the rollup (q36-q39, q42). */
+  def staging: Seq[StageJob] = Seq(
+    StageJob("bucketed", stageBucketed), StageJob("rollup", stageRollup))
 }

@@ -17,7 +17,6 @@ import graft.streaming.StreamingOps
   */
 object StreamingQueries extends QuerySet {
 
-  private val staged = scala.collection.mutable.Map[String, String]()
   private val nameCounter = new AtomicInteger(0)
 
   /** Recursive delete of a possibly-stale destination/checkpoint dir. */
@@ -61,16 +60,16 @@ object StreamingQueries extends QuerySet {
     s"/tmp/graft_stream/${kind}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
 
   /** Stage events as a streaming drop directory (once per JVM). */
-  private def stageDir(s: SparkSession, dir: String): String = synchronized {
-    staged.getOrElseUpdate(dir, {
-      val out = stagedPath(dir, "events")
+  private def stageDir(s: SparkSession, dir: String): String = {
+    val out = stagedPath(dir, "events")
+    Staging.once(out) {
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("user_id"),
                 col("value"))
         .repartition(4)
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
   }
 
   /** Stage events as a TIME-ORDERED streaming drop directory: range
@@ -80,9 +79,9 @@ object StreamingQueries extends QuerySet {
     * realistic arrival pattern a production watermark assumes. Once per
     * JVM.
     */
-  private def stageOrderedDir(s: SparkSession, dir: String): String = synchronized {
-    staged.getOrElseUpdate(s"$dir#ordered", {
-      val out = stagedPath(dir, "events_bytime")
+  private def stageOrderedDir(s: SparkSession, dir: String): String = {
+    val out = stagedPath(dir, "events_bytime")
+    Staging.once(out) {
       // 4 range files = 4 micro-batches: enough watermark advances to
       // evict state mid-run (the realism being demonstrated) without
       // paying the stream-stream join's per-batch fixed cost 10x
@@ -98,32 +97,68 @@ object StreamingQueries extends QuerySet {
         f.setLastModified(1700000000000L + i * 60000L)
       }
       out
-    })
+    }
   }
 
   /** Stage embeddings as a streaming drop directory (once per JVM). */
-  private def stageEmbDir(s: SparkSession, dir: String): String = synchronized {
-    staged.getOrElseUpdate(s"$dir#embeddings", {
-      val out = stagedPath(dir, "embeddings")
+  private def stageEmbDir(s: SparkSession, dir: String): String = {
+    val out = stagedPath(dir, "embeddings")
+    Staging.once(out) {
       Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .repartition(4)
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
   }
 
   /** Stage documents as a streaming drop directory (once per JVM). */
-  private def stageDocsDir(s: SparkSession, dir: String): String = synchronized {
-    staged.getOrElseUpdate(s"$dir#documents", {
-      val out = stagedPath(dir, "documents")
+  private def stageDocsDir(s: SparkSession, dir: String): String = {
+    val out = stagedPath(dir, "documents")
+    Staging.once(out) {
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
         .repartition(4)
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
   }
+
+  /** Stage events as a segment table the druid stream source tails
+    * (s7, s8; once per JVM).
+    */
+  private def stageTailDir(s: SparkSession, dir: String): String = {
+    val out = stagedPath(dir, "tailsrc")
+    Staging.once(out) {
+      Tables.events(s, dir)
+        .select(col("ts").as("__time"), col("event_type"), col("value"))
+        .repartition(4)
+        .write.format("druid").mode("overwrite").save(out)
+      DruidQueries.reclaimStagedTrash(out)
+      out
+    }
+  }
+
+  /** Stage events with their JSON props as a streaming drop directory
+    * (s14, s15; once per JVM).
+    */
+  private def stageNestedDir(s: SparkSession, dir: String): String = {
+    val out = stagedPath(dir, "nestedsrc")
+    Staging.once(out) {
+      Tables.events(s, dir)
+        .select(col("ts"), col("event_type"), col("user_id"),
+                col("value"), col("props"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(out)
+      out
+    }
+  }
+
+  /** Every drop directory and segment table the streams read. */
+  def staging: Seq[StageJob] = Seq(
+    StageJob("events", stageDir), StageJob("events_bytime", stageOrderedDir),
+    StageJob("embeddings", stageEmbDir), StageJob("documents", stageDocsDir),
+    StageJob("tailsrc", stageTailDir), StageJob("nestedsrc", stageNestedDir))
 
   def all: Seq[Q] = Seq(
 
@@ -191,17 +226,7 @@ object StreamingQueries extends QuerySet {
     // mode keeps the final table micro-batch-order independent.
     Q("s7_stream_druid_tail",
       (s, dir) => {
-        val seg = synchronized {
-          staged.getOrElseUpdate(s"$dir#tailsrc", {
-            val out = stagedPath(dir, "tailsrc")
-            Tables.events(s, dir)
-              .select(col("ts").as("__time"), col("event_type"), col("value"))
-              .repartition(4)
-              .write.format("druid").mode("overwrite").save(out)
-            DruidQueries.reclaimStagedTrash(out)
-            out
-          })
-        }
+        val seg = stageTailDir(s, dir)
         val table = s"s7_out_${nameCounter.incrementAndGet()}"
         // state is event_type-cardinality (5 rows): without the width
         // override this was the one stateful stream left running at the
@@ -395,17 +420,7 @@ object StreamingQueries extends QuerySet {
     // per-epoch work is bounded by new segments, never the table.
     Q("s8_stream_druid_relay",
       (s, dir) => {
-        val seg = synchronized {
-          staged.getOrElseUpdate(s"$dir#tailsrc", {
-            val out = stagedPath(dir, "tailsrc")
-            Tables.events(s, dir)
-              .select(col("ts").as("__time"), col("event_type"), col("value"))
-              .repartition(4)
-              .write.format("druid").mode("overwrite").save(out)
-            DruidQueries.reclaimStagedTrash(out)
-            out
-          })
-        }
+        val seg = stageTailDir(s, dir)
         val n = nameCounter.incrementAndGet()
         val out = stagedPath(dir, s"relay_$n")
         Seq(out, s"${out}_cp").foreach(deleteDir)
@@ -679,17 +694,7 @@ object StreamingQueries extends QuerySet {
     // pushdown, here over streaming-written segments).
     Q("s14_stream_nested_ingest",
       (s, dir) => {
-        val in = synchronized {
-          staged.getOrElseUpdate(s"$dir#nestedsrc", {
-            val out = stagedPath(dir, "nestedsrc")
-            Tables.events(s, dir)
-              .select(col("ts"), col("event_type"), col("user_id"),
-                      col("value"), col("props"))
-              .repartition(4)
-              .write.mode("overwrite").parquet(out)
-            out
-          })
-        }
+        val in = stageNestedDir(s, dir)
         val schema = s.read.parquet(in).schema
         val n = nameCounter.incrementAndGet()
         val out = stagedPath(dir, s"nested_$n")
@@ -744,17 +749,7 @@ object StreamingQueries extends QuerySet {
     // oracle-exact, identical to q42's batch/routed value.
     Q("s15_stream_tuple_sketch",
       (s, dir) => {
-        val in = synchronized {
-          staged.getOrElseUpdate(s"$dir#nestedsrc", {
-            val out = stagedPath(dir, "nestedsrc")
-            Tables.events(s, dir)
-              .select(col("ts"), col("event_type"), col("user_id"),
-                      col("value"), col("props"))
-              .repartition(4)
-              .write.mode("overwrite").parquet(out)
-            out
-          })
-        }
+        val in = stageNestedDir(s, dir)
         val schema = s.read.parquet(in).schema
         val table = s"s15_out_${nameCounter.incrementAndGet()}"
         val q = withStatePartitions(s, 4) {

@@ -14,7 +14,7 @@ import graft.format._
   *
   * The reference decodes whole columns into one batch on a single
   * thread (src/datafusion_ext/execution_plan.rs:95-116); here every
-  * split streams batchSize rows at a time with one cached block per
+  * split streams `DruidScan.BatchSize` rows at a time with one cached block per
   * column — memory per task is O(batch + one block per column).
   */
 class DruidPartitionReaderFactory(required: StructType)
@@ -420,9 +420,9 @@ class DruidColumnarReader(part: DruidInputPartition, required: StructType)
 
   private var pos = part.rowStart // sequential cursor (selected == null)
   private var cursor = 0          // cursor into selected
-  private val rowIdx = new Array[Int](part.batchSize)
+  private val rowIdx = new Array[Int](DruidScan.BatchSize)
   private val vectors: Array[OnHeapColumnVector] =
-    required.fields.map(f => new OnHeapColumnVector(part.batchSize, f.dataType))
+    required.fields.map(f => new OnHeapColumnVector(DruidScan.BatchSize, f.dataType))
   private var batch: ColumnarBatch = _
   // keep the scan's reader lease alive while this split reads — a
   // cheap clock check per batch, one small file write per half-ttl
@@ -431,8 +431,8 @@ class DruidColumnarReader(part: DruidInputPartition, required: StructType)
   override def next(): Boolean = {
     leaseRenewer.foreach(_.maybeRenew())
     val n =
-      if (selected == null) math.min(part.batchSize, part.rowEnd - pos)
-      else math.min(part.batchSize, selected.length - cursor)
+      if (selected == null) math.min(DruidScan.BatchSize, part.rowEnd - pos)
+      else math.min(DruidScan.BatchSize, selected.length - cursor)
     if (n <= 0) return false
     var i = 0
     if (selected == null) {

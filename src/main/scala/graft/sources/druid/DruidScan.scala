@@ -472,7 +472,7 @@ object DruidScanBuilder {
 }
 
 final case class DruidInputPartition(dir: String, rowStart: Int, rowEnd: Int,
-                                     limit: Int, batchSize: Int,
+                                     limit: Int,
                                      dimFilters: Map[String, Seq[String]],
                                      notNullCols: Set[String] = Set.empty,
                                      isNullCols: Set[String] = Set.empty,
@@ -1026,7 +1026,7 @@ class DruidScan(root: String, required: StructType,
       val key = alignment.map(g => DruidScan.bucketKey(g, m.startMs)).getOrElse(0)
       (0 until capped by per).map { start =>
         DruidInputPartition(m.dir, start, math.min(capped, start + per), limit,
-          DruidScan.BatchSize, dimFilters, notNullCols, isNullCols, prefixFilters,
+          dimFilters, notNullCols, isNullCols, prefixFilters,
           patternFilters, key, orFilters, boundFilters, mvContains,
           nestedEq, lease)
       }

@@ -15,7 +15,9 @@ class BenchPlanHashSpec extends AnyFunSuite {
 
   private def hashOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
-    df.count() // finalize the adaptive plan, exactly as Bench does
+    // run it once; the hash reads the DataFrame's own analyzed and
+    // optimized plans, which no terminal (count, Bench's noop write) moves
+    df.count()
     Bench.planHash(df)
   }
 
@@ -115,8 +117,8 @@ class BenchPlanHashSpec extends AnyFunSuite {
     // Aggregator/typed-UDAF toString leaks `ClassName@1a2b3c4d` into
     // plan text, and the identity differs per JVM — 15 sketch/UDAF
     // queries hashed differently across two bench runs until the
-    // canonicalizer stripped it (found by diffing two PlanDumpMain
-    // runs; dr7's ObjectHashAggregate carried HllMergeAgg@<identity>)
+    // canonicalizer stripped it (found by diffing two canonical-text
+    // dumps; dr7's ObjectHashAggregate carried HllMergeAgg@<identity>)
     val df = SparkEntry.queries("dr7_hll_sketch")(spark, sf)
     df.count()
     val canon = Bench.canonicalPlan(df)

@@ -34,7 +34,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(dir).head
     val seg = graft.format.DruidSegment.open(segDir)
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, 4096, Map.empty, mvContains = clauses)
+      segDir, 0, N, -1, Map.empty, mvContains = clauses)
     Option(graft.sources.druid.RowSelectionProbe.build(seg, part)).map(_.toSeq)
   }
 
@@ -67,7 +67,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(out).head
     val seg = graft.format.DruidSegment.open(segDir)
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, 500, -1, 4096, Map.empty,
+      segDir, 0, 500, -1, Map.empty,
       mvContains = Seq("tags" -> Seq("a2")))
     assert(graft.sources.druid.RowSelectionProbe.build(seg, part) == null)
   }
@@ -96,7 +96,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(out).head
     val seg = graft.format.DruidSegment.open(segDir)
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, 1000, -1, 4096, Map.empty,
+      segDir, 0, 1000, -1, Map.empty,
       mvContains = Seq("tags" -> Seq("b1")))
     val got = Option(graft.sources.druid.RowSelectionProbe.build(seg, part))
     assert(got.isDefined)
@@ -109,7 +109,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val seg = graft.format.DruidSegment.open(segDir)
     // lexicographic ["a1", "a3"]: contiguous dictionary range
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, 4096, Map.empty,
+      segDir, 0, N, -1, Map.empty,
       boundFilters = Map("tags" -> Seq(graft.sources.druid.DimBound(
         "lexicographic", Some("a1"), lowerStrict = false,
         Some("a3"), upperStrict = false))))
@@ -121,7 +121,7 @@ class MvBitmapSpec extends AnyFunSuite {
     })
     // strlen ordering rides the comparator path on the MV dictionary
     val part2 = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, 4096, Map.empty,
+      segDir, 0, N, -1, Map.empty,
       boundFilters = Map("tags" -> Seq(graft.sources.druid.DimBound(
         "strlen", Some("b0"), lowerStrict = false, None,
         upperStrict = false))))

@@ -40,7 +40,7 @@ class NestedPushdownSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(dir).head
     val seg = graft.format.DruidSegment.open(segDir)
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, 4096, Map.empty, nestedEq = clauses)
+      segDir, 0, N, -1, Map.empty, nestedEq = clauses)
     Option(graft.sources.druid.RowSelectionProbe.build(seg, part)).map(_.toSeq)
   }
 
@@ -187,7 +187,7 @@ class NestedPushdownSpec extends AnyFunSuite {
       val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(aDir).head
       val seg = graft.format.DruidSegment.open(segDir)
       val part = graft.sources.druid.DruidInputPartition(
-        segDir, 0, M, -1, 4096, Map.empty,
+        segDir, 0, M, -1, Map.empty,
         nestedEq = Seq(("props", path, vs)))
       Option(graft.sources.druid.RowSelectionProbe.build(seg, part)).map(_.toSeq)
     }

@@ -32,7 +32,7 @@ class NullSkipSpec extends AnyFunSuite {
     val seg = graft.format.DruidSegment.open(
       graft.sources.druid.DruidTableUtil.discoverSegments(dir).head)
     val part = graft.sources.druid.DruidInputPartition(
-      seg.dir.toString, 0, 1000, -1, 4096, Map.empty, Set("v"))
+      seg.dir.toString, 0, 1000, -1, Map.empty, Set("v"))
     val sel = graft.sources.druid.RowSelectionProbe.build(seg, part)
     assert(sel != null && sel.length == 100)
 

@@ -94,7 +94,7 @@ class PrefixPushdownSpec extends AnyFunSuite {
 
     def sel(f: org.apache.spark.sql.sources.Filter): Seq[Int] = {
       val part = graft.sources.druid.DruidInputPartition(
-        segDir, 0, rows.length, -1, 4096, Map.empty,
+        segDir, 0, rows.length, -1, Map.empty,
         orFilters = Seq(f))
       Option(graft.sources.druid.RowSelectionProbe.build(seg, part))
         .map(_.toSeq).getOrElse(Seq.tabulate(rows.length)(identity))
@@ -145,7 +145,7 @@ class PrefixPushdownSpec extends AnyFunSuite {
     val seg = graft.format.DruidSegment.open(segDir)
 
     def sel(col: String, b: DimBound): Seq[Int] = {
-      val part = DruidInputPartition(segDir, 0, rows.length, -1, 4096,
+      val part = DruidInputPartition(segDir, 0, rows.length, -1,
         Map.empty, boundFilters = Map(col -> Seq(b)))
       Option(RowSelectionProbe.build(seg, part))
         .map(_.toSeq).getOrElse(Seq.tabulate(rows.length)(identity))
