@@ -28,17 +28,16 @@ object Bench {
     * The analyzed plan carries the full declared query structure —
     * a changed query definition, a new join, a different aggregate
     * all move the hash; the appended scan descriptions carry the
-    * pushdown state (dimFilters/bounds/prefix/limit/aggregates), so
+    * pushdown state (the pushed predicates, limit, aggregates), so
     * a LOST PUSHDOWN moves it too. Optimizer/physical strategy
     * internals are exonerated by design — at bench time their
     * legitimate nondeterminism is noise, and their regressions
     * surface in the timings the fingerprint adjudicates. */
   def canonicalPlan(df: DataFrame): String = {
     val qe = df.queryExecution
-    // the pushdown STATE (dimFilters/boundFilters/prefix/limit/
-    // aggregates) lives in the Scan's description on the optimized
-    // plan — append it per scan or a lost pushdown would not move
-    // the hash
+    // the pushdown STATE (pushed predicates, limit, aggregates) lives
+    // in the Scan's description on the optimized plan — append it per
+    // scan or a lost pushdown would not move the hash
     val scans = qe.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan.description()

@@ -3,6 +3,84 @@ package graft.format
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
+/** The dictionary-and-bitmap face both string column shapes share
+  * (single-value [[StringColumn]], multi-value [[StringMultiColumn]]):
+  * a dictionary sorted in unsigned UTF-8 byte order with null first,
+  * and optional per-value row bitmaps. For a multi-value column a
+  * value's bitmap marks the rows whose array CONTAINS it.
+  */
+trait DictionaryIndex {
+  def dictionary: StringDict
+  def bitmaps: Option[GenericIndexed]
+  /** Rows of dictionary entry `dictId` (requires bitmap indexes). */
+  def bitmapFor(dictId: Int): Option[org.roaringbitmap.buffer.ImmutableRoaringBitmap]
+
+  /** Binary-search a value in the sorted dictionary; -1 if absent.
+    * Order is unsigned UTF-8 byte order with null first — what Druid
+    * itself uses (UTF-16 String order differs for supplementary chars).
+    */
+  def dictIdOf(value: String): Int = {
+    val target = value.getBytes("UTF-8")
+    val n = dictionary.numElements
+    var lo = 0
+    var hi = n - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val b = dictionary.bytesAt(mid)
+      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, target)
+      if (cmp == 0) return mid
+      else if (cmp < 0) lo = mid + 1
+      else hi = mid - 1
+    }
+    -1
+  }
+
+  /** Dictionary id range [lo, hi) of values starting with `prefix`.
+    * The dictionary is UTF-8-byte sorted, so the prefix set is exactly
+    * the contiguous interval of entries >= prefix whose first
+    * prefix-many bytes match (null sorts first and never matches).
+    */
+  def dictIdRangeForPrefix(prefix: String): (Int, Int) = {
+    val p = prefix.getBytes("UTF-8")
+    val n = dictionary.numElements
+    var lo = 0
+    var hi = n
+    while (lo < hi) { // first id with bytes >= p
+      val mid = (lo + hi) >>> 1
+      val b = dictionary.bytesAt(mid)
+      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, p)
+      if (cmp < 0) lo = mid + 1 else hi = mid
+    }
+    var end = lo
+    while (end < n && {
+      val b = dictionary.bytesAt(end)
+      b != null && b.length >= p.length &&
+        java.util.Arrays.equals(b, 0, p.length, p, 0, p.length)
+    }) end += 1
+    (lo, end)
+  }
+
+  /** First dictionary id whose bytes compare >= `key` (or > `key`
+    * when `strict`) in unsigned UTF-8 order. Nulls sort first and
+    * never qualify, so the returned id is always past them. A
+    * lexicographic bound therefore selects the CONTIGUOUS id range
+    * [dictIdBound(lower, lowerStrict), dictIdBound(upper, !upperStrict))
+    * — O(log dictionary), the prefix-range trick generalized.
+    */
+  def dictIdBound(key: Array[Byte], strict: Boolean): Int = {
+    val n = dictionary.numElements
+    var lo = 0
+    var hi = n
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      val b = dictionary.bytesAt(mid)
+      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, key)
+      if (if (strict) cmp <= 0 else cmp < 0) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+}
+
 /** Dictionary-encoded string column.
   *
   * Layout (reference src/column/string.rs:14-44):
@@ -19,7 +97,8 @@ import java.nio.ByteBuffer
   * ColumnVector — per-row work is an int copy, and equality predicates
   * can be evaluated against the dictionary once per segment.
   */
-final class StringColumn(buf: ByteBuffer, base: Int, end: Int = -1) {
+final class StringColumn(buf: ByteBuffer, base: Int, end: Int = -1)
+    extends DictionaryIndex {
   private val version = buf.get(base) & 0xff
   private val dictBase = version match {
     case 0x00 => base + 1
@@ -90,71 +169,6 @@ final class StringColumn(buf: ByteBuffer, base: Int, end: Int = -1) {
         case t => fail(s"bitmap $dictId: bad type byte $t")
       }
     }
-
-  /** Binary-search a value in the sorted dictionary; -1 if absent.
-    * Order is unsigned UTF-8 byte order with null first — what Druid
-    * itself uses (UTF-16 String order differs for supplementary chars).
-    */
-  def dictIdOf(value: String): Int = {
-    val target = value.getBytes("UTF-8")
-    val n = dictionary.numElements
-    var lo = 0
-    var hi = n - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val b = dictionary.bytesAt(mid)
-      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, target)
-      if (cmp == 0) return mid
-      else if (cmp < 0) lo = mid + 1
-      else hi = mid - 1
-    }
-    -1
-  }
-
-  /** Dictionary id range [lo, hi) of values starting with `prefix`.
-    * The dictionary is UTF-8-byte sorted, so the prefix set is exactly
-    * the contiguous interval of entries >= prefix whose first
-    * prefix-many bytes match (null sorts first and never matches).
-    */
-  def dictIdRangeForPrefix(prefix: String): (Int, Int) = {
-    val p = prefix.getBytes("UTF-8")
-    val n = dictionary.numElements
-    var lo = 0
-    var hi = n
-    while (lo < hi) { // first id with bytes >= p
-      val mid = (lo + hi) >>> 1
-      val b = dictionary.bytesAt(mid)
-      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, p)
-      if (cmp < 0) lo = mid + 1 else hi = mid
-    }
-    var end = lo
-    while (end < n && {
-      val b = dictionary.bytesAt(end)
-      b != null && b.length >= p.length &&
-        java.util.Arrays.equals(b, 0, p.length, p, 0, p.length)
-    }) end += 1
-    (lo, end)
-  }
-
-  /** First dictionary id whose bytes compare >= `key` (or > `key`
-    * when `strict`) in unsigned UTF-8 order. Nulls sort first and
-    * never qualify, so the returned id is always past them. A
-    * lexicographic bound therefore selects the CONTIGUOUS id range
-    * [dictIdBound(lower, lowerStrict), dictIdBound(upper, !upperStrict))
-    * — O(log dictionary), the prefix-range trick generalized.
-    */
-  def dictIdBound(key: Array[Byte], strict: Boolean): Int = {
-    val n = dictionary.numElements
-    var lo = 0
-    var hi = n
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      val b = dictionary.bytesAt(mid)
-      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, key)
-      if (if (strict) cmp <= 0 else cmp < 0) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
 
   def length: Int = ids.length
 

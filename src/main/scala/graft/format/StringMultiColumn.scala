@@ -18,7 +18,8 @@ import java.nio.ByteBuffer
   * }}}
   * Row r owns flat ids [ends[r-1], ends[r]).
   */
-final class StringMultiColumn(buf: ByteBuffer, base: Int, end: Int = -1) {
+final class StringMultiColumn(buf: ByteBuffer, base: Int, end: Int = -1)
+    extends DictionaryIndex {
   private val version = buf.get(base) & 0xff
   if (version != StringMultiColumn.VERSION &&
       version != StringMultiColumn.VERSION_FC)
@@ -76,43 +77,6 @@ final class StringMultiColumn(buf: ByteBuffer, base: Int, end: Int = -1) {
         case t => fail(s"mv bitmap $dictId: bad type byte $t")
       }
     }
-
-  /** Binary-search a value in the sorted dictionary; -1 if absent
-    * (unsigned UTF-8 order with null first, like the SV column). */
-  def dictIdOf(value: String): Int = {
-    val target = value.getBytes("UTF-8")
-    var lo = 0
-    var hi = dictionary.numElements - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val b = dictionary.bytesAt(mid)
-      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, target)
-      if (cmp == 0) return mid
-      else if (cmp < 0) lo = mid + 1
-      else hi = mid - 1
-    }
-    -1
-  }
-
-  /** First dictionary id whose value is >= `key` (> when `strict`) in
-    * unsigned UTF-8 order — same contract as the single-value column's
-    * [[StringColumn.dictIdBound]]: nulls sort first and never qualify,
-    * so a lexicographic bound on an MV dim selects a CONTIGUOUS id
-    * range whose per-value bitmaps union to "rows where ANY array
-    * value is in range" (Druid's MV bound semantics).
-    */
-  def dictIdBound(key: Array[Byte], strict: Boolean): Int = {
-    val n = dictionary.numElements
-    var lo = 0
-    var hi = n
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      val b = dictionary.bytesAt(mid)
-      val cmp = if (b == null) -1 else StringColumn.compareUtf8(b, key)
-      if (if (strict) cmp <= 0 else cmp < 0) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
 
   /** Roaring set of rows that are NULL (as opposed to empty arrays) —
     * optional trailer, same shape as the numeric null trailers.

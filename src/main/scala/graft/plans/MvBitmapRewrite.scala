@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.druid.{DimBound, DruidScan}
+import graft.sources.druid.{DimBound, DruidScan, MvContains, NestedEq}
 
 /** The one place that turns filter predicates over a druid table into
   * bitmap row-selection hints for its scan. Three hint kinds, each
@@ -36,8 +36,8 @@ import graft.sources.druid.{DimBound, DruidScan}
   *
   * Runs after V2ScanRelationPushDown (experimental.extraOptimizations):
   * none of these predicates has a V1 Filter form, so each survives as
-  * the residual Filter directly over the scan, which the rule copies
-  * through DruidScan.withMvContains/withNestedEq/withBounds. The
+  * the residual Filter directly over the scan, which the rule adds to
+  * the scan's one predicate list through DruidScan.withPredicates. The
   * Filter itself is LEFT IN PLACE as the residual final word, so a
   * hint is a pure row-selection superset whose removal cannot change
   * results.
@@ -61,9 +61,8 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     case f @ Filter(cond, sr: DataSourceV2ScanRelation)
         if sr.scan.isInstanceOf[DruidScan] =>
       val scan = sr.scan.asInstanceOf[DruidScan]
-      val next = scan.withMvContains(extract(cond, sr.output))
-        .withNestedEq(extractNested(cond, sr.output))
-        .withBounds(extractBounds(cond, sr.output))
+      val next = scan.withPredicates(extract(cond, sr.output) ++
+        extractNested(cond, sr.output) ++ extractBounds(cond, sr.output))
       if (next eq scan) f else f.copy(child = sr.copy(scan = next))
   }
 
@@ -96,14 +95,14 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     * without a complex type (json columns have no dictionary).
     */
   private[graft] def extractBounds(cond: Expression, output: Seq[Attribute])
-      : Map[String, Seq[DimBound]] = {
+      : Seq[DimBound] = {
     val plainAttrs: Map[ExprId, String] = output.collect {
       case a if a.dataType == StringType &&
           !a.metadata.contains("druid.complexType") =>
         a.exprId -> a.name
     }.toMap
     val mvAttrs = mvAttrsOf(output)
-    if (plainAttrs.isEmpty && mvAttrs.isEmpty) return Map.empty
+    if (plainAttrs.isEmpty && mvAttrs.isEmpty) return Nil
     // (column, ordering, isLower, value, strict) of one comparison
     // whose key side is over a column `target` names; `lex` admits the
     // bare lexicographic form
@@ -143,25 +142,25 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     // may be met by two different values, so each exists keeps its own
     // bounds (the reader intersects them, which is then exact).
     def bounds(cs: Seq[Expression], target: Expression => Option[String],
-               lex: Boolean): Seq[(String, DimBound)] = {
+               lex: Boolean): Seq[DimBound] = {
       // strlen's struct key ranks a null below every value, so only a
       // sibling IS NOT NULL on the same key (what NativeQuery emits)
       // makes the predicate as null-free as the bitmap
       val notNull = cs.collect { case IsNotNull(t) => target(t) }.flatten.toSet
       cs.flatMap(side(_, target, lex))
         .filter { case (c, o, _, _, _) => o != "strlen" || notNull(c) }
-        .foldLeft(Vector.empty[(String, DimBound)]) {
+        .foldLeft(Vector.empty[DimBound]) {
           case (acc, (c, o, lower, v, strict)) =>
             // one bound per (column, ordering) until a side repeats
-            val i = acc.indexWhere { case (c2, b) =>
-              c2 == c && b.ordering == o &&
+            val i = acc.indexWhere { b =>
+              b.col == c && b.ordering == o &&
                 (if (lower) b.lower.isEmpty else b.upper.isEmpty)
             }
-            val b0 = if (i >= 0) acc(i)._2 else DimBound(o, None, false, None, false)
+            val b0 = if (i >= 0) acc(i) else DimBound(c, o, None, false, None, false)
             val b =
               if (lower) b0.copy(lower = Some(v), lowerStrict = strict)
               else b0.copy(upper = Some(v), upperStrict = strict)
-            if (i >= 0) acc.updated(i, c -> b) else acc :+ (c -> b)
+            if (i >= 0) acc.updated(i, b) else acc :+ b
         }
     }
     val top = conjuncts(cond)
@@ -180,7 +179,7 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
         }, lex = true)
       case _ => Nil
     }
-    (plain ++ mv).groupBy(_._1).map { case (c, bs) => c -> bs.map(_._2).toList }
+    plain ++ mv
   }
 
   /** AND-reachable nested-field equality clauses:
@@ -192,7 +191,7 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     * no array steps), matching what the nested writer stores.
     */
   private[graft] def extractNested(cond: Expression, output: Seq[Attribute])
-      : Seq[(String, String, Seq[String])] = {
+      : Seq[NestedEq] = {
     val nestedAttrs: Map[ExprId, String] = output.collect {
       case a if a.dataType == StringType &&
           a.metadata.contains("druid.complexType") &&
@@ -233,20 +232,20 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     }
     conjuncts(cond).flatMap {
       case EqualTo(l, r) =>
-        field(l).flatMap(f => lit(r).map(v => (f._1, f._2, Seq(v))))
-          .orElse(field(r).flatMap(f => lit(l).map(v => (f._1, f._2, Seq(v)))))
+        field(l).flatMap(f => lit(r).map(v => NestedEq(f._1, f._2, Seq(v))))
+          .orElse(field(r).flatMap(f => lit(l).map(v => NestedEq(f._1, f._2, Seq(v)))))
       case EqualNullSafe(l, r) =>
-        field(l).flatMap(f => lit(r).map(v => (f._1, f._2, Seq(v))))
-          .orElse(field(r).flatMap(f => lit(l).map(v => (f._1, f._2, Seq(v)))))
+        field(l).flatMap(f => lit(r).map(v => NestedEq(f._1, f._2, Seq(v))))
+          .orElse(field(r).flatMap(f => lit(l).map(v => NestedEq(f._1, f._2, Seq(v)))))
       case In(g, vs) =>
         field(g).flatMap { f =>
           val lits = vs.map(lit)
           if (lits.isEmpty || lits.exists(_.isEmpty)) None
-          else Some((f._1, f._2, lits.map(_.get)))
+          else Some(NestedEq(f._1, f._2, lits.map(_.get)))
         }
       // the optimizer turns a long IN list into InSet
       case InSet(g, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[UTF8String]) =>
-        field(g).map(f => (f._1, f._2, vs.toSeq.map(_.toString)))
+        field(g).map(f => NestedEq(f._1, f._2, vs.toSeq.map(_.toString)))
       case _ => None
     }
   }
@@ -256,7 +255,7 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     * anything else stays Spark-side untouched.
     */
   private[graft] def extract(cond: Expression, output: Seq[Attribute])
-      : Seq[(String, Seq[String])] = {
+      : Seq[MvContains] = {
     val mvAttrs = mvAttrsOf(output)
     def strLit(e: Expression): Option[String] = e match {
       case Literal(s: UTF8String, StringType) if s != null => Some(s.toString)
@@ -283,11 +282,11 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
     }
     conjuncts(cond).flatMap {
       case ArrayContains(a, v) =>
-        for (c <- attrName(a); s <- strLit(v)) yield c -> Seq(s)
+        for (c <- attrName(a); s <- strLit(v)) yield MvContains(c, Seq(s))
       case ArraysOverlap(a, arr) if attrName(a).isDefined =>
-        for (c <- attrName(a); vs <- strArray(arr)) yield c -> vs
+        for (c <- attrName(a); vs <- strArray(arr)) yield MvContains(c, vs)
       case ArraysOverlap(arr, a) if attrName(a).isDefined =>
-        for (c <- attrName(a); vs <- strArray(arr)) yield c -> vs
+        for (c <- attrName(a); vs <- strArray(arr)) yield MvContains(c, vs)
       case _ => None
     }
   }

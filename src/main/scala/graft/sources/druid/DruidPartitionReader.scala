@@ -123,273 +123,122 @@ private[druid] final class GraftDictionary(bytes: Array[Array[Byte]])
 }
 
 private[druid] object RowSelection {
-  /** Selected row positions for a split, from (a) bitmap-indexed string
-    * equality/IN filters (positive sets) and (b) pushed IS NOT NULL
-    * filters served by the null-bitmap trailers (negative sets). null =
-    * all rows in [rowStart, rowEnd); empty = the whole split skips
-    * (e.g. IS NOT NULL on a column this schema-evolved segment never
-    * had — every row is null there).
+  import org.roaringbitmap.buffer.{ImmutableRoaringBitmap, MutableRoaringBitmap}
+
+  /** Selected row positions for a split: the AND of every pushed
+    * predicate's bitmap. null = all rows in [rowStart, rowEnd) (no
+    * predicate the bitmaps can serve); empty = the whole split skips.
     */
   def build(segment: DruidSegment, part: DruidInputPartition): Array[Int] = {
-    val applicable = part.dimFilters.toSeq.flatMap { case (name, values) =>
-      if (!segment.columnNames.contains(name)) None
-      else segment.column(name) match {
-        case StringColumnData(sc) if sc.bitmaps.isDefined =>
-          val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-          values.map(sc.dictIdOf).filter(_ >= 0)
-            .foreach(id => sc.bitmapFor(id).foreach(acc.or))
-          Some(acc)
+    val sets = part.preds.flatMap(bitmapOf(_, segment, part.rowStart, part.rowEnd))
+    if (sets.isEmpty) null
+    else {
+      val range = new MutableRoaringBitmap()
+      range.add(part.rowStart.toLong, part.rowEnd.toLong)
+      sets.foreach(range.and)
+      range.toArray
+    }
+  }
+
+  /** A superset of the rows in [rowStart, rowEnd) matching `p`, from
+    * the segment's bitmaps; None where they cannot say (no restriction).
+    * Druid's filter model: boolean algebra over bitmap indexes. Leaves
+    * resolve through the dictionary — a value's bitmap, a contiguous id
+    * range for a prefix or lexicographic bound, one pass over the
+    * dictionary for a pattern or another ordering — or through the
+    * numeric null trailers. AnyOf unions and gives up if any branch
+    * does; AllOf intersects the branches that answer. Sound either
+    * way, because Spark's residual re-check has the final word on
+    * every row. A column this schema-evolved segment predates is
+    * all-null, so only IS NULL matches there.
+    */
+  def bitmapOf(p: ScanPred, segment: DruidSegment,
+               rowStart: Int, rowEnd: Int): Option[MutableRoaringBitmap] = {
+    def absent(c: String) = !segment.columnNames.contains(c)
+    // union of the bitmaps of the dictionary ids `ids` picks; None
+    // without a dictionary with bitmaps
+    def union(c: String)(ids: DictionaryIndex => Iterator[Int]): Option[MutableRoaringBitmap] =
+      if (absent(c)) Some(new MutableRoaringBitmap())
+      else (segment.column(c) match {
+        case StringColumnData(sc) => Some(sc)
+        case MultiStringColumnData(mc) => Some(mc)
+        case _ => None
+      }).filter(_.bitmaps.isDefined).map { d =>
+        val acc = new MutableRoaringBitmap()
+        ids(d).foreach(id => d.bitmapFor(id).foreach(acc.or))
+        acc
+      }
+    // ids of the dictionary values `matches` accepts: one lazy
+    // sequential pass, O(dictionary) on both dictionary shapes
+    def scan(d: DictionaryIndex)(matches: Array[Byte] => Boolean): Iterator[Int] =
+      d.dictionary.entriesIterator.zipWithIndex
+        .collect { case (b, id) if b != null && matches(b) => id }
+    // a numeric column's null trailer (Some(None): it has no nulls);
+    // None for other column types, told from the descriptor alone so
+    // no other column is opened for it
+    def nullTrailer(c: String): Option[Option[ImmutableRoaringBitmap]] =
+      if (!Set("LONG", "FLOAT", "DOUBLE")(segment.columnHeader(c)._1.valueType)) None
+      else segment.column(c) match {
+        case LongColumnData(_, nulls) => Some(Option(nulls))
+        case DoubleColumnData(_, nulls) => Some(Option(nulls))
+        case FloatColumnData(_, nulls) => Some(Option(nulls))
         case _ => None
       }
-    }
-    // OR/AND trees over dictionary predicates: Druid's filter model is
-    // boolean algebra over bitmap indexes, and so is this — leaves
-    // resolve to per-value bitmaps (equality, IN, the LIKE family),
-    // OR unions, AND intersects. A leaf the bitmaps can't serve makes
-    // its subtree a no-restriction superset (AND keeps the other side,
-    // OR gives up), which is always sound: Spark's residual re-check
-    // has the final word on every row.
-    def bitmapOf(f: org.apache.spark.sql.sources.Filter):
-        Option[org.roaringbitmap.buffer.MutableRoaringBitmap] = {
-      import org.apache.spark.sql.sources._
-      def stringCol(c: String):
-          Option[Either[Unit, graft.format.StringColumn]] =
-        if (!segment.columnNames.contains(c)) Some(Left(())) // absent: all null
+    p match {
+      case AllOf(ps) =>
+        ps.flatMap(bitmapOf(_, segment, rowStart, rowEnd))
+          .reduceOption { (x, y) => x.and(y); x }
+      case AnyOf(ps) =>
+        val bs = ps.map(bitmapOf(_, segment, rowStart, rowEnd))
+        if (bs.exists(_.isEmpty)) None
+        else Some(bs.flatten.foldLeft(new MutableRoaringBitmap()) { (x, y) => x.or(y); x })
+      case StrValues(c, vs) => union(c)(d => vs.iterator.map(d.dictIdOf).filter(_ >= 0))
+      case MvContains(c, vs) => union(c)(d => vs.iterator.map(d.dictIdOf).filter(_ >= 0))
+      case StrPrefix(c, prefix) => union(c) { d =>
+        val (lo, hi) = d.dictIdRangeForPrefix(prefix)
+        (lo until hi).iterator
+      }
+      case StrMatch(c, kind, pattern) => union(c)(scan(_) { b =>
+        val v = new String(b, "UTF-8")
+        if (kind == "contains") v.contains(pattern) else v.endsWith(pattern)
+      })
+      // the dictionary IS sorted in unsigned UTF-8 order, so a
+      // lexicographic bound selects a CONTIGUOUS id range — two
+      // O(log dict) searches. Other orderings don't follow dictionary
+      // order: the comparator runs once per dictionary VALUE, never per
+      // row. On a multi-value dim this unions to "rows where ANY value
+      // satisfies the bound", Druid's bound semantics there.
+      case b: DimBound => union(b.col) { d =>
+        if (b.lexicographic) {
+          val lo = d.dictIdBound(b.lower.getOrElse("").getBytes("UTF-8"),
+            b.lower.isDefined && b.lowerStrict)
+          val hi = b.upper.map(u => d.dictIdBound(u.getBytes("UTF-8"), !b.upperStrict))
+            .getOrElse(d.dictionary.numElements)
+          (lo until hi).iterator
+        } else scan(d)(DimBound.predicate(b))
+      }
+      // a superset: long 5 and string "5" both render as "5". A
+      // blob-encoded json column has no field bitmaps.
+      case NestedEq(c, path, vs) =>
+        if (absent(c)) Some(new MutableRoaringBitmap())
         else segment.column(c) match {
-          case StringColumnData(sc) if sc.bitmaps.isDefined => Some(Right(sc))
+          case NestedColumnData(nc) => nc.eqBitmap(path, vs)
           case _ => None
         }
-      def ofValues(c: String, vs: Seq[String]):
-          Option[org.roaringbitmap.buffer.MutableRoaringBitmap] =
-        stringCol(c).map {
-          case Left(()) => new org.roaringbitmap.buffer.MutableRoaringBitmap()
-          case Right(sc) =>
-            val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            vs.map(sc.dictIdOf).filter(_ >= 0)
-              .foreach(id => sc.bitmapFor(id).foreach(acc.or))
-            acc
+      case NotNull(c) =>
+        if (absent(c)) Some(new MutableRoaringBitmap())
+        else nullTrailer(c).flatten.map { nulls =>
+          val rows = new MutableRoaringBitmap()
+          rows.add(rowStart.toLong, rowEnd.toLong)
+          rows.andNot(nulls)
+          rows
         }
-      def ofDictScan(c: String, matches: String => Boolean):
-          Option[org.roaringbitmap.buffer.MutableRoaringBitmap] =
-        stringCol(c).map {
-          case Left(()) => new org.roaringbitmap.buffer.MutableRoaringBitmap()
-          case Right(sc) =>
-            val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            // lazy sequential pass: O(dictionary) on both dict shapes
-            sc.dictionary.entriesIterator.zipWithIndex.foreach {
-              case (b, id) =>
-                if (b != null && matches(new String(b, "UTF-8")))
-                  sc.bitmapFor(id).foreach(acc.or)
-            }
-            acc
-        }
-      f match {
-        case Or(a, b) =>
-          for (x <- bitmapOf(a); y <- bitmapOf(b)) yield { x.or(y); x }
-        case And(a, b) => (bitmapOf(a), bitmapOf(b)) match {
-          case (Some(x), Some(y)) => x.and(y); Some(x)
-          case (Some(x), None) => Some(x) // superset: residual verifies
-          case (None, y) => y
-        }
-        case EqualTo(c, v: String) => ofValues(c, Seq(v))
-        case EqualNullSafe(c, v: String) => ofValues(c, Seq(v))
-        case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-          ofValues(c, vs.toSeq.map(_.asInstanceOf[String]))
-        case StringStartsWith(c, p) if p.nonEmpty =>
-          stringCol(c).map {
-            case Left(()) => new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            case Right(sc) =>
-              val (lo, hi) = sc.dictIdRangeForPrefix(p)
-              val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-              (lo until hi).foreach(id => sc.bitmapFor(id).foreach(acc.or))
-              acc
-          }
-        case StringContains(c, v) if v.nonEmpty =>
-          ofDictScan(c, _.contains(v))
-        case StringEndsWith(c, v) if v.nonEmpty =>
-          ofDictScan(c, _.endsWith(v))
-        case _ => None // numeric/time/null leaves: not bitmap-served
-      }
-    }
-    val orSets = part.orFilters.flatMap(bitmapOf)
-    // contains / ends-with: one pass over the dictionary (cardinality
-    // << rows), bitmap union of matching entries — Druid's LIKE family
-    // without decoding a single row
-    val patternSets = part.patternFilters.toSeq.flatMap { case (name, pats) =>
-      if (!segment.columnNames.contains(name)) Nil
-      else segment.column(name) match {
-        case StringColumnData(sc) if sc.bitmaps.isDefined =>
-          pats.map { pat =>
-            val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            // lazy sequential pass per pattern: O(dictionary) each
-            sc.dictionary.entriesIterator.zipWithIndex.foreach {
-              case (b, id) =>
-                if (b != null) {
-                  val v = new String(b, "UTF-8")
-                  if (if (pat.kind == "contains") v.contains(pat.pattern)
-                      else v.endsWith(pat.pattern))
-                    sc.bitmapFor(id).foreach(acc.or)
-                }
-            }
-            acc
-          }
-        case _ => Nil
-      }
-    }
-    // prefix (LIKE 'p%') filters: the UTF-8-sorted dictionary makes the
-    // matching values a contiguous id range — one bitmap union per
-    // prefix, AND across prefixes/columns (same residual-verified
-    // contract as the equality sets above)
-    val prefixSets = part.prefixFilters.toSeq.flatMap { case (name, prefixes) =>
-      if (!segment.columnNames.contains(name)) Nil
-      else segment.column(name) match {
-        case StringColumnData(sc) if sc.bitmaps.isDefined =>
-          prefixes.map { p =>
-            val (lo, hi) = sc.dictIdRangeForPrefix(p)
-            val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            (lo until hi).foreach(id => sc.bitmapFor(id).foreach(acc.or))
-            acc
-          }
-        case _ => Nil
-      }
-    }
-    // comparator bounds (version/alphanumeric/strlen/lexicographic):
-    // the comparator runs once per DICTIONARY VALUE (cardinality <<
-    // rows) with the bound side pre-computed, qualifying ids union
-    // their bitmaps — Druid's bound-filter execution. A column absent
-    // from this schema-evolved segment is all-null: a bound never
-    // matches null, so the selection is empty.
-    val boundSets = part.boundFilters.toSeq.flatMap { case (name, bs) =>
-      if (!segment.columnNames.contains(name))
-        bs.headOption.map(_ =>
-          new org.roaringbitmap.buffer.MutableRoaringBitmap()).toSeq
-      else segment.column(name) match {
-        case StringColumnData(sc) if sc.bitmaps.isDefined =>
-          bs.map { b =>
-            val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            if (b.ordering == "lexicographic" || b.ordering.isEmpty) {
-              // the dictionary IS sorted in unsigned UTF-8 order, so a
-              // lexicographic bound selects a CONTIGUOUS id range —
-              // two O(log dict) searches, not a dictionary scan
-              val lo = b.lower
-                .map(s => sc.dictIdBound(s.getBytes("UTF-8"), b.lowerStrict))
-                .getOrElse(sc.dictIdBound(Array.emptyByteArray, strict = false))
-              val hi = b.upper
-                .map(s => sc.dictIdBound(s.getBytes("UTF-8"), !b.upperStrict))
-                .getOrElse(sc.dictionary.numElements)
-              (lo until hi).foreach(id => sc.bitmapFor(id).foreach(acc.or))
-            } else {
-              // comparator orderings don't follow dictionary order:
-              // one pass, comparator per dictionary VALUE (never per
-              // row), bound side pre-computed
-              val pred = DimBound.predicate(b)
-              sc.dictionary.entriesIterator.zipWithIndex.foreach {
-                case (bytes, id) =>
-                  if (bytes != null && pred(bytes))
-                    sc.bitmapFor(id).foreach(acc.or)
-              }
-            }
-            acc
-          }
-        // multi-value dimension: a value's bitmap marks rows whose
-        // ARRAY contains it, so the same per-dictionary-value
-        // qualification unions to "rows where ANY value satisfies the
-        // bound" — Druid's bound semantics on MV dims. The caller's
-        // exists(...) predicate stays the residual final word.
-        case MultiStringColumnData(mc) if mc.bitmaps.isDefined =>
-          bs.map { b =>
-            val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-            if (b.ordering == "lexicographic" || b.ordering.isEmpty) {
-              val lo = b.lower
-                .map(s => mc.dictIdBound(s.getBytes("UTF-8"), b.lowerStrict))
-                .getOrElse(mc.dictIdBound(Array.emptyByteArray, strict = false))
-              val hi = b.upper
-                .map(s => mc.dictIdBound(s.getBytes("UTF-8"), !b.upperStrict))
-                .getOrElse(mc.dictionary.numElements)
-              (lo until hi).foreach(id => mc.bitmapFor(id).foreach(acc.or))
-            } else {
-              val pred = DimBound.predicate(b)
-              mc.dictionary.entriesIterator.zipWithIndex.foreach {
-                case (bytes, id) =>
-                  if (bytes != null && pred(bytes))
-                    mc.bitmapFor(id).foreach(acc.or)
-              }
-            }
-            acc
-          }
-        case _ => Nil // no dictionary/bitmaps: the residual decides
-      }
-    }
-    // multi-value CONTAINS clauses: each clause unions the per-value
-    // bitmaps of its values over the MV column's bitmap section (a
-    // value's bitmap marks rows whose ARRAY contains it — Druid's
-    // selector semantics on MV dims), clauses AND below. A column this
-    // schema-evolved segment never had is all-null: contains matches
-    // nothing, the clause selects no rows. An MV column without a
-    // bitmap section contributes nothing (residual decides).
-    val mvSets = part.mvContains.flatMap { case (name, values) =>
-      if (!segment.columnNames.contains(name))
-        Some(new org.roaringbitmap.buffer.MutableRoaringBitmap())
-      else segment.column(name) match {
-        case MultiStringColumnData(mc) if mc.bitmaps.isDefined =>
-          val acc = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-          values.map(mc.dictIdOf).filter(_ >= 0)
-            .foreach(id => mc.bitmapFor(id).foreach(acc.or))
-          Some(acc)
-        case _ => None
-      }
-    }
-    // nested-field equality clauses: served from the NestedCommonFormat
-    // column's per-field value bitmaps (a superset selection, the
-    // compiled get_json_object predicate is the residual). An absent
-    // column is all-null — text null never equals a literal, zero rows.
-    // A blob-encoded json column has no field bitmaps: residual decides.
-    val neSets = part.nestedEq.flatMap { case (name, path, values) =>
-      if (!segment.columnNames.contains(name))
-        Some(new org.roaringbitmap.buffer.MutableRoaringBitmap())
-      else segment.column(name) match {
-        case NestedColumnData(nc) => nc.eqBitmap(path, values)
-        case _ => None
-      }
-    }
-    def trailerOf(name: String): Option[org.roaringbitmap.buffer.ImmutableRoaringBitmap] =
-      segment.column(name) match {
-        case LongColumnData(_, nulls) if nulls != null => Some(nulls)
-        case DoubleColumnData(_, nulls) if nulls != null => Some(nulls)
-        case FloatColumnData(_, nulls) if nulls != null => Some(nulls)
-        case _ => None // no trailer = the column has no nulls
-      }
-    var emptySplit = false
-    val nullSets = part.notNullCols.toSeq.flatMap { name =>
-      // column absent from this schema-evolved segment: every row is
-      // null, IS NOT NULL matches nothing -> skip the split
-      if (!segment.columnNames.contains(name)) { emptySplit = true; None }
-      else trailerOf(name)
-    }
-    // IS NULL uses the trailer POSITIVELY: only null rows survive. A
-    // present column without a trailer has no nulls -> empty split; an
-    // absent column is all-null -> no restriction
-    val onlyNullSets = part.isNullCols.toSeq
-      .filter(segment.columnNames.contains).map { name =>
-        trailerOf(name).getOrElse { emptySplit = true; null }
-      }.filter(_ != null)
-    if (emptySplit) return Array.emptyIntArray
-    if (applicable.isEmpty && prefixSets.isEmpty && patternSets.isEmpty &&
-        boundSets.isEmpty && orSets.isEmpty && mvSets.isEmpty &&
-        neSets.isEmpty && nullSets.isEmpty && onlyNullSets.isEmpty) null
-    else {
-      val range = new org.roaringbitmap.buffer.MutableRoaringBitmap()
-      range.add(part.rowStart.toLong, part.rowEnd.toLong)
-      applicable.foreach(range.and)
-      prefixSets.foreach(range.and)
-      patternSets.foreach(range.and)
-      boundSets.foreach(range.and)
-      orSets.foreach(range.and)
-      mvSets.foreach(range.and)
-      neSets.foreach(range.and)
-      onlyNullSets.foreach(range.and)
-      nullSets.foreach(range.andNot)
-      range.toArray
+      // the trailer used positively; a numeric column without one has
+      // no nulls
+      case NullOnly(c) =>
+        if (absent(c)) None
+        else nullTrailer(c).map(_.fold(new MutableRoaringBitmap())(_.toMutableRoaringBitmap))
+      case _: TimeRange | _: NumRange => None
     }
   }
 }
@@ -410,8 +259,7 @@ class DruidColumnarReader(part: DruidInputPartition, required: StructType)
     case _ => null
   }
 
-  /** Row selection for this split from the string columns' Roaring
-    * bitmap indexes (AND across filtered columns, OR across values).
+  /** Row selection for this split from the pushed predicates' bitmaps.
     * null = read every row in range. Rows excluded here never touch a
     * compressed block; filters stay residual so bitmap absence is
     * always safe.

@@ -22,10 +22,11 @@ import graft.format.DruidSegment
   *
   * `strZones` are the string-dimension analog: per-column [min, max]
   * over non-null values, compared with `String.compareTo` on BOTH the
-  * write and prune sides (only self-consistency matters — the zone is
-  * a membership envelope, so equality/IN values outside it prove the
-  * segment holds no matching row; range predicates are never pruned
-  * with it because Spark orders strings by UTF-8 bytes, not UTF-16).
+  * write and prune sides. The zone is a membership envelope, so
+  * equality/IN values and prefixes outside it prove the segment holds
+  * no matching row. Lexicographic range bounds prune with it only
+  * where bound and envelope edge are pure ASCII: Spark orders strings
+  * by UTF-8 bytes, not UTF-16, and the two orders agree only there.
   *
   * `nullCounts`, when present, maps EVERY column the segment stores to
   * its null-row count (0 included — key presence doubles as a

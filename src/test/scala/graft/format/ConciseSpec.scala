@@ -136,7 +136,7 @@ class ConciseSpec extends AnyFunSuite {
     // the trailer parses as a Concise (type 0x00) bitmap section
     val seg = graft.format.DruidSegment.open(segDir)
     val part0 = graft.sources.druid.DruidInputPartition(
-      segDir, 0, rows.length, -1, Map("kind" -> Seq("beta")))
+      segDir, 0, rows.length, Seq(graft.sources.druid.StrValues("kind", Seq("beta"))))
     val sel = Option(graft.sources.druid.RowSelectionProbe.build(seg, part0))
     assert(sel.isDefined, "no bitmap selection on a Concise segment")
     assert(sel.get.toSeq == rows.indices.filter(i => i % 4 == 1),

@@ -130,7 +130,7 @@ class FrontCodedSpec extends AnyFunSuite {
       nameOf(i) != null && nameOf(i).startsWith("seg-b"))
     assert(pfx.count() == expected)
     val p = pfx.queryExecution.executedPlan.toString
-    assert(p.contains("prefixFilters=Map(name"),
+    assert(p.contains("StrPrefix(name,"),
       s"prefix filter missing from scan description:\n$p")
     val eq = df.filter(col("name") === "seg-c123")
     assert(eq.count() == (0 until 4000).count(i => nameOf(i) == "seg-c123"))

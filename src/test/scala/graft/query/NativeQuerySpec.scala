@@ -794,9 +794,9 @@ class NativeQuerySpec extends AnyFunSuite {
     }""", _ => spark.read.format("druid").load(dir))
     assert(df.collect().head.getLong(0) == 56) // i in [0,168) with i%3==0
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("dimFilters=") && plan.contains("click"),
+    assert(plan.contains("StrValues(") && plan.contains("click"),
       s"selector filter did not reach the scan:\n$plan")
-    assert(plan.contains("time=[1704067200000,"),
+    assert(plan.contains("TimeRange(1704067200000,"),
       s"interval did not reach the scan's time bounds:\n$plan")
   }
 

@@ -125,7 +125,7 @@ class DruidBitmapFilterSpec extends org.scalatest.funsuite.AnyFunSuite {
     val df = spark.read.format("druid").load(dir)
     val filtered = df.filter(col("dim") === "k13")
     val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("dimFilters=Map(dim ->"), s"pushdown missing in: $plan")
+    assert(plan.contains("StrValues(dim,"), s"pushdown missing in: $plan")
     val got = filtered.agg(count(lit(1)), sum("n")).head
     val exp = src.filter(col("dim") === "k13").agg(count(lit(1)), sum("n")).head
     assert(got == exp)
@@ -290,7 +290,7 @@ class RuntimeFilterSpec extends org.scalatest.funsuite.AnyFunSuite {
     val parts = scan.toBatch.planInputPartitions()
     assert(parts.nonEmpty)
     val p = parts.head.asInstanceOf[graft.sources.druid.DruidInputPartition]
-    assert(p.dimFilters == Map("dim" -> Seq("k3", "k5")))
+    assert(p.preds == Seq(graft.sources.druid.StrValues("dim", Seq("k3", "k5"))))
   }
 
   test("runtime IN filter skips whole segments via string envelopes") {
@@ -339,7 +339,7 @@ class RuntimeFilterSpec extends org.scalatest.funsuite.AnyFunSuite {
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruningexpression"),
       s"no dynamic pruning subquery in plan:\n$plan")
-    assert(plan.contains("dimFilters=Map(dim -> "),
+    assert(plan.contains("StrValues(dim,"),
       s"runtime filter never reached the druid scan:\n$plan")
     // i % 1000 == 42 -> 100 rows: 42, 1042, ..., 99042
     assert(rows.length == 1 &&

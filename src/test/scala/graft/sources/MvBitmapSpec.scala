@@ -33,8 +33,8 @@ class MvBitmapSpec extends AnyFunSuite {
   private def probe(clauses: Seq[(String, Seq[String])]): Option[Seq[Int]] = {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(dir).head
     val seg = graft.format.DruidSegment.open(segDir)
-    val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, Map.empty, mvContains = clauses)
+    val part = graft.sources.druid.DruidInputPartition(segDir, 0, N,
+      clauses.map { case (c, vs) => graft.sources.druid.MvContains(c, vs) })
     Option(graft.sources.druid.RowSelectionProbe.build(seg, part)).map(_.toSeq)
   }
 
@@ -67,8 +67,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(out).head
     val seg = graft.format.DruidSegment.open(segDir)
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, 500, -1, Map.empty,
-      mvContains = Seq("tags" -> Seq("a2")))
+      segDir, 0, 500, Seq(graft.sources.druid.MvContains("tags", Seq("a2"))))
     assert(graft.sources.druid.RowSelectionProbe.build(seg, part) == null)
   }
 
@@ -96,8 +95,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(out).head
     val seg = graft.format.DruidSegment.open(segDir)
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, 1000, -1, Map.empty,
-      mvContains = Seq("tags" -> Seq("b1")))
+      segDir, 0, 1000, Seq(graft.sources.druid.MvContains("tags", Seq("b1"))))
     val got = Option(graft.sources.druid.RowSelectionProbe.build(seg, part))
     assert(got.isDefined)
     assert(got.get.toSeq == (0 until 1000).filter(i =>
@@ -109,10 +107,9 @@ class MvBitmapSpec extends AnyFunSuite {
     val seg = graft.format.DruidSegment.open(segDir)
     // lexicographic ["a1", "a3"]: contiguous dictionary range
     val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, Map.empty,
-      boundFilters = Map("tags" -> Seq(graft.sources.druid.DimBound(
+      segDir, 0, N, Seq(graft.sources.druid.DimBound("tags",
         "lexicographic", Some("a1"), lowerStrict = false,
-        Some("a3"), upperStrict = false))))
+        Some("a3"), upperStrict = false)))
     val got = Option(graft.sources.druid.RowSelectionProbe.build(seg, part))
     assert(got.isDefined, "no bitmap selection for an MV bound")
     assert(got.get.toSeq == (0 until N).filter { i =>
@@ -121,10 +118,9 @@ class MvBitmapSpec extends AnyFunSuite {
     })
     // strlen ordering rides the comparator path on the MV dictionary
     val part2 = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, Map.empty,
-      boundFilters = Map("tags" -> Seq(graft.sources.druid.DimBound(
+      segDir, 0, N, Seq(graft.sources.druid.DimBound("tags",
         "strlen", Some("b0"), lowerStrict = false, None,
-        upperStrict = false))))
+        upperStrict = false)))
     val got2 = Option(graft.sources.druid.RowSelectionProbe.build(seg, part2))
     assert(got2.isDefined)
     assert(got2.get.toSeq == (0 until N).filter { i =>
@@ -144,7 +140,7 @@ class MvBitmapSpec extends AnyFunSuite {
            "aggregations": [{"type": "count", "name": "rows"}]
          }""", _ => spark.read.format("druid").load(dir))
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("boundFilters=Map(tags"),
+    assert(p.contains("DimBound(tags,"),
       s"MV bound missing from the scan description:\n$p")
     val expected = (0 until N).count { i =>
       val t = tagsOf(i)
@@ -165,7 +161,8 @@ class MvBitmapSpec extends AnyFunSuite {
              {"type": "longSum", "name": "total_n", "fieldName": "n"}]
          }""", _ => spark.read.format("druid").load(dir))
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("mvContains=List((tags,List(a2)), (tags,List(b0, b2)))"),
+    assert(ScanPreds.has(p, "MvContains",
+      "MvContains(tags,List(a2))", "MvContains(tags,List(b0, b2))"),
       s"mvContains option missing from the scan:\n$p")
     val matching = (0 until N).filter { i =>
       val t = tagsOf(i)
@@ -181,7 +178,7 @@ class MvBitmapSpec extends AnyFunSuite {
       .filter(array_contains(col("tags"), "a2"))
       .agg(count(lit(1)).as("rows"), sum(col("n")).as("total_n"))
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("mvContains=List((tags,List(a2)))"),
+    assert(ScanPreds.has(p, "MvContains", "MvContains(tags,List(a2))"),
       s"plain-SQL MV filter missing bitmap selection:\n$p")
     // the predicate must STAY as the residual final word
     assert(p.contains("array_contains"),
@@ -200,7 +197,8 @@ class MvBitmapSpec extends AnyFunSuite {
          WHERE array_contains(tags, 'a2')
            AND arrays_overlap(tags, array('b0', 'b2'))""")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("(tags,List(a2))") && p.contains("(tags,List(b0, b2))"),
+    assert(p.contains("MvContains(tags,List(a2))") &&
+      p.contains("MvContains(tags,List(b0, b2))"),
       s"merged clause set missing from the scan:\n$p")
     val expected = (0 until N).count { i =>
       val t = tagsOf(i)
@@ -214,7 +212,7 @@ class MvBitmapSpec extends AnyFunSuite {
     val df = spark.sql(
       "SELECT count(*) AS rows FROM mv_sql_z WHERE array_contains(tags, 'zz')")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("mvContains=List((tags,List(zz)))"), p)
+    assert(ScanPreds.has(p, "MvContains", "MvContains(tags,List(zz))"), p)
     assert(df.collect().head.getLong(0) == 0L)
   }
 
@@ -223,12 +221,12 @@ class MvBitmapSpec extends AnyFunSuite {
     // OR: selecting only a2's bitmap would DROP b1-only rows
     val dfOr = base.filter(array_contains(col("tags"), "a2") ||
       array_contains(col("tags"), "b1")).agg(count(lit(1)))
-    assert(!dfOr.queryExecution.executedPlan.toString.contains("mvContains=List((tags"),
+    assert(!dfOr.queryExecution.executedPlan.toString.contains("MvContains(tags,"),
       "OR-reachable contains must not become an AND row selection")
     // NOT: the bitmap marks rows TO KEEP, negation inverts it
     val dfNot = base.filter(!array_contains(col("tags"), "a2"))
       .agg(count(lit(1)).as("rows"))
-    assert(!dfNot.queryExecution.executedPlan.toString.contains("mvContains=List((tags"),
+    assert(!dfNot.queryExecution.executedPlan.toString.contains("MvContains(tags,"),
       "negated contains must not become a positive row selection")
     val expected = (0 until N).count { i =>
       val t = tagsOf(i); t != null && !t.contains("a2")

@@ -16,7 +16,7 @@ import graft.sql.{Alphanum, VersionOrder}
   * (or that none is carried), and the per-row truth its count and sum
   * must match. Each positive shape is checked twice: in the end-to-end
   * plan, and from the rule alone over an already pushed-down scan with
-  * no hints (DruidScan.with*).
+  * no hints (DruidScan.withPredicates).
   */
 class NativeHintParitySpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
@@ -72,31 +72,32 @@ class NativeHintParitySpec extends AnyFunSuite {
     """{"type": "nested-field", "columnName": "props",
         "outputName": "vtag", "path": "$.tag"}"""
 
-  // (name, filter, virtual columns, clause the scan carries (None =
-  // no hint at all), per-row truth)
-  private val cases: Seq[(String, String, String, Option[String], Int => Boolean)] = Seq(
+  // (name, filter, virtual columns, the scan's predicates of one hint
+  // kind (None = no hint at all), per-row truth)
+  private val cases: Seq[(String, String, String, Option[(String, Seq[String])],
+      Int => Boolean)] = Seq(
     ("MV selector",
       """{"type": "selector", "dimension": "tags", "value": "a2"}""", "",
-      Some("mvContains=List((tags,List(a2)))"), anyTag(_ == "a2")),
+      Some(("MvContains", Seq("MvContains(tags,List(a2))"))), anyTag(_ == "a2")),
     ("MV in",
       """{"type": "in", "dimension": "tags", "values": ["x3", "a1"]}""", "",
-      Some("mvContains=List((tags,List(a1, x3)))"),
+      Some(("MvContains", Seq("MvContains(tags,List(a1, x3))"))),
       anyTag(Set("a1", "x3"))),
     ("MV bound, lexicographic",
       bound("tags", "lexicographic", Some("a3"), Some("x1"), upperStrict = true), "",
-      Some("boundFilters=Map(tags -> List(DimBound(lexicographic,Some(a3),false,Some(x1),true)))"),
+      Some(("DimBound", Seq("DimBound(tags,lexicographic,Some(a3),false,Some(x1),true)"))),
       anyTag(inRange(_ compareTo _, "a3", "x1", hiStrict = true))),
     ("MV bound, strlen",
       bound("tags", "strlen", Some("x5"), Some("x10")), "",
-      Some("boundFilters=Map(tags -> List(DimBound(strlen,Some(x5),false,Some(x10),false)))"),
+      Some(("DimBound", Seq("DimBound(tags,strlen,Some(x5),false,Some(x10),false)"))),
       anyTag(inRange(strlenCmp, "x5", "x10", hiStrict = false))),
     ("MV bound, alphanumeric",
       bound("tags", "alphanumeric", Some("x9"), Some("x12")), "",
-      Some("boundFilters=Map(tags -> List(DimBound(alphanumeric,Some(x9),false,Some(x12),false)))"),
+      Some(("DimBound", Seq("DimBound(tags,alphanumeric,Some(x9),false,Some(x12),false)"))),
       anyTag(inRange(alnumCmp, "x9", "x12", hiStrict = false))),
     ("MV bound, version",
       bound("tags", "version", Some("1.9"), Some("1.11")), "",
-      Some("boundFilters=Map(tags -> List(DimBound(version,Some(1.9),false,Some(1.11),false)))"),
+      Some(("DimBound", Seq("DimBound(tags,version,Some(1.9),false,Some(1.11),false)"))),
       anyTag(inRange(VersionOrder.compareStrings, "1.9", "1.11", hiStrict = false))),
     // two exists conjuncts may be met by two different values: each
     // keeps its own bound, never one merged [a3, x1) range
@@ -104,31 +105,30 @@ class NativeHintParitySpec extends AnyFunSuite {
       s"""{"type": "and", "fields": [
            ${bound("tags", "lexicographic", Some("a3"), None)},
            ${bound("tags", "lexicographic", None, Some("x1"), upperStrict = true)}]}""", "",
-      Some("boundFilters=Map(tags -> List(" +
-        "DimBound(lexicographic,Some(a3),false,None,false), " +
-        "DimBound(lexicographic,None,false,Some(x1),true)))"),
+      Some(("DimBound", Seq("DimBound(tags,lexicographic,Some(a3),false,None,false)",
+        "DimBound(tags,lexicographic,None,false,Some(x1),true)"))),
       i => anyTag(_ >= "a3")(i) && anyTag(_ < "x1")(i)),
     // upper-only: a null value must not satisfy it
     ("plain bound, strlen",
       bound("ver", "strlen", None, Some("v1.5")), "",
-      Some("boundFilters=Map(ver -> List(DimBound(strlen,None,false,Some(v1.5),false)))"),
+      Some(("DimBound", Seq("DimBound(ver,strlen,None,false,Some(v1.5),false)"))),
       i => verOf(i) != null && strlenCmp(verOf(i), "v1.5") <= 0),
     // the compiled bound carries only the key: the hint decodes it, and
     // the zero-padded "u0120" comes back as the equal-keyed "u120"
     ("plain bound, alphanumeric",
       bound("user", "alphanumeric", Some("u100"), Some("u0120"), upperStrict = true), "",
-      Some("boundFilters=Map(user -> List(DimBound(alphanumeric,Some(u100),false,Some(u120),true)))"),
+      Some(("DimBound", Seq("DimBound(user,alphanumeric,Some(u100),false,Some(u120),true)"))),
       i => inRange(alnumCmp, "u100", "u120", hiStrict = true)(userOf(i))),
     ("plain bound, version",
       bound("ver", "version", Some("v1.7"), Some("v1.12")), "",
-      Some("boundFilters=Map(ver -> List(DimBound(version,Some(v1.7),false,Some(v1.12),false)))"),
+      Some(("DimBound", Seq("DimBound(ver,version,Some(v1.7),false,Some(v1.12),false)"))),
       i => inRange(VersionOrder.compareStrings, "v1.7", "v1.12", hiStrict = false)(verOf(i))),
     ("nested STRING vc selector",
       """{"type": "selector", "dimension": "vtag", "value": "t1"}""", nestedVc,
-      Some("nestedEq=List((props,$.tag,List(t1)))"), i => tagOf(i).contains("t1")),
+      Some(("NestedEq", Seq("NestedEq(props,$.tag,List(t1))"))), i => tagOf(i).contains("t1")),
     ("nested STRING vc in",
       """{"type": "in", "dimension": "vtag", "values": ["t2", "t0"]}""", nestedVc,
-      Some("nestedEq=List((props,$.tag,List(t0, t2)))"),
+      Some(("NestedEq", Seq("NestedEq(props,$.tag,List(t0, t2))"))),
       i => tagOf(i).exists(Set("t0", "t2"))),
     // a LONG vc's cast matches texts the rendered-text probe would miss
     ("typed nested vc",
@@ -190,20 +190,19 @@ class NativeHintParitySpec extends AnyFunSuite {
     }.get
   }
 
-  private val noHints =
-    Seq("boundFilters=Map()", "mvContains=List()", "nestedEq=List()")
+  private val noHints = Seq("DimBound", "MvContains", "NestedEq")
 
   for ((name, filter, vcs, clause, truth) <- cases)
     test(s"native $name: ${clause.fold("no hint")(_ => "hint")} and per-row truth") {
       val df = native(filter, vcs)
       val plan = df.queryExecution.executedPlan.toString
       clause match {
-        case Some(c) =>
-          assert(plan.contains(c), s"$c missing from the scan:\n$plan")
+        case Some((kind, c)) =>
+          assert(ScanPreds.has(plan, kind, c: _*), s"$c missing from the scan:\n$plan")
           val post = postPushdownScan(df)
-          assert(post.contains(c), s"post-pushdown rule missed $c:\n$post")
+          assert(ScanPreds.has(post, kind, c: _*), s"post-pushdown rule missed $c:\n$post")
         case None =>
-          noHints.foreach(h => assert(plan.contains(h), s"unexpected hint:\n$plan"))
+          noHints.foreach(h => assert(ScanPreds.has(plan, h), s"unexpected hint:\n$plan"))
       }
       val want = (0 until N).filter(truth)
       val row = df.collect().head
@@ -231,8 +230,8 @@ class NativeHintParitySpec extends AnyFunSuite {
         plain -> (i => verOf(i) == null || strlenCmp(verOf(i), "v1.5") <= 0),
         mv -> (i => tagsOf(i) != null && tagsOf(i).exists(strlenCmp(_, "1.5") <= 0)))) {
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("boundFilters=Map()"), s"unexpected hint:\n$plan")
-      assert(postPushdownScan(df).contains("boundFilters=Map()"))
+      assert(ScanPreds.has(plan, "DimBound"), s"unexpected hint:\n$plan")
+      assert(ScanPreds.has(postPushdownScan(df), "DimBound"))
       assert(df.count() == (0 until N).count(truth))
     }
   }
@@ -243,7 +242,7 @@ class NativeHintParitySpec extends AnyFunSuite {
     val df = child.sql("SELECT count(*) FROM global_temp.hint_parity_t " +
       "WHERE array_contains(tags, 'a2')")
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("mvContains=List((tags,List(a2)))"), plan)
+    assert(ScanPreds.has(plan, "MvContains", "MvContains(tags,List(a2))"), plan)
     assert(df.collect().head.getLong(0) == (0 until N).count(anyTag(_ == "a2")))
   }
 

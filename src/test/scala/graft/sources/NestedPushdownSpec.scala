@@ -39,8 +39,8 @@ class NestedPushdownSpec extends AnyFunSuite {
       : Option[Seq[Int]] = {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(dir).head
     val seg = graft.format.DruidSegment.open(segDir)
-    val part = graft.sources.druid.DruidInputPartition(
-      segDir, 0, N, -1, Map.empty, nestedEq = clauses)
+    val part = graft.sources.druid.DruidInputPartition(segDir, 0, N,
+      clauses.map { case (c, path, vs) => graft.sources.druid.NestedEq(c, path, vs) })
     Option(graft.sources.druid.RowSelectionProbe.build(seg, part)).map(_.toSeq)
   }
 
@@ -92,7 +92,8 @@ class NestedPushdownSpec extends AnyFunSuite {
          WHERE get_json_object(props, '$.tag') = 't2'
            AND get_json_object(props, '$.k') IN ('1', '4')""")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("nestedEq=List((props,$.tag,List(t2)), (props,$.k,List(1, 4)))"),
+    assert(ScanPreds.has(p, "NestedEq",
+      "NestedEq(props,$.tag,List(t2))", "NestedEq(props,$.k,List(1, 4))"),
       s"nested clauses missing from the scan:\n$p")
     assert(p.contains("get_json_object"), "residual predicate dropped")
     val expected = (0 until N).count(i => i % 10 != 0 && i % 3 == 2 &&
@@ -105,20 +106,20 @@ class NestedPushdownSpec extends AnyFunSuite {
     val base = spark.read.format("druid").load(dir)
     val dfOr = base.filter(get_json_object(col("props"), "$.tag") === "t1" ||
       get_json_object(col("props"), "$.tag") === "t2").agg(count(lit(1)))
-    assert(!dfOr.queryExecution.executedPlan.toString.contains("nestedEq=List(("))
+    assert(!dfOr.queryExecution.executedPlan.toString.contains("NestedEq("))
     val dfNot = base.filter(!(get_json_object(col("props"), "$.tag") === "t1"))
       .agg(count(lit(1)))
-    assert(!dfNot.queryExecution.executedPlan.toString.contains("nestedEq=List(("))
+    assert(!dfNot.queryExecution.executedPlan.toString.contains("NestedEq("))
     val dfWild = base.filter(get_json_object(col("props"), "$.sub[*]") === "x")
       .agg(count(lit(1)))
-    assert(!dfWild.queryExecution.executedPlan.toString.contains("nestedEq=List(("))
+    assert(!dfWild.queryExecution.executedPlan.toString.contains("NestedEq("))
     // a bracketed EXACT path is pushable now (array-of-objects
     // shredding); a subscript on an OBJECT field safely selects zero
     // rows (get_json_object renders null there)
     val dfIdx = base.filter(get_json_object(col("props"), "$.sub[0]") === "x")
       .agg(count(lit(1)).as("n"))
-    assert(dfIdx.queryExecution.executedPlan.toString.contains(
-      "nestedEq=List((props,$.sub[0],List(x)))"))
+    assert(ScanPreds.has(dfIdx.queryExecution.executedPlan.toString, "NestedEq",
+      "NestedEq(props,$.sub[0],List(x))"))
     assert(dfIdx.collect().head.getLong(0) == 0L)
     // blob-encoded json column: no field bitmaps, no rewrite
     val blobDir = Files.createTempDirectory("graft-nedblob").toString + "/t"
@@ -129,7 +130,7 @@ class NestedPushdownSpec extends AnyFunSuite {
     val dfBlob = spark.read.format("druid").load(blobDir)
       .filter(get_json_object(col("props"), "$.k") === "2")
       .agg(count(lit(1)).as("n"))
-    assert(!dfBlob.queryExecution.executedPlan.toString.contains("nestedEq=List(("))
+    assert(!dfBlob.queryExecution.executedPlan.toString.contains("NestedEq("))
     assert(dfBlob.collect().head.getLong(0) == 20L)
   }
 
@@ -144,7 +145,7 @@ class NestedPushdownSpec extends AnyFunSuite {
           "aggregations": [{"type": "count", "name": "rows"}]
         }""", _ => spark.read.format("druid").load(dir))
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("nestedEq=List((props,$.tag,List(t0, t2)))"),
+    assert(ScanPreds.has(p, "NestedEq", "NestedEq(props,$.tag,List(t0, t2))"),
       s"native nested-field selector not pushed:\n$p")
     val expected = (0 until N).count(i => i % 10 != 0 &&
       (i % 3 == 0 || i % 3 == 2))
@@ -159,7 +160,7 @@ class NestedPushdownSpec extends AnyFunSuite {
           "filter": {"type": "selector", "dimension": "vk", "value": "5"},
           "aggregations": [{"type": "count", "name": "rows"}]
         }""", _ => spark.read.format("druid").load(dir))
-    assert(!typed.queryExecution.executedPlan.toString.contains("nestedEq=List(("),
+    assert(!typed.queryExecution.executedPlan.toString.contains("NestedEq("),
       "typed nested-field vc must stay residual-only")
     assert(typed.collect().head.getAs[Long]("rows") ==
       (0 until N).count(i => i % 10 != 0 && i % 7 == 5))
@@ -187,8 +188,7 @@ class NestedPushdownSpec extends AnyFunSuite {
       val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(aDir).head
       val seg = graft.format.DruidSegment.open(segDir)
       val part = graft.sources.druid.DruidInputPartition(
-        segDir, 0, M, -1, Map.empty,
-        nestedEq = Seq(("props", path, vs)))
+        segDir, 0, M, Seq(graft.sources.druid.NestedEq("props", path, vs)))
       Option(graft.sources.druid.RowSelectionProbe.build(seg, part)).map(_.toSeq)
     }
     // exact bracketed field: the element-indexed bitmaps serve rows

@@ -25,14 +25,14 @@ class NullSkipSpec extends AnyFunSuite {
     val df = spark.read.format("druid").load(dir).filter(col("v").isNotNull)
     assert(df.count() == 100)
     // the scan description shows the pushed not-null column
-    assert(df.queryExecution.executedPlan.toString.contains("notNull=v"),
+    assert(df.queryExecution.executedPlan.toString.contains("NotNull(v)"),
       "IsNotNull not pushed to the scan")
 
     // direct row-selection check: only the 100 non-null rows survive
     val seg = graft.format.DruidSegment.open(
       graft.sources.druid.DruidTableUtil.discoverSegments(dir).head)
     val part = graft.sources.druid.DruidInputPartition(
-      seg.dir.toString, 0, 1000, -1, Map.empty, Set("v"))
+      seg.dir.toString, 0, 1000, Seq(graft.sources.druid.NotNull("v")))
     val sel = graft.sources.druid.RowSelectionProbe.build(seg, part)
     assert(sel != null && sel.length == 100)
 
@@ -50,7 +50,7 @@ class NullSkipSpec extends AnyFunSuite {
       .write.format("druid").mode("overwrite").save(dir)
     val df = spark.read.format("druid").load(dir).filter(col("v").isNull)
     assert(df.count() == 900)
-    assert(df.queryExecution.executedPlan.toString.contains("isNull=v"),
+    assert(df.queryExecution.executedPlan.toString.contains("NullOnly(v)"),
       "IsNull not pushed to the scan")
     // no-null column: IS NULL matches nothing, split skips entirely
     assert(spark.read.format("druid").load(dir)

@@ -52,7 +52,7 @@ class PrefixPushdownSpec extends AnyFunSuite {
     assert(df.count() == expected)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("prefixFilters=Map(name"),
+    assert(p.contains("StrPrefix(name,"),
       s"prefix filter missing from scan description:\n$p")
   }
 
@@ -75,7 +75,7 @@ class PrefixPushdownSpec extends AnyFunSuite {
     val df = base.filter(col("name").contains("b12"))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("patternFilters=Map(name"),
+    assert(p.contains("StrMatch(name,"),
       s"pattern filter missing from scan description:\n$p")
   }
 
@@ -92,10 +92,10 @@ class PrefixPushdownSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(out).head
     val seg = graft.format.DruidSegment.open(segDir)
 
+    val schema = rows.toDF("__time", "kind", "tag", "n").schema
     def sel(f: org.apache.spark.sql.sources.Filter): Seq[Int] = {
-      val part = graft.sources.druid.DruidInputPartition(
-        segDir, 0, rows.length, -1, Map.empty,
-        orFilters = Seq(f))
+      val part = graft.sources.druid.DruidInputPartition(segDir, 0, rows.length,
+        graft.sources.druid.ScanPred.of(f, schema).toSeq)
       Option(graft.sources.druid.RowSelectionProbe.build(seg, part))
         .map(_.toSeq).getOrElse(Seq.tabulate(rows.length)(identity))
     }
@@ -144,25 +144,24 @@ class PrefixPushdownSpec extends AnyFunSuite {
     val segDir = graft.sources.druid.DruidTableUtil.discoverSegments(out).head
     val seg = graft.format.DruidSegment.open(segDir)
 
-    def sel(col: String, b: DimBound): Seq[Int] = {
-      val part = DruidInputPartition(segDir, 0, rows.length, -1,
-        Map.empty, boundFilters = Map(col -> Seq(b)))
+    def sel(b: DimBound): Seq[Int] = {
+      val part = DruidInputPartition(segDir, 0, rows.length, Seq(b))
       Option(RowSelectionProbe.build(seg, part))
         .map(_.toSeq).getOrElse(Seq.tabulate(rows.length)(identity))
     }
 
     // version: lower "v1.7" admits exactly i%20 >= 7 (v1.10 included)
     val expectV = rows.indices.filter(i => i % 20 >= 7)
-    assert(sel("ver", DimBound("version", Some("v1.7"), lowerStrict = false,
+    assert(sel(DimBound("ver", "version", Some("v1.7"), lowerStrict = false,
       None, upperStrict = false)) == expectV)
     // version strict upper: i%20 < 7
     val expectVU = rows.indices.filter(i => i % 20 < 7)
-    assert(sel("ver", DimBound("version", None, lowerStrict = false,
+    assert(sel(DimBound("ver", "version", None, lowerStrict = false,
       Some("v1.7"), upperStrict = true)) == expectVU)
     // alphanumeric on u<k>: "u100" admits u100..u149 AND u2-digit? no —
     // digit runs compare numerically, so exactly k >= 100
     val expectA = rows.indices.filter(i => i % 150 >= 100)
-    assert(sel("user", DimBound("alphanumeric", Some("u100"),
+    assert(sel(DimBound("user", "alphanumeric", Some("u100"),
       lowerStrict = false, None, upperStrict = false)) == expectA)
     // strlen: length-first ordering; "u99" (len 3) under strict upper
     // keeps len-2 values and len-3 values below u99
@@ -170,20 +169,20 @@ class PrefixPushdownSpec extends AnyFunSuite {
       val v = s"u${i % 150}"
       v.length < 3 || (v.length == 3 && v < "u99")
     }
-    assert(sel("user", DimBound("strlen", None, lowerStrict = false,
+    assert(sel(DimBound("user", "strlen", None, lowerStrict = false,
       Some("u99"), upperStrict = true)) == expectS)
     // lexicographic range
     val expectL = rows.indices.filter { i =>
       val v = s"v1.${i % 20}"; v >= "v1.12" && v <= "v1.3"
     }
-    assert(sel("ver", DimBound("lexicographic", Some("v1.12"),
+    assert(sel(DimBound("ver", "lexicographic", Some("v1.12"),
       lowerStrict = false, Some("v1.3"), upperStrict = false)) == expectL)
   }
 
   test("plain Spark SQL string ranges ride the bound pushdown") {
     // ordinary DataFrame/SQL comparisons — no native query involved —
     // must reach the scan as lexicographic bounds: exact row counts,
-    // boundFilters in the plan, envelope segment pruning
+    // bounds in the plan, envelope segment pruning
     val base = spark.read.format("druid").load(dir)
     val names = (0 until 4000).map(nameOf)
     val df = base.filter(col("name") >= "ab" && col("name") < "ba")
@@ -191,7 +190,7 @@ class PrefixPushdownSpec extends AnyFunSuite {
       names.count(v => v != null && v >= "ab" && v < "ba"))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("boundFilters=Map(name"),
+    assert(p.contains("DimBound(name,"),
       s"string range missing from scan description:\n$p")
     // envelope pruning: a range above every envelope plans zero splits
     val none = base.filter(col("name") > "zz")
@@ -222,7 +221,7 @@ class PrefixPushdownSpec extends AnyFunSuite {
     assert(got.map(_.getAs[Long]("cnt")).toSeq ==
       Seq(rows.count(r => r._2.stripPrefix("v1.").toInt >= 7).toLong))
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("boundFilters=Map(ver"),
+    assert(p.contains("DimBound(ver,"),
       s"comparator bound missing from scan description:\n$p")
     // the residual predicate must ALSO be on the plan (final word)
     assert(p.toLowerCase.contains("versioncmp"),

@@ -138,49 +138,49 @@ class PushdownMatrixSpec extends AnyFunSuite {
     "time</top" -> (1, 30), "time</or" -> (1, 30), "time</and-in-or" -> (1, 30),
     "time<sub-ms/top" -> (2, 60), "time<sub-ms/or" -> (2, 60),
     "time<sub-ms/and-in-or" -> (2, 60),
-    "time>/top" -> (1, 30), "time>/or" -> (2, 60), "time>/and-in-or" -> (2, 60),
+    "time>/top" -> (1, 30), "time>/or" -> (1, 30), "time>/and-in-or" -> (1, 30),
     "time>=/top" -> (2, 60), "time>=/or" -> (2, 60), "time>=/and-in-or" -> (2, 60),
     "time<=/top" -> (1, 30), "time<=/or" -> (1, 30), "time<=/and-in-or" -> (1, 30),
     "time=/top" -> (1, 30), "time=/or" -> (1, 30), "time=/and-in-or" -> (1, 30),
-    "time-in/top" -> (1, 30), "time-in/or" -> (2, 60), "time-in/and-in-or" -> (2, 60),
-    "str=/top/bm" -> (1, 5), "str=/top/nobm" -> (1, 30), "str=/top/absent" -> (2, 35),
+    "time-in/top" -> (1, 30), "time-in/or" -> (1, 30), "time-in/and-in-or" -> (1, 30),
+    "str=/top/bm" -> (1, 5), "str=/top/nobm" -> (1, 30), "str=/top/absent" -> (1, 5),
     "str=/or/bm" -> (1, 5), "str=/or/nobm" -> (1, 30), "str=/or/absent" -> (2, 5),
     "str=/and-in-or/bm" -> (1, 5), "str=/and-in-or/nobm" -> (1, 30),
     "str=/and-in-or/absent" -> (2, 5),
     "str-in/top/bm" -> (2, 11), "str-in/top/nobm" -> (2, 60),
-    "str-in/top/absent" -> (2, 35), "str-in/or/bm" -> (2, 11), "str-in/or/nobm" -> (2, 60),
+    "str-in/top/absent" -> (2, 5), "str-in/or/bm" -> (2, 11), "str-in/or/nobm" -> (2, 60),
     "str-in/or/absent" -> (2, 5), "str-in/and-in-or/bm" -> (2, 11),
     "str-in/and-in-or/nobm" -> (2, 60), "str-in/and-in-or/absent" -> (2, 5),
-    "str<=>/top/bm" -> (1, 5), "str<=>/top/nobm" -> (1, 30), "str<=>/top/absent" -> (2, 35),
-    "str<=>/or/bm" -> (2, 5), "str<=>/or/nobm" -> (2, 60), "str<=>/or/absent" -> (2, 5),
-    "str<=>/and-in-or/bm" -> (2, 5), "str<=>/and-in-or/nobm" -> (2, 60),
+    "str<=>/top/bm" -> (1, 5), "str<=>/top/nobm" -> (1, 30), "str<=>/top/absent" -> (2, 5),
+    "str<=>/or/bm" -> (1, 5), "str<=>/or/nobm" -> (1, 30), "str<=>/or/absent" -> (2, 5),
+    "str<=>/and-in-or/bm" -> (1, 5), "str<=>/and-in-or/nobm" -> (1, 30),
     "str<=>/and-in-or/absent" -> (2, 5),
     "prefix/top/bm" -> (1, 25), "prefix/top/nobm" -> (1, 30),
-    "prefix/top/absent" -> (2, 55), "prefix/or/bm" -> (1, 25), "prefix/or/nobm" -> (1, 30),
+    "prefix/top/absent" -> (1, 25), "prefix/or/bm" -> (1, 25), "prefix/or/nobm" -> (1, 30),
     "prefix/or/absent" -> (2, 25), "prefix/and-in-or/bm" -> (1, 25),
     "prefix/and-in-or/nobm" -> (1, 30), "prefix/and-in-or/absent" -> (2, 25),
     "contains/top/bm" -> (2, 10), "contains/top/nobm" -> (2, 60),
-    "contains/top/absent" -> (2, 35), "contains/or/bm" -> (2, 10),
+    "contains/top/absent" -> (1, 5), "contains/or/bm" -> (2, 10),
     "contains/or/nobm" -> (2, 60), "contains/or/absent" -> (2, 5),
     "contains/and-in-or/bm" -> (2, 10), "contains/and-in-or/nobm" -> (2, 60),
     "contains/and-in-or/absent" -> (2, 5),
-    "ends/top/bm" -> (2, 10), "ends/top/nobm" -> (2, 60), "ends/top/absent" -> (2, 35),
+    "ends/top/bm" -> (2, 10), "ends/top/nobm" -> (2, 60), "ends/top/absent" -> (1, 5),
     "ends/or/bm" -> (2, 10), "ends/or/nobm" -> (2, 60), "ends/or/absent" -> (2, 5),
     "ends/and-in-or/bm" -> (2, 10), "ends/and-in-or/nobm" -> (2, 60),
     "ends/and-in-or/absent" -> (2, 5),
-    "str>=/top/bm" -> (1, 25), "str>=/top/nobm" -> (1, 30), "str>=/top/absent" -> (2, 25),
-    "str>=/or/bm" -> (2, 60), "str>=/or/nobm" -> (2, 60), "str>=/or/absent" -> (2, 60),
-    "str>=/and-in-or/bm" -> (2, 60), "str>=/and-in-or/nobm" -> (2, 60),
-    "str>=/and-in-or/absent" -> (2, 60),
-    "str</top/bm" -> (1, 26), "str</top/nobm" -> (1, 30), "str</top/absent" -> (1, 0),
-    "str</or/bm" -> (2, 60), "str</or/nobm" -> (2, 60), "str</or/absent" -> (2, 60),
-    "str</and-in-or/bm" -> (2, 60), "str</and-in-or/nobm" -> (2, 60),
-    "str</and-in-or/absent" -> (2, 60),
+    "str>=/top/bm" -> (1, 25), "str>=/top/nobm" -> (1, 30), "str>=/top/absent" -> (1, 25),
+    "str>=/or/bm" -> (1, 25), "str>=/or/nobm" -> (1, 30), "str>=/or/absent" -> (2, 25),
+    "str>=/and-in-or/bm" -> (1, 25), "str>=/and-in-or/nobm" -> (1, 30),
+    "str>=/and-in-or/absent" -> (2, 25),
+    "str</top/bm" -> (1, 26), "str</top/nobm" -> (1, 30), "str</top/absent" -> (0, 0),
+    "str</or/bm" -> (1, 26), "str</or/nobm" -> (1, 30), "str</or/absent" -> (1, 0),
+    "str</and-in-or/bm" -> (1, 26), "str</and-in-or/nobm" -> (1, 30),
+    "str</and-in-or/absent" -> (1, 0),
     "str-not-null/top/bm" -> (2, 60), "str-not-null/top/nobm" -> (2, 60),
-    "str-not-null/top/absent" -> (2, 60), "str-not-null/or/bm" -> (2, 60),
-    "str-not-null/or/nobm" -> (2, 60), "str-not-null/or/absent" -> (2, 60),
+    "str-not-null/top/absent" -> (1, 30), "str-not-null/or/bm" -> (2, 60),
+    "str-not-null/or/nobm" -> (2, 60), "str-not-null/or/absent" -> (1, 30),
     "str-not-null/and-in-or/bm" -> (2, 60), "str-not-null/and-in-or/nobm" -> (2, 60),
-    "str-not-null/and-in-or/absent" -> (2, 60),
+    "str-not-null/and-in-or/absent" -> (1, 30),
     "str-null/top/bm" -> (2, 60), "str-null/top/nobm" -> (2, 60),
     "str-null/top/absent" -> (2, 60), "str-null/or/bm" -> (2, 60),
     "str-null/or/nobm" -> (2, 60), "str-null/or/absent" -> (2, 60),
@@ -195,20 +195,20 @@ class PushdownMatrixSpec extends AnyFunSuite {
     "num<=/top/bm" -> (1, 30), "num<=/top/absent" -> (0, 0), "num<=/or/bm" -> (1, 30),
     "num<=/or/absent" -> (1, 30), "num<=/and-in-or/bm" -> (1, 30),
     "num<=/and-in-or/absent" -> (1, 30),
-    "num-in/top/bm" -> (2, 60), "num-in/top/absent" -> (2, 60), "num-in/or/bm" -> (1, 30),
+    "num-in/top/bm" -> (1, 30), "num-in/top/absent" -> (1, 30), "num-in/or/bm" -> (1, 30),
     "num-in/or/absent" -> (1, 30), "num-in/and-in-or/bm" -> (1, 30),
     "num-in/and-in-or/absent" -> (1, 30),
     "num-not-null/top/bm" -> (2, 55), "num-not-null/top/absent" -> (1, 25),
-    "num-not-null/or/bm" -> (2, 60), "num-not-null/or/absent" -> (2, 60),
-    "num-not-null/and-in-or/bm" -> (2, 60), "num-not-null/and-in-or/absent" -> (2, 60),
-    "num-null/top/bm" -> (2, 5), "num-null/top/absent" -> (2, 35),
-    "num-null/or/bm" -> (1, 30), "num-null/or/absent" -> (2, 60),
-    "num-null/and-in-or/bm" -> (1, 30), "num-null/and-in-or/absent" -> (2, 60),
-    "num<=>/top/bm" -> (1, 30), "num<=>/top/absent" -> (2, 60), "num<=>/or/bm" -> (2, 60),
-    "num<=>/or/absent" -> (2, 60), "num<=>/and-in-or/bm" -> (2, 60),
+    "num-not-null/or/bm" -> (2, 55), "num-not-null/or/absent" -> (1, 25),
+    "num-not-null/and-in-or/bm" -> (2, 55), "num-not-null/and-in-or/absent" -> (1, 25),
+    "num-null/top/bm" -> (1, 5), "num-null/top/absent" -> (2, 35),
+    "num-null/or/bm" -> (1, 5), "num-null/or/absent" -> (2, 35),
+    "num-null/and-in-or/bm" -> (1, 5), "num-null/and-in-or/absent" -> (2, 35),
+    "num<=>/top/bm" -> (1, 30), "num<=>/top/absent" -> (2, 60), "num<=>/or/bm" -> (1, 30),
+    "num<=>/or/absent" -> (2, 60), "num<=>/and-in-or/bm" -> (1, 30),
     "num<=>/and-in-or/absent" -> (2, 60),
     "mv-contains/top/bm" -> (2, 13), "mv-contains/top/nobm" -> (2, 60),
-    "mv-contains/top/absent" -> (2, 6),
+    "mv-contains/top/absent" -> (1, 6),
     "mv-bound/top/bm" -> (2, 33), "mv-bound/top/nobm" -> (2, 60),
     "mv-bound/top/absent" -> (2, 16),
     "nested-eq/top/bm" -> (2, 18), "nested-eq/top/nobm" -> (2, 18),

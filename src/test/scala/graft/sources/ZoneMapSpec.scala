@@ -185,9 +185,15 @@ class ZoneMapSpec extends AnyFunSuite {
     }
     val df = spark.read.format("druid").load(out).filter(col("who") === "v051")
     assert(df.count() == 1)
-    val onEmpty = spark.read.format("druid").load(out).filter(col("empty") === "x")
+    // null-safe equality carries no inferred IS NOT NULL, so only the
+    // (missing) envelope could prune here
+    val onEmpty = spark.read.format("druid").load(out).filter(col("empty") <=> "x")
     assert(onEmpty.rdd.getNumPartitions == 2, "no envelope -> never pruned")
     assert(onEmpty.count() == 0)
+    // plain equality implies IS NOT NULL, which the null counts prune
+    val notNull = spark.read.format("druid").load(out).filter(col("empty") === "x")
+    assert(notNull.rdd.getNumPartitions == 0, "all-null segments skip on IS NOT NULL")
+    assert(notNull.count() == 0)
   }
 
   test("segments without zones are never pruned (fallback safety)") {

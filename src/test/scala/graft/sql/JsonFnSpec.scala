@@ -79,7 +79,7 @@ class JsonFnSpec extends AnyFunSuite {
       """SELECT count(*) AS n FROM jfn_t
          WHERE json_value(props, '$.tag') = 't1'""")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("nestedEq=List((props,$.tag,List(t1)))"),
+    assert(graft.sources.ScanPreds.has(p, "NestedEq", "NestedEq(props,$.tag,List(t1))"),
       s"json_value equality not pushed:\n$p")
     assert(df.collect().head.getLong(0) == 200L)
   }
