@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.format.Compression
-import graft.sources.druid.SegmentGranularity
+import graft.sql.DruidTime
 
 /** Every setting graft reads, one row each: name, scope, type (with its
   * check), default and doc. Only this file reads system properties, env
@@ -55,7 +55,7 @@ object Settings {
     choice(names.toSeq.map(n => n -> n): _*)
   private val names: Type[Seq[String]] = Type("comma-separated names",
     v => Some(v.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-  private val granularity = oneOf(SegmentGranularity.supported.toSeq.sorted)
+  private val granularity = oneOf(DruidTime.granularityNames.map(_._1))
   private val codec = Type[Byte]("lz4/zstd/lzf/uncompressed/none", v => Map(
     "lz4" -> Compression.LZ4, "zstd" -> Compression.ZSTD, "lzf" -> Compression.LZF,
     "uncompressed" -> Compression.UNCOMPRESSED, "none" -> Compression.NONE).get(v.toLowerCase))
@@ -69,7 +69,7 @@ object Settings {
     case _ => None
   })
   private val instant = Type[Long]("epoch millis or ISO instant", v =>
-    v.toLongOption.orElse(scala.util.Try(java.time.Instant.parse(v).toEpochMilli).toOption))
+    v.toLongOption.orElse(scala.util.Try(DruidTime.instant(v)).toOption))
 
   /** One row. `default` is the raw default ("" = unset). */
   final class Setting[T] private[Settings] (val name: String, val scope: Scope,
@@ -141,7 +141,7 @@ object Settings {
   val Rollup = write("rollup", "false", bool,
     "Pre-aggregate at ingest: rows sharing floored __time and dimensions sum their metrics.")
   val QueryGranularity = write("queryGranularity", "none",
-    oneOf("none" +: SegmentGranularity.supported.toSeq.sorted), "__time floor of rollup.")
+    oneOf("none" +: DruidTime.granularityNames.map(_._1)), "__time floor of rollup.")
   val CompressionOpt = write("compression", "lz4", codec, "Block codec of numeric and time columns.")
   val RollupDimensions = write("rollupDimensions", "", names,
     "Numeric columns that group rather than sum under rollup.")

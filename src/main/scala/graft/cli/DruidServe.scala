@@ -15,6 +15,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.Settings
+import graft.sql.DruidTime
 
 /** `druid-tool serve` — a minimal HTTP endpoint speaking Druid's
   * native-query WIRE PROTOCOL (`POST /druid/v2`, the broker endpoint
@@ -1496,10 +1497,8 @@ object DruidServe {
               case Nil => Some((Long.MinValue, Long.MaxValue))
               case "intervals" :: iv :: Nil => iv.split("_", 2) match {
                 case Array(lo, hi) =>
-                  try Some((java.time.Instant.parse(lo).toEpochMilli,
-                            java.time.Instant.parse(hi).toEpochMilli))
-                  catch { case _: java.time.format.DateTimeParseException =>
-                    None }
+                  try Some((DruidTime.instant(lo), DruidTime.instant(hi)))
+                  catch { case _: IllegalArgumentException => None }
                 case _ => None
               }
               case _ => None
@@ -1573,29 +1572,8 @@ object DruidServe {
           "candidates requires ?datasource=<name>"))
       if (!servedTables.containsKey(name))
         throw new IllegalArgumentException(s"no such datasource: $name")
-      // Joda-tolerant ISO-8601: Druid clients send any of
-      // 2024-01-02T00:00:00.000Z, ...+01:00 (non-UTC offset),
-      // zoneless local datetimes, and bare dates (2024-01-02).
-      // Instant.parse alone 400s on the last three valid forms.
-      def isoMsOf(s: String): Long = Iterator[String => Long](
-          java.time.OffsetDateTime.parse(_).toInstant.toEpochMilli,
-          java.time.LocalDateTime.parse(_).toInstant(ZoneOffset.UTC).toEpochMilli,
-          java.time.LocalDate.parse(_).atStartOfDay.toInstant(ZoneOffset.UTC)
-            .toEpochMilli)
-        .flatMap(parse =>
-          try Some(parse(s))
-          catch { case _: java.time.format.DateTimeParseException => None })
-        .nextOption().getOrElse(throw new IllegalArgumentException(
-          s"interval timestamp '$s' (ISO-8601 instant, " +
-            "offset/local datetime, or date)"))
       val intervals: Seq[(Long, Long)] = params.get("intervals").toSeq
-        .flatMap(_.split(",")).filter(_.nonEmpty).map { s =>
-          s.split("/") match {
-            case Array(a, b) => (isoMsOf(a), isoMsOf(b))
-            case _ => throw new IllegalArgumentException(
-              s"interval '$s' (expected ISO start/end)")
-          }
-        }
+        .flatMap(_.split(",")).filter(_.nonEmpty).map(DruidTime.interval)
       val a = mapper.createArrayNode()
       segmentRootOf(name).toSeq
         .flatMap(d => graft.sources.druid.SegmentCatalog.metaFor(d))
@@ -1710,30 +1688,6 @@ object DruidServe {
           s"[druid-serve] rules persist failed: ${e.getMessage}")
       }
     }
-    def parseRuleInterval(s: String): (Long, Long) = {
-      val parts = s.split("/", -1)
-      require(parts.length == 2, s"interval '$s' is not 'start/end'")
-      def ms(t: String): Long =
-        try java.time.Instant.parse(t).toEpochMilli
-        catch { case _: java.time.format.DateTimeParseException =>
-          java.time.LocalDate.parse(t).atStartOfDay(ZoneOffset.UTC)
-            .toInstant.toEpochMilli }
-      val (lo, hi) = (ms(parts(0)), ms(parts(1)))
-      require(lo < hi, s"interval '$s' is empty")
-      (lo, hi)
-    }
-    def periodCutoff(period: String, nowMs: Long): Long = {
-      val s = period.trim.toUpperCase(java.util.Locale.ROOT)
-      require(s.startsWith("P"), s"period '$period' is not ISO-8601")
-      val t = s.indexOf('T')
-      val datePart = if (t < 0) s else s.substring(0, t)
-      var zdt = java.time.Instant.ofEpochMilli(nowMs).atZone(ZoneOffset.UTC)
-      if (datePart.length > 1)
-        zdt = zdt.minus(java.time.Period.parse(datePart))
-      if (t >= 0)
-        zdt = zdt.minus(java.time.Duration.parse("P" + s.substring(t)))
-      zdt.toInstant.toEpochMilli
-    }
     val knownRuleTypes = Set("loadForever", "loadByPeriod", "loadByInterval",
       "dropForever", "dropBeforeByPeriod", "dropByInterval")
     /** Throws IAE on anything a later apply pass could choke on. */
@@ -1744,10 +1698,12 @@ object DruidServe {
         require(knownRuleTypes.contains(t),
           s"unknown rule type '$t' (${knownRuleTypes.toSeq.sorted.mkString(", ")})")
         if (t == "loadByPeriod" || t == "dropBeforeByPeriod") {
-          val _ = periodCutoff(r.path("period").asText(""), 0L)
+          val _ = DruidTime.period(r.path("period").asText(""))
         }
         if (t == "loadByInterval" || t == "dropByInterval") {
-          val _ = parseRuleInterval(r.path("interval").asText(""))
+          val iv = r.path("interval").asText("")
+          val (lo, hi) = DruidTime.interval(iv)
+          require(lo < hi, s"interval '$iv' is empty")
         }
       }
     }
@@ -1756,6 +1712,9 @@ object DruidServe {
       */
     def ruleDecision(rules: ArrayNode, m: graft.sources.druid.SegMeta,
                      nowMs: Long): Boolean = {
+      // the instant one rule period before now
+      def cutoff(r: JsonNode): Long =
+        DruidTime.shift(nowMs, DruidTime.period(r.path("period").asText("")), -1)
       val it = rules.elements()
       while (it.hasNext) {
         val r = it.next()
@@ -1763,16 +1722,14 @@ object DruidServe {
           case "loadForever" => return true
           case "dropForever" => return false
           case "loadByPeriod" =>
-            if (m.endMs > periodCutoff(r.path("period").asText(""), nowMs))
-              return true
+            if (m.endMs > cutoff(r)) return true
           case "dropBeforeByPeriod" =>
-            if (m.endMs <= periodCutoff(r.path("period").asText(""), nowMs))
-              return false
+            if (m.endMs <= cutoff(r)) return false
           case "loadByInterval" =>
-            val (lo, hi) = parseRuleInterval(r.path("interval").asText(""))
+            val (lo, hi) = DruidTime.interval(r.path("interval").asText(""))
             if (m.startMs < hi && m.endMs > lo) return true
           case "dropByInterval" =>
-            val (lo, hi) = parseRuleInterval(r.path("interval").asText(""))
+            val (lo, hi) = DruidTime.interval(r.path("interval").asText(""))
             if (m.startMs >= lo && m.endMs <= hi) return false
           case _ => () // validated at POST; foreign file entries skip
         }
@@ -2252,8 +2209,8 @@ object DruidServe {
             v.asText().toLowerCase == "true"
           else bad(t, v)
         case "TIMESTAMP" =>
-          try java.sql.Timestamp.from(java.time.Instant.parse(v.asText()))
-          catch { case _: java.time.format.DateTimeParseException =>
+          try new java.sql.Timestamp(DruidTime.instant(v.asText()))
+          catch { case _: IllegalArgumentException =>
             try java.sql.Timestamp.valueOf(v.asText())
             catch { case _: IllegalArgumentException => bad(t, v) } }
         case "DATE" =>
@@ -2346,25 +2303,28 @@ object DruidServe {
   private val ReplaceRe =
     """(?is)\s*REPLACE\s+INTO\s+(\S+)\s+OVERWRITE\s+(?:(ALL)|WHERE\s+(.+?))\s+((?:SELECT|WITH)\b.+?)\s+PARTITIONED\s+BY\s+(.+?)(?:\s+CLUSTERED\s+BY\s+(.+?))?\s*""".r
 
-  /** PARTITIONED BY clause → writer segmentGranularity (None = ALL). */
+  /** PARTITIONED BY clause → writer segmentGranularity (None = ALL):
+    * a granularity name, FLOOR(__time TO <name>), or TIME_FLOOR(__time,
+    * '<period>') of a period that has a name.
+    */
   private[cli] def parsePartitionedBy(p: String): Option[String] = {
     val up = p.trim.stripSuffix(";").trim
       .toUpperCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
-    val Floor = """FLOOR\s*\(\s*__TIME\s+TO\s+(HOUR|DAY|MONTH|YEAR)\s*\)""".r
-    val TimeFloor = """TIME_FLOOR\s*\(\s*__TIME\s*,\s*'(PT1H|P1D|P1M|P1Y)'\s*\)""".r
-    up match {
-      case "ALL" | "ALL TIME"                => None
-      case "HOUR" | "DAY" | "MONTH" | "YEAR" => Some(up.toLowerCase)
-      case Floor(g)                          => Some(g.toLowerCase)
-      case TimeFloor(per) => Some(per match {
-        case "PT1H" => "hour"; case "P1D" => "day"
-        case "P1M" => "month"; case _ => "year"
-      })
-      case other => throw new IllegalArgumentException(
-        s"unsupported PARTITIONED BY '$other' (supported: HOUR, DAY, " +
-          "MONTH, YEAR, ALL [TIME], FLOOR(__time TO <g>), " +
-          "TIME_FLOOR(__time, 'PT1H'|'P1D'|'P1M'|'P1Y'))")
+    val Floor = """FLOOR\s*\(\s*__TIME\s+TO\s+(\w+)\s*\)""".r
+    val TimeFloor = """TIME_FLOOR\s*\(\s*__TIME\s*,\s*'([^']*)'\s*\)""".r
+    val names = DruidTime.granularityNames
+    val gran = up match {
+      case "ALL" | "ALL TIME" => return None
+      case Floor(g) => names.map(_._1).find(_.equalsIgnoreCase(g))
+      case TimeFloor(per) =>
+        scala.util.Try(DruidTime.period(per)).toOption.flatMap(DruidTime.granularityName)
+      case g => names.map(_._1).find(_.equalsIgnoreCase(g))
     }
+    gran.orElse(throw new IllegalArgumentException(
+      s"unsupported PARTITIONED BY '$up' (supported: ALL [TIME], a granularity " +
+        names.map(_._1.toUpperCase(java.util.Locale.ROOT)).mkString("|") +
+        ", FLOOR(__time TO <granularity>), TIME_FLOOR(__time, '<period>') for the periods " +
+        names.map(_._2).mkString("|") + ")"))
   }
 
   /** The dataSource name comes off the wire and becomes a directory

@@ -1386,7 +1386,7 @@ object DruidQueries extends QuerySet {
             AND time_extract(__time, 'DOW') <= 5
           GROUP BY 1, 2 ORDER BY 1, 2""")
       },
-      Some("""SELECT epoch_ms(ts) - (epoch_ms(ts) % 604800000) AS wk_ms,
+      Some("""SELECT epoch_ms(date_trunc('week', ts)) AS wk_ms,
               CASE event_type WHEN 'click' THEN 'engagement'
                    WHEN 'view' THEN 'engagement'
                    WHEN 'purchase' THEN 'conversion'

@@ -154,11 +154,41 @@ object StreamingQueries extends QuerySet {
     }
   }
 
-  /** Every drop directory and segment table the streams read. */
+  /** Output kinds of the queries that write segment tables under the
+    * staging root, each at `<kind>_<n>_<scale dir>` (see [[outputPath]]).
+    */
+  private val outputKinds = Seq("ingest", "relay", "annidx", "curated", "nested")
+
+  /** Delete, once per JVM, the segment outputs and checkpoints an
+    * earlier JVM left for `dir`. The query counter restarts with each
+    * JVM, so a rerun writes to the same paths; appending onto the old
+    * segments would double every count, and deleting them inside a
+    * query would put that delete in the query's time.
+    */
+  private def clearOutputs(s: SparkSession, dir: String): Unit = {
+    val key = stagedPath(dir, "outputs")
+    Staging.once(key) {
+      val flat = key.stripPrefix(stagedPath("", "outputs"))
+      val stale = s"(${outputKinds.mkString("|")})_\\d+_${java.util.regex.Pattern.quote(flat)}(_cp)?".r
+      Option(new java.io.File(key).getParentFile.listFiles()).toSeq.flatten
+        .filter(f => stale.matches(f.getName)).foreach(f => deleteDir(f.getPath))
+    }
+  }
+
+  /** A fresh output path of `kind` for one query run over `dir`. */
+  private def outputPath(s: SparkSession, dir: String, kind: String): String = {
+    clearOutputs(s, dir)
+    stagedPath(dir, s"${kind}_${nameCounter.incrementAndGet()}")
+  }
+
+  /** Every drop directory and segment table the streams read, and the
+    * clearing of earlier JVMs' outputs.
+    */
   def staging: Seq[StageJob] = Seq(
     StageJob("events", stageDir), StageJob("events_bytime", stageOrderedDir),
     StageJob("embeddings", stageEmbDir), StageJob("documents", stageDocsDir),
-    StageJob("tailsrc", stageTailDir), StageJob("nestedsrc", stageNestedDir))
+    StageJob("tailsrc", stageTailDir), StageJob("nestedsrc", stageNestedDir),
+    StageJob("outputs", clearOutputs))
 
   def all: Seq[Q] = Seq(
 
@@ -197,12 +227,7 @@ object StreamingQueries extends QuerySet {
       (s, dir) => {
         val in = stageDir(s, dir)
         val schema = s.read.parquet(in).schema
-        val n = nameCounter.incrementAndGet()
-        val out = stagedPath(dir, s"ingest_$n")
-        // the counter restarts with each JVM, so a previous run may have
-        // left segments at this exact path — appending onto them would
-        // double every count; start from an empty destination
-        Seq(out, s"${out}_cp").foreach(deleteDir)
+        val out = outputPath(s, dir, "ingest")
         val q = StreamingOps.segmentSink(
           StreamingOps.parquetStream(s, in, schema)
             .select(col("ts").as("__time"), col("event_type"),
@@ -421,9 +446,7 @@ object StreamingQueries extends QuerySet {
     Q("s8_stream_druid_relay",
       (s, dir) => {
         val seg = stageTailDir(s, dir)
-        val n = nameCounter.incrementAndGet()
-        val out = stagedPath(dir, s"relay_$n")
-        Seq(out, s"${out}_cp").foreach(deleteDir)
+        val out = outputPath(s, dir, "relay")
         val q = StreamingOps.segmentSink(
           s.readStream.format("druid").load(seg)
             .filter(col("event_type") =!= "view")
@@ -546,9 +569,7 @@ object StreamingQueries extends QuerySet {
         val best = array_max(array(cents.map { case (cid, arr) =>
           struct(cos(arr).as("c"), lit(-cid.toInt).as("nc"))
         }: _*))
-        val n = nameCounter.incrementAndGet()
-        val out = stagedPath(dir, s"annidx_$n")
-        Seq(out, s"${out}_cp").foreach(deleteDir)
+        val out = outputPath(s, dir, "annidx")
         val q = StreamingOps.segmentSink(
           StreamingOps.parquetStream(s, in, schema)
             .withColumn("best", best)
@@ -597,9 +618,7 @@ object StreamingQueries extends QuerySet {
       (s, dir) => {
         val in = stageDocsDir(s, dir)
         val schema = s.read.parquet(in).schema
-        val n = nameCounter.incrementAndGet()
-        val out = stagedPath(dir, s"curated_$n")
-        Seq(out, s"${out}_cp").foreach(deleteDir)
+        val out = outputPath(s, dir, "curated")
         val q = StreamingOps.segmentSink(
           StreamingOps.parquetStream(s, in, schema)
             .selectExpr("doc_id", "source",
@@ -696,9 +715,7 @@ object StreamingQueries extends QuerySet {
       (s, dir) => {
         val in = stageNestedDir(s, dir)
         val schema = s.read.parquet(in).schema
-        val n = nameCounter.incrementAndGet()
-        val out = stagedPath(dir, s"nested_$n")
-        Seq(out, s"${out}_cp").foreach(deleteDir)
+        val out = outputPath(s, dir, "nested")
         val stream = StreamingOps.parquetStream(s, in, schema,
             maxFilesPerTrigger = Some(1))
           // one source file per trigger = ONE input split: repartition

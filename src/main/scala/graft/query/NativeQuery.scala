@@ -1,14 +1,15 @@
 package graft.query
 
 import java.sql.Timestamp
-import java.time.{Instant, LocalDateTime, ZoneOffset}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType, StructField, StructType, TimestampType}
+
+import graft.sql.DruidTime
 
 /** Compiler from Druid NATIVE QUERY JSON to a Spark DataFrame plan.
   *
@@ -48,13 +49,12 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, S
   *    `timestamp_floor(__time, 'P1D')`, `case_searched`, `&&`/`==`,
   *    double-quoted identifiers, 0-based substring/strpos all work as
   *    a real Druid client sends them
-  *  - `granularity`: `all`, the simple string granularities
-  *    second/minute/hour/day/week/month/quarter/year, and
-  *    `{"type":"period"}` for their ISO-period spellings — including
-  *    a `timeZone`: buckets are LOCAL calendar periods (truncated in
-  *    local wall time, reported as UTC instants; 23/25-hour days
-  *    across DST), Druid's period-granularity semantics. `origin`
-  *    fails loudly.
+  *  - `granularity`: `all`, Druid's simple names (second ... year,
+  *    fifteen_minute, quarter, ...), `{"type":"period"}` with any ISO
+  *    period, `origin` and `timeZone`, and `{"type":"duration"}` —
+  *    Druid's period-granularity semantics through the one floor in
+  *    [[graft.sql.DruidTime]], the same one `timestamp_floor` and SQL
+  *    TIME_FLOOR use.
   *  - `aggregations`: count, longSum/doubleSum/floatSum,
   *    longMin/longMax/doubleMin/doubleMax/floatMin/floatMax,
   *    doubleMean, the first/last-by-__time family
@@ -286,48 +286,19 @@ object NativeQuery {
 
   // ---- time intervals ----------------------------------------------------
 
-  /** "2024-01-05T00:00:00.000Z/2024-01-15T00:00:00.000Z" (or zoneless,
-    * read as UTC — the engine runs sessions in UTC).
+  /** The query's `intervals` (plain array or `{"type":"intervals"}`
+    * object) as epoch-millis [start, end) pairs.
     */
-  private def parseInstant(s: String): Instant = {
-    // Joda-tolerant like a real Druid broker: instants with Z or any
-    // UTC offset (2024-01-02T00:00:00.000+01:00), zoneless local
-    // datetimes (read as UTC — the engine runs sessions in UTC), and
-    // bare dates (2024-01-02 = midnight UTC). Instant.parse alone
-    // rejects the last three valid Joda forms.
-    type PE = java.time.format.DateTimeParseException
-    try java.time.OffsetDateTime.parse(s).toInstant
-    catch { case _: PE =>
-      try LocalDateTime.parse(s).toInstant(ZoneOffset.UTC)
-      catch { case _: PE =>
-        try java.time.LocalDate.parse(s).atStartOfDay.toInstant(ZoneOffset.UTC)
-        catch {
-          // surface the compiler's loud contract, not a raw
-          // DateTimeParseException (fuzz-caught)
-          case _: PE => fail(
-            s"interval timestamp '$s' (ISO instant, offset/local " +
-              "datetime, or date)")
-        }
-      }
-    }
-  }
-
-  private def intervalsOf(q: JsonNode): Seq[(Instant, Instant)] = {
+  private def intervalsOf(q: JsonNode): Seq[(Long, Long)] = {
     val node0 = q.path("intervals")
     val node = if (node0.isObject) node0.path("intervals") else node0
     if (node.isMissingNode || node.isNull) Seq.empty
-    else node.elements().asScala.map { iv =>
-      iv.asText().split('/') match {
-        case Array(a, b) => (parseInstant(a), parseInstant(b))
-        case _           => fail(s"interval '${iv.asText()}'")
-      }
-    }.toSeq
+    else node.elements().asScala.map(iv => DruidTime.interval(iv.asText())).toSeq
   }
 
-  private def intervalPred(ivs: Seq[(Instant, Instant)]): Option[Column] =
+  private def intervalPred(c: Column, ivs: Seq[(Long, Long)]): Option[Column] =
     ivs.map { case (a, b) =>
-      col("__time") >= lit(Timestamp.from(a)) &&
-        col("__time") < lit(Timestamp.from(b))
+      c >= lit(new Timestamp(a)) && c < lit(new Timestamp(b))
     }.reduceOption(_ || _)
 
   /** Multi-value (array&lt;string&gt;) dimensions of a datasource. */
@@ -340,7 +311,7 @@ object NativeQuery {
     }.toSet
 
   private def applyWhere(df: DataFrame, q: JsonNode): DataFrame = {
-    val time = intervalPred(intervalsOf(q))
+    val time = intervalPred(col("__time"), intervalsOf(q))
     val f = q.path("filter")
     val pred = (time, if (f.isMissingNode || f.isNull) None
       else Some(compileFilter(f, mvColsOf(df)))) match {
@@ -507,15 +478,9 @@ object NativeQuery {
     case "null" =>
       ref(f.path("column").asText()).isNull
     case "interval" =>
-      val d = ref(f.path("dimension").asText())
-      f.path("intervals").elements().asScala.map { iv =>
-        iv.asText().split('/') match {
-          case Array(a, b) =>
-            d >= lit(Timestamp.from(parseInstant(a))) &&
-              d < lit(Timestamp.from(parseInstant(b)))
-          case _ => fail(s"interval '${iv.asText()}'")
-        }
-      }.reduceOption(_ || _).getOrElse(fail("interval filter with no intervals"))
+      intervalPred(ref(f.path("dimension").asText()),
+        f.path("intervals").elements().asScala.map(iv => DruidTime.interval(iv.asText())).toSeq)
+        .getOrElse(fail("interval filter with no intervals"))
     case "and" =>
       f.path("fields").elements().asScala
         .map(compileFilter(_, mvCols)).reduce(_ && _)
@@ -887,297 +852,37 @@ object NativeQuery {
 
   // ---- granularity -------------------------------------------------------
 
-  private val periodUnits = Map(
-    "PT1S" -> "second", "PT1M" -> "minute", "PT1H" -> "hour",
-    "P1D" -> "day", "P1W" -> "week", "P1M" -> "month",
-    "P3M" -> "quarter", "P1Y" -> "year")
-
-  private val simpleUnits =
-    Set("second", "minute", "hour", "day", "week", "month", "quarter", "year")
-
-  /** A resolved bucketing granularity: how a timestamp maps to its
-    * bucket start, and how a dense bucket spine is built for zero-fill.
+  /** The query's bucketing granularity; None = `all` (one bucket).
+    * Strings are Druid's simple names; `period` takes any ISO period
+    * with an optional `origin` and `timeZone`; `duration` is fixed
+    * millis from its origin (epoch by default).
     */
-  private sealed trait Gran {
-    def bucket(c: Column): Column
-    /** One-column ("__time") frame of bucket starts covering
-      * [trunc(start), end) — the zero-fill spine. */
-    def spineDF(spark: SparkSession,
-                start: java.time.Instant, end: java.time.Instant): DataFrame
-  }
-
-  /** Calendar-unit granularity + optional bucket timezone. With a
-    * timezone, bucketing converts to LOCAL wall time, truncates, and
-    * converts the local boundary back to its UTC instant — so "one
-    * day in America/Los_Angeles" is a real local calendar day (23/25 h
-    * across DST), exactly Druid's period-granularity semantics.
-    */
-  private case class UnitGran(unit: String, tz: Option[String]) extends Gran {
-    def bucket(c: Column): Column = tz match {
-      case None    => date_trunc(unit, c)
-      case Some(z) => to_utc_timestamp(date_trunc(unit, from_utc_timestamp(c, z)), z)
-    }
-    def spineDF(spark: SparkSession,
-                start: java.time.Instant, end: java.time.Instant): DataFrame = {
-      // with a bucket timezone the spine steps in LOCAL wall time (so
-      // day/month boundaries and DST hold) and each local boundary
-      // converts back to its UTC instant
-      val seq0 = tz match {
-        case None => sequence(
-          date_trunc(unit, lit(Timestamp.from(start))),
-          lit(Timestamp.from(end)),
-          expr(unitStep(unit)))
-        case Some(z) => sequence(
-          date_trunc(unit, from_utc_timestamp(lit(Timestamp.from(start)), z)),
-          from_utc_timestamp(lit(Timestamp.from(end)), z),
-          expr(unitStep(unit)))
-      }
-      spark.range(1)
-        .select(explode(seq0).as("__t0"))
-        .select((tz match {
-          case None    => col("__t0")
-          case Some(z) => to_utc_timestamp(col("__t0"), z)
-        }).as("__time"))
-        .filter(col("__time") < lit(Timestamp.from(end)))
-    }
-  }
-
-  /** Calendar-period granularity anchored at an `origin` (Druid's
-    * period granularity with a non-epoch origin — fiscal months, weeks
-    * starting Sunday 6pm, ...): bucket boundaries sit at
-    * origin + k·period evaluated in the period's LOCAL calendar, for
-    * all integer k. Two exact strategies, both pure column arithmetic:
-    *
-    *  - sub-month units (second..week): the origin's offset within its
-    *    own period is a fixed wall-clock delta, so shift into the
-    *    anchored lattice, reuse the local-calendar `date_trunc`, shift
-    *    back ("floor in the origin's frame").
-    *  - month-based units (month/quarter/year): month lengths vary, so
-    *    a fixed shift would drift; instead the bucket index is computed
-    *    on the month-number lattice (k = floor((monthIndex(t) −
-    *    monthIndex(origin)) / n)), the candidate boundary rebuilt with
-    *    `add_months` from the origin's month, and stepped back one
-    *    period when t precedes it — exactly Joda's
-    *    `months().getDifference` + floor + `add` sequence Druid runs.
-    *
-    * Month-based boundaries reproduce Joda's month-end clamping
-    * exactly: Druid computes boundary(k) = months().add(origin, k·n),
-    * where Joda clamps the day-of-month PER ADD from the origin
-    * (Jan 31 + 1M = Feb 28, Jan 31 + 2M = Mar 31 — no cumulative
-    * drift), keeping the origin's wall time. The column form splits
-    * the origin into (month start, day-of-month, time-of-day) and
-    * rebuilds each boundary with `add_months` + a `last_day` clamp +
-    * the time offset — `add_months` clamps exactly like Joda, and for
-    * origins at day <= 28 the clamp never fires, collapsing to the
-    * plain fixed-offset lattice. The candidate/step-back selection is
-    * unaffected by clamping (boundary(k) stays inside its month, so
-    * the month-index ordering argument still pins k to within one).
-    */
-  private case class OriginGran(unit: String, nMonths: Int,
-                                tz: Option[String], origin: Instant)
-      extends Gran {
-    private val zone = tz.map(java.time.ZoneId.of)
-      .getOrElse(ZoneOffset.UTC: java.time.ZoneId)
-    private val oLocal = LocalDateTime.ofInstant(origin, zone)
-    // wall-clock offset of the origin within its truncation unit (for
-    // month-based units: within its MONTH — the calendar part of the
-    // offset rides the month-index lattice instead)
-    private val truncTo: LocalDateTime = unit match {
-      case "second" => oLocal.truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
-      case "minute" => oLocal.truncatedTo(java.time.temporal.ChronoUnit.MINUTES)
-      case "hour"   => oLocal.truncatedTo(java.time.temporal.ChronoUnit.HOURS)
-      case "day"    => oLocal.toLocalDate.atStartOfDay
-      case "week"   => oLocal.toLocalDate.`with`(
-        java.time.temporal.TemporalAdjusters.previousOrSame(
-          java.time.DayOfWeek.MONDAY)).atStartOfDay
-      case _ /* month-based */ =>
-        oLocal.toLocalDate.withDayOfMonth(1).atStartOfDay
-    }
-    private val offMs =
-      java.time.Duration.between(truncTo, oLocal).toMillis
-    private val monthBased = nMonths > 0
-    private val oMonthIdx = oLocal.getYear * 12 + oLocal.getMonthValue - 1
-    private val oMonthStart = java.sql.Date.valueOf(
-      oLocal.toLocalDate.withDayOfMonth(1))
-    // month-based origins decompose as (month start, day, time-of-day):
-    // the day is re-clamped per boundary like Joda's months().add
-    private val oDay = oLocal.getDayOfMonth
-    private val timeMs = java.time.Duration.between(
-      oLocal.toLocalDate.atStartOfDay, oLocal).toMillis
-
-    private def localize(c: Column): Column =
-      tz.fold(c)(z => from_utc_timestamp(c, z))
-    private def delocalize(c: Column): Column =
-      tz.fold(c)(z => to_utc_timestamp(c, z))
-
-    /** Bucket start of a LOCAL wall-time column, in local wall time. */
-    private def bucketLocal(local: Column): Column =
-      if (!monthBased) {
-        val shifted = timestamp_millis(unix_millis(local) - lit(offMs))
-        timestamp_millis(unix_millis(date_trunc(unit, shifted)) + lit(offMs))
-      } else {
-        val mIdx = year(local) * 12 + month(local) - lit(1)
-        val d = mIdx - lit(oMonthIdx)
-        // floor division on the month lattice (pmod handles pre-origin)
-        val k = (d - pmod(d, lit(nMonths))) / lit(nMonths)
-        val cand = boundary(k.cast("long"))
-        when(local < cand, boundary(k.cast("long") - lit(1L))).otherwise(cand)
-      }
-
-    /** Boundary k·nMonths periods from the origin, in local wall time:
-      * origin-month start advanced with `add_months`, the origin's
-      * day-of-month clamped to the target month's length (exactly
-      * Joda's months().add — per-boundary from the origin, never
-      * cumulative), plus the origin's time-of-day.
-      */
-    private def boundary(periods: Column): Column = {
-      val mStart = add_months(lit(oMonthStart),
-        (periods * lit(nMonths)).cast("int"))
-      val day = least(lit(oDay), dayofmonth(last_day(mStart)))
-      timestamp_millis(
-        unix_millis(to_timestamp(date_add(mStart, day - lit(1)))) + lit(timeMs))
-    }
-
-    /** Driver-side mirror of [[boundary]]/[[bucketLocal]] on
-      * java.time (whose plusMonths clamps like Joda), for computing
-      * the spine's k range without a column round-trip.
-      */
-    private def mirrorBoundary(k: Long): LocalDateTime = {
-      val m0 = oLocal.toLocalDate.withDayOfMonth(1).plusMonths(k * nMonths)
-      m0.withDayOfMonth(math.min(oDay, m0.lengthOfMonth)).atStartOfDay
-        .plus(java.time.Duration.ofMillis(timeMs))
-    }
-    private def mirrorBucketK(tLocal: LocalDateTime): Long = {
-      val d = (tLocal.getYear.toLong * 12 + tLocal.getMonthValue - 1) - oMonthIdx
-      val k = Math.floorDiv(d, nMonths.toLong)
-      if (mirrorBoundary(k).isAfter(tLocal)) k - 1 else k
-    }
-    def bucket(c: Column): Column = delocalize(bucketLocal(localize(c)))
-    def spineDF(spark: SparkSession,
-                start: java.time.Instant, end: java.time.Instant): DataFrame =
-      if (monthBased) {
-        // stepping a sequence by `interval n month` would clamp
-        // CUMULATIVELY (Jan 31 -> Feb 28 -> Mar 28) where Joda clamps
-        // each boundary independently from the origin (-> Mar 31);
-        // enumerate the k lattice instead and rebuild every boundary
-        // from the origin
-        val kStart = mirrorBucketK(LocalDateTime.ofInstant(start, zone))
-        val kEnd = mirrorBucketK(LocalDateTime.ofInstant(end, zone)) + 1
-        spark.range(kStart, kEnd + 1)
-          .select(delocalize(boundary(col("id"))).as("__time"))
-          .filter(col("__time") < lit(Timestamp.from(end)))
-      } else {
-        val startB = bucketLocal(localize(lit(Timestamp.from(start))))
-        val endL = localize(lit(Timestamp.from(end)))
-        spark.range(1)
-          .select(explode(sequence(startB, endL, expr(unitStep(unit)))).as("__t0"))
-          .select(delocalize(col("__t0")).as("__time"))
-          .filter(col("__time") < lit(Timestamp.from(end)))
-      }
-  }
-
-  /** Fixed-millisecond granularity (Druid's `duration` type), bucketing
-    * by floor-division from `origin` (epoch by default). Pure integer
-    * arithmetic — the mod-mod form floors correctly for pre-origin
-    * timestamps, where a truncating div would round toward zero.
-    */
-  private case class DurationGran(durMs: Long, originMs: Long) extends Gran {
-    def bucket(c: Column): Column = {
-      val x = unix_millis(c) - lit(originMs)
-      timestamp_millis(
-        x - (((x % lit(durMs)) + lit(durMs)) % lit(durMs)) + lit(originMs))
-    }
-    def spineDF(spark: SparkSession,
-                start: java.time.Instant, end: java.time.Instant): DataFrame =
-      spark.range(1)
-        .select(explode(sequence(
-          bucket(lit(Timestamp.from(start))),
-          lit(Timestamp.from(end)),
-          expr(s"interval $durMs millisecond"))).as("__time"))
-        .filter(col("__time") < lit(Timestamp.from(end)))
-  }
-
-  /** None = granularity "all" (a single bucket). */
-  private def truncUnit(q: JsonNode): Option[Gran] = {
+  private def granularityOf(q: JsonNode): Option[DruidTime.Granularity] = {
     val g = q.path("granularity")
-    def originMs: Long =
-      if (!g.isObject || !g.hasNonNull("origin")) 0L
-      else try java.time.Instant.parse(g.path("origin").asText()).toEpochMilli
-      catch { case _: java.time.format.DateTimeParseException =>
-        fail(s"granularity origin '${g.path("origin").asText()}' (ISO instant)") }
-    if (g.isObject && g.path("type").asText() == "duration") {
-      val dur = g.path("duration").asLong()
-      if (dur <= 0) fail("duration granularity (duration must be > 0 ms)")
-      return Some(DurationGran(dur, originMs))
-    }
-    if (g.isObject && g.hasNonNull("origin")) {
-      // Three origin regimes, matching Joda's field taxonomy (which is
-      // what Druid's PeriodGranularity delegates to):
-      //  - sub-day periods (PT1S/PT1M/PT1H) are PRECISE fields —
-      //    instant-timeline arithmetic in ANY zone (an hour is 3600 s
-      //    even across a DST fold) → the duration form;
-      //  - day/week are precise in UTC (no DST) → duration form; in
-      //    other zones they are local-calendar adds (23/25-hour days)
-      //    → OriginGran's wall-frame lattice;
-      //  - months/quarters/years are always calendar adds →
-      //    OriginGran's month-index lattice.
-      val subDayMs = Map("PT1S" -> 1000L, "PT1M" -> 60000L,
-        "PT1H" -> 3600000L)
-      val dayWeekMs = Map("P1D" -> 86400000L, "P1W" -> 604800000L)
-      val tzIsUtc = !g.hasNonNull("timeZone") ||
-        Set("UTC", "Etc/UTC", "+00:00")(g.path("timeZone").asText())
-      if (g.path("type").asText() != "period")
-        fail(s"granularity origin on type '${g.path("type").asText()}' " +
-          "(supported: duration, period)")
-      val period = g.path("period").asText()
-      (subDayMs.get(period), dayWeekMs.get(period)) match {
-        case (Some(ms), _) =>
-          return Some(DurationGran(ms, originMs))
-        case (_, Some(ms)) if tzIsUtc =>
-          return Some(DurationGran(ms, originMs))
-        case _ =>
-          val unit = periodUnits.getOrElse(period,
-            fail(s"period granularity '$period'"))
-          val n = unit match {
-            case "month" => 1
-            case "quarter" => 3
-            case "year" => 12
-            case _ => 0
-          }
-          val tzo =
-            if (tzIsUtc) None else Some(g.path("timeZone").asText())
-          return Some(OriginGran(unit, n, tzo,
-            java.time.Instant.ofEpochMilli(originMs)))
-      }
-    }
-    // UTC spellings mean the default path; anything else is honored
-    val tz =
-      if (g.isObject && g.hasNonNull("timeZone"))
-        Some(g.path("timeZone").asText())
-          .filterNot(z => z == "UTC" || z == "Etc/UTC" || z == "+00:00")
-      else None
-    val name =
-      if (g.isMissingNode || g.isNull) "all"
-      else if (g.isTextual) g.asText()
-      else g.path("type").asText() match {
-        case "all" => "all"
-        case "period" =>
-          periodUnits.getOrElse(g.path("period").asText(),
-            fail(s"period granularity '${g.path("period").asText()}'"))
-        case other => fail(s"granularity type '$other'")
-      }
-    name match {
-      case "all"                          => None
-      case u if simpleUnits.contains(u)   => Some(UnitGran(u, tz))
-      case other                          => fail(s"granularity '$other'")
+    def origin = Option(g.get("origin")).filterNot(_.isNull).map(o => DruidTime.instant(o.asText()))
+    if (g.isMissingNode || g.isNull) None
+    else if (g.isTextual)
+      if (g.asText().equalsIgnoreCase("all")) None else Some(DruidTime.granularity(g.asText()))
+    else g.path("type").asText() match {
+      case "all" => None
+      case "period" => Some(DruidTime.Granularity(DruidTime.period(g.path("period").asText()),
+        origin, Option(g.get("timeZone")).filterNot(_.isNull).flatMap(z => DruidTime.zone(z.asText()))))
+      case "duration" =>
+        val dur = g.path("duration").asLong()
+        if (dur <= 0) fail("duration granularity (duration must be > 0 ms)")
+        Some(DruidTime.Granularity(DruidTime.Period(0, dur), origin))
+      case other => fail(s"granularity type '$other'")
     }
   }
 
-  private val unitStep = Map(
-    "second" -> "interval 1 second", "minute" -> "interval 1 minute",
-    "hour" -> "interval 1 hour", "day" -> "interval 1 day",
-    "week" -> "interval 7 day", "month" -> "interval 1 month",
-    "quarter" -> "interval 3 month", "year" -> "interval 1 year")
+  /** One-column ("__time") frame of the bucket starts covering
+    * [floor(start), end): the zero-fill spine.
+    */
+  private def spine(spark: SparkSession, g: DruidTime.Granularity,
+                    start: Long, end: Long): DataFrame =
+    spark.createDataFrame(
+      (g.index(start) to g.index(end - 1)).map(k => Row(new Timestamp(g.start(k)))).asJava,
+      StructType(Seq(StructField("__time", TimestampType, nullable = false))))
 
   // ---- aggregations ------------------------------------------------------
 
@@ -1639,12 +1344,12 @@ object NativeQuery {
     val aggs = aggsOf(q)
     if (aggs.isEmpty) fail("timeseries with no aggregations")
     val aggCols = aggs.map(a => a.column.as(a.name))
-    truncUnit(q) match {
+    granularityOf(q) match {
       case None =>
         applyPost(base.agg(aggCols.head, aggCols.tail: _*), q, aggs)
       case Some(g) =>
         val grouped = base
-          .groupBy(g.bucket(col("__time")).as("__time"))
+          .groupBy(g.floor(col("__time")).as("__time"))
           .agg(aggCols.head, aggCols.tail: _*)
         val skipEmpty = q.path("context").path("skipEmptyBuckets").asBoolean(false)
         val ivs = intervalsOf(q)
@@ -1655,8 +1360,7 @@ object NativeQuery {
             // exclusive. Left join + identity fill = Druid's default
             // dense timeseries (count-family 0, value aggregates NULL).
             val (start, end) = ivs.head
-            val spine = g.spineDF(base.sparkSession, start, end)
-            spine.join(grouped, Seq("__time"), "left").select(
+            spine(base.sparkSession, g, start, end).join(grouped, Seq("__time"), "left").select(
               col("__time") +: aggs.map(a =>
                 if (a.countLike) coalesce(col(a.name), lit(0L).cast("long")).as(a.name)
                 else col(a.name)): _*)
@@ -1697,8 +1401,8 @@ object NativeQuery {
     // a non-"all" granularity means PER-BUCKET top-K (Druid emits one
     // result entry per time bucket) — the bucket joins the grouping
     // key and the limit applies within each bucket, not globally
-    val unit = truncUnit(q)
-    val keys = unit.map(g => g.bucket(col("__time")).as("__time")).toSeq :+
+    val gran = granularityOf(q)
+    val keys = gran.map(g => g.floor(col("__time")).as("__time")).toSeq :+
       dimCol.as(outName)
     val grouped = applyPost(
       base.groupBy(keys: _*).agg(aggCols.head, aggCols.tail: _*), q, aggs)
@@ -1733,7 +1437,7 @@ object NativeQuery {
             Seq(orderingKey(col(outName), "alphanumeric").asc))
         case other => fail(s"topN metric type '$other'")
       }
-    unit match {
+    gran match {
       case None => paged.orderBy(order: _*).limit(threshold)
       case Some(_) =>
         // rank within each bucket; the window shuffles on __time only,
@@ -1852,8 +1556,8 @@ object NativeQuery {
     if (dims.isEmpty) fail("groupBy with no dimensions (use timeseries)")
     val aggs = aggsOf(q)
     val aggCols = aggs.map(a => a.column.as(a.name))
-    val unit = truncUnit(q)
-    val keys = unit.map(g => g.bucket(col("__time")).as("__time")).toSeq ++
+    val gran = granularityOf(q)
+    val keys = gran.map(g => g.floor(col("__time")).as("__time")).toSeq ++
       dims.map { case (c, n) => c.as(n) }
     val subtotals = q.path("subtotalsSpec")
     val grouped0 =
@@ -1866,12 +1570,12 @@ object NativeQuery {
         // time bucket (when present) stays in every set, as in Druid.
         // One pass, one shuffle — Spark's Expand feeds a single
         // aggregate rather than re-scanning per set.
-        val keyed = (unit.map(g => ("__time", g.bucket(col("__time")))).toSeq ++
+        val keyed = (gran.map(g => ("__time", g.floor(col("__time")))).toSeq ++
           dims.map { case (c, n) => (n, c) })
           .foldLeft(base) { case (d, (n, c)) => d.withColumn(n, c) }
-        val keyNames = unit.map(_ => "__time").toSeq ++ dims.map(_._2)
+        val keyNames = gran.map(_ => "__time").toSeq ++ dims.map(_._2)
         val sets = subtotals.elements().asScala.map(setNode =>
-          (unit.map(_ => "__time").toSeq ++ textSeq(setNode)).map(col)).toSeq
+          (gran.map(_ => "__time").toSeq ++ textSeq(setNode)).map(col)).toSeq
         if (sets.isEmpty) fail("subtotalsSpec with no sets")
         keyed.groupingSets(sets, keyNames.map(col): _*)
           .agg(aggCols.head, aggCols.tail: _*)
@@ -1881,7 +1585,7 @@ object NativeQuery {
     val held =
       if (havingNode.isMissingNode || havingNode.isNull) grouped
       else grouped.filter(compileHaving(havingNode))
-    val dimNames = unit.map(_ => "__time").toSeq ++ dims.map(_._2)
+    val dimNames = gran.map(_ => "__time").toSeq ++ dims.map(_._2)
     val limitSpec = q.path("limitSpec")
     if (limitSpec.isMissingNode || limitSpec.isNull)
       held.orderBy(dimNames.map(col): _*)
@@ -1966,8 +1670,8 @@ object NativeQuery {
     // leads the output), like every other bucketed query type —
     // ignoring it would silently merge buckets a Druid client expects
     // separate
-    val unit = truncUnit(q)
-    val bucketKey = unit.map(g => g.bucket(col("__time")).as("__time")).toSeq
+    val gran = granularityOf(q)
+    val bucketKey = gran.map(g => g.floor(col("__time")).as("__time")).toSeq
     val perDim = dims.map { d =>
       // Multi-value (array) dimensions explode to per-value rows first —
       // Druid's search counts value occurrences the same way.
@@ -1977,9 +1681,9 @@ object NativeQuery {
         if (isArray) base.select(bucketKey :+ explode(ref(d)).as("value"): _*)
         else base.select(bucketKey :+ ref(d).cast("string").as("value"): _*)
       values.filter(searchPredicate(col("value"), qn))
-        .groupBy(unit.map(_ => col("__time")).toSeq :+ col("value"): _*)
+        .groupBy(gran.map(_ => col("__time")).toSeq :+ col("value"): _*)
         .agg(count(lit(1)).as("count"))
-        .select(unit.map(_ => col("__time")).toSeq ++
+        .select(gran.map(_ => col("__time")).toSeq ++
           Seq(lit(d).as("dimension"), col("value"), col("count")): _*)
     }
     // Druid's SearchSortSpec picks the comparator hit values sort
@@ -1987,7 +1691,7 @@ object NativeQuery {
     // version ride the shared orderingKey)
     val sortType = comparatorOf(q.path("sort"))
     val all = perDim.reduce(_.unionAll(_))
-      .orderBy(unit.map(_ => col("__time").asc).toSeq ++
+      .orderBy(gran.map(_ => col("__time").asc).toSeq ++
         Seq(col("dimension").asc, orderingKey(col("value"), sortType).asc): _*)
     val lim = q.path("limit")
     if (lim.isMissingNode || lim.isNull) all else all.limit(lim.asInt())

@@ -30,6 +30,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
   // the servable filters as they arrive, each with its predicate
   private var pushed: Seq[(Filter, ScanPred)] = Nil
   private var limit: Int = -1
+  private val snapshot = new ScanSnapshot(root)
 
   private def isStringCol(name: String): Boolean =
     fullSchema.fields.exists(f => f.name == name &&
@@ -117,7 +118,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
     * provably all-null for the column (sum skips nulls).
     */
   private def sumAnswerable(col: String): Boolean =
-    try SegmentCatalog.metaFor(root).forall { m =>
+    try snapshot.metas.forall { m =>
       m.longSums.contains(col) || m.nullCounts.exists(nc =>
         nc.getOrElse(col, m.rows.toLong) == m.rows.toLong)
     } catch { case _: Exception => false }
@@ -131,7 +132,7 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
     * represent.
     */
   private def minMaxAnswerable(col: String, typ: Char): Boolean =
-    try SegmentCatalog.metaFor(root).forall { m =>
+    try snapshot.metas.forall { m =>
       val hasZone =
         if (typ == 'L') m.exactLongZones.contains(col)
         else m.exactDoubleZones.contains(col)
@@ -139,14 +140,12 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
         nc.getOrElse(col, m.rows.toLong) == m.rows.toLong)
     } catch { case _: Exception => false }
 
-  // manifest read (or one-time parallel open), only when a
-  // min/max(__time) pushdown is attempted
-  private lazy val allIntervalsExact: Boolean =
-    try SegmentCatalog.metaFor(root).forall(_.exactInterval)
+  private def allIntervalsExact: Boolean =
+    try snapshot.metas.forall(_.exactInterval)
     catch { case _: Exception => false }
 
-  private lazy val allNullCountsKnown: Boolean =
-    try SegmentCatalog.metaFor(root).forall(_.nullCounts.isDefined)
+  private def allNullCountsKnown: Boolean =
+    try snapshot.metas.forall(_.nullCounts.isDefined)
     catch { case _: Exception => false }
 
   // PARTIAL pushdown: GROUP BY <string dim> with COUNT(*) aggregates.
@@ -182,7 +181,22 @@ class DruidScanBuilder(root: String, fullSchema: StructType,
 
   override def build(): Scan =
     new DruidScan(root, required, pushed.map(_._2).distinct, limit,
-      graft.Settings.RowsPerSplit.in(options), pushedAggs, topNTime, groupByDim)
+      graft.Settings.RowsPerSplit.in(options), snapshot, pushedAggs, topNTime, groupByDim)
+}
+
+/** The lease and segment listing one scan plans from, taken once and
+  * lazily, the lease BEFORE the listing (the ordering is the protection
+  * anchor — see ReadLease: any segment tombstoned from then on stays
+  * un-purged while the lease lives). The builder's aggregate-pushdown
+  * checks, the scan and every `withPredicates` copy read this one
+  * value, so a segment that lands while a query plans can never make
+  * the answer disagree with the checks that allowed it.
+  */
+final class ScanSnapshot(root: String) {
+  lazy val (lease, metas): (Option[ReadLease.Token], Seq[SegMeta]) = {
+    val lease = ReadLease.acquire(root)
+    (lease, SegmentCatalog.metaFor(root))
+  }
 }
 
 object DruidScanBuilder {
@@ -275,6 +289,7 @@ final case class GroupByDimPartition(dir: String, dim: String,
 class DruidScan(root: String, required: StructType,
                 private var preds: Seq[ScanPred], limit: Int,
                 rowsPerSplit: Long,
+                snapshot: ScanSnapshot,
                 pushedAggs: Seq[String] = Nil,
                 topNTime: Option[(Boolean, Int)] = None,
                 groupByDim: Option[String] = None)
@@ -390,7 +405,7 @@ class DruidScan(root: String, required: StructType,
     val added = fresh(extra)
     if (added.isEmpty) this
     else new DruidScan(root, required, preds ++ added, limit, rowsPerSplit,
-      pushedAggs, topNTime, groupByDim)
+      snapshot, pushedAggs, topNTime, groupByDim)
   }
 
   /** The canonical forms of `extra` this scan does not hold yet. */
@@ -403,25 +418,17 @@ class DruidScan(root: String, required: StructType,
       s"topNTime=$topNTime, groupByDim=$groupByDim, " +
       s"pushedAggs=${pushedAggs.mkString(",")})"
 
-  /** (interval, rows) metadata per segment, resolved ONCE per scan:
-    * from the table manifest when valid (one small-file read, no
-    * segment opens at all), else one parallel metadata-open pass.
-    * At 10^4-10^5 segments (100 TB) per-query per-callback serial opens
-    * would put minutes of wall time on the driver; this is O(1) reads.
-    *
-    * A reader lease is acquired BEFORE the listing (the ordering is
-    * the protection anchor — see ReadLease): any segment tombstoned
-    * from this instant on stays un-purged while the lease lives, so a
-    * read of any length finishes against the generation it planned
-    * even across overwrites/compactions and grace expiry. Partition
-    * readers renew the lease as they read.
+  /** (interval, rows) metadata per segment, resolved ONCE per query
+    * ([[ScanSnapshot]]): from the table manifest when valid (one
+    * small-file read, no segment opens at all), else one parallel
+    * metadata-open pass. At 10^4-10^5 segments (100 TB) per-query
+    * per-callback serial opens would put minutes of wall time on the
+    * driver; this is O(1) reads. Partition readers renew the snapshot's
+    * lease as they read, so a read of any length finishes against the
+    * generation it planned, even across overwrites and compactions.
     */
-  private lazy val leaseAndMeta: (Option[ReadLease.Token], Seq[SegMeta]) = {
-    val lease = ReadLease.acquire(root)
-    (lease, SegmentCatalog.metaFor(root))
-  }
-  private def lease: Option[ReadLease.Token] = leaseAndMeta._1
-  private def segmentMeta: Seq[SegMeta] = leaseAndMeta._2
+  private def lease: Option[ReadLease.Token] = snapshot.lease
+  private def segmentMeta: Seq[SegMeta] = snapshot.metas
 
   /** Could the segment hold a matching row? Pruning is a pure test
     * over the memoized metadata, so runtime (DPP) filters added between
@@ -633,17 +640,18 @@ object DruidScan {
   val BatchSize = 4096
 
   /** SPJ partition transform implied by a declared segmentGranularity:
-    * sub-hour granularities are hour-contained so they key by hours;
-    * week/year buckets straddle month bounds — no calendar transform
-    * below them holds, those tables join through a shuffle.
+    * buckets that divide an hour key by hours, those that divide a day
+    * by days, months by months; week/quarter/year buckets straddle
+    * month bounds — no calendar transform below them holds, those
+    * tables join through a shuffle.
     */
   private[druid] def spjTransformOf(segmentGranularity: String): Option[String] =
-    segmentGranularity match {
-      case "minute" | "fifteen_minute" | "hour" => Some("hours")
-      case "day" => Some("days")
-      case "month" => Some("months")
-      case _ => None
-    }
+    scala.util.Try(graft.sql.DruidTime.granularity(segmentGranularity).period)
+      .toOption.collect {
+        case p if p.months == 0 && 3600000L % p.millis == 0 => "hours"
+        case p if p.months == 0 && 86400000L % p.millis == 0 => "days"
+        case p if p.months == 1 => "months"
+      }
 
   /** Buckets-since-epoch (UTC) of an epoch-millis instant for the SPJ
     * partition transforms — must agree exactly with the catalog's

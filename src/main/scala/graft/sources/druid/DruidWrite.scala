@@ -177,38 +177,6 @@ class DruidStreamingWrite(root: String, schema: StructType, spec: WriteSpec)
     DruidBatchWrite.deleteRecursively(stagingFor(epochId))
 }
 
-/** `segmentGranularity` write option: each task splits its rows into
-  * one segment per UTC time bucket, so segment intervals align with
-  * the granularity and `__time` range scans prune whole segments —
-  * Druid's own layout discipline, and the thing that makes a 100 TB
-  * time-series table cheap to query by window.
-  */
-object SegmentGranularity {
-  val supported =
-    Set("minute", "fifteen_minute", "hour", "day", "week", "month", "year")
-
-  def bucketStart(ms: Long, g: String): Long = g match {
-    case "minute" => Math.floorDiv(ms, 60000L) * 60000L
-    case "fifteen_minute" => Math.floorDiv(ms, 900000L) * 900000L
-    case "hour" => Math.floorDiv(ms, 3600000L) * 3600000L
-    case "day" => Math.floorDiv(ms, 86400000L) * 86400000L
-    case "week" =>
-      // ISO weeks (Monday start), Druid's WEEK granularity. Epoch day 0
-      // was a Thursday, so Mondays sit at day ≡ 4 (mod 7): shift by 4
-      // days and floor on 7-day periods.
-      Math.floorDiv(ms - 4L * 86400000L, 7L * 86400000L) * 7L * 86400000L +
-        4L * 86400000L
-    case "month" | "year" =>
-      val t = java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
-      val start =
-        if (g == "month") t.toLocalDate.withDayOfMonth(1)
-        else t.toLocalDate.withDayOfYear(1)
-      start.atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-    case other => throw new IllegalArgumentException(
-      s"segmentGranularity '$other' not in ${supported.mkString("/")}")
-  }
-}
-
 final case class DruidCommitMessage(segments: Seq[SegMeta]) extends WriterCommitMessage
 
 class DruidBatchWrite(root: String, schema: StructType, truncate: Boolean,
@@ -697,10 +665,11 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
     val groupOf = new Array[Int](n)
     val gTime = new LongBuilder
     val firstRowB = new IntBuilder
+    val floor: Long => Long =
+      if (g == "none") t => t else graft.sql.DruidTime.granularity(g).floor
     var r = 0
     while (r < n) {
-      probe.bucket =
-        if (g == "none") time(r) else SegmentGranularity.bucketStart(time(r), g)
+      probe.bucket = floor(time(r))
       var d = 0
       while (d < dimIds.length) { probe.ids(d) = dimIds(d)(r); d += 1 }
       var gid = keyToGid.get(probe)
@@ -928,11 +897,12 @@ class DruidDataWriter(stagingRoot: String, jobId: String, schema: StructType,
         // granularity, so __time range scans prune whole segments.
         // Traversal follows the sorted order, so per-bucket selections
         // stay time-ascending.
+        val gran = graft.sql.DruidTime.granularity(g)
         val buckets = new java.util.TreeMap[Long, IntBuilder]()
         var r = 0
         while (r < nRows) {
           val ri = if (order == null) r else order(r)
-          buckets.computeIfAbsent(SegmentGranularity.bucketStart(time(ri), g),
+          buckets.computeIfAbsent(gran.floor(time(ri)),
             _ => new IntBuilder).add(ri)
           r += 1
         }

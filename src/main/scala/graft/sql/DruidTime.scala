@@ -1,62 +1,287 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import java.sql.Timestamp
+import java.time.{DateTimeException, Instant, LocalDate, LocalDateTime, OffsetDateTime, ZoneId, ZoneOffset}
+import java.time.format.DateTimeParseException
+
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Druid SQL's TIME_* function family as pure Catalyst expression
-  * compositions — `TIME_FLOOR` / `TIME_CEIL` / `TIME_SHIFT` /
-  * `TIME_EXTRACT` / `TIME_PARSE` / `TIME_FORMAT` / `TIME_IN_INTERVAL`
-  * plus `MILLIS_TO_TIMESTAMP` / `TIMESTAMP_TO_MILLIS`, so Druid SQL
-  * time queries run on Spark unchanged (the reference delegates its SQL
-  * surface wholesale to its query engine, which has none of these:
-  * /root/reference/src/main.rs:188-192).
+/** Druid's time vocabulary, read in one place: ISO-8601 instants,
+  * intervals and periods, the simple granularity names, and the one
+  * bucket floor. Druid SQL's TIME_* functions, native-query intervals
+  * and granularities (and their `timestamp_floor` virtual columns), the
+  * writer's segment and query granularity, and the broker's intervals,
+  * retention rules and PARTITIONED BY all read time through here.
   *
-  * Everything stays inside whole-stage codegen: the ISO-8601 period /
-  * interval literals are parsed ONCE at analysis time (they are literals
-  * in any real Druid query) and compiled into plain arithmetic over
-  * `unix_millis`, calendar expressions (`Year`/`Month`/`MakeDate`), and
-  * `from_utc_timestamp`/`to_utc_timestamp` shifts — no UDF anywhere, so
-  * a TIME_FLOOR bucket key feeds Spark's hash aggregate exactly like a
-  * built-in `date_trunc`.
+  * The floor is Druid's `PeriodGranularity`: bucket k starts at
+  * origin + k·period, for every integer k. It has two evaluators that
+  * agree exactly (`DruidSqlCompatSpec` checks it): a scalar one on epoch
+  * millis ([[Granularity]]: the writer, spine bounds) and a Catalyst
+  * one (TIME_FLOOR / TIME_CEIL, which native granularities call), a
+  * composition of plain expressions with no UDF, so a bucket key feeds
+  * Spark's hash aggregate like a built-in `date_trunc`. Period,
+  * origin and zone are literals, read once at analysis time.
   *
-  * Semantics notes (documented deviations, all UTC-exact):
-  *  - Duration periods (PT15M, P1D, P1W, P2DT6H) bucket by fixed millis
-  *    from the origin (default epoch), Druid's `PeriodGranularity` with
-  *    a fixed-offset zone; month/year periods (P1M, P3M, P1Y) bucket on
-  *    calendar month counts. Mixed month+time periods are rejected
-  *    loudly.
-  *  - The `timezone` argument localizes via from/to_utc_timestamp; DST
-  *    transitions inside one bucket follow wall-clock arithmetic (the
-  *    fixed-offset interpretation).
+  * How the lattice is walked, as Druid's Joda chronology does:
+  *  - calendar months (P1M, P3M, P1Y) step on the zone's local
+  *    calendar; a boundary keeps the origin's day of month, clamped to
+  *    each month's length per boundary (Jan 31 + 1M = Feb 28/29,
+  *    + 2M = Mar 31), and its time of day;
+  *  - whole days and weeks (P1D, P1W, P2D) step on the local calendar
+  *    in a time zone (23/25-hour days across DST), as fixed millis in
+  *    UTC;
+  *  - every other period (PT15M, PT1H, P2DT6H) steps as fixed millis
+  *    on the instant timeline, in any zone;
+  *  - with no origin the lattice starts at 1970-01-01T00:00 local
+  *    time, except a lone P1W, which starts on a Monday.
+  *
+  * Documented deviations from Druid:
+  *  - a period mixing days with a time part (P1DT6H) in a DST zone
+  *    steps as fixed millis; Druid steps its day part on the calendar;
+  *  - PT24H is the same period as P1D (Druid keeps 24 precise hours);
+  *  - a period mixing months with days or time (P1M15D) is refused for
+  *    floors, and valid for shifts, interval ends and cutoffs;
+  *  - zoneless instants read as UTC (the engine's session zone), where
+  *    Druid uses the broker's default zone.
   */
 object DruidTime {
 
-  /** months XOR fixed millis; mixed periods rejected at parse. */
-  private[sql] case class DruidPeriod(months: Int, millis: Long) {
-    def isMonthly: Boolean = months > 0
+  private val DayMs = 86400000L
+
+  // ---- periods ------------------------------------------------------------
+
+  /** An ISO-8601 period as calendar months plus fixed millis (a week
+    * counts 7 days, a day 24 hours; [[Granularity]] walks whole days on
+    * a zone's calendar). `isoWeek` marks the lone P1W, which floors to
+    * Monday when no origin is given.
+    */
+  final case class Period(months: Int, millis: Long, isoWeek: Boolean = false) {
+    /** ISO text of a month-only or millis-only period. */
+    def iso: String =
+      if (isoWeek) "P1W"
+      else if (millis == 0) s"P${months}M"
+      else s"PT${java.math.BigDecimal.valueOf(millis, 3).stripTrailingZeros.toPlainString}S"
   }
 
+  private val Num = """([-+]?\d+)"""
   private val PeriodRe =
-    ("""P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?""" +
-      """(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+(?:\.\d+)?)S)?)?""").r
+    (s"(?i)P(?:${Num}Y)?(?:${Num}M)?(?:${Num}W)?(?:${Num}D)?" +
+      s"""(?:T(?:${Num}H)?(?:${Num}M)?(?:([-+]?\\d+(?:[.,]\\d+)?)S)?)?""").r
 
-  private[sql] def parsePeriod(s: String): DruidPeriod = s.trim match {
+  /** Read an ISO-8601 period (either case, signed fields, fractional
+    * seconds).
+    */
+  def period(s: String): Period = s.trim match {
     case PeriodRe(y, mo, w, d, h, mi, sec) =>
       def l(x: String): Long = if (x == null) 0L else x.toLong
-      val months = (l(y) * 12 + l(mo)).toInt
-      val secMillis =
-        if (sec == null) 0L else math.round(sec.toDouble * 1000)
-      val millis = l(w) * 7 * 86400000L + l(d) * 86400000L +
-        l(h) * 3600000L + l(mi) * 60000L + secMillis
-      require(months > 0 || millis > 0, s"empty period '$s'")
-      require(months == 0 || millis == 0,
-        s"mixed month+time period '$s' is not supported (use one or the other)")
-      DruidPeriod(months, millis)
-    case other =>
-      throw new IllegalArgumentException(s"cannot parse ISO-8601 period '$other'")
+      try {
+        val months = Math.toIntExact(Math.addExact(Math.multiplyExact(l(y), 12L), l(mo)))
+        val secMillis =
+          if (sec == null) 0L else math.round(sec.replace(',', '.').toDouble * 1000)
+        val millis = Seq(l(w) -> 7 * DayMs, l(d) -> DayMs, l(h) -> 3600000L, l(mi) -> 60000L)
+          .foldLeft(secMillis) { case (acc, (n, unit)) =>
+            Math.addExact(acc, Math.multiplyExact(n, unit)) }
+        Period(months, millis, s.trim.equalsIgnoreCase("P1W"))
+      } catch {
+        case _: ArithmeticException =>
+          throw new IllegalArgumentException(s"period '$s' overflows")
+      }
+    case _ => throw new IllegalArgumentException(s"cannot parse ISO-8601 period '$s'")
   }
+
+  /** `ms` moved by `steps` periods in UTC: calendar months first (the
+    * day of month clamps, as Joda does), then the fixed millis.
+    */
+  def shift(ms: Long, p: Period, steps: Int): Long = {
+    val m =
+      if (p.months == 0) ms
+      else Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC)
+        .plusMonths(p.months.toLong * steps).toInstant.toEpochMilli
+    m + p.millis * steps
+  }
+
+  // ---- instants and intervals ---------------------------------------------
+
+  /** Epoch millis of an ISO-8601 instant: `Z` or any offset, a zoneless
+    * local datetime (read as UTC, the engine's session zone) or a bare
+    * date (its UTC midnight).
+    */
+  def instant(s: String): Long = {
+    val t = s.trim
+    Iterator[String => Long](
+        Instant.parse(_).toEpochMilli,
+        OffsetDateTime.parse(_).toInstant.toEpochMilli,
+        LocalDateTime.parse(_).toInstant(ZoneOffset.UTC).toEpochMilli,
+        LocalDate.parse(_).atStartOfDay(ZoneOffset.UTC).toInstant.toEpochMilli)
+      .flatMap(read => try Some(read(t)) catch { case _: DateTimeParseException => None })
+      .nextOption().getOrElse(throw new IllegalArgumentException(
+        s"interval timestamp '$s' (ISO-8601 instant, offset/local datetime, or date)"))
+  }
+
+  /** A Druid interval, `start/end`, `start/period` or `period/end`, as
+    * epoch millis [start, end).
+    */
+  def interval(s: String): (Long, Long) = s.split("/", -1).map(_.trim) match {
+    case Array(a, b) if a.take(1).equalsIgnoreCase("P") =>
+      val e = instant(b); (shift(e, period(a), -1), e)
+    case Array(a, b) if b.take(1).equalsIgnoreCase("P") =>
+      val st = instant(a); (st, shift(st, period(b), 1))
+    case Array(a, b) => (instant(a), instant(b))
+    case _ => throw new IllegalArgumentException(
+      s"interval '$s' (expected ISO start/end, start/period or period/end)")
+  }
+
+  /** A time zone id; None for UTC and its aliases. */
+  def zone(id: String): Option[ZoneId] =
+    try Some(ZoneId.of(id.trim, ZoneId.SHORT_IDS)).filterNot(_.normalized == ZoneOffset.UTC)
+    catch { case _: DateTimeException =>
+      throw new IllegalArgumentException(s"unknown time zone '$id'") }
+
+  // ---- granularities ------------------------------------------------------
+
+  /** Druid's simple granularity names and the periods they stand for
+    * (`all`, one bucket, is no period and not listed).
+    */
+  val granularityNames: Seq[(String, String)] = Seq(
+    "second" -> "PT1S", "minute" -> "PT1M", "five_minute" -> "PT5M",
+    "ten_minute" -> "PT10M", "fifteen_minute" -> "PT15M",
+    "thirty_minute" -> "PT30M", "hour" -> "PT1H", "six_hour" -> "PT6H",
+    "eight_hour" -> "PT8H", "day" -> "P1D", "week" -> "P1W",
+    "month" -> "P1M", "quarter" -> "P3M", "year" -> "P1Y")
+
+  /** The UTC granularity a simple name (any case) stands for. */
+  def granularity(name: String): Granularity = {
+    val n = name.trim.toLowerCase(java.util.Locale.ROOT)
+    granularityNames.collectFirst { case (`n`, p) => Granularity(period(p)) }
+      .getOrElse(throw new IllegalArgumentException(
+        s"granularity '$name' (one of ${granularityNames.map(_._1).mkString(", ")})"))
+  }
+
+  /** The simple name of a period, if it has one. */
+  def granularityName(p: Period): Option[String] =
+    granularityNames.collectFirst { case (n, text) if period(text) == p => n }
+
+  /** Druid's `PeriodGranularity`: buckets start at origin + k·period (see
+    * the object doc for how the lattice is walked). `origin` is epoch
+    * millis; `zone` None is UTC.
+    */
+  final case class Granularity(period: Period, origin: Option[Long] = None,
+                               zone: Option[ZoneId] = None) {
+    require(period.months >= 0 && period.millis >= 0 &&
+      (period.months > 0 || period.millis > 0),
+      s"period ${period.iso} cannot bucket (it must be positive)")
+    require(period.months == 0 || period.millis == 0,
+      "a period mixing months with days or time cannot bucket (use one or the other)")
+
+    private val monthly = period.months > 0
+    /** Buckets step on the zone's local calendar (else: on instants). */
+    private val local = zone.isDefined && (monthly || period.millis % DayMs == 0)
+
+    private def toFrame(ms: Long): Long = zone.filter(_ => local).fold(ms)(z =>
+      ms + z.getRules.getOffset(Instant.ofEpochMilli(ms)).getTotalSeconds * 1000L)
+    private def fromFrame(f: Long): Long = zone.filter(_ => local).fold(f)(localToUtc(f, _))
+
+    /** The origin in frame millis (local wall clock, or instant). */
+    private val frameOrigin: Long = origin.map(toFrame).getOrElse {
+      val wall = if (period.isoWeek) 4 * DayMs else 0L // 1970-01-05 was a Monday
+      if (local) wall else zone.fold(wall)(localToUtc(wall, _))
+    }
+    private val originDate = LocalDate.ofEpochDay(Math.floorDiv(frameOrigin, DayMs))
+    private val originMonth = monthIndex(originDate)
+
+    /** Frame millis of month boundary k. */
+    private def monthBoundary(k: Long): Long = {
+      val first = originDate.withDayOfMonth(1).plusMonths(k * period.months)
+      first.withDayOfMonth(math.min(originDate.getDayOfMonth, first.lengthOfMonth))
+        .toEpochDay * DayMs + Math.floorMod(frameOrigin, DayMs)
+    }
+
+    /** The k of the bucket holding `ms`. */
+    def index(ms: Long): Long = {
+      val f = toFrame(ms)
+      if (!monthly) Math.floorDiv(f - frameOrigin, period.millis)
+      else {
+        val k = Math.floorDiv(
+          monthIndex(LocalDate.ofEpochDay(Math.floorDiv(f, DayMs))) - originMonth,
+          period.months.toLong)
+        if (f < monthBoundary(k)) k - 1 else k
+      }
+    }
+
+    /** Epoch millis where bucket k starts. */
+    def start(k: Long): Long =
+      fromFrame(if (monthly) monthBoundary(k) else frameOrigin + k * period.millis)
+
+    def floor(ms: Long): Long =
+      if (!local && !monthly) ms - Math.floorMod(ms - frameOrigin, period.millis)
+      else start(index(ms))
+
+    /** The Catalyst floor of a timestamp column, through TIME_FLOOR. */
+    def floor(ts: Column): Column = call_function("time_floor", ts, lit(period.iso),
+      origin.fold(lit(null))(o => lit(new Timestamp(o))), lit(zone.map(_.getId).orNull))
+
+    /** Catalyst (floor, start of the next bucket) of `ts`. `originExpr`
+      * replaces the literal origin (TIME_FLOOR's origin argument).
+      */
+    private[DruidTime] def bounds(ts: Expression, originExpr: Option[Expression])
+        : (Expression, Expression) = {
+      def frame(t: Expression): Expression =
+        UnixMillis(if (local) FromUTCTimestamp(t, Literal(zone.get.getId)) else t)
+      def unframe(f: Expression): Expression =
+        if (local) ToUTCTimestamp(MillisToTimestamp(f), Literal(zone.get.getId))
+        else MillisToTimestamp(f)
+      val f = frame(ts)
+      val o = originExpr.map(frame).getOrElse(Literal(frameOrigin))
+      if (!monthly) {
+        val step = Literal(period.millis)
+        val offset = if (o == Literal(0L)) f else Subtract(f, o)
+        val fl = Subtract(f, Pmod(offset, step))
+        (unframe(fl), unframe(Add(fl, step)))
+      } else {
+        def dateOf(ms: Expression): Expression =
+          DateFromUnixDate(Cast(floorDiv(ms, DayMs), IntegerType))
+        def months(date: Expression): Expression = Cast(Add(
+          Multiply(Subtract(Year(date), Literal(1970)), Literal(12)),
+          Subtract(Month(date), Literal(1))), LongType)
+        def dayMillis(date: Expression): Expression =
+          Multiply(Cast(UnixDate(date), LongType), Literal(DayMs))
+        val oDate = dateOf(o)
+        val om = months(oDate)
+        val plain = originExpr.isEmpty && frameOrigin == 0L
+        def boundary(k: Expression): Expression = {
+          val fm = Add(om, Multiply(k, Literal(period.months.toLong)))
+          val mm = Pmod(fm, Literal(12L))
+          val first = MakeDate(
+            Cast(Add(floorDiv(fm, 12L), Literal(1970L)), IntegerType),
+            Cast(Add(mm, Literal(1L)), IntegerType), Literal(1))
+          if (plain) dayMillis(first)
+          else Add(dayMillis(DateAdd(first, Subtract(
+            Least(Seq(DayOfMonth(oDate), DayOfMonth(LastDay(first)))), Literal(1)))),
+            Pmod(o, Literal(DayMs)))
+        }
+        val k0 = floorDiv(Subtract(months(dateOf(f)), om), period.months.toLong)
+        val k = if (plain) k0 else If(LessThan(f, boundary(k0)), Subtract(k0, Literal(1L)), k0)
+        (unframe(boundary(k)), unframe(boundary(Add(k, Literal(1L)))))
+      }
+    }
+  }
+
+  private def monthIndex(d: LocalDate): Long = (d.getYear - 1970L) * 12 + d.getMonthValue - 1
+
+  private def localToUtc(wallMs: Long, z: ZoneId): Long =
+    LocalDateTime.ofEpochSecond(Math.floorDiv(wallMs, 1000L),
+      (Math.floorMod(wallMs, 1000L) * 1000000L).toInt, ZoneOffset.UTC)
+      .atZone(z).toInstant.toEpochMilli
+
+  /** Catalyst floor division by a positive constant. */
+  private def floorDiv(x: Expression, d: Long): Expression =
+    IntegralDivide(Subtract(x, Pmod(x, Literal(d))), Literal(d))
+
+  // ---- Druid SQL ----------------------------------------------------------
 
   /** Literal-string argument (the period / unit / timezone slots — in
     * Druid SQL these are always literals).
@@ -80,83 +305,49 @@ object DruidTime {
   private def outZone(ts: Expression, tz: Option[String]): Expression =
     tz.fold(ts)(z => ToUTCTimestamp(ts, Literal(z)))
 
-  /** Calendar months since 1970-01 of a (local-frame) timestamp. */
-  private def monthsSinceEpoch(local: Expression): Expression =
-    Add(Multiply(Subtract(Year(local), Literal(1970)), Literal(12)),
-        Subtract(Month(local), Literal(1)))
-
-  /** First instant of calendar month `fm` (months since 1970-01), as a
-    * UTC-frame timestamp. `fm - pmod(fm, 12)` is an exact multiple of
-    * 12, so the division is exact for negative months too (floorDiv).
-    */
-  private def monthStartTs(fm: Expression): Expression = {
-    val mm = Pmod(fm, Literal(12))
-    val yy = Add(Cast(new IntegralDivide(Subtract(fm, mm), Literal(12)),
-                      IntegerType), Literal(1970))
-    Cast(MakeDate(yy, Add(mm, Literal(1)), Literal(1)), TimestampType,
-      Some("UTC"))
+  private def isNull(e: Expression): Boolean = e match {
+    case Literal(null, _) => true
+    case _ => false
   }
 
-  private def floorLocal(local: Expression, p: DruidPeriod,
-                         originLocal: Option[Expression]): Expression =
-    if (p.isMonthly) {
-      val m = monthsSinceEpoch(local)
-      val om = originLocal.map(monthsSinceEpoch).getOrElse(Literal(0))
-      monthStartTs(Subtract(m, Pmod(Subtract(m, om), Literal(p.months))))
-    } else {
-      val millis = UnixMillis(local)
-      val o = originLocal.map(UnixMillis).getOrElse(Literal(0L))
-      MillisToTimestamp(
-        Subtract(millis, Pmod(Subtract(millis, o), Literal(p.millis))))
-    }
-
-  /** One period past the local-frame floor (the ceil step). */
-  private def bumpLocal(floor: Expression, p: DruidPeriod): Expression =
-    if (p.isMonthly)
-      monthStartTs(Add(monthsSinceEpoch(floor), Literal(p.months)))
-    else MillisToTimestamp(Add(UnixMillis(floor), Literal(p.millis)))
-
+  /** (ts, floor, next bucket start) of TIME_FLOOR/TIME_CEIL's arguments. */
   private def floorArgs(exprs: Seq[Expression], name: String)
-      : (Expression, DruidPeriod, Option[Expression], Option[String]) = {
+      : (Expression, Expression, Expression) = {
     require(exprs.length >= 2 && exprs.length <= 4,
       s"$name(ts, period[, origin[, timezone]]) takes 2-4 args, got ${exprs.length}")
-    val p = parsePeriod(litString(exprs(1), s"$name period"))
-    val origin = exprs.lift(2).filter {
-      case Literal(null, _) => false
-      case _ => true
-    }.map(asTs)
-    val tz = exprs.lift(3).map(litString(_, s"$name timezone"))
-    (asTs(exprs.head), p, origin, tz)
+    val origin = exprs.lift(2).filterNot(isNull).map(asTs)
+    val g = Granularity(period(litString(exprs(1), s"$name period")),
+      zone = exprs.lift(3).filterNot(isNull).flatMap(e => zone(litString(e, s"$name timezone"))))
+    val ts = asTs(exprs.head)
+    val (floor, next) = g.bounds(ts, origin)
+    (ts, floor, next)
   }
 
   val timeFloor: Seq[Expression] => Expression = { exprs =>
-    val (ts, p, origin, tz) = floorArgs(exprs, "time_floor")
-    outZone(floorLocal(inZone(ts, tz), p, origin.map(inZone(_, tz))), tz)
+    floorArgs(exprs, "time_floor")._2
   }
 
   val timeCeil: Seq[Expression] => Expression = { exprs =>
-    val (ts, p, origin, tz) = floorArgs(exprs, "time_ceil")
-    val local = inZone(ts, tz)
-    val f = floorLocal(local, p, origin.map(inZone(_, tz)))
-    outZone(If(EqualTo(f, local), local, bumpLocal(f, p)), tz)
+    val (ts, floor, next) = floorArgs(exprs, "time_ceil")
+    If(EqualTo(floor, ts), ts, next)
   }
 
   val timeShift: Seq[Expression] => Expression = { exprs =>
     require(exprs.length >= 3 && exprs.length <= 4,
       s"time_shift(ts, period, step[, timezone]) takes 3-4 args, got ${exprs.length}")
-    val p = parsePeriod(litString(exprs(1), "time_shift period"))
+    val p = period(litString(exprs(1), "time_shift period"))
     val step = exprs(2)
     val tz = exprs.lift(3).map(litString(_, "time_shift timezone"))
     val ts = asTs(exprs.head)
-    if (p.isMonthly) {
-      // calendar-aware month add (clamps 31st -> 30th like Druid/Joda);
-      // wall-clock months in tz via the localize/delocalize pair
-      val local = inZone(ts, tz)
-      outZone(TimestampAdd("MONTH",
-        Multiply(Cast(step, IntegerType), Literal(p.months)), local), tz)
-    } else
-      MillisToTimestamp(Add(UnixMillis(ts),
-        Multiply(Cast(step, LongType), Literal(p.millis))))
+    // calendar-aware month add (clamps 31st -> 30th like Druid/Joda);
+    // wall-clock months in tz via the localize/delocalize pair
+    val shifted =
+      if (p.months == 0) ts
+      else outZone(TimestampAdd("MONTH",
+        Multiply(Cast(step, IntegerType), Literal(p.months)), inZone(ts, tz)), tz)
+    if (p.months != 0 && p.millis == 0) shifted
+    else MillisToTimestamp(Add(UnixMillis(shifted),
+      Multiply(Cast(step, LongType), Literal(p.millis))))
   }
 
   val timeExtract: Seq[Expression] => Expression = { exprs =>
@@ -221,41 +412,11 @@ object DruidTime {
   val timeInInterval: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2,
       s"time_in_interval(ts, interval) takes 2 args, got ${exprs.length}")
-    val (s, e) = parseIsoInterval(litString(exprs(1), "interval"))
+    val iv = litString(exprs(1), "interval")
+    val (s, e) = interval(iv)
+    require(s <= e, s"interval '$iv' is reversed")
     val millis = UnixMillis(asTs(exprs.head))
     And(GreaterThanOrEqual(millis, Literal(s)), LessThan(millis, Literal(e)))
-  }
-
-  private[sql] def parseIsoInterval(iv: String): (Long, Long) = {
-    import java.time._
-    def instantMillis(s: String): Long = {
-      val t = s.trim
-      try Instant.parse(t).toEpochMilli
-      catch { case _: Exception =>
-        try LocalDateTime.parse(t).toInstant(ZoneOffset.UTC).toEpochMilli
-        catch { case _: Exception =>
-          LocalDate.parse(t).atStartOfDay(ZoneOffset.UTC).toInstant.toEpochMilli
-        }
-      }
-    }
-    def plusPeriod(ms: Long, p: String, sign: Int): Long = {
-      val dp = parsePeriod(p)
-      if (dp.isMonthly)
-        Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC)
-          .plusMonths(sign * dp.months.toLong).toInstant.toEpochMilli
-      else ms + sign * dp.millis
-    }
-    val parts = iv.split("/", 2)
-    require(parts.length == 2, s"interval '$iv' must be 'start/end'")
-    val (a, b) = (parts(0).trim, parts(1).trim)
-    val se =
-      if (a.startsWith("P")) {
-        val e = instantMillis(b); (plusPeriod(e, a, -1), e)
-      } else if (b.startsWith("P")) {
-        val s = instantMillis(a); (s, plusPeriod(s, b, +1))
-      } else (instantMillis(a), instantMillis(b))
-    require(se._1 <= se._2, s"interval '$iv' is reversed")
-    se
   }
 
   val millisToTimestamp: Seq[Expression] => Expression = { exprs =>

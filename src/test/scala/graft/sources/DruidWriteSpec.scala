@@ -240,7 +240,7 @@ class DruidWriteSpec extends AnyFunSuite {
   }
 
   test("granularity bucket starts honor UTC calendar boundaries") {
-    import graft.sources.druid.SegmentGranularity.bucketStart
+    def bucketStart(ms: Long, g: String): Long = graft.sql.DruidTime.granularity(g).floor(ms)
     val t = java.time.Instant.parse("2023-07-15T13:45:30.123Z").toEpochMilli
     assert(bucketStart(t, "hour") ==
       java.time.Instant.parse("2023-07-15T13:00:00Z").toEpochMilli)
@@ -269,7 +269,9 @@ class DruidWriteSpec extends AnyFunSuite {
       java.time.Instant.parse("1969-01-01T00:00:00Z").toEpochMilli)
     assert(bucketStart(pre, "week") ==
       java.time.Instant.parse("1969-12-29T00:00:00Z").toEpochMilli)
-    intercept[IllegalArgumentException](bucketStart(t, "quarter"))
+    // quarters are calendar quarters: 2023-07-15 is in Q3
+    assert(bucketStart(t, "quarter") ==
+      java.time.Instant.parse("2023-07-01T00:00:00Z").toEpochMilli)
   }
 
   test("month-granularity write buckets by calendar month and prunes") {

@@ -421,4 +421,31 @@ class SegmentCatalogSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.sum("n")).head.getLong(0) == 7L)
     assert(SegmentCatalog.purgeTombstoned(out, graceMs = 0L) == 2)
   }
+
+  test("a pushed aggregate answers from the one listing its checks read") {
+    val out = Files.createTempDirectory("graft-cats").toString + "/t"
+    write(out, 300)
+    val other = Files.createTempDirectory("graft-cats2").toString + "/t"
+    write(other, 100, parts = 1)
+    // COUNT(n) is pushed because every segment carries null counts
+    val df = spark.read.format("druid").load(out).agg(count(col("n")))
+    assert(df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.description
+    }.exists(_.contains("pushedAggs=count:n")))
+    // then a segment without graft's sidecar lands before the scan
+    // plans its partitions: the scan must answer from the listing the
+    // checks read, not a later one without null counts for it
+    val src = Paths.get(druid.DruidTableUtil.discoverSegments(other).head)
+    val dst = Paths.get(out, "segment-foreign")
+    Files.walk(src).iterator().asScala.toSeq.foreach { p =>
+      Files.copy(p, dst.resolve(src.relativize(p).toString))
+    }
+    Files.delete(dst.resolve("_graft_meta.json"))
+    assert(SegmentCatalog.metaFor(out).exists(_.nullCounts.isEmpty))
+    assert(df.collect().head.getLong(0) == 300L)
+    // the next query lists the new segment and reads its rows
+    assert(spark.read.format("druid").load(out).agg(count(col("n")))
+      .head.getLong(0) == 400L)
+  }
 }

@@ -1,8 +1,11 @@
 package graft.sql
 
 import java.sql.Timestamp
+import java.time.Instant
 
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -82,9 +85,9 @@ class DruidSqlCompatSpec extends AnyFunSuite {
       ts("2024-03-15 13:45:00"))
     assert(one("time_floor(TIMESTAMP '2024-03-15 13:47:21', 'P1D')") ==
       ts("2024-03-15 00:00:00"))
-    // P1W with default (epoch) origin: 1970-01-01 was a Thursday
+    // P1W with no origin floors to Monday, like Druid's PeriodGranularity
     assert(one("time_floor(TIMESTAMP '2024-03-15 13:47:21', 'P1W')") ==
-      ts("2024-03-14 00:00:00"))
+      ts("2024-03-11 00:00:00"))
     // explicit origin realigns the buckets
     assert(one("time_floor(TIMESTAMP '2024-03-15 13:47:21', 'PT1H'," +
       " TIMESTAMP '2024-01-01 00:30:00')") == ts("2024-03-15 13:30:00"))
@@ -104,6 +107,75 @@ class DruidSqlCompatSpec extends AnyFunSuite {
     // 2024-03-15T03:00 UTC is 2024-03-14 in Los_Angeles (UTC-7 in DST)
     assert(one("time_floor(TIMESTAMP '2024-03-15 03:00:00', 'P1D', NULL," +
       " 'America/Los_Angeles')") == ts("2024-03-14 07:00:00"))
+  }
+
+  private def check(prop: Prop, n: Int): Unit = {
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
+    assert(r.passed, r.status.toString)
+  }
+
+  private def ms(s: String): Long = Instant.parse(s).toEpochMilli
+
+  // instants around the US DST transitions of 2023 and 2024, uniform
+  // ones over 2023-2025, and a few before the epoch
+  private val transitions = Seq("2023-03-12T10:00:00Z", "2023-11-05T09:00:00Z",
+    "2024-03-10T10:00:00Z", "2024-11-03T09:00:00Z").map(ms)
+  private val instantGen: Gen[Long] = Gen.frequency(
+    3 -> Gen.choose(ms("2023-01-01T00:00:00Z"), ms("2026-01-01T00:00:00Z")),
+    3 -> Gen.oneOf(transitions).flatMap(t => Gen.choose(t - 7 * 3600000L, t + 7 * 3600000L)),
+    1 -> Gen.oneOf(transitions).flatMap(t => Gen.choose(-3L, 3L).map(h => t + h * 3600000L)),
+    1 -> Gen.choose(ms("1969-06-01T00:00:00Z"), ms("1970-02-01T00:00:00Z")))
+  private val periodGen: Gen[String] = Gen.oneOf(
+    DruidTime.granularityNames.map(_._2) ++ Seq("PT90M", "P2D", "P2W", "P7D",
+      "P2DT6H", "P2M", "P13M", "P2Y"))
+  private val originGen: Gen[Option[Long]] =
+    Gen.option(Gen.choose(ms("2019-01-01T00:00:00Z"), ms("2027-01-01T00:00:00Z")))
+  private val zoneGen: Gen[Option[String]] = Gen.oneOf(None, Some("America/Los_Angeles"))
+
+  test("scalar and Catalyst floor and ceil agree (names, origins, zones, DST)") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(periodGen, originGen, zoneGen, Gen.listOfN(40, instantGen)) {
+      (period: String, origin: Option[Long], zone: Option[String], ts: List[Long]) =>
+        val g = DruidTime.Granularity(DruidTime.period(period), origin,
+          zone.flatMap(DruidTime.zone))
+        val args = s"'$period', " + origin.fold("NULL")(o => s"timestamp_millis($o)") +
+          zone.fold("")(z => s", '$z'")
+        // an RDD-backed frame, so the expressions run through codegen
+        val rows = spark.sparkContext.parallelize(ts, 1).toDF("ms")
+          .select(col("ms"),
+            expr(s"unix_millis(time_floor(timestamp_millis(ms), $args))"),
+            expr(s"unix_millis(time_ceil(timestamp_millis(ms), $args))"))
+          .collect()
+        rows.forall { r =>
+          val t = r.getLong(0)
+          val k = g.index(t)
+          val ceil = if (g.start(k) == t) t else g.start(k + 1)
+          val ok = r.getLong(1) == g.floor(t) && r.getLong(2) == ceil &&
+            g.start(k) == g.floor(t)
+          if (!ok) println(s"[time_floor agreement] $period origin=$origin zone=$zone t=$t: " +
+            s"catalyst=(${r.getLong(1)}, ${r.getLong(2)}) scalar=(${g.floor(t)}, $ceil)")
+          ok && (origin.isDefined || g.floor(t) <= t && t <= ceil)
+        }
+    }, 60)
+  }
+
+  test("the name table, mixed periods and intervals") {
+    assert(DruidTime.granularity("FIFTEEN_MINUTE").period == DruidTime.period("PT15M"))
+    assert(DruidTime.granularityName(DruidTime.period("P1W")).contains("week"))
+    assert(DruidTime.granularityName(DruidTime.period("P7D")).isEmpty)
+    intercept[IllegalArgumentException](DruidTime.granularity("fortnight"))
+    // mixed month-and-time periods shift, and never bucket
+    val mixed = DruidTime.period("P1M1DT1H")
+    assert(DruidTime.shift(ms("2024-03-31T00:00:00Z"), mixed, -1) ==
+      ms("2024-02-27T23:00:00Z"))
+    intercept[IllegalArgumentException](DruidTime.Granularity(mixed))
+    intercept[IllegalArgumentException](
+      spark.sql("SELECT time_floor(TIMESTAMP '2024-01-01 00:00:00', 'P1M1D')").collect())
+    assert(DruidTime.interval("2024-03-15/P7D") ==
+      (ms("2024-03-15T00:00:00Z"), ms("2024-03-22T00:00:00Z")))
+    assert(DruidTime.interval("P1M/2024-03-31T00:00:00+01:00") ==
+      (ms("2024-02-29T23:00:00Z"), ms("2024-03-30T23:00:00Z")))
+    assert(DruidTime.instant("2024-03-15T01:02:03") == ms("2024-03-15T01:02:03Z"))
   }
 
   test("time_ceil: identity on boundary, next bucket otherwise") {
