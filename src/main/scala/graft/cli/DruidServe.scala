@@ -2221,53 +2221,54 @@ object DruidServe {
     }.toArray
   }
 
+  // the (Spark context, sorted table names) the information_schema
+  // views list now; read and written only under its own monitor
+  private var infoSchemaOf: Option[(AnyRef, String)] = None
+  private val infoSchemaLock = new Object
+
   /** Druid's INFORMATION_SCHEMA.TABLES/COLUMNS as in-memory-catalog
     * views over the served tables — the first thing BI tools (and
-    * JDBC-ish clients) query on connect. Registered once per
-    * (session, table-set); metadata-only, no scans. Table names come
-    * from directory listings, so they're quoted into the VALUES
-    * literals defensively.
+    * JDBC-ish clients) query on connect. Metadata-only, no scans.
+    *
+    * The views live in the catalog every session of a Spark context
+    * shares, so the guard is what that catalog's views list now, not
+    * the session asking: a broker registers them again only when
+    * another table set (another broker's, any session's) replaced
+    * them since. `infoSchemaOf` is set only after both views exist, so
+    * a failed CREATE is retried by the next request. Serialized: CREATE
+    * OR REPLACE VIEW is exists-check-then-create inside Spark, so two
+    * concurrent first requests could throw TableAlreadyExists at one
+    * of them. Table names come from directory listings, so they're
+    * quoted into the VALUES literals defensively.
     */
-  private val infoSchemaDone =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-
   private def registerInformationSchema(
-      spark: SparkSession, sqlTables: Map[String, DataFrame]): Unit = {
-    if (sqlTables.isEmpty) return
-    val key = System.identityHashCode(spark) + ":" +
-      sqlTables.keys.toSeq.sorted.mkString(",")
-    // Serialized: CREATE OR REPLACE VIEW is exists-check-then-create
-    // inside Spark, so two concurrent FIRST requests racing the DDL
-    // could throw TableAlreadyExists at one of them. Registration is
-    // once-per-(session, table-set) — contention is nil. Marked done
-    // only AFTER both views exist: marking first would swallow a
-    // failed CREATE and leave INFORMATION_SCHEMA absent forever
-    // (Registration.once's retry-on-failure rule).
-    infoSchemaDone.synchronized {
-    if (infoSchemaDone.contains(key)) return
-    def q(s: String) = "'" + s.replace("'", "''") + "'"
-    spark.sql("CREATE DATABASE IF NOT EXISTS information_schema")
-    val tableRows = sqlTables.keys.toSeq.sorted
-      .map(n => s"('druid', 'druid', ${q(n)}, 'TABLE', 'NO', 'NO')")
-      .mkString(", ")
-    spark.sql(s"""CREATE OR REPLACE VIEW information_schema.tables
-      (TABLE_CATALOG, TABLE_SCHEMA, TABLE_NAME, TABLE_TYPE,
-       IS_JOINABLE, IS_BROADCAST)
-      AS SELECT * FROM VALUES $tableRows""")
-    val columnRows = sqlTables.toSeq.sortBy(_._1).flatMap { case (n, df) =>
-      df.schema.fields.zipWithIndex.map { case (f, i) =>
-        s"('druid', 'druid', ${q(n)}, ${q(f.name)}, ${i + 1}, " +
-          s"${q(typeNamesOf(f.dataType)._2)}, " +
-          s"'${if (f.nullable) "YES" else "NO"}')"
+      spark: SparkSession, sqlTables: Map[String, DataFrame]): Unit =
+    if (sqlTables.nonEmpty) infoSchemaLock.synchronized {
+      val names = sqlTables.keys.toSeq.sorted.mkString(",")
+      if (!infoSchemaOf.exists { case (sc, n) => (sc eq spark.sparkContext) && n == names }) {
+        def q(s: String) = "'" + s.replace("'", "''") + "'"
+        spark.sql("CREATE DATABASE IF NOT EXISTS information_schema")
+        val tableRows = sqlTables.keys.toSeq.sorted
+          .map(n => s"('druid', 'druid', ${q(n)}, 'TABLE', 'NO', 'NO')")
+          .mkString(", ")
+        spark.sql(s"""CREATE OR REPLACE VIEW information_schema.tables
+          (TABLE_CATALOG, TABLE_SCHEMA, TABLE_NAME, TABLE_TYPE,
+           IS_JOINABLE, IS_BROADCAST)
+          AS SELECT * FROM VALUES $tableRows""")
+        val columnRows = sqlTables.toSeq.sortBy(_._1).flatMap { case (n, df) =>
+          df.schema.fields.zipWithIndex.map { case (f, i) =>
+            s"('druid', 'druid', ${q(n)}, ${q(f.name)}, ${i + 1}, " +
+              s"${q(typeNamesOf(f.dataType)._2)}, " +
+              s"'${if (f.nullable) "YES" else "NO"}')"
+          }
+        }.mkString(", ")
+        spark.sql(s"""CREATE OR REPLACE VIEW information_schema.columns
+          (TABLE_CATALOG, TABLE_SCHEMA, TABLE_NAME, COLUMN_NAME,
+           ORDINAL_POSITION, DATA_TYPE, IS_NULLABLE)
+          AS SELECT * FROM VALUES $columnRows""")
+        infoSchemaOf = Some((spark.sparkContext, names))
       }
-    }.mkString(", ")
-    spark.sql(s"""CREATE OR REPLACE VIEW information_schema.columns
-      (TABLE_CATALOG, TABLE_SCHEMA, TABLE_NAME, COLUMN_NAME,
-       ORDINAL_POSITION, DATA_TYPE, IS_NULLABLE)
-      AS SELECT * FROM VALUES $columnRows""")
-    infoSchemaDone.add(key)
     }
-  }
 
   /** Spark type -> (Druid type name, SQL type name) for the
     * typesHeader/sqlTypesHeader rows.

@@ -54,6 +54,11 @@ import graft.sources.druid.{DimBound, DruidScan, MvContains, NestedEq}
   * session-level arming point: every session that resolves a druid
   * table (DruidDataSource.getTable), analyses a query under the
   * extension, or serves the broker or JDBC endpoint is installed.
+  * [[BoundLiterals]] is armed right after this rule, in the same
+  * batch: it turns the Filter's numeric literals (the `0` of
+  * `version_cmp(d, 'v') op 0` among them) into [[BoundLiteral]]s,
+  * which this rule reads as the literals they stand for
+  * ([[LiteralValue]]).
   */
 object MvBitmapRewrite extends Rule[LogicalPlan] {
 
@@ -111,10 +116,10 @@ object MvBitmapRewrite extends Rule[LogicalPlan] {
              lex: Boolean): Option[Side] = {
       // (key, literal value, isLower, strict)
       val cmp = e match {
-        case GreaterThan(k, Literal(v, _))        => Some((k, v, true, true))
-        case GreaterThanOrEqual(k, Literal(v, _)) => Some((k, v, true, false))
-        case LessThan(k, Literal(v, _))           => Some((k, v, false, true))
-        case LessThanOrEqual(k, Literal(v, _))    => Some((k, v, false, false))
+        case GreaterThan(k, LiteralValue(v, _))        => Some((k, v, true, true))
+        case GreaterThanOrEqual(k, LiteralValue(v, _)) => Some((k, v, true, false))
+        case LessThan(k, LiteralValue(v, _))           => Some((k, v, false, true))
+        case LessThanOrEqual(k, LiteralValue(v, _))    => Some((k, v, false, false))
         case _ => None
       }
       cmp.flatMap { case (k, v, lower, strict) =>

@@ -541,8 +541,10 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       // an ANALYZED plan (literal shells like `cast(100 as bigint)`
       // intact) while the query side arrives OPTIMIZED (folded to
       // `100L`) — without folding, any definition containing literal
-      // arithmetic can never match its own folded copy
+      // arithmetic can never match its own folded copy. A
+      // BoundLiteral (BoundLiterals' rewrite) is the literal it binds.
       def fold(e: Expression): Expression = e.transformUp {
+        case b: BoundLiteral => b.literal
         case x if x.foldable && !x.isInstanceOf[Literal] =>
           try Literal.create(
             x.eval(org.apache.spark.sql.catalyst.InternalRow.empty),
@@ -871,6 +873,8 @@ object RollupRouting extends org.apache.spark.internal.Logging {
           r.dims.collectFirst { case d if matchesDef(e, d) => d }
             .flatMap(rollupAttr.get)
         case l: Literal => Some(l)
+        // the rollup may be a file source, whose scan matches Literal
+        case b: BoundLiteral => Some(b.literal)
         case _ if e.children.nonEmpty && e.deterministic =>
           val kids = e.children.map(remapAny)
           if (kids.forall(_.isDefined))

@@ -130,8 +130,11 @@ object GraftExtensions {
       name -> new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
   }.toMap
 
-  /** Give `spark` every graft SQL function and arm the bitmap-hint
-    * rule: the programmatic twin of the extension, for sessions built
+  /** Give `spark` every graft SQL function and arm graft's two rules
+    * over druid scans, in this order: the bitmap-hint rule
+    * (graft.plans.MvBitmapRewrite), then the literal binder
+    * (graft.plans.BoundLiterals), so every session runs them alike.
+    * The programmatic twin of the extension, for sessions built
     * without it. Once per session (later calls are one map hit), so
     * every graft entry point calls it rather than relying on an
     * earlier query having done so.
@@ -142,5 +145,6 @@ object GraftExtensions {
       registry.registerFunction(FunctionIdentifier(name), infos(name), build)
     }
     Registration.optimizerRule(spark, graft.plans.MvBitmapRewrite)
+    Registration.optimizerRule(spark, graft.plans.BoundLiterals)
   }
 }

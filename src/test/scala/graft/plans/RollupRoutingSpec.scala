@@ -506,6 +506,36 @@ class RollupRoutingSpec extends AnyFunSuite {
     } finally RollupRouting.clear()
   }
 
+  test("a numeric dim filter over a druid base routes") {
+    // the hour dim is computed over the scan, so its filter stays a
+    // residual Filter over the druid scan, whose numeric literal the
+    // optimizer binds (BoundLiterals) before the rollup rewrite runs
+    val dir = java.nio.file.Files.createTempDirectory("rr-numdim").toString
+    base.select(col("ts").as("__time"), col("event_type"), col("value"))
+      .write.format("druid").mode("overwrite").save(dir)
+    val druidBase = spark.read.format("druid").load(dir)
+      .select(col("__time").as("ts"), col("event_type"),
+        hour(col("__time")).as("hr"), col("value"))
+    val rdir = java.nio.file.Files.createTempDirectory("rr-numdim-ru").toString
+    druidBase
+      .groupBy(date_trunc("DAY", col("ts")).as("ts"), col("event_type"), col("hr"))
+      .agg(sum(col("value")).as("value_sum"), count(lit(1)).as("cnt"))
+      .write.mode("overwrite").parquet(rdir)
+    def q = druidBase.filter(col("hr") >= 12)
+      .groupBy(col("event_type")).agg(sum(col("value")).as("s"))
+    val unrouted = q.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    RollupRouting.register(spark, druidBase, spark.read.parquet(rdir),
+      timeCol = "ts", granularity = "DAY", dims = Seq("event_type", "hr"),
+      sums = Map("value" -> "value_sum"), countCol = Some("cnt"))
+    try {
+      assert(planOf(q).contains(rdir), planOf(q))
+      val routed = q.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(routed.nonEmpty && routed.keySet == unrouted.keySet)
+      routed.foreach { case (k, v) =>
+        assert(math.abs(v - unrouted(k)) < 1e-6 * math.max(1.0, math.abs(v)), k) }
+    } finally RollupRouting.clear()
+  }
+
   test("SQL-text queries over a view of the base route identically") {
     register()
     try {
