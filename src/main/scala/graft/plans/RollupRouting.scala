@@ -10,6 +10,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{DoubleType, IntegerType, TimestampType}
 
+import graft.sql.DruidTime
+import graft.sql.DruidTime.{Granularity, TimeFloor}
+
 /** Materialized-rollup ROUTING — the engine's first whole-plan Catalyst
   * rewrite: aggregates over a registered BASE table silently answer
   * from its pre-aggregated rollup when (and only when) the rewrite is
@@ -30,10 +33,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, TimestampType}
   *  - the aggregate's child must be the registered base plan (or a
   *    Filter over it whose condition references registered DIMENSIONS
   *    only — such filters commute with the rollup's grouping);
-  *  - every grouping expression is a registered dimension or a
-  *    `date_trunc(G, timeCol)` with G equal to or COARSER than the
-  *    rollup's granularity (trunc-of-trunc is exact for the
-  *    day-aligned family in the session zone);
+  *  - every grouping expression is a registered dimension or a floor
+  *    of timeCol whose buckets are unions of the rollup's (DruidTime's
+  *    lattice test, `Granularity.coarserOrEqual`): a TIME_FLOOR, native
+  *    granularity or `timestamp_floor` (no ceil, a literal origin or
+  *    none), or a `date_trunc` whose unit is a DruidTime name;
   *  - every aggregate is sum/min/max over a registered measure
   *    (rewritten to sum/min/max of the rollup's pre-aggregate),
   *    `count(*)`/`count(1)` (rewritten to sum of the rollup's count),
@@ -75,17 +79,12 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       graft.sources.druid.SegmentCatalog.stateFingerprint(root) == fp
     }
 
-  /** Granularities answerable from a rollup at `gran` (session zone;
-    * all members are aligned unions of the finer buckets).
-    */
-  private val coarserOrEqual: Map[String, Set[String]] = Map(
-    "HOUR" -> Set("HOUR", "DAY", "WEEK", "MONTH", "QUARTER", "YEAR"),
-    "DAY" -> Set("DAY", "WEEK", "MONTH", "QUARTER", "YEAR"),
-    "MONTH" -> Set("MONTH", "QUARTER", "YEAR"),
-    "YEAR" -> Set("YEAR"))
+  /** DruidTime's granularity named `name` (`"DAY"`) in zone `zoneId`. */
+  private def granularityIn(name: String, zoneId: String): Granularity =
+    DruidTime.granularity(name).copy(zone = DruidTime.zone(zoneId))
 
   final case class Registered(base: LogicalPlan, rollup: LogicalPlan,
-                              timeCol: String, granularity: String,
+                              timeCol: String, granularity: Granularity,
                               dims: Set[String],
                               sums: Map[String, String],
                               mins: Map[String, String],
@@ -157,8 +156,7 @@ object RollupRouting extends org.apache.spark.internal.Logging {
                tuples: Map[(String, String), (String, Int)] = Map.empty,
                tdigests: Map[String, (String, Int)] = Map.empty)
       : Unit = {
-    val g = granularity.toUpperCase(java.util.Locale.ROOT)
-    require(coarserOrEqual.contains(g), s"unsupported granularity $g")
+    val g = granularityIn(granularity, spark.sessionState.conf.sessionLocalTimeZone)
     val analyzedBase = baseDf.queryExecution.analyzed
     validateBaseShape(analyzedBase)
     val roots = druidRoots(analyzedBase).map { r =>
@@ -245,8 +243,7 @@ object RollupRouting extends org.apache.spark.internal.Logging {
     // the build and every later refresh (on this session) aggregate
     // through graft's sketch functions
     graft.sql.GraftExtensions.install(spark)
-    val g = granularity.toUpperCase(java.util.Locale.ROOT)
-    require(coarserOrEqual.contains(g), s"unsupported granularity $g")
+    val g = granularityIn(granularity, spark.sessionState.conf.sessionLocalTimeZone)
     val analyzedBase = baseDf.queryExecution.analyzed
     validateBaseShape(analyzedBase)
     validateMaintainable(analyzedBase)
@@ -346,7 +343,7 @@ object RollupRouting extends org.apache.spark.internal.Logging {
   /** The rollup recipe over base rows (first build and delta build). */
   private def buildPartial(src: DataFrame, r: Registered): DataFrame = {
     import org.apache.spark.sql.functions._
-    val gcols = expr(s"date_trunc('${r.granularity}', `${r.timeCol}`)")
+    val gcols = r.granularity.floor(col(r.timeCol))
       .as(r.timeCol) +: r.dims.toSeq.sorted.map(col)
     val aggs =
       r.sums.toSeq.sortBy(_._1).map { case (m, c) => sum(col(m)).as(c) } ++
@@ -834,8 +831,9 @@ object RollupRouting extends org.apache.spark.internal.Logging {
       }
 
       // remap ANY (inlined) expression onto the rollup: aggregates via
-      // remapAggFn, dims by definition match, time ONLY inside a
-      // coarser-or-equal date_trunc, deterministic scalar shells pass
+      // remapAggFn, dims by definition match, time ONLY inside a floor
+      // at or above the rollup's granularity (DruidTime's lattice test),
+      // deterministic scalar shells pass
       // through. A bare time or measure reference finds no rule and
       // fails the whole rewrite — exactly the conservative behavior.
       def remapAny(e: Expression): Option[Expression] = e match {
@@ -861,10 +859,12 @@ object RollupRouting extends org.apache.spark.internal.Logging {
             case fn =>
               remapAggFn(fn).map(fn2 => ae.copy(aggregateFunction = fn2))
           }
+        case f: TimeFloor if !f.ceil && f.rowOrigin.isEmpty &&
+            Granularity.coarserOrEqual(f.g, r.granularity) && matchesDef(f.ts, r.timeCol) =>
+          rollupTime.map(rt => f.copy(ts = rt))
         case t: TruncTimestamp => t.format match {
-          case Literal(fmt, _)
-              if coarserOrEqual(r.granularity).contains(
-                String.valueOf(fmt).toUpperCase(java.util.Locale.ROOT)) &&
+          case Literal(unit, _) if scala.util.Try(granularityIn(String.valueOf(unit),
+                t.zoneId.getId)).toOption.exists(Granularity.coarserOrEqual(_, r.granularity)) &&
                 matchesDef(t.timestamp, r.timeCol) =>
             rollupTime.map(rt => t.withNewChildren(Seq(t.format, rt)))
           case _ => None

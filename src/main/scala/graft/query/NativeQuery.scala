@@ -3,6 +3,7 @@ package graft.query
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
+import scala.util.chaining._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -116,15 +117,9 @@ object NativeQuery {
 
   private val mapper = new ObjectMapper()
 
-  /** Compile and run `json` against tables resolved by name. The
-    * compiled plan names graft SQL functions (compat time/mv/sketch
-    * functions, the bound-filter comparators), so the active session
-    * gets them first.
-    */
-  def run(json: String, resolve: String => DataFrame): DataFrame = {
-    graft.sql.GraftExtensions.install(SparkSession.active)
+  /** Compile and run `json` against tables resolved by name. */
+  def run(json: String, resolve: String => DataFrame): DataFrame =
     runNode(mapper.readTree(json), resolve)
-  }
 
   private def runNode(q: JsonNode, resolve: String => DataFrame): DataFrame = {
     val base0 = resolveDataSource(q.path("dataSource"), resolve)
@@ -191,7 +186,12 @@ object NativeQuery {
     *  - `lookup` — a registered [[graft.sql.DruidLookups]] map exposed
     *    with Druid's (k, v) schema
     */
+  // the plan compiled over it names graft SQL functions: they go to the
+  // data's own session, not the thread's active one
   private def resolveDataSource(ds: JsonNode, resolve: String => DataFrame): DataFrame =
+    dataSourceOf(ds, resolve).tap(df => graft.sql.GraftExtensions.install(df.sparkSession))
+
+  private def dataSourceOf(ds: JsonNode, resolve: String => DataFrame): DataFrame =
     if (ds.isTextual) resolve(ds.asText())
     else if (!ds.isObject) fail("dataSource (need a table name or datasource object)")
     else ds.path("type").asText() match {
@@ -918,7 +918,7 @@ object NativeQuery {
     * (SketchBuildAggs / DsTheta / DsQuantiles / Spark's own
     * DataSketches HLL) — real DataSketches wire blobs, map-side partial
     * aggregation, binary merge at shuffle boundaries — by name, from
-    * the function table `run` installs on the session.
+    * the function table installed on the data's session.
     */
   private def compileAgg(a: JsonNode, pred: Option[Column]): Agg = {
     val name = a.path("name").asText()

@@ -5,10 +5,13 @@ import java.time.{DateTimeException, Instant, LocalDate, LocalDateTime, OffsetDa
 import java.time.format.DateTimeParseException
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Druid's time vocabulary, read in one place: ISO-8601 instants,
   * intervals and periods, the simple granularity names, and the one
@@ -18,13 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * retention rules and PARTITIONED BY all read time through here.
   *
   * The floor is Druid's `PeriodGranularity`: bucket k starts at
-  * origin + k·period, for every integer k. It has two evaluators that
-  * agree exactly (`DruidSqlCompatSpec` checks it): a scalar one on epoch
-  * millis ([[Granularity]]: the writer, spine bounds) and a Catalyst
-  * one (TIME_FLOOR / TIME_CEIL, which native granularities call), a
-  * composition of plain expressions with no UDF, so a bucket key feeds
-  * Spark's hash aggregate like a built-in `date_trunc`. Period,
-  * origin and zone are literals, read once at analysis time.
+  * origin + k·period, for every integer k. It has one evaluator, the
+  * scalar [[Granularity.floor]], which the writer and spine bounds call
+  * and which TIME_FLOOR / TIME_CEIL, native granularities and
+  * `timestamp_floor` reach through one codegen-able node, [[TimeFloor]].
+  * One lattice test, [[Granularity.coarserOrEqual]], tells rollup
+  * routing when one floor's buckets are unions of another's.
   *
   * How the lattice is walked, as Druid's Joda chronology does:
   *  - calendar months (P1M, P3M, P1Y) step on the zone's local
@@ -46,7 +48,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - a period mixing months with days or time (P1M15D) is refused for
   *    floors, and valid for shifts, interval ends and cutoffs;
   *  - zoneless instants read as UTC (the engine's session zone), where
-  *    Druid uses the broker's default zone.
+  *    Druid uses the broker's default zone;
+  *  - outside UTC the lattice refuses a calendar floor over an
+  *    instant-stepped one (P1D over PT1H): offsets need not be whole
+  *    steps (local mean time, half-hour zones).
   */
 object DruidTime {
 
@@ -64,7 +69,9 @@ object DruidTime {
     def iso: String =
       if (isoWeek) "P1W"
       else if (millis == 0) s"P${months}M"
-      else s"PT${java.math.BigDecimal.valueOf(millis, 3).stripTrailingZeros.toPlainString}S"
+      else Seq(DayMs -> "P%dD", 3600000L -> "PT%dH", 60000L -> "PT%dM")
+        .collectFirst { case (unit, f) if millis % unit == 0 => f.format(millis / unit) }
+        .getOrElse(s"PT${java.math.BigDecimal.valueOf(millis, 3).stripTrailingZeros.toPlainString}S")
   }
 
   private val Num = """([-+]?\d+)"""
@@ -200,73 +207,61 @@ object DruidTime {
         .toEpochDay * DayMs + Math.floorMod(frameOrigin, DayMs)
     }
 
+    /** The k of the month bucket holding frame millis `f`, or the next. */
+    private def monthK(f: Long): Long = Math.floorDiv(
+      monthIndex(LocalDate.ofEpochDay(Math.floorDiv(f, DayMs))) - originMonth,
+      period.months.toLong)
+
     /** The k of the bucket holding `ms`. */
     def index(ms: Long): Long = {
       val f = toFrame(ms)
       if (!monthly) Math.floorDiv(f - frameOrigin, period.millis)
-      else {
-        val k = Math.floorDiv(
-          monthIndex(LocalDate.ofEpochDay(Math.floorDiv(f, DayMs))) - originMonth,
-          period.months.toLong)
-        if (f < monthBoundary(k)) k - 1 else k
-      }
+      else { val k = monthK(f); if (f < monthBoundary(k)) k - 1 else k }
     }
 
     /** Epoch millis where bucket k starts. */
     def start(k: Long): Long =
       fromFrame(if (monthly) monthBoundary(k) else frameOrigin + k * period.millis)
 
+    /** Epoch millis where the bucket holding `ms` starts. A month floor
+      * reads a second boundary only for a row before its boundary day. */
     def floor(ms: Long): Long =
       if (!local && !monthly) ms - Math.floorMod(ms - frameOrigin, period.millis)
-      else start(index(ms))
+      else if (!monthly) start(index(ms))
+      else {
+        val f = toFrame(ms)
+        val k = monthK(f)
+        val b = monthBoundary(k)
+        fromFrame(if (f < b) monthBoundary(k - 1) else b)
+      }
+
+    /** The floor (or ceiling) of epoch micros `us`: what [[TimeFloor]] evaluates. */
+    def micros(us: Long, ceil: Boolean): Long = {
+      val ms = Math.floorDiv(us, 1000L)
+      val f = floor(ms) * 1000L
+      if (!ceil || f == us) f else start(index(ms) + 1) * 1000L
+    }
+
+    def atOrigin(us: Long): Granularity = copy(origin = Some(Math.floorDiv(us, 1000L)))
 
     /** The Catalyst floor of a timestamp column, through TIME_FLOOR. */
     def floor(ts: Column): Column = call_function("time_floor", ts, lit(period.iso),
       origin.fold(lit(null))(o => lit(new Timestamp(o))), lit(zone.map(_.getId).orNull))
+  }
 
-    /** Catalyst (floor, start of the next bucket) of `ts`. `originExpr`
-      * replaces the literal origin (TIME_FLOOR's origin argument).
+  object Granularity {
+    /** Every bucket boundary of `g` is one of `r`'s, so that
+      * `g.floor(r.floor(t)) == g.floor(t)` for every t: same zone and
+      * frame (local calendar or instants), `g` aligned to `r`'s origin.
       */
-    private[DruidTime] def bounds(ts: Expression, originExpr: Option[Expression])
-        : (Expression, Expression) = {
-      def frame(t: Expression): Expression =
-        UnixMillis(if (local) FromUTCTimestamp(t, Literal(zone.get.getId)) else t)
-      def unframe(f: Expression): Expression =
-        if (local) ToUTCTimestamp(MillisToTimestamp(f), Literal(zone.get.getId))
-        else MillisToTimestamp(f)
-      val f = frame(ts)
-      val o = originExpr.map(frame).getOrElse(Literal(frameOrigin))
-      if (!monthly) {
-        val step = Literal(period.millis)
-        val offset = if (o == Literal(0L)) f else Subtract(f, o)
-        val fl = Subtract(f, Pmod(offset, step))
-        (unframe(fl), unframe(Add(fl, step)))
-      } else {
-        def dateOf(ms: Expression): Expression =
-          DateFromUnixDate(Cast(floorDiv(ms, DayMs), IntegerType))
-        def months(date: Expression): Expression = Cast(Add(
-          Multiply(Subtract(Year(date), Literal(1970)), Literal(12)),
-          Subtract(Month(date), Literal(1))), LongType)
-        def dayMillis(date: Expression): Expression =
-          Multiply(Cast(UnixDate(date), LongType), Literal(DayMs))
-        val oDate = dateOf(o)
-        val om = months(oDate)
-        val plain = originExpr.isEmpty && frameOrigin == 0L
-        def boundary(k: Expression): Expression = {
-          val fm = Add(om, Multiply(k, Literal(period.months.toLong)))
-          val mm = Pmod(fm, Literal(12L))
-          val first = MakeDate(
-            Cast(Add(floorDiv(fm, 12L), Literal(1970L)), IntegerType),
-            Cast(Add(mm, Literal(1L)), IntegerType), Literal(1))
-          if (plain) dayMillis(first)
-          else Add(dayMillis(DateAdd(first, Subtract(
-            Least(Seq(DayOfMonth(oDate), DayOfMonth(LastDay(first)))), Literal(1)))),
-            Pmod(o, Literal(DayMs)))
-        }
-        val k0 = floorDiv(Subtract(months(dateOf(f)), om), period.months.toLong)
-        val k = if (plain) k0 else If(LessThan(f, boundary(k0)), Subtract(k0, Literal(1L)), k0)
-        (unframe(boundary(k)), unframe(boundary(Add(k, Literal(1L)))))
-      }
+    def coarserOrEqual(g: Granularity, r: Granularity): Boolean = {
+      def aligned(step: Long) = Math.floorMod(g.frameOrigin - r.frameOrigin, step) == 0
+      g.zone == r.zone && (g.zone.isEmpty || g.local == r.local) && (
+        if (r.monthly) g.monthly && g.period.months % r.period.months == 0 &&
+          g.originDate.getDayOfMonth == r.originDate.getDayOfMonth &&
+          aligned(DayMs) && Math.floorMod(g.originMonth - r.originMonth, r.period.months.toLong) == 0
+        else aligned(r.period.millis) &&
+          (if (g.monthly) DayMs % r.period.millis == 0 else g.period.millis % r.period.millis == 0))
     }
   }
 
@@ -277,9 +272,47 @@ object DruidTime {
       (Math.floorMod(wallMs, 1000L) * 1000000L).toInt, ZoneOffset.UTC)
       .atZone(z).toInstant.toEpochMilli
 
-  /** Catalyst floor division by a positive constant. */
-  private def floorDiv(x: Expression, d: Long): Expression =
-    IntegralDivide(Subtract(x, Pmod(x, Literal(d))), Literal(d))
+  /** TIME_FLOOR, or with `ceil` TIME_CEIL, of `ts` at `g`; a
+    * `rowOrigin` replaces `g`'s origin per row (null gives null).
+    */
+  final case class TimeFloor(ts: Expression, rowOrigin: Option[Expression], g: Granularity,
+                             ceil: Boolean) extends Expression {
+    override def children: Seq[Expression] = ts +: rowOrigin.toSeq
+    override def dataType: DataType = TimestampType
+    override def nullable: Boolean = children.exists(_.nullable)
+    override def prettyName: String = if (ceil) "time_ceil" else "time_floor"
+
+    override def eval(input: InternalRow): Any = {
+      val t = ts.eval(input)
+      val at = rowOrigin.fold(Option(g))(o =>
+        Option(o.eval(input)).map(v => g.atOrigin(v.asInstanceOf[Long])))
+      if (t == null || at.isEmpty) null else at.get.micros(t.asInstanceOf[Long], ceil)
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val gran = ctx.addReferenceObj("granularity", g)
+      val kids = children.map(_.genCode(ctx))
+      val at = kids.lift(1).fold(gran)(o => s"$gran.atOrigin(${o.value})")
+      ev.copy(code = code"""
+        ${kids.map(_.code).reduce(_ + _)}
+        boolean ${ev.isNull} = ${kids.map(_.isNull.toString).mkString(" || ")};
+        long ${ev.value} = -1L;
+        if (!${ev.isNull}) ${ev.value} = $at.micros(${kids.head.value}, $ceil);""")
+    }
+
+    /** `time_floor(ts, 'P1M'[, origin][, 'zone'])`, as the SQL reads. */
+    private def show(arg: Expression => String): String = {
+      val o = rowOrigin.map(arg).orElse(g.origin.map(ms => Literal(ms * 1000L, TimestampType).sql))
+      val z = g.zone.map(z => s"'${z.getId}'")
+      (Seq(arg(ts), s"'${g.period.iso}'") ++ o.orElse(z.map(_ => "NULL")) ++ z)
+        .mkString(s"$prettyName(", ", ", ")")
+    }
+    override def toString: String = show(_.toString)
+    override def sql: String = show(_.sql)
+
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TimeFloor =
+      copy(ts = c.head, rowOrigin = c.lift(1))
+  }
 
   // ---- Druid SQL ----------------------------------------------------------
 
@@ -287,17 +320,12 @@ object DruidTime {
     * Druid SQL these are always literals).
     */
   private def litString(e: Expression, what: String): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case l: Literal if l.foldable && l.value != null => l.value.toString
-    case other =>
-      throw new IllegalArgumentException(
-        s"$what must be a string literal, got $other")
+    case l: Literal if l.value != null => l.value.toString
+    case other => throw new IllegalArgumentException(s"$what must be a string literal, got $other")
   }
 
-  private def asTs(e: Expression): Expression = e.dataType match {
-    case TimestampType => e
-    case _ => Cast(e, TimestampType)
-  }
+  private def asTs(e: Expression, zoneId: Option[String] = None): Expression =
+    if (e.dataType == TimestampType) e else Cast(e, TimestampType, zoneId)
 
   /** UTC instant -> wall clock in tz (represented as a UTC-frame ts). */
   private def inZone(ts: Expression, tz: Option[String]): Expression =
@@ -305,31 +333,20 @@ object DruidTime {
   private def outZone(ts: Expression, tz: Option[String]): Expression =
     tz.fold(ts)(z => ToUTCTimestamp(ts, Literal(z)))
 
-  private def isNull(e: Expression): Boolean = e match {
-    case Literal(null, _) => true
-    case _ => false
-  }
+  private def isNull(e: Expression): Boolean = PartialFunction.cond(e) { case Literal(null, _) => true }
 
-  /** (ts, floor, next bucket start) of TIME_FLOOR/TIME_CEIL's arguments. */
-  private def floorArgs(exprs: Seq[Expression], name: String)
-      : (Expression, Expression, Expression) = {
+  /** TIME_FLOOR / TIME_CEIL: a foldable origin folds into `g`. */
+  private def floorNode(ceil: Boolean): Seq[Expression] => Expression = { exprs =>
+    val name = if (ceil) "time_ceil" else "time_floor"
     require(exprs.length >= 2 && exprs.length <= 4,
       s"$name(ts, period[, origin[, timezone]]) takes 2-4 args, got ${exprs.length}")
-    val origin = exprs.lift(2).filterNot(isNull).map(asTs)
     val g = Granularity(period(litString(exprs(1), s"$name period")),
       zone = exprs.lift(3).filterNot(isNull).flatMap(e => zone(litString(e, s"$name timezone"))))
-    val ts = asTs(exprs.head)
-    val (floor, next) = g.bounds(ts, origin)
-    (ts, floor, next)
-  }
-
-  val timeFloor: Seq[Expression] => Expression = { exprs =>
-    floorArgs(exprs, "time_floor")._2
-  }
-
-  val timeCeil: Seq[Expression] => Expression = { exprs =>
-    val (ts, floor, next) = floorArgs(exprs, "time_ceil")
-    If(EqualTo(floor, ts), ts, next)
+    val origin = exprs.lift(2).filterNot(isNull).map(asTs(_, Some(SQLConf.get.sessionLocalTimeZone)))
+    val folded = origin.filter(_.foldable).flatMap(o =>
+      try Option(o.eval()).map(v => g.atOrigin(v.asInstanceOf[Long]))
+      catch { case scala.util.control.NonFatal(_) => None })
+    TimeFloor(asTs(exprs.head), if (folded.isDefined) None else origin, folded.getOrElse(g), ceil)
   }
 
   val timeShift: Seq[Expression] => Expression = { exprs =>
@@ -378,10 +395,7 @@ object DruidTime {
   val timeParse: Seq[Expression] => Expression = { exprs =>
     require(exprs.nonEmpty && exprs.length <= 3,
       s"time_parse(string[, pattern[, timezone]]) takes 1-3 args, got ${exprs.length}")
-    val parsed: Expression = exprs.lift(1).filter {
-      case Literal(null, _) => false
-      case _ => true
-    } match {
+    val parsed: Expression = exprs.lift(1).filterNot(isNull) match {
       case Some(pat) => new ParseToTimestamp(exprs.head, pat)
       case None      => Cast(exprs.head, TimestampType) // ISO-8601
     }
@@ -398,10 +412,7 @@ object DruidTime {
     require(exprs.nonEmpty && exprs.length <= 3,
       s"time_format(ts[, pattern[, timezone]]) takes 1-3 args, got ${exprs.length}")
     val tz = exprs.lift(2).map(litString(_, "time_format timezone"))
-    val pat = exprs.lift(1).filter {
-      case Literal(null, _) => false
-      case _ => true
-    }.getOrElse(Literal(IsoOut))
+    val pat = exprs.lift(1).filterNot(isNull).getOrElse(Literal(IsoOut))
     DateFormatClass(inZone(asTs(exprs.head), tz), pat)
   }
 
@@ -431,31 +442,16 @@ object DruidTime {
 
   /** (name, usage, builder) rows for registration. */
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("time_floor",
-      "time_floor(ts, period[, origin[, timezone]]) - Druid TIME_FLOOR",
-      timeFloor),
-    ("time_ceil",
-      "time_ceil(ts, period[, origin[, timezone]]) - Druid TIME_CEIL",
-      timeCeil),
-    ("time_shift",
-      "time_shift(ts, period, step[, timezone]) - Druid TIME_SHIFT",
-      timeShift),
-    ("time_extract",
-      "time_extract(ts, unit[, timezone]) - Druid TIME_EXTRACT",
-      timeExtract),
-    ("time_parse",
-      "time_parse(string[, pattern[, timezone]]) - Druid TIME_PARSE",
-      timeParse),
-    ("time_format",
-      "time_format(ts[, pattern[, timezone]]) - Druid TIME_FORMAT",
-      timeFormat),
-    ("time_in_interval",
-      "time_in_interval(ts, 'start/end') - Druid TIME_IN_INTERVAL",
-      timeInInterval),
-    ("millis_to_timestamp",
-      "millis_to_timestamp(millis) - Druid MILLIS_TO_TIMESTAMP",
-      millisToTimestamp),
-    ("timestamp_to_millis",
-      "timestamp_to_millis(ts) - Druid TIMESTAMP_TO_MILLIS",
-      timestampToMillis))
+    "time_floor(ts, period[, origin[, timezone]])" -> floorNode(ceil = false),
+    "time_ceil(ts, period[, origin[, timezone]])" -> floorNode(ceil = true),
+    "time_shift(ts, period, step[, timezone])" -> timeShift,
+    "time_extract(ts, unit[, timezone])" -> timeExtract,
+    "time_parse(string[, pattern[, timezone]])" -> timeParse,
+    "time_format(ts[, pattern[, timezone]])" -> timeFormat,
+    "time_in_interval(ts, 'start/end')" -> timeInInterval,
+    "millis_to_timestamp(millis)" -> millisToTimestamp,
+    "timestamp_to_millis(ts)" -> timestampToMillis).map { case (usage, build) =>
+    val name = usage.takeWhile(_ != '(')
+    (name, s"$usage - Druid ${name.toUpperCase(java.util.Locale.ROOT)}", build)
+  }
 }

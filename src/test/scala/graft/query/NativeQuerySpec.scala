@@ -1499,4 +1499,24 @@ class NativeQuerySpec extends AnyFunSuite {
     // ('a',null) and (null,'a') into one
     assert(out.getLong(0) == 3L)
   }
+
+  test("run needs no active session: graft's functions go to the resolved data's session") {
+    val data = events
+    val json = """{"queryType": "timeseries", "dataSource": "events",
+      "granularity": "day", "aggregations": [{"type": "count", "name": "n"}]}"""
+    @volatile var out: scala.util.Try[Array[(Timestamp, Long)]] = null
+    // a thread with neither an active nor a default session, whose
+    // resolver hands back a live session's data
+    val worker = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      out = scala.util.Try(NativeQuery.run(json, _ => data).collect()
+        .map(r => r.getTimestamp(0) -> r.getLong(1)))
+    })
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try { worker.start(); worker.join() }
+    finally org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    assert(out.get.sortBy(_._1.getTime).toSeq == Seq(ts("2024-01-01 00:00:00") -> 2L,
+      ts("2024-01-02 00:00:00") -> 2L, ts("2024-01-03 00:00:00") -> 2L,
+      ts("2024-01-05 00:00:00") -> 2L))
+  }
 }

@@ -4,6 +4,8 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -132,9 +134,23 @@ class DruidSqlCompatSpec extends AnyFunSuite {
     Gen.option(Gen.choose(ms("2019-01-01T00:00:00Z"), ms("2027-01-01T00:00:00Z")))
   private val zoneGen: Gen[Option[String]] = Gen.oneOf(None, Some("America/Los_Angeles"))
 
+  /** `body` with the node's generated code (CODEGEN_ONLY), then with its
+    * interpreted `eval` (NO_CODEGEN, whole-stage codegen off).
+    */
+  private def inBothFactoryModes(body: => Unit): Unit =
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, wholeStage) =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
   test("scalar and Catalyst floor and ceil agree (names, origins, zones, DST)") {
     import spark.implicits._
-    check(Prop.forAllNoShrink(periodGen, originGen, zoneGen, Gen.listOfN(40, instantGen)) {
+    inBothFactoryModes(check(Prop.forAllNoShrink(periodGen, originGen, zoneGen, Gen.listOfN(40, instantGen)) {
       (period: String, origin: Option[Long], zone: Option[String], ts: List[Long]) =>
         val g = DruidTime.Granularity(DruidTime.period(period), origin,
           zone.flatMap(DruidTime.zone))
@@ -156,7 +172,61 @@ class DruidSqlCompatSpec extends AnyFunSuite {
             s"catalyst=(${r.getLong(1)}, ${r.getLong(2)}) scalar=(${g.floor(t)}, $ceil)")
           ok && (origin.isDefined || g.floor(t) <= t && t <= ceil)
         }
-    }, 60)
+    }, 60))
+  }
+
+  private val latticePeriods: Gen[String] = Gen.oneOf(
+    DruidTime.granularityNames.map(_._2) ++ Seq("PT90M", "P2D", "P2W", "P2M", "P13M"))
+  // a few shared origins, so that aligned pairs come up often
+  private val latticeOrigin: Gen[Option[Long]] = Gen.option(Gen.oneOf(
+    ms("2020-01-01T00:00:00Z"), ms("2023-01-31T06:00:00Z"), ms("2024-03-11T00:00:00Z")))
+
+  test("lattice: coarserOrEqual(g, r) implies g.floor(r.floor(t)) == g.floor(t)") {
+    import DruidTime.Granularity
+    var held = 0
+    check(Prop.forAllNoShrink(latticePeriods, latticeOrigin, latticePeriods, latticeOrigin,
+        zoneGen, Gen.listOfN(40, instantGen)) {
+      (gp: String, go: Option[Long], rp: String, ro: Option[Long], zone: Option[String],
+       ts: List[Long]) =>
+        val z = zone.flatMap(DruidTime.zone)
+        val (g, r) = (Granularity(DruidTime.period(gp), go, z), Granularity(DruidTime.period(rp), ro, z))
+        !Granularity.coarserOrEqual(g, r) || {
+          held += 1
+          ts.forall { t =>
+            val ok = g.floor(r.floor(t)) == g.floor(t)
+            if (!ok) println(s"[lattice] $gp@$go over $rp@$ro zone=$zone t=$t")
+            ok
+          }
+        }
+    }, 3000)
+    assert(held >= 300, s"only $held of 3000 pairs were in the lattice")
+  }
+
+  test("lattice: every UTC pair of the name table matches its bucket starts, 1969-2031") {
+    import DruidTime.Granularity
+    val (lo, hi) = (ms("1969-01-01T00:00:00Z"), ms("2031-01-01T00:00:00Z"))
+    // every bucket start of g in [lo, hi) is a bucket start of r
+    def startsWithin(g: Granularity, r: Granularity): Boolean = {
+      var k = g.index(lo)
+      var ok = true
+      while (ok && g.start(k) < hi) { val b = g.start(k); ok = r.floor(b) == b; k += 1 }
+      ok
+    }
+    val names = DruidTime.granularityNames.map(_._1)
+    names.foreach(n => assert(Granularity.coarserOrEqual(DruidTime.granularity(n),
+      DruidTime.granularity(n)), n))
+    val wrong = for {
+      g <- names; r <- names if g != r
+      lattice = Granularity.coarserOrEqual(DruidTime.granularity(g), DruidTime.granularity(r))
+      if lattice != startsWithin(DruidTime.granularity(g), DruidTime.granularity(r))
+    } yield s"$g over $r: lattice says $lattice"
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    // every pair rollup routing's own table accepted before the lattice
+    val before = Seq("hour" -> Seq("day", "week", "month", "quarter", "year"),
+      "day" -> Seq("week", "month", "quarter", "year"), "month" -> Seq("quarter", "year"))
+    for ((r, gs) <- before; g <- gs)
+      assert(Granularity.coarserOrEqual(DruidTime.granularity(g), DruidTime.granularity(r)),
+        s"$g over $r")
   }
 
   test("the name table, mixed periods and intervals") {
@@ -240,6 +310,20 @@ class DruidSqlCompatSpec extends AnyFunSuite {
     val udfs = df.queryExecution.analyzed.expressions
       .flatMap(_.collect { case u: ScalaUDF => u })
     assert(udfs.isEmpty, s"time family must stay codegen-able: $udfs")
+    // a time_floor grouping key runs inside whole-stage codegen, as the
+    // node's own generated code
+    val grouped = spark.range(0, 100)
+      .select(expr("timestamp_millis(id * 3600000)").as("t"))
+      .groupBy(expr("time_floor(t, 'P1D')").as("d")).count()
+    assert(grouped.collect().map(_.getLong(1)).sorted.toSeq == Seq(4L, 24L, 24L, 24L, 24L))
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val inStage = plans.collect(grouped.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec =>
+        w.child.collect { case p => p.expressions }.flatten
+          .flatMap(_.collect { case f: DruidTime.TimeFloor => f })
+    }.flatten
+    assert(inStage.nonEmpty, grouped.queryExecution.executedPlan.toString)
+    assert(!inStage.exists(_.isInstanceOf[CodegenFallback]))
   }
 
   test("mv family: index contracts, order/dup preservation") {

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    java.time;
   *  - only DruidTime lists granularity names: no other line pairs two
   *    names or periods of its table as string literals, and no other
-  *    file matches three of them in `case` patterns.
+  *    file matches three of them in `case` patterns, whatever their
+  *    letter case.
   */
 class DruidTimeGuardSpec extends AnyFunSuite {
 
@@ -44,13 +45,14 @@ class DruidTimeGuardSpec extends AnyFunSuite {
   }
 
   test("only DruidTime holds a granularity-name table") {
-    // as Druid spells them (Spark's own date_trunc units, e.g. "HOUR" in
-    // RollupRouting, are another vocabulary)
-    val words = DruidTime.granularityNames.flatMap { case (n, p) => Seq(n, p) }.toSet
+    // whatever their letter case: Spark's date_trunc units ("HOUR",
+    // "DAY") are the same names
+    val words = DruidTime.granularityNames.flatMap { case (n, p) => Seq(n, p) }
+      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val literal = "\"([A-Za-z0-9_]+)\"".r
     val casePattern = """\bcase\s+"([A-Za-z0-9_]+)"""".r
     def known(m: scala.util.matching.Regex.Match): Option[String] =
-      Some(m.group(1)).filter(words)
+      Some(m.group(1).toLowerCase(java.util.Locale.ROOT)).filter(words)
     val pairedLines = for {
       (file, text) <- sources
       line <- text.linesIterator
